@@ -120,10 +120,11 @@ object Explain {
       // collect_list (ObjectHashAggregate); model joins are plain
       // equi-joins, never hand-broadcast (vocabulary-sized)
       "q_lm_perplexity"      -> Seq("HashAggregate", "ObjectHashAggregate"),
-      // DSIR models are <=256 rows by construction -> explicit broadcast;
-      // the doc side never shuffles on the hot bucket key
-      "q_dsir_weights"       -> Seq("BroadcastHashJoin", "ObjectHashAggregate",
-        "BroadcastNestedLoopJoin"),
+      // DSIR: the session-trained 256-bucket model rides as literal
+      // arrays, so scoring is ONE projection over the native per-doc
+      // bucket counts with a compiled sort_array fold (no join, no
+      // explode, no per-doc regroup — see the forbids below)
+      "q_dsir_weights"       -> Seq("graft_md5_bucket_counts", "sort_array"),
       // resampling: hourly rollup is a hash aggregation (map-side
       // partials collapse the raw stream), spine is a Generate off the
       // tiny per-user bounds frame
@@ -276,10 +277,8 @@ object Explain {
       "q_org_closure"        -> Seq("Generate"),
       "q_tumbling_window"    -> Seq("HashAggregate"),
       "q_sessionize"         -> Seq("HashAggregate"),
-      // r11: the tokenize Generate moved into the materialization job
-      // of the once-scanned (doc, word, m) frame (native TokenCounts +
-      // localCheckpoint), so the consumer plan reads ExistingRDD and
-      // shows only the sorted-fold rollup
+      // native TokenCounts feeds the corpus-frequency rollup and the
+      // per-doc sorted-fold rollup (ObjectHashAggregate)
       "q_token_rarity"       -> Seq("ObjectHashAggregate"),
       // temperature resample: two bounded rollups, rates broadcast back,
       // accept is a map-side hash compare
@@ -305,6 +304,10 @@ object Explain {
     // shaped as distinct-then-plain-count precisely to avoid it; a
     // Window would mean a whole-partition sort the agg shape avoids.
     val forbids = Map(
+      // scoring against the session-trained DSIR model is one
+      // projection: a Generate or a regroup means the per-(doc, bucket)
+      // rows are back
+      "q_dsir_weights"      -> Seq("Generate", "ObjectHashAggregate", "Join"),
       // real-BPE token accounting is a pure native-expression
       // projection: no join, no aggregation — encoding a 100 TB corpus
       // must stay a scan; the id stream inherits the same shape (the

@@ -2,9 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Per-(session, corpus) trained-artifact cache used by the operator
-  * families that train something reusable (ANN index, dedup cluster
-  * map, SemDedup model, decontamination bloom).
+/** Per-(session, corpus or path) cache of session-invariant values: the
+  * trained artifacts of the operator families that train something
+  * reusable (ANN index, dedup cluster map, SemDedup model, DSIR bucket
+  * model, decontamination bloom) and [[Tables]]' per-path schemas.
+  * Entries have no bound and no eviction. A failed computation is not
+  * cached.
   *
   * Keyed on `sessionUUID` — stable and unique for the session's whole
   * lifetime — never on `System.identityHashCode`, whose values can be

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Typed loaders for the driver-generated test tables.
   *
@@ -13,8 +14,22 @@ object Tables {
   val factTables = Seq("lineitem", "orders", "events", "documents", "embeddings", "customer")
   val dimTables  = Seq("region", "nation", "supplier", "part")
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private val schemas = new SessionCache[StructType]()
+
+  /** Parquet read of `dir/name.parquet` with its schema inferred once
+    * per (session, path): inference launches a Spark job, a read with
+    * a known schema lists files and launches none.
+    *
+    * Contract: the schema of a path is fixed for the session's
+    * lifetime. Files are still listed on every read, so rows written
+    * over the path with the same schema are seen; a schema change at a
+    * path needs a new session. A failed inference is not memoized, so
+    * [[eventsRaw]] can retry under a changed conf. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val schema = schemas.getOrCompute(spark, path)(spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = table(s, d, "nation")

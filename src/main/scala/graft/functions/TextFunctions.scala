@@ -420,24 +420,24 @@ object TextFunctions {
     // [[GraftFunctions.tokenCounts]] (spec-pinned value identity): the
     // per-document counting never touches a shuffle — the old shape
     // paid a (word, doc_id) exchange of one row per token occurrence.
-    // The compact counts are materialized ONCE: the corpus-frequency
-    // aggregation and the join probe are different consumers whose
-    // join-pushed filters deny exchange reuse, so without the cut the
-    // corpus scan + tokenize pass ran twice per query (measured as two
-    // ~550 ms stages at sf0.1 — the q_pmi_collocations reuse-denial
-    // mechanism; guide §2.4).
+    // The corpus-frequency aggregation and the join probe are two
+    // consumers whose join-pushed filters deny exchange reuse, so the
+    // scan + tokenize pass runs once per consumer. That is deliberate:
+    // wd is corpus-sized (one row per distinct word per document); an
+    // eager per-call localCheckpoint of it cost an extra job, measured
+    // slower than the second pass, and left the frame pinned in block
+    // storage after every call.
     val wd = Tables.spread(s, Tables.documents(s, dir))
       .select(col("doc_id"),
         explode(GraftFunctions.tokenCounts(col("text"))).as("tc"))
       .select(col("doc_id"), col("tc.w").as("word"), col("tc.c").as("m"))
-      .localCheckpoint()
     val cf = wd.groupBy(col("word")).agg(sum(col("m")).as("c"))
     wd
       .join(cf, Seq("word"))
       .groupBy(col("doc_id"))
       .agg(sum(col("m")).as("n_tokens"),
         aggregate(
-          array_sort(collect_list(struct(col("c"), col("m")))),
+          sort_array(collect_list(struct(col("c"), col("m")))),
           lit(0.0),
           (acc, x) => acc + x.getField("m") * log(x.getField("c"))).as("logfreq_sum"))
       .select(col("doc_id"), col("n_tokens"),
@@ -870,21 +870,19 @@ object TextFunctions {
     * by |sources|; corpus totals ride a 1-row broadcast. */
   def sourceKl(s: SparkSession, dir: String): DataFrame = {
     // Native per-doc token counts feed the (source, word) aggregation
-    // (guide §2.3 — the occurrence explode and its exchange are gone),
-    // and the vocabulary-sized sw table is materialized once: its
-    // three consumers (corpus rollup, totals, join probe) carry
-    // join-pushed filters that deny exchange reuse, so without the cut
-    // the corpus tokenize pass ran THREE times per query (measured as
-    // three ~700 ms stages at sf0.1 — the q_pmi_collocations
-    // reuse-denial mechanism; guide §2.4). sw is |sources|·|vocab|
-    // rows — a bounded model-sized table, safe to pin at any corpus
-    // scale.
+    // (guide §2.3 — the occurrence explode and its exchange are gone).
+    // sw has three consumers (corpus rollup, totals, join probe) whose
+    // join-pushed filters deny exchange reuse, so the tokenize pass is
+    // planned once per consumer; each pass ends in a map-side partial
+    // aggregation, so what it shuffles is |sources|·|vocab| rows, not
+    // the corpus. That recomputation measured cheaper than an eager
+    // per-call localCheckpoint of sw, which also left the table pinned
+    // in block storage after every call.
     val sw = Tables.spread(s, Tables.documents(s, dir))
       .select(col("source"),
         explode(GraftFunctions.tokenCounts(col("text"))).as("tc"))
       .groupBy(col("source"), col("tc.w").as("word"))
       .agg(sum(col("tc.c")).as("cs"))
-      .localCheckpoint()
     val cw = sw.groupBy(col("word")).agg(sum(col("cs")).as("cc"))
     val nc = cw.agg(sum(col("cc")).as("n_corpus"))
     sw.join(cw, Seq("word"))
@@ -892,7 +890,7 @@ object TextFunctions {
       .groupBy(col("source"))
       .agg(sum(col("cs")).as("n_tokens"),
         aggregate(
-          array_sort(collect_list(struct(col("cs"), col("cc"), col("n_corpus")))),
+          sort_array(collect_list(struct(col("cs"), col("cc"), col("n_corpus")))),
           lit(0.0),
           (acc, x) => acc + x.getField("cs") *
             (log(x.getField("cs")) - log(x.getField("cc")) + log(x.getField("n_corpus"))))

@@ -434,7 +434,7 @@ object AnnOps {
         posexplode(col("embedding").cast("array<double>")).as(Seq("idx", "x")))
     ex.groupBy(col("label"), col("idx"))
       .agg(count(lit(1)).as("n_vectors"),
-        aggregate(array_sort(collect_list(struct(col("x"), col("vec_id")))),
+        aggregate(sort_array(collect_list(struct(col("x"), col("vec_id")))),
           lit(0.0), (acc, t) => acc + t.getField("x")).as("sx"))
       .select(col("label"), col("n_vectors"), col("idx"),
         (col("sx") / col("n_vectors")).as("m"))
@@ -486,13 +486,13 @@ object AnnOps {
       .localCheckpoint()
     val cents = ex.groupBy(col("label"), col("idx"))
       .agg(count(lit(1)).as("n"),
-        aggregate(array_sort(collect_list(struct(col("x"), col("vec_id")))),
+        aggregate(sort_array(collect_list(struct(col("x"), col("vec_id")))),
           lit(0.0), (acc, t) => acc + t.getField("x")).as("sx"))
       .select(col("label"), col("idx"), col("n"), (col("sx") / col("n")).as("m"))
     val dists = ex.join(cents, Seq("label", "idx"))
       .groupBy(col("label"), col("vec_id"), col("n"))
       .agg(sqrt(aggregate(
-        array_sort(collect_list(struct(col("idx"),
+        sort_array(collect_list(struct(col("idx"),
           ((col("x") - col("m")) * (col("x") - col("m"))).as("d2")))),
         lit(0.0), (acc, t) => acc + t.getField("d2"))).as("dist"))
     val w = Window.partitionBy(col("label"))
@@ -1002,7 +1002,7 @@ object AnnOps {
     * [[ivfpqEncodedArrays]], persistable next to the row form. */
   def pqEncodedArrays(encoded: DataFrame): DataFrame =
     encoded.groupBy(col("vec_id").as("neighbor_id"))
-      .agg(transform(array_sort(collect_list(struct(col("subspace"), col("code")))),
+      .agg(transform(sort_array(collect_list(struct(col("subspace"), col("code")))),
         t => t.getField("code")).as("codes"))
 
   private val pqArraysCache = new graft.SessionCache[DataFrame]()
@@ -1186,7 +1186,7 @@ object AnnOps {
     * from [[ivfpqEncodeOf]]'s row form and persistable next to it. */
   def ivfpqEncodedArrays(encoded: DataFrame): DataFrame =
     encoded.groupBy(col("cluster_id"), col("vec_id").as("neighbor_id"))
-      .agg(transform(array_sort(collect_list(struct(col("subspace"), col("code")))),
+      .agg(transform(sort_array(collect_list(struct(col("subspace"), col("code")))),
         t => t.getField("code")).as("codes"))
 
   /** Persist the array-form encoded corpus next to the row form

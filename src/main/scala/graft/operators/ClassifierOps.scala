@@ -99,7 +99,7 @@ object ClassifierOps {
     // with per-class token totals and smoothed log priors
     val classes = priors.join(nl, Seq("l")).crossJoin(broadcast(ptot))
       .groupBy()
-      .agg(array_sort(collect_list(struct(col("l"), col("n_l"),
+      .agg(sort_array(collect_list(struct(col("l"), col("n_l"),
         (log(col("d_l") + lit(1)) - log(col("d_tot") + col("n_langs"))).as("lp"))))
         .as("ls"))
 

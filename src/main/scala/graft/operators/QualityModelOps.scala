@@ -102,7 +102,7 @@ object QualityModelOps {
       .groupBy(col("doc_id"))
       .agg(sum(col("m")).as("n_bigrams"),
         aggregate(
-          array_sort(collect_list(struct(col("cb0"), col("cw0"), col("m"), col("v")))),
+          sort_array(collect_list(struct(col("cb0"), col("cw0"), col("m"), col("v")))),
           lit(0.0),
           (acc, x) => acc + x.getField("m") *
             (log(x.getField("cb0") + lit(1)) -
@@ -255,7 +255,7 @@ object QualityModelOps {
       .groupBy(col("doc_id"))
       .agg(sum(col("m")).as("n_trigrams"),
         aggregate(
-          array_sort(collect_list(struct(col("ct0"), col("cctx0"), col("cb0"),
+          sort_array(collect_list(struct(col("ct0"), col("cctx0"), col("cb0"),
             col("cw20"), col("cw30"), col("m"), col("n"), col("v")))),
           lit(0.0),
           (acc, x) => acc + x.getField("m") * (
@@ -417,54 +417,37 @@ object QualityModelOps {
     * signal DSIR resamples on. `target_like` thresholds the rounded
     * weight at 0 so both engines compare the identical value.
     *
-    * Scale shape: one corpus scan; both models are rollups of the same
-    * exploded frame and are AT MOST 256 rows by construction, so they
-    * are explicitly broadcast (unlike a vocabulary-keyed model, the
-    * bound is structural, not data-dependent) — the per-doc side never
-    * shuffles on the hot bucket key; the only doc-keyed exchange is
-    * the final per-document rollup. Corpus totals ride as a 1-row
-    * aggregate cross-join, never a driver count(). */
+    * Scale shape: the model is trained once per (session, corpus)
+    * ([[dsirCountsFor]]) and rides into the query as two 256-slot
+    * literal arrays — the bound is structural (B = 256 md5 buckets),
+    * not data-dependent, so no join or broadcast carries it. Scoring is
+    * ONE projection over the native per-doc bucket counts
+    * ([[graft.functions.Md5BucketCounts]]): each document looks its
+    * buckets up by index, sorts its (ct0, cr0, m, nt, nr) terms with
+    * the compiled `sort_array` and folds them in that order — the
+    * oracle's exact term and fold order, so the weight is
+    * bit-identical. No corpus-sized frame is materialized, no
+    * (doc, bucket) row exists, and the only exchanges are
+    * [[Tables.spread]]'s (on a narrow layout) and the final `orderBy`.
+    * Documents with no features emit no row, as in the oracle's
+    * per-(doc, bucket) rollup. */
   def dsirWeights(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.spread(s, Tables.documents(s, dir))
-    // Per-doc bucket counts in ONE native codegen pass
-    // ([[graft.functions.Md5BucketCounts]]) — value-identical to
-    // `explode(featuresCol) -> substring(md5(f),1,2) -> groupBy count`
-    // (spec-pinned), but with no per-feature string materialization, no
-    // ~2·|words| exploded rows per document, and no (doc, bucket)
-    // pre-aggregation exchange: rows are born final, so the heavy leg
-    // of this query is a pure scan projection. The bucket travels as
-    // the first digest byte (an int) — `substring(md5(f),1,2)` is its
-    // two hex chars — and never leaves the query, so no hex formatting
-    // is needed anywhere. (Optimization guide §1.2 step 2 / §2.3.)
-    // materialized ONCE: fb has three consumers (cr, ct, and the final
-    // join probe) whose join-pushed filters deny AQE exchange reuse,
-    // so without the cut the corpus scan + native bucket pass ran
-    // three times per query (the q_pmi_collocations mechanism, guide
-    // §2.4). fb is ≤ 256 compact (bucket, m) rows per document.
-    val fb = docs
-      .select(col("source"), col("doc_id"),
-        explode(graft.functions.GraftFunctions.md5BucketCounts(col("text"))).as("bm"))
-      .select(col("source"), col("doc_id"),
-        col("bm.bucket").as("bucket"), col("bm.m").as("m"))
-      .localCheckpoint()
-    val cr = fb.groupBy(col("bucket")).agg(sum(col("m")).as("cr"))
-    val ct = fb.filter(col("source").isin(refSources: _*))
-      .groupBy(col("bucket")).agg(sum(col("m")).as("ct"))
-    val totals = cr.agg(sum(col("cr")).as("nr"))
-      .crossJoin(broadcast(ct.agg(sum(col("ct")).as("nt"))))
-
-    fb
-      .join(broadcast(ct), Seq("bucket"), "left")
-      .join(broadcast(cr), Seq("bucket"))
-      .crossJoin(broadcast(totals))
-      .select(col("doc_id"), col("m"),
-        coalesce(col("ct"), lit(0L)).as("ct0"), col("cr").as("cr0"),
-        col("nt"), col("nr"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("m")).as("n_features"),
+    val model = dsirCountsFor(s, dir)
+    val ct = typedLit(model.ct)
+    val cr = typedLit(model.cr)
+    val nt = model.nt.fold(lit(null).cast("bigint"))(lit(_))
+    val nr = lit(model.nr)
+    Tables.spread(s, Tables.documents(s, dir))
+      .select(col("doc_id"),
+        graft.functions.GraftFunctions.md5BucketCounts(col("text")).as("bm"))
+      .filter(size(col("bm")) > 0)
+      .select(col("doc_id"),
+        aggregate(col("bm"), lit(0L), (acc, x) => acc + x.getField("m")).as("n_features"),
         round(aggregate(
-          array_sort(collect_list(struct(
-            col("ct0"), col("cr0"), col("m"), col("nt"), col("nr")))),
+          sort_array(transform(col("bm"), x => struct(
+            element_at(ct, x.getField("bucket") + 1).as("ct0"),
+            element_at(cr, x.getField("bucket") + 1).as("cr0"),
+            x.getField("m").as("m"), nt.as("nt"), nr.as("nr")))),
           lit(0.0),
           (acc, x) => acc + x.getField("m") *
             ((log(x.getField("ct0") + lit(1)) - log(x.getField("nt") + lit(dsirBuckets))) -
@@ -474,6 +457,39 @@ object QualityModelOps {
         (col("log_weight") > 0.0).as("target_like"))
       .orderBy("doc_id")
   }
+
+  /** The trained DSIR bucket counts of one corpus, indexed by bucket
+    * (the first md5 byte, 0..255): `ct` over [[refSources]], `cr` over
+    * the whole corpus, and their totals. `nt` is None when the corpus
+    * has no reference features — the oracle's empty `sum`, which makes
+    * every weight null. */
+  private[graft] final case class DsirCounts(
+      ct: Array[Long], cr: Array[Long], nt: Option[Long], nr: Long)
+
+  private val dsirCountsCache = new graft.SessionCache[DsirCounts]()
+
+  /** [[DsirCounts]] trained once per (session, corpus) like
+    * [[ensembleArtifactsFor]]: one bounded collect of at most
+    * [[dsirBuckets]] rows (training is deterministic, so cached and
+    * fresh models are identical). */
+  private[graft] def dsirCountsFor(s: SparkSession, dir: String): DsirCounts =
+    dsirCountsCache.getOrCompute(s, dir) {
+      val rows = Tables.spread(s, Tables.documents(s, dir))
+        .select(col("source"),
+          explode(graft.functions.GraftFunctions.md5BucketCounts(col("text"))).as("bm"))
+        .groupBy(col("bm.bucket"))
+        .agg(sum(col("bm.m")),
+          sum(when(col("source").isin(refSources: _*), col("bm.m"))))
+        .collect()
+      val ct = new Array[Long](dsirBuckets)
+      val cr = new Array[Long](dsirBuckets)
+      rows.foreach { r =>
+        cr(r.getInt(0)) = r.getLong(1)
+        if (!r.isNullAt(2)) ct(r.getInt(0)) = r.getLong(2)
+      }
+      val nt = if (rows.exists(!_.isNullAt(2))) Some(ct.sum) else None
+      DsirCounts(ct, cr, nt, cr.sum)
+    }
 
   val dsirWeightsSql: String =
     s"""WITH w AS (

@@ -102,7 +102,7 @@ object SearchOps {
       .select(col("doc_id"), col("tok"), termScore.as("sc"))
       .groupBy(col("doc_id"))
       .agg(aggregate(
-        array_sort(collect_list(struct(col("tok"), col("sc")))),
+        sort_array(collect_list(struct(col("tok"), col("sc")))),
         lit(0.0), (acc, t) => acc + t.getField("sc")).as("score"))
     // top-k: orderBy+limit plans as TakeOrderedAndProject; the rank
     // window runs on the k surviving rows only

@@ -63,7 +63,7 @@ object StatusOps {
       .agg(
         array_join(
           transform(
-            array_sort(collect_list(struct(col("ts"), col("event_id"), col("letter")))),
+            sort_array(collect_list(struct(col("ts"), col("event_id"), col("letter")))),
             x => x.getField("letter")),
           "").as("code"),
         count(lit(1)).as("n_steps"))
@@ -430,7 +430,7 @@ object StatusOps {
         sum(when(col("k") % 2 === 0, 1L).otherwise(0L)).as("n_with_errors"),
         array_join(
           transform(
-            array_sort(collect_list(when(col("k") % 2 === 0,
+            sort_array(collect_list(when(col("k") % 2 === 0,
               struct(col("ts"), col("event_id"),
                 concat(lit("search-ingest-"), col("k").cast("string")).as("msg"))))),
             x => x.getField("msg")),
