@@ -95,7 +95,8 @@ object Explain {
       // of the once-computed chunk frame (see chunkDedupOf)
       "q_chunk_dedup"        -> Seq("HashAggregate", "ObjectHashAggregate"),
       // the rule cascade runs at scan speed: one codegen projection
-      "q_gopher_filter"      -> Seq("Project"),
+      // around the native Gopher kernel
+      "q_gopher_filter"      -> Seq("Project", "graft_gopher_stats"),
       // HTML boilerplate extraction: one codegen string projection —
       // the whole family runs at scan speed
       "q_html_extract"       -> Seq("Project"),
@@ -308,6 +309,9 @@ object Explain {
       // projection: a Generate or a regroup means the per-(doc, bucket)
       // rows are back
       "q_dsir_weights"      -> Seq("Generate", "ObjectHashAggregate", "Join"),
+      // the Gopher rules are one native pass: a lambda, a regex match
+      // or a regex rewrite means the interpreted chain is back
+      "q_gopher_filter"     -> Seq("lambdafunction", "RLIKE", "regexp_replace"),
       // real-BPE token accounting is a pure native-expression
       // projection: no join, no aggregation — encoding a 100 TB corpus
       // must stay a scan; the id stream inherits the same shape (the

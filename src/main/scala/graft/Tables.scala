@@ -92,14 +92,20 @@ object Tables {
     * footgun). The seam is a LOADER contract, not a Spark-side quirk:
     * any oracle/twin engine must read through the same normalization
     * (scripts/check.py mirrors it in its documents view), exactly as a
-    * deployment would normalize once at ingest. `translate` is a
-    * codegen char map (no regex) fused into the scan projection; the
-    * driver corpus contains no VT, so results are byte-identical there
-    * and the cost is one array lookup per char. */
+    * deployment would normalize once at ingest.
+    *
+    * The map is `replace(text, VT, " ")`, a byte search fused into the
+    * scan projection: VT is the single UTF-8 byte 0x0B, which never
+    * occurs inside a multi-byte sequence, so replacing the byte is
+    * replacing the character, and a text without VT (the sf test
+    * corpora hold none) is returned as is, with no copy. The oracle view in
+    * scripts/check.py applies the same DuckDB `replace`. (`translate`
+    * would give the same output but decodes every text and probes a
+    * HashMap per character.) */
   def documents(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, translate}
+    import org.apache.spark.sql.functions.{col, lit, replace}
     table(s, d, "documents")
-      .withColumn("text", translate(col("text"), "\u000B", " "))
+      .withColumn("text", replace(col("text"), lit("\u000B"), lit(" ")))
   }
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 

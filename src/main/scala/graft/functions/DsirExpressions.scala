@@ -26,6 +26,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * document — no feature strings, no per-feature rows, no
   * (doc, bucket) pre-aggregation exchange. Output is the compact
   * (bucket, m) list sorted by bucket, one row per populated bucket.
+  *
+  * Assumes valid UTF-8 (Parquet strings are). Features are hashed as
+  * the UTF-8 bytes of the decoded text, so an invalid byte sequence is
+  * hashed as U+FFFD (EF BF BD), not as its raw bytes — the interpreted
+  * chain's split decodes the same way (pinned in Md5BucketCountsSpec).
   */
 case class Md5BucketCounts(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(

@@ -29,10 +29,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * Semantics are the batch gate's, signal by signal (the spec pins
   * verdict rows identical to [[graft.operators.QualityModelOps
   * .qualityEnsemble]]):
-  *  - Gopher shape rules and the repetition flag mirror
-  *    [[TextFunctions.gopherStructCol]] / `repetitionStructCol`
-  *    (space-only trim, Java-regex `\s+` split, code-point lengths,
-  *    three-valued `flagged` when a doc has no bigram).
+  *  - The Gopher shape verdict calls [[GopherStats]], the kernel
+  *    behind [[TextFunctions.gopherStructCol]]; the repetition flag
+  *    mirrors `repetitionStructCol` (space-only trim, Java-regex `\s+`
+  *    split, three-valued `flagged` when a doc has no bigram).
   *  - The LM mean-log-prob folds per-distinct-bigram terms in the
   *    batch operator's sorted (cb0, cw0, m) order, so the rounded
   *    score is BIT-IDENTICAL to [[graft.operators.QualityModelOps
@@ -71,12 +71,6 @@ final case class EnsembleArtifacts(
     m
   }
 
-  @transient private lazy val stopSet: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String]()
-    TextFunctions.qualityStopwords.foreach(s.add)
-    s
-  }
-
   @transient private lazy val md5Local =
     new ThreadLocal[MessageDigest] {
       override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
@@ -93,16 +87,6 @@ final case class EnsembleArtifacts(
     while (from < to && s.charAt(from) == ' ') from += 1
     while (to > from && s.charAt(to - 1) == ' ') to -= 1
     s.substring(from, to)
-  }
-
-  private def hasAlpha(w: String): Boolean = {
-    var i = 0
-    while (i < w.length) {
-      val c = w.charAt(i)
-      if ((c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z')) return true
-      i += 1
-    }
-    false
   }
 
   private val space = ' '.toByte
@@ -128,36 +112,18 @@ final case class EnsembleArtifacts(
     * null (a missing language buckets to `tail` like the batch gate's
     * unmatched left join). */
   def score(textU: UTF8String, langU: UTF8String): InternalRow = {
-    val text = textU.toString
-    val trimmed = trimSpaces(text)
-    val ws = trimmed.split("\\s+", -1)
+    // ---- Gopher shape rules: the one kernel (null-free for non-null text)
+    val gopherKeep = GopherStats.compute(textU).getBoolean(GopherStats.KeepOrdinal)
+
+    val ws = EnsembleArtifacts.Whitespace.split(trimSpaces(textU.toString), -1)
     val nWords = ws.length
     val nW = nWords.toDouble
-
-    // ---- Gopher shape rules (TextFunctions.gopherStructCol)
-    var nAlpha = 0
     val distinct = new java.util.HashSet[String](nWords * 2)
-    var nStop = 0
     var i = 0
     while (i < nWords) {
-      val w = ws(i)
-      if (hasAlpha(w)) nAlpha += 1
-      if (distinct.add(w) && stopSet.contains(w)) nStop += 1
+      distinct.add(ws(i))
       i += 1
     }
-    val noWsStr = trimmed.replaceAll("\\s+", "")
-    val noWs = noWsStr.codePointCount(0, noWsStr.length)
-    var nSymbols = 0
-    i = 0
-    while (i < text.length) {
-      val c = text.charAt(i)
-      if (c == '#' || c == '…') nSymbols += 1
-      i += 1
-    }
-    val meanWordLen = noWs / nW
-    val gopherKeep = (nWords >= 50 && nWords <= 100000) &&
-      (meanWordLen >= 3.0 && meanWordLen <= 10.0) &&
-      (nAlpha / nW >= 0.8) && (nSymbols / nW <= 0.1) && nStop >= 2
 
     // ---- repetition flag (TextFunctions.repetitionStructCol), with
     // the batch three-valued semantics when the doc has no bigram
@@ -251,6 +217,9 @@ final case class EnsembleArtifacts(
 }
 
 object EnsembleArtifacts {
+  // compiled once: String.split("\\s+") would recompile it per document
+  private val Whitespace = java.util.regex.Pattern.compile("\\s+")
+
   /** Collapse the trained standing frames into the closure value —
     * vocabulary-sized artifact loads, the [[graft.ArtifactStore]]
     * class of driver-side collect (bounded by the trained model, never

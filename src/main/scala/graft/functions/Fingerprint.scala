@@ -65,8 +65,8 @@ object RollingFingerprint {
   }
 
   /** Register as a SQL function so `expr("graft_fingerprint(text)")` and
-    * `spark.sql` both see it. */
+    * `spark.sql` both see it; a no-op when the session already has it. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_fingerprint", exprs => RollingFingerprint(exprs.head), "scala_udf")
+    GraftFunctions.registerOnce(spark, "graft_fingerprint",
+      exprs => RollingFingerprint(exprs.head))
 }

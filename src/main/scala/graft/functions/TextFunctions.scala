@@ -464,6 +464,16 @@ object TextFunctions {
 
   // ------------------------------------------------ rule cascade
 
+  /** Every Gopher shape stat and rule flag as ONE struct column over
+    * `text`: the native [[GopherStats]] kernel, the single definition
+    * of the rule-cascade contract, so the batch gate ([[gopherFilter]]),
+    * the batch ensemble and the streaming ensemble
+    * ([[graft.streaming.EventStream.qualityEnsembleStream]]) can never
+    * disagree on a flag. Integer counts only, so no fold-order FP
+    * concerns. */
+  private[graft] def gopherStructCol: Column =
+    GraftFunctions.gopherStats(col("text"))
+
   /** Gopher-style document-shape filter (Rae et al. 2021, §A1.1): hard
     * per-document rules — word-count bounds, mean word length bounds,
     * alphabetic-word fraction, symbol-to-word ratio, minimum stopword
@@ -475,49 +485,6 @@ object TextFunctions {
     * One map-side projection over the corpus — no shuffle, no state;
     * at 100 TB this runs at scan speed inside whole-stage codegen and
     * pushes only (doc_id, text) through the reader. */
-  /** Every Gopher shape stat and rule flag as ONE struct column over
-    * `text` — the single definition of the rule-cascade contract, so
-    * the batch gate ([[gopherFilter]]) and the streaming ensemble
-    * ([[graft.streaming.EventStream.qualityEnsembleStream]]) can never
-    * disagree on a flag. One split shared by all word-level rules via
-    * the let-binding idiom (see qualityScore); integer counts only, so
-    * no fold-order FP concerns. */
-  private[graft] def gopherStructCol: Column = {
-    // one split shared by all word-level rules (see qualityScore);
-    // integer counts only, so no fold-order FP concerns
-    def build(ws: Column): Column = {
-      val nWordsI = size(ws)
-      val nAlpha = size(filter(ws, w => w.rlike("[A-Za-z]")))
-      val nStop = size(array_intersect(array_distinct(ws),
-        typedlit(qualityStopwords)))
-      val nWords = nWordsI.cast("double")
-      val noWs = length(regexp_replace(trim(col("text")), "\\s+", ""))
-      val nSymbols = length(col("text")) -
-        length(translate(col("text"), "#…", ""))
-      val meanWordLen = noWs.cast("double") / nWords
-      val alphaFrac = nAlpha.cast("double") / nWords
-      val symbolRatio = nSymbols.cast("double") / nWords
-      val okWords = nWordsI.between(50, 100000)
-      val okMeanLen = meanWordLen.between(3.0, 10.0)
-      val okAlpha = alphaFrac >= 0.8
-      val okSymbol = symbolRatio <= 0.1
-      val okStop = nStop >= 2
-      struct(
-        nWordsI.as("n_words"),
-        meanWordLen.as("mean_word_len"),
-        alphaFrac.as("alpha_frac"),
-        symbolRatio.as("symbol_ratio"),
-        nStop.as("n_stop"),
-        okWords.as("ok_words"),
-        okMeanLen.as("ok_mean_len"),
-        okAlpha.as("ok_alpha"),
-        okSymbol.as("ok_symbol"),
-        okStop.as("ok_stop"),
-        (okWords && okMeanLen && okAlpha && okSymbol && okStop).as("keep"))
-    }
-    element_at(transform(array(split(trim(col("text")), "\\s+")), build _), 1)
-  }
-
   def gopherFilter(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .withColumn("g", gopherStructCol)

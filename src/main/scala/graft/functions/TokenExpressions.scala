@@ -26,7 +26,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * per DISTINCT word per document map-side, so per-document counting
   * never touches a shuffle and downstream statistics (tf, df, NB
   * class counts) aggregate the compact stream directly. Output order
-  * is first occurrence, deterministic. */
+  * is first occurrence, deterministic.
+  *
+  * Assumes valid UTF-8 (Parquet strings are). The text is decoded
+  * once, so each invalid byte sequence becomes U+FFFD before the split
+  * — words that differ only in their invalid bytes count as one, as
+  * they do in the interpreted split, which decodes the same way
+  * (pinned in TokenCountsSpec). */
 case class TokenCounts(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(
     StructType(Seq(
@@ -99,7 +105,12 @@ object TokenCounts {
   * occurrence into a depth×256 count grid per document, emitting one
   * (row, bucket, m) struct per populated counter. Downstream the
   * corpus sketch is one (row, bucket) aggregation of ≤ depth·256 rows
-  * per document instead of depth·|tokens|. */
+  * per document instead of depth·|tokens|.
+  *
+  * Assumes valid UTF-8 (Parquet strings are). Tokens are hashed as the
+  * UTF-8 bytes of the decoded text, so an invalid byte sequence is
+  * hashed as U+FFFD (EF BF BD), not as its raw bytes — the interpreted
+  * chain's split decodes the same way (pinned in TokenCountsSpec). */
 case class CmsBucketCounts(child: Expression, depth: Int) extends UnaryExpression {
   require(depth >= 1 && depth <= 16, "cms depth out of range")
   override def dataType: DataType = ArrayType(

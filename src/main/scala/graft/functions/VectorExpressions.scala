@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -75,27 +76,38 @@ object GraftFunctions {
     }
   }
 
+  /** Register every native SQL function in `spark`'s session. Safe to
+    * call any number of times: a name the session's registry already
+    * holds is left as it is (check before inject, like Pathling's
+    * `SqlStrategy.setup`), so repeated calls neither rebuild builders
+    * nor log "replaced a previously registered function". */
   def register(spark: SparkSession): Unit = {
     RollingFingerprint.register(spark)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles", exprs => ShingleHashes(exprs(0),
-        intArg("graft_shingles", exprs(1))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash", exprs => MinHashSignature(exprs(0),
-        intArg("graft_minhash", exprs(1))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_window_hashes", exprs => WindowHashes(exprs(0),
-        intArg("graft_window_hashes", exprs(1))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_intersect_count",
-      exprs => IntersectCount(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jpeg_dims", exprs => JpegDims(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_mp4_duration", exprs => Mp4Duration(exprs(0)), "scala_udf")
+    registerOnce(spark, "graft_dot", exprs => DotProduct(exprs(0), exprs(1)))
+    registerOnce(spark, "graft_shingles", exprs => ShingleHashes(exprs(0),
+      intArg("graft_shingles", exprs(1))))
+    registerOnce(spark, "graft_minhash", exprs => MinHashSignature(exprs(0),
+      intArg("graft_minhash", exprs(1))))
+    registerOnce(spark, "graft_window_hashes", exprs => WindowHashes(exprs(0),
+      intArg("graft_window_hashes", exprs(1))))
+    registerOnce(spark, "graft_intersect_count",
+      exprs => IntersectCount(exprs(0), exprs(1)))
+    registerOnce(spark, "graft_jpeg_dims", exprs => JpegDims(exprs(0)))
+    registerOnce(spark, "graft_mp4_duration", exprs => Mp4Duration(exprs(0)))
+    registerOnce(spark, "graft_gopher_stats", exprs => GopherStats(exprs(0)))
   }
+
+  /** Register `name` unless the session's function registry has it. */
+  private[graft] def registerOnce(spark: SparkSession, name: String,
+      builder: Seq[Expression] => Expression): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier(name)))
+      registry.createOrReplaceTempFunction(name, builder, "scala_udf")
+  }
+
+  /** Gopher shape stats and rule flags struct — see [[GopherStats]]. */
+  def gopherStats(text: Column): Column =
+    GraftBridge.column(GopherStats(GraftBridge.expression(text)))
 
   /** Sorted-distinct array intersection size — see [[IntersectCount]]. */
   def intersectCount(a: Column, b: Column): Column =

@@ -472,7 +472,7 @@ object VersionOps {
   def migrateLegacyIds(s: SparkSession, dir: String): DataFrame = {
     val re = "^(.+)_(v[0-9].*)$"
     val nm = regexp_extract(col("source_id"), re, 1)
-    val v0 = translate(regexp_extract(col("source_id"), re, 2), "-", ".")
+    val v0 = replace(regexp_extract(col("source_id"), re, 2), lit("-"), lit("."))
     val v1 = when(instr(v0, ".") === 0, concat(v0, lit(".0"))).otherwise(v0)
     legacyRecords(s, dir)
       .filter(regexp_extract(col("source_id"), re, 2) =!= "")

@@ -38,6 +38,34 @@ class TablesVtSpec extends SparkSpec {
     assert(loaded(3L)._1 == "x   y\t z" && loaded(3L)._2 == 3)
   }
 
+  test("replace is translate on VT inside ASCII and multi-byte text") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-vt-replace").toString
+    Seq(
+      (1L, "ascii\u000Bonly\u000B\u000Bruns"),
+      (2L, "café\u000Bnaïve…\u000B😀\u000B日本語"),
+      (3L, "\u000Bé\u000B"),
+      (4L, "no control bytes here é 😀"),
+      (5L, ""),
+      (6L, null.asInstanceOf[String])
+    ).toDF("doc_id", "text").write.mode(SaveMode.Overwrite).parquet(dir)
+    val rows = spark.read.parquet(dir)
+      .select(col("doc_id"),
+        replace(col("text"), lit("\u000B"), lit(" ")).as("r"),
+        translate(col("text"), "\u000B", " ").as("t"))
+      .collect()
+    assert(rows.length == 6)
+    rows.foreach(r => assert(r.getString(1) == r.getString(2), r))
+    assert(rows.find(_.getLong(0) == 2L).get.getString(1) == "café naïve… 😀 日本語")
+  }
+
+  test("a documents read plans no translate") {
+    val plan = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("replace("), plan)
+    assert(!plan.contains("translate"), plan)
+  }
+
   test("driver-corpus reads are byte-identical through the seam") {
     // the seam must be a no-op on VT-free corpora (the driver data):
     // hash the text column raw vs through the loader

@@ -55,6 +55,28 @@ class Md5BucketCountsSpec extends SparkSpec {
     assert(i.exceptAll(n).count() == 0L)
   }
 
+  test("malformed UTF-8: buckets hash the U+FFFD-replaced feature bytes") {
+    // "ab<FF> cd ab<FE>": the two invalid bytes both decode to U+FFFD,
+    // so the kernel buckets exactly what it buckets for the decoded text,
+    // and the interpreted chain (whose split decodes too) agrees
+    val bytes = Array('a', 'b', 0xff, ' ', 'c', 'd', ' ', 'a', 'b', 0xfe).map(_.toByte)
+    def pairs(a: org.apache.spark.sql.catalyst.util.ArrayData) =
+      (0 until a.numElements()).map { i =>
+        val r = a.getStruct(i, 2)
+        (r.getInt(0), r.getLong(1))
+      }
+    val got = pairs(Md5BucketCounts.compute(
+      org.apache.spark.unsafe.types.UTF8String.fromBytes(bytes)))
+    assert(got == pairs(Md5BucketCounts.compute(
+      org.apache.spark.unsafe.types.UTF8String.fromString("ab\uFFFD cd ab\uFFFD"))))
+    assert(got.map(_._2).sum == 5L) // 3 unigrams + 2 bigrams
+    val docs = Seq((1L, bytes)).toDF("doc_id", "b")
+      .select(col("doc_id"), col("b").cast("string").as("text"))
+    val i = interpreted(docs, col("doc_id"), col("text"))
+      .collect().map(r => (r.getInt(1), r.getLong(2))).toSet
+    assert(got.toSet == i)
+  }
+
   test("output is sorted by bucket with only populated buckets, and m sums to 2w-1") {
     val out = Seq("alpha beta gamma delta").toDF("text")
       .select(GraftFunctions.md5BucketCounts(col("text")).as("bm"))

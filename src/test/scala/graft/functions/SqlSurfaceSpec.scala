@@ -31,6 +31,20 @@ class SqlSurfaceSpec extends SparkSpec {
     viaSql.zip(viaApi).foreach { case (a, b) => assert(a == b) }
   }
 
+  test("register is idempotent: a second call keeps every builder") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    GraftFunctions.register(spark)
+    val registry = spark.sessionState.functionRegistry
+    val names = Seq("graft_fingerprint", "graft_dot", "graft_shingles", "graft_minhash",
+      "graft_window_hashes", "graft_intersect_count", "graft_jpeg_dims",
+      "graft_mp4_duration", "graft_gopher_stats")
+    val before = names.map(n => registry.lookupFunctionBuilder(FunctionIdentifier(n)))
+    assert(before.forall(_.isDefined))
+    GraftFunctions.register(spark)
+    val after = names.map(n => registry.lookupFunctionBuilder(FunctionIdentifier(n)))
+    before.zip(after).foreach { case (b, a) => assert(a.get eq b.get) }
+  }
+
   test("integral literal widths are accepted; bad k args raise AnalysisException") {
     GraftFunctions.register(spark)
     graft.Tables.documents(spark, sfDir).createOrReplaceTempView("docs_sql")

@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Value-identity pins for the round-11 native per-document count
   * passes ([[TokenCounts]], [[CmsBucketCounts]]) against the
@@ -68,6 +69,52 @@ class TokenCountsSpec extends SparkSpec {
       .select(col("row"), format_string("%02x", col("b")).as("bucket"), col("c"))
       .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSet
     assert(native == interp)
+  }
+
+  // ------------------------------------------ malformed UTF-8
+
+  /** "ab<FF> cd ab<FE>": two different invalid bytes, one word each. */
+  private val malformed: Array[Byte] =
+    Array('a', 'b', 0xff, ' ', 'c', 'd', ' ', 'a', 'b', 0xfe).map(_.toByte)
+  // the same text decoded: each invalid byte becomes one U+FFFD
+  private val replaced = "ab\uFFFD cd ab\uFFFD"
+
+  private def malformedDoc = Seq(malformed).toDF("b").select(col("b").cast("string").as("text"))
+
+  test("malformed UTF-8: token counts see the text decoded with U+FFFD replacement") {
+    // both invalid bytes decode to U+FFFD, so the two raw-distinct
+    // words are one word counted twice — as the interpreted split does
+    val tc = TokenCounts.compute(UTF8String.fromBytes(malformed))
+    val got = (0 until tc.numElements()).map { i =>
+      val r = tc.getStruct(i, 2)
+      (r.getUTF8String(0).toString, r.getLong(1))
+    }
+    assert(got == Seq(("ab\uFFFD", 2L), ("cd", 1L)))
+    val interp = malformedDoc
+      .select(explode(split(trim(col("text")), "\\s+")).as("w"))
+      .groupBy(col("w")).agg(count(lit(1)).as("c"))
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(got.toSet == interp)
+  }
+
+  test("malformed UTF-8: cms buckets hash the U+FFFD-replaced token bytes") {
+    val depth = TextFunctions.cmsDepth
+    def cells(a: org.apache.spark.sql.catalyst.util.ArrayData) =
+      (0 until a.numElements()).map { i =>
+        val r = a.getStruct(i, 3)
+        (r.getInt(0), r.getInt(1), r.getLong(2))
+      }
+    val got = cells(CmsBucketCounts.compute(UTF8String.fromBytes(malformed), depth))
+    assert(got == cells(CmsBucketCounts.compute(UTF8String.fromString(replaced), depth)))
+    // and so agree with the interpreted md5 chain, whose split decodes too
+    val interp = malformedDoc
+      .select(explode(split(trim(col("text")), "\\s+")).as("tok"))
+      .select(col("tok"), explode(array((0 until depth).map(lit(_)): _*)).as("row"))
+      .select(col("row"), conv(substring(md5(concat_ws("#", col("row"), col("tok"))), 1, 2),
+        16, 10).cast("int").as("bucket"))
+      .groupBy(col("row"), col("bucket")).agg(count(lit(1)).as("c"))
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet
+    assert(got.toSet == interp)
   }
 
   // ------------------------------------- whole-query identities
