@@ -8,7 +8,9 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Build a session tuned for graft's workload shape.
+  /** Build a session tuned for graft's workload shape. Runtime tuning
+    * (AQE, the compiled-class cache) is [[Tables.tune]]'s, applied before
+    * the session runs anything.
     *
     * @param master            cluster manager URL (None = use deploy env)
     * @param shufflePartitions size to ~2-3× the cluster's total cores; at
@@ -22,13 +24,10 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // fact scans: keep split sizes large enough to amortize footer reads
       .config("spark.sql.files.maxPartitionBytes", "256m")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-    val s = master.fold(b)(b.master).getOrCreate()
+    val s = Tables.tune(master.fold(b)(b.master).getOrCreate())
     functions.GraftFunctions.register(s)
     s
   }

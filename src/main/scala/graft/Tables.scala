@@ -128,7 +128,25 @@ object Tables {
 
   /** Runtime tuning applied by every entry point. AQE re-plans shuffles at
     * runtime (skew joins, partition coalescing) — essential at cluster scale,
-    * harmless locally. */
+    * harmless locally.
+    *
+    * It also sizes Spark's compiled-class cache. That cache is one LRU per
+    * JVM, keyed by generated source and by the compiling thread's class
+    * loader (a driver compile and an executor compile of one stage take two
+    * slots), and sized once, when `CodeGenerator` is first touched, from the
+    * static `spark.sql.codegen.cache.maxEntries` (default 100). graft's
+    * working sets are larger: a curation pass compiles ~220 classes and a
+    * catalog round ~180, so at 100 entries each warm pass recompiled
+    * 84–164 of them. `tune` sets the conf on the session to
+    * [[codegenCacheEntries]], unless the session was built with a value,
+    * and creates the cache under it at once, so graft fixes the size rather
+    * than whichever thread compiles first. A cache hit returns the class
+    * compiled from identical source, so results cannot change.
+    *
+    * Contract: call it before the session's first query. Once anything has
+    * been compiled in this JVM the cache exists with its size fixed; `tune`
+    * then logs one warning naming the conf to set at session build and
+    * leaves the conf as it is. */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -141,6 +159,41 @@ object Tables {
     // whole plan (interpreted fallback), a measured ~3x slowdown across
     // this suite. Method splitting is already handled by
     // spark.sql.codegen.methodSplitThreshold inside codegen.
+    sizeCodegenCache(spark)
     spark
+  }
+
+  /** Entries in the JVM's compiled-class cache when [[tune]] creates it,
+    * sized from measured traffic (graftbench's session, 4 cores). Every
+    * query of [[SparkEntry.queries]] run once at sf0.01 compiles 2,107
+    * distinct classes, and each further pass ~100 more whose source
+    * differs run to run; 4096 holds the whole query surface, so the bound,
+    * not the workload, caps the cache. A cached class retains 28–42 KB of
+    * heap (retained heap over the extra classes cached: +3.5 MB for
+    * curation's ~124 extra, +92 MB for the surface's ~2,200 extra after
+    * three passes), so a full cache holds at most about 170 MB. */
+  val codegenCacheEntries = 4096
+
+  // The cache is one per JVM, so the first `tune` in the JVM decides it.
+  private var codegenCacheDecided = false
+
+  private def sizeCodegenCache(spark: SparkSession): Unit = synchronized {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
+    if (!codegenCacheDecided) {
+      codegenCacheDecided = true
+      val key = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES
+      if (CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount > 0)
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"Tables.tune ran after code was compiled in this JVM, so Spark's " +
+          s"compiled-class cache already has its size; set ${key.key}=" +
+          s"$codegenCacheEntries when building the session to size it.")
+      else {
+        val conf = spark.sessionState.conf
+        if (!conf.contains(key.key)) conf.setConf(key, codegenCacheEntries)
+        SQLConf.withExistingConf(conf)(CodeGenerator.compileTime)
+      }
+    }
   }
 }

@@ -2,8 +2,9 @@ package graft.operators
 
 /** The committed default BPE merge list — the output of
   * [[BpeOps.trainMerges]] over the sf0.001 `documents` corpus with
-  * [[BpeOps.defaultNumMerges]] merges, in rank order. Generated by
-  * `graft.TrainBpeScratch`; BpeOpsSpec asserts the trainer reproduces
+  * [[BpeOps.defaultNumMerges]] merges, in rank order. Generated by the
+  * test-scope `graft.TrainBpeScratch` (`sbt "Test/runMain
+  * graft.TrainBpeScratch"`); BpeOpsSpec asserts the trainer reproduces
   * this list exactly, so the artifact is regenerable, never hand-kept.
   */
 private[operators] object DefaultBpeMerges {
@@ -54,7 +55,7 @@ private[operators] object DefaultBpeMerges {
     * z, digits or punctuation at this sf). Characters absent here
     * surface as OOV ids (-1) on out-of-distribution corpora — the
     * signal `q_bpe_ids`'s n_oov column exists to count. Also generated
-    * by TrainBpeScratch and spec-pinned against the trainer. */
+    * by the test-scope TrainBpeScratch and spec-pinned against the trainer. */
   val alphabet: Seq[String] = Seq(
     "a", "b", "c", "d", "e", "f", "g", "h", "i", "j", "k", "l",
     "m", "n", "o", "p", "q", "r", "s", "t", "u", "v", "w", "y")

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions.col
 
 /** One-off generator for the committed default BPE merge list (see
   * BpeOps.defaultMerges) — prints the Scala source of
-  * DefaultBpeMerges. Kept out of the shipped surface; run:
-  *   sbt "runMain graft.TrainBpeScratch"
+  * DefaultBpeMerges. Test scope, kept out of the shipped surface; run:
+  *   sbt "Test/runMain graft.TrainBpeScratch"
   */
 object TrainBpeScratch {
   def main(args: Array[String]): Unit = {
