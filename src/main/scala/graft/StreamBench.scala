@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{DedupOps, PipelineOps, QualityModelOps, SearchOps}
 import graft.streaming.EventStream
@@ -51,28 +52,37 @@ object StreamBench {
     val windowIdx = DedupOps.windowFreqOf(docs, "doc_id", "text",
       DedupOps.substringW).localCheckpoint()
 
-    def run(name: String, mode: String)(f: DataFrame => DataFrame): Unit = {
-      val stream = MemoryStream[(Long, String)]
-      stream.addData(rows)
-      val q = f(stream.toDF().toDF("doc_id", "text"))
-        .writeStream.format("noop").outputMode(mode).start()
+    // drains a started query and prints its rate: `n` items of `unit`
+    def report(name: String, n: Long, unit: String)(q: StreamingQuery): Unit = {
       val t0 = System.nanoTime()
       try q.processAllAvailable() finally q.stop()
       val dt = (System.nanoTime() - t0) / 1e9
-      println(f"== $name%-22s ${rows.size}%8d docs  $dt%7.2f s  ${rows.size / dt}%9.0f docs/s")
+      println(f"== $name%-22s $n%8d $unit%-5s $dt%7.2f s  ${n / dt}%9.0f $unit/s")
     }
 
-    run("dsir_score", "append")(df => EventStream.dsirScoreStream(df, dsirModel))
-    run("dsir_score_join", "update")(df => EventStream.dsirScoreStreamJoin(df, dsirModel))
-    run("lm_score", "append")(df => EventStream.lmScoreStream(df, cbM, cwM))
-    run("lm_score_join", "update")(df => EventStream.lmScoreStreamJoin(df, cbM, cwM))
-    run("bm25_score", "append")(df =>
+    // one leg: `items` through a memory stream into `f`, to a noop sink
+    def run[T: Encoder](name: String, mode: String, items: Seq[T], unit: String = "docs")(
+        f: Dataset[T] => Dataset[_]): Unit = {
+      val stream = MemoryStream[T]
+      stream.addData(items)
+      report(name, items.size, unit)(
+        f(stream.toDS()).writeStream.format("noop").outputMode(mode).start())
+    }
+
+    // a leg over the (doc_id, text) corpus copies
+    def docLeg(name: String, mode: String)(f: DataFrame => DataFrame): Unit =
+      run(name, mode, rows)(ds => f(ds.toDF("doc_id", "text")))
+
+    docLeg("dsir_score", "append")(df => EventStream.dsirScoreStream(df, dsirModel))
+    docLeg("lm_score", "append")(df => EventStream.lmScoreStream(df, cbM, cwM))
+    docLeg("lm_score_join", "update")(df => EventStream.lmScoreStreamJoin(df, cbM, cwM))
+    docLeg("bm25_score", "append")(df =>
       EventStream.bm25ScoreStream(df, bm25DfM, bm25StatsM))
-    run("contamination", "update")(df =>
+    docLeg("contamination", "update")(df =>
       EventStream.contaminationStream(df, bench, bloom, PipelineOps.contaminationFrac))
-    run("substring_cut", "update")(df =>
+    docLeg("substring_cut", "update")(df =>
       EventStream.substringCutStream(df, windowIdx, DedupOps.substringW))
-    run("heavy_hitters", "update")(df =>
+    docLeg("heavy_hitters", "update")(df =>
       EventStream.heavyHitterStream(df, 32))
 
     // ---- ingest token-rate monitor ((source, text, ts) stream; one
@@ -86,50 +96,20 @@ object StreamBench {
               (src, text, java.sql.Timestamp.valueOf("2026-01-01 00:00:00"))
             }
         }
-      val stream = MemoryStream[(String, String, java.sql.Timestamp)]
-      stream.addData(trRows)
-      val q = EventStream.tokenRateStream(
-          stream.toDF().toDF("source", "text", "ts"))
-        .writeStream.format("noop").outputMode("update").start()
-      val t0 = System.nanoTime()
-      try q.processAllAvailable() finally q.stop()
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"== ${"token_rate"}%-22s ${trRows.size}%8d docs  $dt%7.2f s  ${trRows.size / dt}%9.0f docs/s")
+      run("token_rate", "update", trRows)(ds =>
+        EventStream.tokenRateStream(ds.toDF("source", "text", "ts")))
     }
 
     // ---- the full quality-ensemble gate (doc_id, lang, text stream;
-    // all four model artifacts broadcast, one stateful rollup)
+    // the fused native scorer over the session-trained artifacts)
+    val art = QualityModelOps.ensembleArtifactsFor(spark, srcDir)
     locally {
-      val pplCuts = QualityModelOps.pplCutsOf(
-        QualityModelOps.lmPerplexity(spark, srcDir)
-          .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id")))
-        .localCheckpoint()
       val enRows: Seq[(Long, String, String)] = (0 until mult).flatMap { i =>
         docs.select(col("doc_id") + lit(i * shift), col("lang"), col("text"))
           .as[(Long, String, String)].collect()
       }
-      val stream = MemoryStream[(Long, String, String)]
-      stream.addData(enRows)
-      val q = EventStream.qualityEnsembleStream(
-          stream.toDF().toDF("doc_id", "lang", "text"),
-          cbM, cwM, pplCuts, dsirModel)
-        .writeStream.format("noop").outputMode("update").start()
-      val t0 = System.nanoTime()
-      try q.processAllAvailable() finally q.stop()
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"== ${"quality_ensemble"}%-22s ${enRows.size}%8d docs  $dt%7.2f s  ${enRows.size / dt}%9.0f docs/s")
-
-      // the fused native scorer over the identical artifacts/stream
-      val art = graft.functions.EnsembleArtifacts.of(cbM, cwM, pplCuts, dsirModel)
-      val stream3 = MemoryStream[(Long, String, String)]
-      stream3.addData(enRows)
-      val q3 = EventStream.qualityEnsembleStreamFused(
-          stream3.toDF().toDF("doc_id", "lang", "text"), art)
-        .writeStream.format("noop").outputMode("append").start()
-      val t3 = System.nanoTime()
-      try q3.processAllAvailable() finally q3.stop()
-      val dt3 = (System.nanoTime() - t3) / 1e9
-      println(f"== ${"quality_ens_fused"}%-22s ${enRows.size}%8d docs  $dt3%7.2f s  ${enRows.size / dt3}%9.0f docs/s")
+      run("quality_ens_fused", "append", enRows)(ds =>
+        EventStream.qualityEnsembleStreamFused(ds.toDF("doc_id", "lang", "text"), art))
     }
 
     // ---- token-budget admission gate ((doc_id, source, text) stream;
@@ -144,15 +124,8 @@ object StreamBench {
         docs.select(col("doc_id") + lit(i * shift), col("source"), col("text"))
           .as[(Long, String, String)].collect()
       }
-      val stream = MemoryStream[(Long, String, String)]
-      stream.addData(bgRows)
-      val q = EventStream.tokenBudgetGateStream(
-          stream.toDF().toDF("doc_id", "source", "text"), budgets)
-        .writeStream.format("noop").outputMode("append").start()
-      val t0 = System.nanoTime()
-      try q.processAllAvailable() finally q.stop()
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"== ${"token_budget_gate"}%-22s ${bgRows.size}%8d docs  $dt%7.2f s  ${bgRows.size / dt}%9.0f docs/s")
+      run("token_budget_gate", "append", bgRows)(ds =>
+        EventStream.tokenBudgetGateStream(ds.toDF("doc_id", "source", "text"), budgets))
     }
 
     // ---- streaming Hamming-sketch ANN probe against the banded sign-
@@ -167,15 +140,8 @@ object StreamBench {
           .select(col("vec_id") + lit(i * shift), col("embedding"))
           .as[(Long, Seq[Float])].collect()
       }
-      val stream = MemoryStream[(Long, Seq[Float])]
-      stream.addData(vecRows)
-      val q = EventStream.hammingProbeStream(
-          stream.toDF().toDF("vec_id", "embedding"), bands, e)
-        .writeStream.format("noop").outputMode("update").start()
-      val t0 = System.nanoTime()
-      try q.processAllAvailable() finally q.stop()
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"== ${"hamming_probe"}%-22s ${vecRows.size}%8d vecs  $dt%7.2f s  ${vecRows.size / dt}%9.0f vecs/s")
+      run("hamming_probe", "update", vecRows, "vecs")(ds =>
+        EventStream.hammingProbeStream(ds.toDF("vec_id", "embedding"), bands, e))
     }
 
     // ---- streaming ANN probe against the plain IVF inverted file
@@ -188,15 +154,8 @@ object StreamBench {
           .select(col("vec_id") + lit(i * shift), col("embedding"))
           .as[(Long, Seq[Float])].collect()
       }
-      val stream = MemoryStream[(Long, Seq[Float])]
-      stream.addData(vecRows)
-      val q = EventStream.annProbeStream(
-          stream.toDF().toDF("vec_id", "embedding"), centsM, assignedM)
-        .writeStream.format("noop").outputMode("update").start()
-      val t0 = System.nanoTime()
-      try q.processAllAvailable() finally q.stop()
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"== ${"ann_probe"}%-22s ${vecRows.size}%8d vecs  $dt%7.2f s  ${vecRows.size / dt}%9.0f vecs/s")
+      run("ann_probe", "update", vecRows, "vecs")(ds =>
+        EventStream.annProbeStream(ds.toDF("vec_id", "embedding"), centsM, assignedM))
     }
 
     // ---- streaming IVFADC probe against the compressed index
@@ -215,15 +174,8 @@ object StreamBench {
           .select(col("vec_id") + lit(i * shift), col("embedding"))
           .as[(Long, Seq[Float])].collect()
       }
-      val stream = MemoryStream[(Long, Seq[Float])]
-      stream.addData(vecRows)
-      val q = EventStream.ivfpqProbeStream(
-          stream.toDF().toDF("vec_id", "embedding"), cents, cb, encArrays)
-        .writeStream.format("noop").outputMode("update").start()
-      val t0 = System.nanoTime()
-      try q.processAllAvailable() finally q.stop()
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"== ${"ivfpq_probe"}%-22s ${vecRows.size}%8d vecs  $dt%7.2f s  ${vecRows.size / dt}%9.0f vecs/s")
+      run("ivfpq_probe", "update", vecRows, "vecs")(ds =>
+        EventStream.ivfpqProbeStream(ds.toDF("vec_id", "embedding"), cents, cb, encArrays))
     }
 
     // ---- stateful per-user transition feed over the event stream
@@ -236,14 +188,7 @@ object StreamBench {
           .as[(Long, Long, java.sql.Timestamp, String)].collect()
           .map(t => EventStream.TEv(t._1, t._2, t._3, t._4))
       }
-      val stream = MemoryStream[EventStream.TEv]
-      stream.addData(evRows)
-      val q = EventStream.transitionStream(stream.toDS())
-        .writeStream.format("noop").outputMode("append").start()
-      val t0 = System.nanoTime()
-      try q.processAllAvailable() finally q.stop()
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"== ${"transitions"}%-22s ${evRows.size}%8d evs   $dt%7.2f s  ${evRows.size / dt}%9.0f evs/s")
+      run("transitions", "append", evRows, "evs")(EventStream.transitionStream)
     }
 
     // ---- feedstock connector streaming ingest: the corpus written as
@@ -264,31 +209,19 @@ object StreamBench {
       stage.zipWithIndex.foreach { case (f, i) =>
         f.renameTo(new java.io.File(f"$landing/feed-$i%05d.jsonl"))
       }
-      val q = spark.readStream.format("graft-feedstock").load(landing)
-        .select(col("record.doc_id"), col("record.text"))
-        .writeStream.format("noop").outputMode("append").start()
-      val t0 = System.nanoTime()
-      try q.processAllAvailable() finally q.stop()
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"== ${"feedstock_ingest"}%-22s $n%8d docs  $dt%7.2f s  ${n / dt}%9.0f docs/s")
+      report("feedstock_ingest", n, "docs")(
+        spark.readStream.format("graft-feedstock").load(landing)
+          .select(col("record.doc_id"), col("record.text"))
+          .writeStream.format("noop").outputMode("append").start())
 
       // the COMPOSED pipeline over the same landing dir: feedstock
       // micro-batch read → fused quality gate → shard sink to disk
-      val pplCuts = QualityModelOps.pplCutsOf(
-        QualityModelOps.lmPerplexity(spark, srcDir)
-          .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id")))
-        .localCheckpoint()
-      val art = graft.functions.EnsembleArtifacts.of(cbM, cwM, pplCuts, dsirModel)
       val shardDir = java.nio.file.Files
         .createTempDirectory("graft-sb-shards").toString + "/out"
       val ckptDir = java.nio.file.Files
         .createTempDirectory("graft-sb-ckpt").toString
-      val qp = graft.streaming.IngestPipeline.start(
-        spark, landing, art, shardDir, ckptDir, nShards = 8)
-      val tp = System.nanoTime()
-      try qp.processAllAvailable() finally qp.stop()
-      val dtp = (System.nanoTime() - tp) / 1e9
-      println(f"== ${"ingest_pipeline"}%-22s $n%8d docs  $dtp%7.2f s  ${n / dtp}%9.0f docs/s")
+      report("ingest_pipeline", n, "docs")(graft.streaming.IngestPipeline.start(
+        spark, landing, art, shardDir, ckptDir, nShards = 8))
 
       // the quota-enforcing variant: gate → per-source token budget →
       // shards (budgets = half of each source's corpus token mass)
@@ -303,12 +236,8 @@ object StreamBench {
         .createTempDirectory("graft-sb-shards-b").toString + "/out"
       val ckptDirB = java.nio.file.Files
         .createTempDirectory("graft-sb-ckpt-b").toString
-      val qb = graft.streaming.IngestPipeline.startBudgeted(
-        spark, landing, art, budgets, shardDirB, ckptDirB, nShards = 8)
-      val tb = System.nanoTime()
-      try qb.processAllAvailable() finally qb.stop()
-      val dtb = (System.nanoTime() - tb) / 1e9
-      println(f"== ${"ingest_budgeted"}%-22s $n%8d docs  $dtb%7.2f s  ${n / dtb}%9.0f docs/s")
+      report("ingest_budgeted", n, "docs")(graft.streaming.IngestPipeline.startBudgeted(
+        spark, landing, art, budgets, shardDirB, ckptDirB, nShards = 8))
     }
     spark.stop()
   }

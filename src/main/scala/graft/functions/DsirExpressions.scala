@@ -11,10 +11,10 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Per-document DSIR feature-bucket counts as ONE native pass — the
   * hot loop of [[graft.operators.QualityModelOps.dsirWeights]].
   *
-  * Value-identical to the interpreted chain
-  * `explode(featuresCol) -> substring(md5(f), 1, 2) -> groupBy count`
-  * where featuresCol = unigrams ++ adjacent bigrams of
-  * `split(trim(text), "\s+")` (spec-pinned in DsirBucketsSpec): the
+  * Value-identical to the interpreted chain `explode(features) ->
+  * substring(md5(f), 1, 2) -> groupBy count`, where the features are
+  * the unigrams ++ adjacent bigrams of `split(trim(text), "\s+")`
+  * (the test-scope DsirModelTwin, spec-pinned in Md5BucketCountsSpec): the
   * bucket of a feature is the first byte of its md5 digest — exactly
   * the integer the two hex chars `substring(md5(f), 1, 2)` spell —
   * and `m` is the feature multiplicity of that bucket in the document.

@@ -40,30 +40,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - The DSIR weight folds per-bucket multiplicities against the
   *    model's log ratios in bucket-index order (deterministic; the
   *    sign of the 6dp-rounded sum is the verdict, as in the batch
-  *    and join-shape scorers).
+  *    and streaming scorers).
   */
 final case class EnsembleArtifacts(
-    cbPairs: Array[(String, Long)],
-    cwPairs: Array[(String, Long)],
+    lm: LmModel,
     dsirLogRatio: Array[Double],
     cutTriples: Array[(String, Double, Double)]) extends Serializable {
   require(dsirLogRatio.length == 256, "DSIR model must cover all 256 buckets")
-
-  /** context-vocabulary size: the cw row count, exactly like the
-    * streaming scorers' `cw.agg(count(1))`. */
-  val v: Long = cwPairs.length.toLong
-
-  @transient private lazy val cb: java.util.HashMap[String, java.lang.Long] = {
-    val m = new java.util.HashMap[String, java.lang.Long](cbPairs.length * 2)
-    cbPairs.foreach { case (k, c) => m.put(k, java.lang.Long.valueOf(c)) }
-    m
-  }
-
-  @transient private lazy val cw: java.util.HashMap[String, java.lang.Long] = {
-    val m = new java.util.HashMap[String, java.lang.Long](cwPairs.length * 2)
-    cwPairs.foreach { case (k, c) => m.put(k, java.lang.Long.valueOf(c)) }
-    m
-  }
 
   @transient private lazy val cuts: java.util.HashMap[String, (Double, Double)] = {
     val m = new java.util.HashMap[String, (Double, Double)](cutTriples.length * 2)
@@ -75,10 +58,6 @@ final case class EnsembleArtifacts(
     new ThreadLocal[MessageDigest] {
       override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
     }
-
-  private def round6(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** Spark's `trim`: spaces (0x20) only, both ends. */
   private def trimSpaces(s: String): String = {
@@ -171,11 +150,8 @@ final case class EnsembleArtifacts(
       while (it.hasNext) {
         val e = it.next()
         val bg = e.getKey
-        val cb0 = cb.get(bg)
-        val sp = bg.indexOf(' ')
-        val cw0 = cw.get(bg.substring(0, sp))
-        terms(i) = (if (cb0 == null) 0L else cb0.longValue(),
-          if (cw0 == null) 0L else cw0.longValue(), e.getValue()(0))
+        terms(i) = (lm.bigramCount(bg), lm.contextCount(bg.substring(0, bg.indexOf(' '))),
+          e.getValue()(0))
         i += 1
       }
       java.util.Arrays.sort(terms, Ordering[(Long, Long, Long)])
@@ -183,10 +159,10 @@ final case class EnsembleArtifacts(
       i = 0
       while (i < terms.length) {
         val t = terms(i)
-        lp += t._3.toDouble * (Math.log(t._1 + 1.0) - Math.log((t._2 + v).toDouble))
+        lp += t._3.toDouble * (Math.log(t._1 + 1.0) - Math.log((t._2 + lm.v).toDouble))
         i += 1
       }
-      val mlp = round6(lp / nBigrams)
+      val mlp = LmModel.round6(lp / nBigrams)
       val cut = if (langU == null) null else cuts.get(langU.toString)
       if (cut != null) {
         if (mlp >= cut._2) bucket = head
@@ -202,7 +178,7 @@ final case class EnsembleArtifacts(
       if (buckets(i) > 0L) lw += buckets(i).toDouble * dsirLogRatio(i)
       i += 1
     }
-    val targetLike = round6(lw) > 0.0
+    val targetLike = LmModel.round6(lw) > 0.0
 
     // ---- keep: three-valued conjunction, exactly Spark's && chain
     val notTail = !bucket.equals(tail)
@@ -224,22 +200,19 @@ object EnsembleArtifacts {
     * vocabulary-sized artifact loads, the [[graft.ArtifactStore]]
     * class of driver-side collect (bounded by the trained model, never
     * by the corpus). `cb`/`cw` are [[graft.operators.QualityModelOps
-    * .lmModelOf]]'s tables, `pplCuts` is `pplCutsOf`, `dsirModel` is
-    * `dsirModelOf` (its 256-bucket spine is required). */
+    * .lmModelOf]]'s tables, loaded through [[LmModel.of]] and its row
+    * bound; `pplCuts` is `pplCutsOf`, `dsirModel` is `dsirModelOf`
+    * (its 256-bucket spine is required). */
   def of(cb: org.apache.spark.sql.DataFrame, cw: org.apache.spark.sql.DataFrame,
       pplCuts: org.apache.spark.sql.DataFrame,
       dsirModel: org.apache.spark.sql.DataFrame): EnsembleArtifacts = {
-    val cbP = cb.select("bg", "cb").collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    val cwP = cw.select("w1", "cw").collect()
-      .map(r => (r.getString(0), r.getLong(1)))
     val lr = new Array[Double](256)
     dsirModel.select("bucket", "log_ratio").collect().foreach { r =>
       lr(Integer.parseInt(r.getString(0), 16)) = r.getDouble(1)
     }
     val cutsP = pplCuts.select("lang", "c_low", "c_high").collect()
       .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
-    EnsembleArtifacts(cbP, cwP, lr, cutsP)
+    EnsembleArtifacts(LmModel.of(cb, cw), lr, cutsP)
   }
 }
 

@@ -9,10 +9,11 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The trained bigram-LM model as a closure value for the native
-  * streaming scorer — the [[EnsembleArtifacts]] pattern restricted to
-  * the LM tables (vocabulary-sized driver collect, O(1) hash probes
-  * per bigram at score time). */
+/** The trained bigram-LM model as a closure value — the one driver
+  * copy of the LM tables, shared by the streaming scorer ([[LmScore]])
+  * and the fused quality gate ([[EnsembleArtifacts]]). Vocabulary-sized
+  * driver collect ([[LmModel.of]] bounds it), O(1) hash probes per
+  * bigram at score time. */
 final case class LmModel(
     cbPairs: Array[(String, Long)],
     cwPairs: Array[(String, Long)]) extends Serializable {
@@ -31,9 +32,17 @@ final case class LmModel(
     m
   }
 
-  private def round6(x: Double): Double =
-    java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP)
-      .doubleValue()
+  /** Reference count of bigram `bg`, 0 when unseen. */
+  private[functions] def bigramCount(bg: String): Long = {
+    val c = cb.get(bg)
+    if (c == null) 0L else c.longValue()
+  }
+
+  /** Reference count of context word `w1`, 0 when unseen. */
+  private[functions] def contextCount(w1: String): Long = {
+    val c = cw.get(w1)
+    if (c == null) 0L else c.longValue()
+  }
 
   /** Score one document: (n_bigrams, mean_log_prob), both null for a
     * <2-word document — exactly the map-fold scorer's `when` guards.
@@ -52,29 +61,34 @@ final case class LmModel(
     var lp = 0.0
     var i = 0
     while (i < n) {
-      val bg = ws(i) + " " + ws(i + 1)
-      val cb0 = cb.get(bg)
-      val cw0 = cw.get(ws(i))
-      lp += Math.log((if (cb0 == null) 0L else cb0.longValue()) + 1.0) -
-        Math.log(((if (cw0 == null) 0L else cw0.longValue()) + v).toDouble)
+      lp += Math.log(bigramCount(ws(i) + " " + ws(i + 1)) + 1.0) -
+        Math.log((contextCount(ws(i)) + v).toDouble)
       i += 1
     }
-    new GenericInternalRow(Array[Any](n.toLong, round6(lp / n)))
+    new GenericInternalRow(Array[Any](n.toLong, LmModel.round6(lp / n)))
   }
 }
 
 object LmModel {
   private val Whitespace = java.util.regex.Pattern.compile("\\s+")
 
+  /** HALF_UP to 6 decimals over the double's shortest decimal string —
+    * the rounding every closure scorer applies to a log score. */
+  private[functions] def round6(x: Double): Double =
+    java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP)
+      .doubleValue()
+
   /** Driver-size contract of the closure-scorer fast path: the model
-    * tables are collected to the driver and shipped in every task
-    * closure, which is only sane for a bounded trained vocabulary.
-    * The previous unguarded collect was an OOM CLIFF when violated —
-    * the limit+1 probe bounds what the driver ever holds and fails
-    * fast with the documented escape hatch
-    * ([[graft.streaming.EventStream.lmScoreStreamJoin]], the
-    * stream-static broadcast-join shape that never collects the
-    * vocabulary) instead of killing the driver. */
+    * tables are collected to the driver as boxed (String, Long) pairs
+    * and shipped in every task closure, which is only sane for a
+    * bounded trained vocabulary. The limit+1 probe bounds what the
+    * driver ever holds and fails fast, naming the join-shape
+    * [[graft.streaming.EventStream.lmScoreStreamJoin]] as the path for
+    * bigger models. That path collects too — its broadcast joins
+    * gather both tables on the driver as compact rows to build the
+    * broadcast relations — but under Spark's broadcast-table limit
+    * (`spark.sql.maxBroadcastTableSize`, 8 GB by default, plus a row
+    * cap in the hundreds of millions), not under this one. */
   val maxModelRows: Int = 5000000
 
   def of(cb: org.apache.spark.sql.DataFrame,
@@ -86,8 +100,8 @@ object LmModel {
         throw new IllegalArgumentException(
           s"LmModel.of: $what exceeds $maxRows rows — the closure-scorer " +
             "fast path assumes a driver-sized trained vocabulary; use " +
-            "EventStream.lmScoreStreamJoin (stream-static broadcast join) " +
-            "for unbounded vocabularies")
+            "EventStream.lmScoreStreamJoin (stream-static broadcast join, " +
+            "bounded by Spark's broadcast-table limit) for bigger models")
       rows
     }
     LmModel(

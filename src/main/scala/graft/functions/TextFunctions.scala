@@ -467,8 +467,8 @@ object TextFunctions {
   /** Every Gopher shape stat and rule flag as ONE struct column over
     * `text`: the native [[GopherStats]] kernel, the single definition
     * of the rule-cascade contract, so the batch gate ([[gopherFilter]]),
-    * the batch ensemble and the streaming ensemble
-    * ([[graft.streaming.EventStream.qualityEnsembleStream]]) can never
+    * the batch ensemble and the fused streaming gate (whose
+    * [[EnsembleArtifacts]] scorer calls the same kernel) can never
     * disagree on a flag. Integer counts only, so no fold-order FP
     * concerns. */
   private[graft] def gopherStructCol: Column =

@@ -50,14 +50,6 @@ object QualityModelOps {
         i => concat_ws(" ", element_at(ws, i + 1), element_at(ws, i + 2))))
       .otherwise(array().cast("array<string>"))
 
-  /** Hashed unigram+bigram DSIR feature list via ONE split per row —
-    * shared by the batch scorer, the model trainer, and the streaming
-    * scorer ([[graft.streaming.EventStream.dsirScoreStream]]), so the
-    * feature contract their 1e-9 equivalence rests on has exactly one
-    * definition. */
-  private[graft] def featuresCol = element_at(
-    transform(array(wordsCol), ws => concat(ws, bigramsOf(ws))), 1)
-
   // ------------------------------------------- CCNet-style bigram LM
 
   /** Mean bigram log-probability of every document under an add-one
@@ -369,8 +361,8 @@ object QualityModelOps {
   }
 
   /** The per-language tercile cutoffs as a trained artifact — the CCNet
-    * bucket model the streaming ensemble broadcasts
-    * ([[graft.streaming.EventStream.qualityEnsembleStream]]); at
+    * bucket model the fused streaming gate carries
+    * ([[graft.streaming.EventStream.qualityEnsembleStreamFused]]); at
     * production scale trained once per reference release and persisted
     * like the LM/DSIR count tables. `scored` needs (lang,
     * mean_log_prob); output is one (lang, c_low, c_high) row per
@@ -468,19 +460,28 @@ object QualityModelOps {
 
   private val dsirCountsCache = new graft.SessionCache[DsirCounts]()
 
+  /** The one DSIR training pass: per populated bucket (the first md5
+    * byte, 0..255), its feature multiplicity over all of `docs` (`cr`)
+    * and over the [[refSources]] slice (`ct`, null when no reference
+    * feature hashed there), from the native per-doc
+    * [[graft.functions.Md5BucketCounts]]. `docs` needs (source, text).
+    * At most [[dsirBuckets]] rows; the batch counts ([[dsirCountsFor]])
+    * and the bucket model ([[dsirModelOf]]) both derive from it. */
+  private def dsirBucketCounts(docs: DataFrame): DataFrame =
+    docs
+      .select(col("source"),
+        explode(graft.functions.GraftFunctions.md5BucketCounts(col("text"))).as("bm"))
+      .groupBy(col("bm.bucket"))
+      .agg(sum(col("bm.m")).as("cr"),
+        sum(when(col("source").isin(refSources: _*), col("bm.m"))).as("ct"))
+
   /** [[DsirCounts]] trained once per (session, corpus) like
     * [[ensembleArtifactsFor]]: one bounded collect of at most
     * [[dsirBuckets]] rows (training is deterministic, so cached and
     * fresh models are identical). */
   private[graft] def dsirCountsFor(s: SparkSession, dir: String): DsirCounts =
     dsirCountsCache.getOrCompute(s, dir) {
-      val rows = Tables.spread(s, Tables.documents(s, dir))
-        .select(col("source"),
-          explode(graft.functions.GraftFunctions.md5BucketCounts(col("text"))).as("bm"))
-        .groupBy(col("bm.bucket"))
-        .agg(sum(col("bm.m")),
-          sum(when(col("source").isin(refSources: _*), col("bm.m"))))
-        .collect()
+      val rows = dsirBucketCounts(Tables.spread(s, Tables.documents(s, dir))).collect()
       val ct = new Array[Long](dsirBuckets)
       val cr = new Array[Long](dsirBuckets)
       rows.foreach { r =>
@@ -526,33 +527,27 @@ object QualityModelOps {
        |FROM per ORDER BY doc_id""".stripMargin
 
   /** The trained DSIR bucket model as a reusable frame: per bucket, the
-    * add-one-smoothed log ratio ln p_target − ln p_raw. ≤256 rows by
-    * construction — the streaming scorer collapses it to one broadcast
-    * map ([[graft.streaming.EventStream.dsirScoreStream]]). `docs`
-    * needs (source, text); the target slice is [[refSources]]. */
+    * add-one-smoothed log ratio ln p_target − ln p_raw, keyed by the
+    * bucket's two-hex-char md5 prefix. ≤256 rows by construction — the
+    * streaming scorer collapses it to one broadcast map
+    * ([[graft.streaming.EventStream.dsirScoreStream]]). A lazy frame
+    * over [[dsirBucketCounts]], the same training pass as the batch
+    * scorer's. `docs` needs (source, text); the target slice is
+    * [[refSources]]; a corpus with no reference feature gives null
+    * ratios (the oracle's empty `sum`). */
   def dsirModelOf(docs: DataFrame): DataFrame = {
-    val fb = docs
-      .select(col("source"), explode(featuresCol).as("f"))
-      .select(col("source"), substring(md5(col("f")), 1, 2).as("bucket"))
-      .groupBy(col("source"), col("bucket"))
-      .agg(count(lit(1)).as("m"))
-    val cr = fb.groupBy(col("bucket")).agg(sum(col("m")).as("cr"))
-    val ct = fb.filter(col("source").isin(refSources: _*))
-      .groupBy(col("bucket")).agg(sum(col("m")).as("ct"))
-    val totals = cr.agg(sum(col("cr")).as("nr"))
-      .crossJoin(broadcast(ct.agg(sum(col("ct")).as("nt"))))
+    val counts = dsirBucketCounts(docs)
+    val totals = counts.agg(sum(col("cr")).as("nr"), sum(col("ct")).as("nt"))
     // ALL 256 buckets, not just those the training corpus populated: a
     // scored document may hash into a bucket the training never saw,
     // and add-one smoothing gives that bucket the log ratio
     // ln(nr+256) − ln(nt+256), not 0 — without the spine the streaming
     // scorer's map lookup would miss and silently contribute 0.
-    val spine = docs.sparkSession.range(dsirBuckets)
-      .select(format_string("%02x", col("id")).as("bucket"))
-    spine
-      .join(cr, Seq("bucket"), "left")
-      .join(ct, Seq("bucket"), "left")
+    docs.sparkSession.range(dsirBuckets)
+      .select(col("id").cast("int").as("bucket"))
+      .join(counts, Seq("bucket"), "left")
       .crossJoin(broadcast(totals))
-      .select(col("bucket"),
+      .select(format_string("%02x", col("bucket")).as("bucket"),
         ((log(coalesce(col("ct"), lit(0L)) + lit(1)) - log(col("nt") + lit(dsirBuckets))) -
           (log(coalesce(col("cr"), lit(0L)) + lit(1)) - log(col("nr") + lit(dsirBuckets))))
           .as("log_ratio"))

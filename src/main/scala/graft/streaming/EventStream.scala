@@ -677,32 +677,6 @@ object EventStream {
       .withColumn("target_like", col("log_weight") > 0.0)
   }
 
-  /** High-throughput variant of [[dsirScoreStream]] — the same
-    * stream-static broadcast-join shape as [[lmScoreStreamJoin]]: the
-    * exploded feature stream hash-joins the broadcast bucket model
-    * (O(1) per probe vs the map fold's O(|model|) linear scan), one
-    * watermark-bounded per-doc rollup reassembles the weight. Scores
-    * equal the map fold to 1e-9 (spec); emits only documents with
-    * ≥ 1 feature. */
-  def dsirScoreStreamJoin(docs: DataFrame, bucketModel: DataFrame,
-      windowDur: String = "1 minute",
-      watermarkDelay: String = "10 seconds"): DataFrame = {
-    docs
-      .select(col("doc_id"), current_timestamp().as("ingest_ts"),
-        explode(graft.operators.QualityModelOps.featuresCol).as("f"))
-      .withWatermark("ingest_ts", watermarkDelay)
-      .withColumn("bucket", substring(md5(col("f")), 1, 2))
-      .join(broadcast(bucketModel.select(col("bucket"), col("log_ratio"))),
-        Seq("bucket"), "left")
-      .groupBy(window(col("ingest_ts"), windowDur), col("doc_id"))
-      .agg(count(lit(1)).as("n_features"),
-        sum(coalesce(col("log_ratio"), lit(0.0))).as("lw"))
-      .drop("window")
-      .select(col("doc_id"), col("n_features"),
-        round(col("lw"), 6).as("log_weight"))
-      .withColumn("target_like", col("log_weight") > 0.0)
-  }
-
   /** Streaming CCNet-style LM quality scoring — the streaming twin of
     * [[graft.operators.QualityModelOps.lmPerplexity]]. The trained
     * bigram/context count tables (from
@@ -780,19 +754,22 @@ object EventStream {
       .withColumn("score", round(col("score"), 6))
   }
 
-  /** High-throughput variant of [[lmScoreStream]]: the documented
-    * stream-static broadcast-join shape. Instead of folding each
-    * document against vocabulary-sized maps (Spark map lookup is a
-    * LINEAR scan — per-doc cost features × |vocab|, measured 0.8k
-    * docs/s at 1k bigrams), the bigram stream explodes and hash-joins
-    * the broadcast model tables (O(1) per probe — measured ~10×
-    * faster), then one watermark-bounded per-doc rollup reassembles
-    * the mean. Trades the map-fold's zero aggregation state for a
-    * bounded windowed aggregation (the [[contaminationStream]]
-    * convention); scores match [[lmScoreStream]] to 1e-9 (different
-    * fold order over the same terms — spec-pinned). Emits only
-    * documents with ≥ 1 bigram (the map variant carries short docs
-    * through with null scores). */
+  /** Join-shape variant of [[lmScoreStream]], kept as the path for a
+    * model past [[graft.functions.LmModel.maxModelRows]]: the bigram
+    * stream explodes and hash-joins the broadcast model tables, then
+    * one watermark-bounded per-doc rollup reassembles the mean (the
+    * [[contaminationStream]] convention). It is not free of a driver
+    * collect: `broadcast(cb)` / `broadcast(cw)` collect both tables to
+    * the driver as compact rows to build each broadcast relation. Its
+    * bound is Spark's broadcast-table limit
+    * (`spark.sql.maxBroadcastTableSize`, 8 GB by default, plus a row
+    * cap in the hundreds of millions) and the driver heap, far above
+    * the closure scorer's 5M boxed pairs, but a bound all the same. On
+    * closure-sized models [[lmScoreStream]] is the faster shape.
+    * Scores match [[lmScoreStream]] to 1e-9 (different fold order over
+    * the same terms — spec-pinned). Emits only documents with ≥ 1
+    * bigram (the closure scorer carries short docs through with null
+    * scores). */
   def lmScoreStreamJoin(docs: DataFrame, cb: DataFrame, cw: DataFrame,
       windowDur: String = "1 minute",
       watermarkDelay: String = "10 seconds"): DataFrame = {
@@ -815,6 +792,38 @@ object EventStream {
         round(col("lp_sum") / col("n_bigrams"), 6).as("mean_log_prob"))
   }
 
+  /** The full quality gate at ingest rate, and the one streaming
+    * quality gate: the trained artifacts collapse into ONE native
+    * scorer ([[graft.functions.QualityEnsembleScore]]) riding the task
+    * closure — the [[graft.operators.BpeOps]] encoder pattern — and the
+    * whole gate is a STATELESS projection: no explode, no join, no
+    * aggregation state, no watermark; every executor scores its
+    * partition of the crawl at scan speed, and a doc's verdict is
+    * emitted in the micro-batch it arrives in (append mode works —
+    * the plan has no state to finalize).
+    *
+    * Verdicts are row-identical to the batch
+    * [[graft.operators.QualityModelOps.qualityEnsemble]] (spec-pinned,
+    * and hash-checked as q_quality_ensemble_fused); the LM fold inside
+    * the scorer replays the batch operator's sorted
+    * per-distinct-bigram fold, so the perplexity bucket is decided on
+    * the bit-identical rounded score. Replays are trivially consistent
+    * — the scorer is a pure function of the document — so an
+    * at-least-once upstream re-emits identical rows; exactly-once
+    * sinks dedupe on doc_id.
+    *
+    * `docs` needs (doc_id, lang, text), text non-null; emits
+    * (doc_id, gopher_keep, rep_flag, ppl_bucket, target_like, keep). */
+  def qualityEnsembleStreamFused(docs: DataFrame,
+      artifacts: graft.functions.EnsembleArtifacts): DataFrame =
+    docs
+      .select(col("doc_id"),
+        graft.functions.GraftFunctions
+          .qualityEnsemble(col("text"), col("lang"), artifacts).as("e"))
+      .select(col("doc_id"), col("e.gopher_keep").as("gopher_keep"),
+        col("e.rep_flag").as("rep_flag"), col("e.ppl_bucket").as("ppl_bucket"),
+        col("e.target_like").as("target_like"), col("e.keep").as("keep"))
+
   /** Streaming decontamination gate — the streaming twin of
     * [[graft.operators.PipelineOps.contaminationBloom]]. The eval set's
     * shingle Bloom filter and exact shingle table are both standing
@@ -834,152 +843,6 @@ object EventStream {
     *
     * `docs` needs (doc_id, text); emits the batch gate's
     * (doc_id, n_shingles, n_overlap, overlap_frac, contaminated). */
-  /** Streaming twin of the FULL quality-ensemble gate
-    * ([[graft.operators.QualityModelOps.qualityEnsemble]]) — the
-    * per-document keep verdict with its complete audit trail (Gopher
-    * shape rules, repetition flag, CCNet perplexity bucket, DSIR
-    * target-likeness), so an ingest pipeline can gate documents at
-    * arrival time with the same verdicts the batch recurate would
-    * reach.
-    *
-    * Every model input is a batch-trained standing artifact broadcast
-    * into the stream: the bigram LM count tables `cb`/`cw`
-    * ([[graft.operators.QualityModelOps.lmModelOf]]), the per-language
-    * tercile cutoffs `pplCuts`
-    * ([[graft.operators.QualityModelOps.pplCutsOf]]) and the DSIR
-    * bucket model ([[graft.operators.QualityModelOps.dsirModelOf]]) —
-    * CCNet ships its KenLM + cutoffs the same way.
-    *
-    * Plan shape — ONE stateful operator for the whole ensemble: the
-    * Gopher and repetition flags are map-side struct folds over the
-    * arriving row ([[graft.functions.TextFunctions.gopherStructCol]] /
-    * `repetitionStructCol` — single definitions shared with the batch
-    * gate); the doc then explodes ONCE into its DSIR feature list
-    * (unigrams ++ bigrams, so the LM's bigrams are the space-bearing
-    * subset of the same explode), hash-joins the three broadcast model
-    * tables, and ONE watermark-bounded per-doc rollup reassembles
-    * n_bigrams/lp_sum/log_weight with the flags riding as group keys
-    * (functionally dependent on doc_id). The bucket assignment and
-    * keep conjunction are map-side on the rollup output via the
-    * broadcast cutoffs. Scores match the batch operators to 1e-9
-    * (different fold order over the same add-one-smoothed terms);
-    * verdicts are spec-pinned row-identical to the batch ensemble.
-    *
-    * REPLAY CONTRACT: a doc_id that arrives again (source retry,
-    * at-least-once upstream) does not need exactly-once delivery to
-    * stay correct — a replay landing in the same aggregation window
-    * merges into the same per-doc rollup, and because every score is a
-    * ratio or sign of sums over the doc's own features
-    * (lp_sum/n_bigrams, sign(lw)), doubling the feature multiset
-    * leaves the verdict unchanged up to FP fold order; a replay
-    * landing in a later window re-emits that same verdict as a second
-    * row. Sinks that need exactly-once rows set
-    * `dedupeReplays = true`, which drops replayed doc_ids within the
-    * watermark horizon (bounded state: one key per doc per horizon)
-    * BEFORE the feature explode — the spec exercises both modes.
-    * `docs` needs (doc_id, lang, text), text non-null; emits
-    * (doc_id, gopher_keep, rep_flag, ppl_bucket, target_like, keep). */
-  def qualityEnsembleStream(docs: DataFrame, cb: DataFrame, cw: DataFrame,
-      pplCuts: DataFrame, dsirModel: DataFrame,
-      windowDur: String = "1 minute",
-      watermarkDelay: String = "10 seconds",
-      dedupeReplays: Boolean = false): DataFrame = {
-    import graft.operators.QualityModelOps
-    import graft.functions.TextFunctions
-    val v1 = cw.agg(count(lit(1)).as("v"))
-    val stamped = docs
-      .select(col("doc_id"), col("lang"), col("text"),
-        current_timestamp().as("ingest_ts"),
-        TextFunctions.gopherStructCol.getField("keep").as("gopher_keep"),
-        TextFunctions.repetitionStructCol.getField("flagged").as("rep_flag"))
-      .withWatermark("ingest_ts", watermarkDelay)
-    val deduped =
-      if (dedupeReplays) stamped.dropDuplicatesWithinWatermark("doc_id")
-      else stamped
-    val exploded = deduped
-      .select(col("doc_id"), col("lang"), col("ingest_ts"),
-        col("gopher_keep"), col("rep_flag"),
-        explode(QualityModelOps.featuresCol).as("f"))
-      .withColumn("is_bg", instr(col("f"), " ") >= 1)
-      // the context key, masked to bigrams: a PURE equi key. The
-      // previous mixed join condition (`is_bg && substring_index(f)
-      // === w1`) denied equi-key extraction, the planner fell back to
-      // a broadcast NESTED-LOOP join of the exploded feature stream
-      // against the whole context vocabulary, and the gate measured
-      // 39 docs/s; a null key never equi-matches, so non-bigram rows
-      // keep the same null `cw` the old condition produced.
-      .withColumn("w1k", when(col("is_bg"), substring_index(col("f"), " ", 1)))
-      .withColumn("bucket", substring(md5(col("f")), 1, 2))
-    val rolled = exploded
-      .join(broadcast(dsirModel.select(col("bucket"), col("log_ratio"))),
-        Seq("bucket"), "left")
-      .join(broadcast(cb.select(col("bg"), col("cb"))),
-        col("f") === col("bg"), "left")
-      .join(broadcast(cw.select(col("w1").as("w1k"), col("cw"))),
-        Seq("w1k"), "left")
-      .crossJoin(broadcast(v1))
-      .groupBy(window(col("ingest_ts"), windowDur), col("doc_id"),
-        col("lang"), col("gopher_keep"), col("rep_flag"))
-      .agg(
-        sum(coalesce(col("log_ratio"), lit(0.0))).as("lw"),
-        sum(when(col("is_bg"), 1L).otherwise(0L)).as("n_bigrams"),
-        sum(when(col("is_bg"),
-          log(coalesce(col("cb"), lit(0L)) + lit(1)) -
-            log(coalesce(col("cw"), lit(0L)) + col("v")))).as("lp_sum"))
-      .drop("window")
-    val mlp = when(col("n_bigrams") >= 1,
-      round(col("lp_sum") / col("n_bigrams"), 6))
-    val bucket = when(mlp.isNull, lit("unscored"))
-      .when(mlp >= col("c_high"), lit("head"))
-      .when(mlp >= col("c_low"), lit("middle"))
-      .otherwise(lit("tail"))
-    rolled
-      .join(broadcast(pplCuts), Seq("lang"), "left")
-      .withColumn("ppl_bucket", bucket)
-      .withColumn("target_like", round(col("lw"), 6) > 0.0)
-      .select(col("doc_id"), col("gopher_keep"), col("rep_flag"),
-        col("ppl_bucket"), col("target_like"),
-        (col("gopher_keep") && !col("rep_flag") &&
-          col("ppl_bucket") =!= "tail").as("keep"))
-  }
-
-  /** The ingest-rate shape of the full quality gate — the documented
-    * fast path next to [[qualityEnsembleStream]]. That variant is
-    * already the join composition (one feature explode, three
-    * broadcast hash-joins, one watermark-bounded rollup); its
-    * throughput ceiling is the explode volume itself (every unigram
-    * and bigram becomes a row that must be joined and re-aggregated),
-    * which no join shape removes. This variant removes the rows: the
-    * trained artifacts collapse into ONE native scorer
-    * ([[graft.functions.QualityEnsembleScore]]) riding the task
-    * closure — the [[graft.operators.BpeOps]] encoder pattern — and
-    * the whole gate becomes a STATELESS projection: no explode, no
-    * join, no aggregation state, no watermark; every executor scores
-    * its partition of the crawl at scan speed, and a doc's verdict is
-    * emitted in the micro-batch it arrives in (append mode works —
-    * the plan has no state to finalize).
-    *
-    * Verdicts are row-identical to the batch
-    * [[graft.operators.QualityModelOps.qualityEnsemble]] and to
-    * [[qualityEnsembleStream]] (spec-pinned); the LM fold inside the
-    * scorer replays the batch operator's sorted per-distinct-bigram
-    * fold, so the perplexity bucket is decided on the bit-identical
-    * rounded score. Replays are trivially consistent — the scorer is
-    * a pure function of the document — so an at-least-once upstream
-    * re-emits identical rows; exactly-once sinks dedupe on doc_id.
-    *
-    * `docs` needs (doc_id, lang, text), text non-null; emits
-    * (doc_id, gopher_keep, rep_flag, ppl_bucket, target_like, keep). */
-  def qualityEnsembleStreamFused(docs: DataFrame,
-      artifacts: graft.functions.EnsembleArtifacts): DataFrame =
-    docs
-      .select(col("doc_id"),
-        graft.functions.GraftFunctions
-          .qualityEnsemble(col("text"), col("lang"), artifacts).as("e"))
-      .select(col("doc_id"), col("e.gopher_keep").as("gopher_keep"),
-        col("e.rep_flag").as("rep_flag"), col("e.ppl_bucket").as("ppl_bucket"),
-        col("e.target_like").as("target_like"), col("e.keep").as("keep"))
-
   def contaminationStream(docs: DataFrame, benchShingles: DataFrame,
       bloom: Array[Byte], frac: Double,
       windowDur: String = "1 minute",

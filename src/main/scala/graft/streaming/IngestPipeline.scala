@@ -154,13 +154,7 @@ object IngestPipeline {
     spark.sparkContext.setLogLevel("WARN")
     graft.Tables.tune(spark)
 
-    val docs = graft.Tables.documents(spark, sfDir)
-    val (cb, cw) = graft.operators.QualityModelOps.lmModelOf(docs)
-    val dsirModel = graft.operators.QualityModelOps.dsirModelOf(docs)
-    val pplCuts = graft.operators.QualityModelOps.pplCutsOf(
-      graft.operators.QualityModelOps.lmPerplexity(spark, sfDir)
-        .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id")))
-    val artifacts = EnsembleArtifacts.of(cb, cw, pplCuts, dsirModel)
+    val artifacts = graft.operators.QualityModelOps.ensembleArtifactsFor(spark, sfDir)
 
     val q = start(spark, landingDir, artifacts, shardDir, ckptDir)
     q.processAllAvailable()

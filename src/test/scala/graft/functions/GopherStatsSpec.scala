@@ -135,7 +135,7 @@ class GopherStatsSpec extends SparkSpec {
 
   test("the ensemble's gopher_keep equals the kernel's keep") {
     // gopher_keep reads no trained artifact, so a one-word model will do
-    val art = EnsembleArtifacts(Array.empty, Array(("\u0000", 1L)),
+    val art = EnsembleArtifacts(LmModel(Array.empty, Array(("\u0000", 1L))),
       new Array[Double](256), Array.empty)
     val docs = graft.Tables.documents(spark, sf01).select("doc_id", "text")
       .unionByName(edgeFrame.filter(col("text").isNotNull))

@@ -14,7 +14,7 @@ class Md5BucketCountsSpec extends SparkSpec {
   private def interpreted(docs: DataFrame, id: Column, text: Column): DataFrame =
     docs
       .select(id.as("doc_id"),
-        explode(graft.operators.QualityModelOps.featuresCol).as("f"))
+        explode(graft.operators.DsirModelTwin.featuresCol).as("f"))
       .select(col("doc_id"), conv(substring(md5(col("f")), 1, 2), 16, 10)
         .cast("int").as("bucket"))
       .groupBy(col("doc_id"), col("bucket"))
@@ -94,7 +94,7 @@ class Md5BucketCountsSpec extends SparkSpec {
     val docs = graft.Tables.spread(spark, graft.Tables.documents(spark, sfDir))
     val oldFb = docs
       .select(col("source"), col("doc_id"),
-        explode(graft.operators.QualityModelOps.featuresCol).as("f"))
+        explode(graft.operators.DsirModelTwin.featuresCol).as("f"))
       .select(col("source"), col("doc_id"),
         conv(substring(md5(col("f")), 1, 2), 16, 10).cast("int").as("bucket"))
       .groupBy(col("doc_id"), col("source"), col("bucket"))

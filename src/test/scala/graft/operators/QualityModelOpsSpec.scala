@@ -104,7 +104,7 @@ class QualityModelOpsSpec extends SparkSpec {
     import spark.implicits._
     val docs = Seq((1L, "solo"), (2L, ""), (3L, "  two  words  "))
       .toDF("doc_id", "text")
-    val feats = docs.select(col("doc_id"), QualityModelOps.featuresCol.as("fs"))
+    val feats = docs.select(col("doc_id"), DsirModelTwin.featuresCol.as("fs"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(feats(1L) == Seq("solo"), "one word → one unigram, no bigrams")
     assert(feats(2L) == Seq(""), "empty text → the single empty token")

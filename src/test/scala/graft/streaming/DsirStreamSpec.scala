@@ -41,34 +41,4 @@ class DsirStreamSpec extends SparkSpec {
       assert(flag == bflag, s"doc $id flag")
     }
   }
-
-  test("join-variant DSIR scores equal the map-fold scorer") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val docs = graft.Tables.documents(spark, sfDir)
-    val model = QualityModelOps.dsirModelOf(docs)
-
-    val stream = MemoryStream[(Long, String)]
-    stream.addData(docs.select(col("doc_id"), col("text"))
-      .as[(Long, String)].collect().toSeq)
-    val q = EventStream.dsirScoreStreamJoin(
-        stream.toDF().toDF("doc_id", "text"), model)
-      .writeStream.format("memory").queryName("dsir_stream_join")
-      .outputMode("update").start()
-    try q.processAllAvailable() finally q.stop()
-
-    val joined = spark.table("dsir_stream_join").collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2), r.getBoolean(3)))).toMap
-    val batch = QualityModelOps.dsirWeights(spark, sfDir).collect()
-      .filter(_.getAs[Long]("n_features") > 0)
-      .map(r => r.getAs[Long]("doc_id") ->
-        ((r.getAs[Long]("n_features"), r.getAs[Double]("log_weight"),
-          r.getAs[Boolean]("target_like")))).toMap
-    assert(joined.keySet == batch.keySet)
-    joined.foreach { case (id, (nf, w, flag)) =>
-      val (bnf, bw, bflag) = batch(id)
-      assert(nf == bnf && math.abs(w - bw) < 1e-9 && flag == bflag,
-        s"doc $id: ($nf,$w,$flag) vs ($bnf,$bw,$bflag)")
-    }
-  }
 }

@@ -36,7 +36,7 @@ class QualityEnsembleFusedSpec extends SparkSpec {
           Option(r.getAs[java.lang.Boolean]("keep"))))
     }.toMap
 
-  test("fused verdicts are row-identical to the batch gate and the join-shape stream") {
+  test("fused verdicts are row-identical to the batch gate") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val docs = graft.Tables.documents(spark, sfDir)
@@ -64,22 +64,6 @@ class QualityEnsembleFusedSpec extends SparkSpec {
     // discriminating gate, not vacuous
     assert(fused.values.exists(_._5.contains(true)) &&
       fused.values.exists(_._5.contains(false)))
-
-    // and identical to the join-shape streaming ensemble on the same artifacts
-    val (cb, cw) = QualityModelOps.lmModelOf(docs)
-    val dsirModel = QualityModelOps.dsirModelOf(docs)
-    val pplCuts = QualityModelOps.pplCutsOf(
-      QualityModelOps.lmPerplexity(spark, sfDir)
-        .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id")))
-    val stream2 = MemoryStream[(Long, String, String)]
-    val q2 = EventStream.qualityEnsembleStream(
-        stream2.toDF().toDF("doc_id", "lang", "text"),
-        cb, cw, pplCuts, dsirModel)
-      .writeStream.format("memory").queryName("qef_join_stream")
-      .outputMode("update").start()
-    try { stream2.addData(rows); q2.processAllAvailable() } finally q2.stop()
-    val joined = verdicts(spark.table("qef_join_stream").collect())
-    assert(fused == joined)
   }
 
   test("fused scorer matches the batch column definitions on tokenization edge cases") {

@@ -8,105 +8,40 @@ import graft.operators.QualityModelOps
 
 class QualityEnsembleStreamSpec extends SparkSpec {
 
-  test("streaming ensemble verdicts are row-identical to the batch gate") {
+  test("replayed docs re-emit the batch verdict through the fused scorer") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val docs = graft.Tables.documents(spark, sfDir)
-
-    // the batch-trained standing artifacts the stream broadcasts
-    val (cb, cw) = QualityModelOps.lmModelOf(docs)
-    val dsirModel = QualityModelOps.dsirModelOf(docs)
-    val pplCuts = QualityModelOps.pplCutsOf(
-      QualityModelOps.lmPerplexity(spark, sfDir)
-        .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id")))
-
-    // split across MICRO-BATCHES: a doc's verdict must not depend on
-    // what else shared its batch (all model state is broadcast, the
-    // only grouping is per-doc)
-    val rows = docs.select(col("doc_id"), col("lang"), col("text"))
-      .as[(Long, String, String)].collect().toSeq
-    val (h1, h2) = rows.splitAt(rows.size / 3)
-    val stream = MemoryStream[(Long, String, String)]
-    val q = EventStream.qualityEnsembleStream(
-        stream.toDF().toDF("doc_id", "lang", "text"),
-        cb, cw, pplCuts, dsirModel)
-      .writeStream.format("memory").queryName("quality_ensemble_stream")
-      .outputMode("update").start()
-    try {
-      stream.addData(h1); q.processAllAvailable()
-      stream.addData(h2); q.processAllAvailable()
-    } finally q.stop()
-
-    def verdicts(rows: Array[org.apache.spark.sql.Row]) =
-      rows.map { r =>
-        r.getAs[Long]("doc_id") ->
-          ((r.getAs[Boolean]("gopher_keep"),
-            Option(r.getAs[java.lang.Boolean]("rep_flag")),
-            r.getAs[String]("ppl_bucket"),
-            r.getAs[Boolean]("target_like"),
-            r.getAs[Boolean]("keep")))
-      }.toMap
-
-    val streamed = verdicts(spark.table("quality_ensemble_stream").collect())
-    val batch = verdicts(
-      QualityModelOps.qualityEnsemble(spark, sfDir).collect())
-
-    assert(streamed.keySet == batch.keySet)
-    streamed.foreach { case (id, v) =>
-      assert(v == batch(id), s"doc $id: stream $v vs batch ${batch(id)}")
-    }
-    // the gate discriminates on this corpus (not vacuously all-keep)
-    assert(streamed.values.exists(_._5) && streamed.values.exists(!_._5))
-  }
-
-  test("replayed docs: verdicts stay consistent, and dedupeReplays gives exactly-once rows") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val docs = graft.Tables.documents(spark, sfDir)
-    val (cb, cw) = QualityModelOps.lmModelOf(docs)
-    val dsirModel = QualityModelOps.dsirModelOf(docs)
-    val pplCuts = QualityModelOps.pplCutsOf(
-      QualityModelOps.lmPerplexity(spark, sfDir)
-        .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id")))
+    val art = QualityModelOps.ensembleArtifactsFor(spark, sfDir)
     val rows = docs.select(col("doc_id"), col("lang"), col("text"))
       .as[(Long, String, String)].collect().toSeq.take(60)
     val replayed = rows.take(20) // an at-least-once source re-delivers a third
 
-    def runWith(dedupe: Boolean): Array[org.apache.spark.sql.Row] = {
-      val stream = MemoryStream[(Long, String, String)]
-      val name = s"qes_replay_$dedupe"
-      val q = EventStream.qualityEnsembleStream(
-          stream.toDF().toDF("doc_id", "lang", "text"),
-          cb, cw, pplCuts, dsirModel, dedupeReplays = dedupe)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try {
-        stream.addData(rows); q.processAllAvailable()
-        stream.addData(replayed); q.processAllAvailable() // the replay batch
-      } finally q.stop()
-      spark.table(name).collect()
-    }
+    val stream = MemoryStream[(Long, String, String)]
+    val q = EventStream.qualityEnsembleStreamFused(
+        stream.toDF().toDF("doc_id", "lang", "text"), art)
+      .writeStream.format("memory").queryName("qes_replay")
+      .outputMode("append").start()
+    try {
+      stream.addData(rows); q.processAllAvailable()
+      stream.addData(replayed); q.processAllAvailable() // the replay batch
+    } finally q.stop()
 
+    def verdict(r: org.apache.spark.sql.Row) =
+      (r.getAs[Boolean]("gopher_keep"), Option(r.getAs[java.lang.Boolean]("rep_flag")),
+        r.getAs[String]("ppl_bucket"), r.getAs[Boolean]("target_like"),
+        Option(r.getAs[java.lang.Boolean]("keep")))
     val batch = QualityModelOps.qualityEnsemble(spark, sfDir).collect()
-      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Boolean]("keep")).toMap
+      .map(r => r.getAs[Long]("doc_id") -> verdict(r)).toMap
 
-    // without dedupe: a replayed doc may be re-emitted, but never with a
-    // conflicting verdict (update-mode re-emits supersede, same values)
-    val loose = runWith(dedupe = false)
-    loose.groupBy(_.getAs[Long]("doc_id")).foreach { case (id, rs) =>
-      val verdicts = rs.map(r => (r.getAs[Boolean]("gopher_keep"),
-        r.getAs[String]("ppl_bucket"), r.getAs[Boolean]("keep"))).distinct
-      assert(verdicts.size == 1, s"doc $id emitted conflicting verdicts")
-      assert(verdicts.head._3 == batch(id), s"doc $id verdict vs batch")
-    }
-
-    // with dedupe: exactly one row per doc_id even after the replay
-    val strict = runWith(dedupe = true)
-    val perDoc = strict.groupBy(_.getAs[Long]("doc_id"))
+    // the scorer is stateless: a replayed doc is emitted once per
+    // delivery, every time with the verdict the batch gate reaches
+    val replayedIds = replayed.map(_._1).toSet
+    val perDoc = spark.table("qes_replay").collect().groupBy(_.getAs[Long]("doc_id"))
     assert(perDoc.size == rows.size)
     perDoc.foreach { case (id, rs) =>
-      assert(rs.length == 1, s"doc $id emitted ${rs.length} rows under dedupe")
-      assert(rs.head.getAs[Boolean]("keep") == batch(id))
+      assert(rs.length == (if (replayedIds(id)) 2 else 1), s"doc $id emitted ${rs.length} rows")
+      assert(rs.map(verdict).distinct.toSeq == Seq(batch(id)), s"doc $id verdicts vs batch")
     }
   }
 
