@@ -12,8 +12,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * LSH bands) or a binary blob (the decontamination bloom), so the
   * store is deliberately tiny: named parquet tables plus named blobs
   * under one directory, written with the same layout discipline as
-  * [[graft.operators.AnnOps.writeIndex]] (which keeps its own
-  * four-table layout for the cluster-partitioned inverted file).
+  * [[graft.operators.AnnOps.writeIndex]] (which keeps its own tables:
+  * IVF centroids, the cluster-partitioned inverted file, the PQ
+  * codebook and the one-row-per-vector encoded corpus;
+  * [[graft.operators.AnnOps.writeIvfPq]] and
+  * [[graft.operators.AnnOps.writeSketchIndex]] add the IVFADC and
+  * banded-sketch tables).
   * Parity specs pin that a written-then-loaded artifact drives its
   * consumer to byte-identical output.
   */

@@ -128,54 +128,34 @@ object StreamBench {
         EventStream.tokenBudgetGateStream(ds.toDF("doc_id", "source", "text"), budgets))
     }
 
-    // ---- streaming Hamming-sketch ANN probe against the banded sign-
-    // sketch index (vectors/s: per query, eight 8-bit bucket joins +
-    // one windowed top-k rollup — no floats until the rerank join)
+    // ---- the three standing-index ANN probes, over one set of query
+    // vectors (vectors/s)
     locally {
       import graft.operators.AnnOps
+      val vecRows: Seq[(Long, Seq[Float])] = (0 until mult).flatMap { i =>
+        Tables.embeddings(spark, srcDir)
+          .select(col("vec_id") + lit(i * shift), col("embedding"))
+          .as[(Long, Seq[Float])].collect()
+      }
+      def vecLeg(name: String)(f: DataFrame => DataFrame): Unit =
+        run(name, "update", vecRows, "vecs")(ds => f(ds.toDF("vec_id", "embedding")))
+
+      // Hamming sketch against the banded sign-sketch index: per query,
+      // eight 8-bit bucket joins + one windowed top-k rollup — no floats
+      // until the cosine join
       val e = AnnOps.embeddingsWithNorm(spark, srcDir).localCheckpoint()
       val bands = AnnOps.sketchBandsOf(e).localCheckpoint()
-      val vecRows: Seq[(Long, Seq[Float])] = (0 until mult).flatMap { i =>
-        Tables.embeddings(spark, srcDir)
-          .select(col("vec_id") + lit(i * shift), col("embedding"))
-          .as[(Long, Seq[Float])].collect()
-      }
-      run("hamming_probe", "update", vecRows, "vecs")(ds =>
-        EventStream.hammingProbeStream(ds.toDF("vec_id", "embedding"), bands, e))
-    }
+      vecLeg("hamming_probe")(EventStream.hammingProbeStream(_, bands, e))
 
-    // ---- streaming ANN probe against the plain IVF inverted file
-    locally {
-      import graft.operators.AnnOps
+      // the plain IVF inverted file (ivfFor's frames are materialized)
       val (cents, assigned) = AnnOps.ivfFor(spark, srcDir)
-      val (centsM, assignedM) = (cents.localCheckpoint(), assigned.localCheckpoint())
-      val vecRows: Seq[(Long, Seq[Float])] = (0 until mult).flatMap { i =>
-        Tables.embeddings(spark, srcDir)
-          .select(col("vec_id") + lit(i * shift), col("embedding"))
-          .as[(Long, Seq[Float])].collect()
-      }
-      run("ann_probe", "update", vecRows, "vecs")(ds =>
-        EventStream.annProbeStream(ds.toDF("vec_id", "embedding"), centsM, assignedM))
-    }
+      vecLeg("ann_probe")(EventStream.annProbeStream(_, cents, assigned))
 
-    // ---- streaming IVFADC probe against the compressed index
-    // (vectors/s: map-side probes + one cluster equi-join + per-query
-    // rollup; the corpus side is codes, never floats)
-    locally {
-      import graft.operators.AnnOps
-      val (cents, cb, _) = AnnOps.ivfpqFor(spark, srcDir)
-      // the cluster-bucketed standing index (repartitioned on the probe
-      // join's key before materialization — the persisted layout), so
-      // each micro-batch's stream-static join reads the index side
-      // already placed instead of re-exchanging it per batch
-      val encArrays = AnnOps.ivfpqArraysFor(spark, srcDir)
-      val vecRows: Seq[(Long, Seq[Float])] = (0 until mult).flatMap { i =>
-        Tables.embeddings(spark, srcDir)
-          .select(col("vec_id") + lit(i * shift), col("embedding"))
-          .as[(Long, Seq[Float])].collect()
-      }
-      run("ivfpq_probe", "update", vecRows, "vecs")(ds =>
-        EventStream.ivfpqProbeStream(ds.toDF("vec_id", "embedding"), cents, cb, encArrays))
+      // IVFADC against the compressed, cluster-bucketed index: map-side
+      // probes + one cluster equi-join + per-query rollup; the corpus
+      // side is codes, never floats
+      val (pqCents, cb, encoded) = AnnOps.ivfpqFor(spark, srcDir)
+      vecLeg("ivfpq_probe")(EventStream.ivfpqProbeStream(_, pqCents, cb, encoded))
     }
 
     // ---- stateful per-user transition feed over the event stream

@@ -209,49 +209,81 @@ object AnnOps {
   val hammingBands = 8
   val hammingBandBits = 8
 
-  private[graft] def bandStructsOf(bits: Column): Column =
+  private def bandStructsOf(bits: Column): Column =
     array((0 until hammingBands).map { b =>
       struct(lit(b).as("band_id"),
         shiftrightunsigned(bits, b * hammingBandBits)
           .bitwiseAND(lit(0xFFL)).as("band_key"))
     }: _*)
 
-  /** The banded sketch index: one (vec_id, bits, band_id, band_key)
+  /** One row per (input row, band) of a `words` sign-sketch column:
+    * every 64-bit word contributes its [[hammingBands]] bands under a
+    * word-offset band_id (word·8 + band), so a d-dim vector has
+    * 8·ceil(d/64) bands, and a 64-dim vector's band ids are 0..7. The
+    * input columns ride along; `words` itself is kept. */
+  private[graft] def bandRowsOf(df: DataFrame): DataFrame =
+    df.select(col("*"), posexplode(col("words")).as(Seq("word_idx", "word")))
+      .select(col("*"), explode(bandStructsOf(col("word"))).as("band"))
+      .withColumn("band_id", col("word_idx") * hammingBands + col("band.band_id"))
+      .withColumn("band_key", col("band.band_key"))
+      .drop("word_idx", "word", "band")
+
+  /** The banded sketch index: one (vec_id, words, band_id, band_key)
     * row per (vector, band) — the standing artifact a streaming probe
-    * equi-joins instead of scanning every sketch. 4 narrow rows per
-    * corpus vector; persist bucketed by (band_id, band_key) at scale
-    * so a probe reads only its buckets. The full sketch rides along so
-    * the exact Hamming verify needs no second lookup. */
+    * equi-joins instead of scanning every sketch. Eight narrow rows per
+    * 64-dim corpus vector (8·ceil(dim/64) in general); persist bucketed
+    * by (band_id, band_key) at scale so a probe reads only its buckets.
+    * The full sketch rides along so the batch search's Hamming column
+    * needs no second lookup. */
   def sketchBandsOf(e: DataFrame): DataFrame =
-    e.withColumn("bits", signBits(col("v")))
-      .select(col("vec_id"), col("bits"),
-        explode(bandStructsOf(col("bits"))).as("band"))
-      .select(col("vec_id"), col("bits"),
-        col("band.band_id").as("band_id"), col("band.band_key").as("band_key"))
+    bandRowsOf(e.select(col("vec_id"), signBitsWide(col("v")).as("words")))
 
-  /** Wide-sketch banded index: every 64-bit word contributes its
-    * [[hammingBands]] bands under a word-offset band_id
-    * (word·8 + band), so an arbitrary-dimension corpus gets
-    * 8·ceil(dim/64) buckets per vector with the same equi-join probe
-    * shape; the full word array rides for the exact
-    * [[hammingWide]] verify. For a 64-dim corpus this is exactly
-    * [[sketchBandsOf]] with an array-wrapped sketch (spec-pinned). */
-  def sketchBandsWideOf(e: DataFrame): DataFrame =
-    e.withColumn("words", signBitsWide(col("v")))
-      .select(col("vec_id"), col("words"),
-        posexplode(col("words")).as(Seq("word_idx", "word")))
-      .select(col("vec_id"), col("words"), col("word_idx"),
-        explode(bandStructsOf(col("word"))).as("band"))
-      .select(col("vec_id"), col("words"),
-        (col("word_idx") * hammingBands + col("band.band_id")).as("band_id"),
-        col("band.band_key").as("band_key"))
+  /** Persist the banded sketch index, clustered by band_key on write so
+    * a probe's bucket equi-join reads only its buckets' files; at 64
+    * dims the index is eight (id, array<long>, int, long) rows per
+    * corpus vector. Load-parity is spec-pinned like every standing
+    * artifact. */
+  def writeSketchIndex(bands: DataFrame, path: String): Unit =
+    bands.repartition(col("band_key"))
+      .write.mode("overwrite").parquet(s"$path/sketch_bands")
 
-  /** [[annHammingBandedSearch]] for arbitrary dimensionality: the same
-    * candidate/verify/rerank pipeline over a [[sketchBandsWideOf]]
-    * index, Hamming via the multi-word popcount sum. */
-  def annHammingBandedWideSearch(q: DataFrame, bands: DataFrame,
+  def loadSketchIndex(s: SparkSession, path: String): DataFrame =
+    s.read.parquet(s"$path/sketch_bands")
+
+  /** Exact cosine re-rank of a per-query shortlist: `short` carries
+    * (query_id, neighbor_id) plus any `extra` columns to keep; the
+    * query vectors come from `q` (broadcast) and the candidate vectors
+    * from the float corpus `e`, both by equi-join, so floats are only
+    * touched for shortlist rows. Top-[[topK]] by (cosine desc,
+    * neighbor asc). The one refinement step of every filter-then-refine
+    * search here: banded Hamming, PQ-ADC and IVFADC. */
+  private def exactRerank(short: DataFrame, q: DataFrame, e: DataFrame,
+      extra: String*): DataFrame = {
+    val wC = Window.partitionBy(col("query_id"))
+      .orderBy(col("cosine").desc, col("neighbor_id").asc)
+    short
+      .join(broadcast(asQueries(q)), "query_id")
+      .join(asCandidates(e), "neighbor_id")
+      .withColumn("cosine", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
+      .withColumn("rank", row_number().over(wC))
+      .filter(col("rank") <= topK)
+      .select((Seq("query_id", "rank", "neighbor_id") ++ extra).map(col): _*)
+      .orderBy("query_id", "rank")
+  }
+
+  /** Banded-Hamming search: candidates are corpus vectors sharing at
+    * least one exact band with the query (an equi-join on
+    * (band_id, band_key) — no per-query corpus scan, unlike
+    * [[annHamming]]'s global top-R screen), deduped, then exact-cosine
+    * reranked; `hamming` is the summed per-word XOR+POPCNT of the two
+    * sketches. The batch twin of the streaming probe
+    * ([[graft.streaming.EventStream.hammingProbeStream]] — parity
+    * spec-pinned); `q` is any (vec_id, v, norm) frame of any
+    * dimensionality, `bands` a [[sketchBandsOf]] index, `e` the float
+    * corpus for rerank. */
+  def annHammingBandedSearch(q: DataFrame, bands: DataFrame,
       e: DataFrame): DataFrame = {
-    val qb = sketchBandsWideOf(q)
+    val qb = sketchBandsOf(q)
       .select(col("vec_id").as("query_id"), col("words").as("qwords"),
         col("band_id"), col("band_key"))
     val cands = qb
@@ -262,64 +294,7 @@ object AnnOps {
       .select(col("query_id"), col("neighbor_id"),
         hammingWide(col("qwords"), col("cwords")).as("hamming"))
       .distinct()
-    val wC = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    cands
-      .join(broadcast(q.select(col("vec_id").as("query_id"),
-        col("v").as("qv"), col("norm").as("qn"))), "query_id")
-      .join(e.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
-        col("norm").as("cn")), "neighbor_id")
-      .withColumn("cosine", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(wC))
-      .filter(col("rank") <= topK)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("hamming"))
-      .orderBy("query_id", "rank")
-  }
-
-  /** Persist the banded sketch index, clustered by band_key on write so
-    * a probe's bucket equi-join reads only its buckets' files; the
-    * whole index is four (id, long, int, int) rows per corpus vector.
-    * Load-parity is spec-pinned like every standing artifact. */
-  def writeSketchIndex(bands: DataFrame, path: String): Unit =
-    bands.repartition(col("band_key"))
-      .write.mode("overwrite").parquet(s"$path/sketch_bands")
-
-  def loadSketchIndex(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(s"$path/sketch_bands")
-
-  /** Banded-Hamming search: candidates are corpus vectors sharing at
-    * least one exact band with the query (an equi-join on
-    * (band_id, band_key) — no per-query corpus scan, unlike
-    * [[annHamming]]'s global top-R screen), deduped, then exact-cosine
-    * reranked. The batch twin of the streaming probe
-    * ([[graft.streaming.EventStream.hammingProbeStream]] — parity
-    * spec-pinned); `q` is any (vec_id, v, norm) frame, `bands` a
-    * [[sketchBandsOf]] index, `e` the float corpus for rerank. */
-  def annHammingBandedSearch(q: DataFrame, bands: DataFrame,
-      e: DataFrame): DataFrame = {
-    val qb = sketchBandsOf(q)
-      .select(col("vec_id").as("query_id"), col("bits").as("qbits"),
-        col("band_id"), col("band_key"))
-    val cands = qb
-      .join(bands.select(col("vec_id").as("neighbor_id"),
-        col("bits").as("cbits"), col("band_id"), col("band_key")),
-        Seq("band_id", "band_key"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        bit_count(col("qbits").bitwiseXOR(col("cbits"))).as("hamming"))
-      .distinct()
-    val wC = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    cands
-      .join(broadcast(q.select(col("vec_id").as("query_id"),
-        col("v").as("qv"), col("norm").as("qn"))), "query_id")
-      .join(e.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
-        col("norm").as("cn")), "neighbor_id")
-      .withColumn("cosine", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(wC))
-      .filter(col("rank") <= topK)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("hamming"))
-      .orderBy("query_id", "rank")
+    exactRerank(cands, q, e, "hamming")
   }
 
   /** The banded query row: [[annHammingBandedSearch]] over the corpus'
@@ -845,7 +820,7 @@ object AnnOps {
 
   /** Per-subspace centroid arrays as one m-row frame for broadcast:
     * (subspace, cents: array<struct<code, cv>>). */
-  private def codebookArr(cb: DataFrame): DataFrame =
+  private[operators] def codebookArr(cb: DataFrame): DataFrame =
     cb.groupBy(col("subspace"))
       .agg(sort_array(collect_list(struct(col("code"), col("cv")))).as("cents"))
 
@@ -856,7 +831,7 @@ object AnnOps {
 
   /** Per-row (d2, code) scores against a subspace's centroid array;
     * lexicographic min tie-breaks equal distances to the smallest code. */
-  private def codeScores(sv: Column): Column =
+  private[operators] def codeScores(sv: Column): Column =
     transform(col("cents"), c => struct(
       l2sq(sv, c.getField("cv")).as("d2"), c.getField("code").as("code")))
 
@@ -912,13 +887,28 @@ object AnnOps {
     cb
   }
 
-  /** PQ encoding: (vec_id, subspace, code) — the persisted form. Three
-    * small ints per row in place of the vector: a 64-dim float corpus
+  /** Nearest codeword of a subvector row's `sv` against the broadcast
+    * codebook array. */
+  private def nearestCode: Column =
+    array_min(codeScores(col("sv"))).getField("code").as("code")
+
+  /** (vec_id, subspace, code) rows pivoted to ONE row per vector —
+    * (`keys`..., neighbor_id, codes: array<int> in subspace order) —
+    * the one encoded form every PQ-family artifact stores, caches and
+    * searches: candidate fetch stays an equi-join on the keys and the
+    * whole ADC distance is per-row array math instead of an m-way
+    * (subspace, code) join + sum. */
+  private def codesArrays(rows: DataFrame, keys: Column*): DataFrame =
+    rows.groupBy(keys :+ col("vec_id").as("neighbor_id"): _*)
+      .agg(transform(sort_array(collect_list(struct(col("subspace"), col("code")))),
+        t => t.getField("code")).as("codes"))
+
+  /** PQ encoding: (neighbor_id, codes) — the persisted form, m small
+    * ints per vector in place of the floats: a 64-dim float corpus
     * shrinks 32×, and every later search touches only this frame. */
   def pqEncodeOf(sub: DataFrame, cb: DataFrame): DataFrame =
-    sub.join(broadcast(codebookArr(cb)), "subspace")
-      .select(col("vec_id"), col("subspace"),
-        array_min(codeScores(col("sv"))).getField("code").as("code"))
+    codesArrays(sub.join(broadcast(codebookArr(cb)), "subspace")
+      .select(col("vec_id"), col("subspace"), nearestCode))
 
   /** ADC shortlist size: quantization error on structure-free vectors
     * is too coarse to trust the PQ ranking for the final top-k, so ADC
@@ -926,94 +916,70 @@ object AnnOps {
     * whose shortlist an exact pass re-ranks. */
   val pqShortlist = 50
 
+  /** The approximate distance of a candidate row: the native
+    * [[graft.functions.AdcDistance]] fold of its (rq, codes) against
+    * the codebook grid — a DETERMINISTIC subspace-ordered sum (unlike a
+    * LUT join's shuffled m-row sum, so batch and stream compute the
+    * bit-identical double), with the grid as a codegen closure
+    * constant: one allocation-free JVM loop per candidate (the
+    * higher-order formulation it replaced evaluated interpreted — the
+    * swap measured 3.3× on the streaming probe END TO END, 32.1 s →
+    * 9.8 s for 8k queries at sf0.1·4). */
+  private def adcDistance(grid: Array[Array[Array[Double]]]): Column =
+    org.apache.spark.sql.GraftBridge.column(graft.functions.AdcDistance(
+      org.apache.spark.sql.GraftBridge.expression(col("rq")),
+      org.apache.spark.sql.GraftBridge.expression(col("codes")), grid))
+
+  /** Per-query ADC top-`k` of scored candidates (query_id, neighbor_id,
+    * approx_d2) as one (query_id, top) row: the native bounded top-k,
+    * ascending distance, ties to the smaller id — O(k) state, map-side
+    * partials capped at k (guide §2.3 "aggregate before you
+    * shuffle"). */
+  private def adcTop(cands: DataFrame, k: Int): DataFrame =
+    cands.groupBy(col("query_id"))
+      .agg(graft.functions.GraftFunctions.topkScoreId(
+        col("approx_d2"), col("neighbor_id"), k, ascending = true).as("top"))
+
+  /** An [[adcTop]] frame as (query_id, neighbor_id) shortlist rows. */
+  private def shortlistOf(top: DataFrame): DataFrame =
+    top.select(col("query_id"), explode(col("top")).as("c"))
+      .select(col("query_id"), col("c.id").as("neighbor_id"))
+
   /** PQ-ADC top-k with exact re-rank. The approximate stage is the
-    * deterministic native ADC fold against the array-form encoded
-    * corpus (one (neighbor_id, codes) row per vector): the query's
-    * normalized subvectors and the broadcast codebook grid ride the
-    * plan, the per-candidate distance is ONE allocation-free JVM loop
-    * ([[graft.functions.AdcDistance]] — subspace order, so the double
-    * is identical run to run, unlike the previous LUT join whose m
-    * partial distances summed in shuffle order), and the per-query
-    * shortlist is the native bounded top-k (O(pqShortlist) state,
-    * map-side partials capped at k — guide §2.3 "aggregate before you
-    * shuffle"). The previous shape broadcast-joined an m·k LUT against
-    * the (vec_id, subspace, code) rows, multiplying the corpus stream
-    * ×|queries| BEFORE a (query, vector) hash aggregation — measured
-    * as the query's dominant stage (515 ms of a 2.4 s warm run at
-    * sf0.1, 390 KB pair-partial exchange). Same candidate set, same
-    * distance values (mod fold-order ulps), same (d2, id) tie order
-    * (TopKAggSpec pins the agg ≡ sorted-slice); the best `pqShortlist`
-    * candidates per query are re-ranked with the exact cosine
-    * unchanged. The full corpus is only ever touched as codes; float
-    * vectors are fetched by equi-join for shortlist rows alone — the
-    * plan that holds when the corpus no longer fits in aggregate
-    * executor memory as floats. */
+    * deterministic native ADC fold against the encoded corpus (one
+    * (neighbor_id, codes) row per vector): the query's normalized
+    * subvectors and the broadcast codebook grid ride the plan, the
+    * per-candidate distance is ONE allocation-free JVM loop
+    * ([[adcDistance]]), and the per-query shortlist is the native
+    * bounded top-k ([[adcTop]]). The previous shape broadcast-joined an
+    * m·k LUT against (vec_id, subspace, code) rows, multiplying the
+    * corpus stream ×|queries| BEFORE a (query, vector) hash aggregation
+    * — measured as the query's dominant stage (515 ms of a 2.4 s warm
+    * run at sf0.1, 390 KB pair-partial exchange). The best
+    * `pqShortlist` candidates per query are re-ranked with the exact
+    * cosine ([[exactRerank]]). The full corpus is only ever touched as
+    * codes; float vectors are fetched by equi-join for shortlist rows
+    * alone — the plan that holds when the corpus no longer fits in
+    * aggregate executor memory as floats. */
   def annPq(s: SparkSession, dir: String): DataFrame = {
-    val (cb, _) = pqFor(s, dir)
-    annPqSearchArrays(embeddingsWithNorm(s, dir), cb, pqArraysFor(s, dir))
+    val (cb, encoded) = pqFor(s, dir)
+    annPqSearch(embeddingsWithNorm(s, dir), cb, encoded)
   }
 
   /** PQ-ADC search against an already-trained codebook and encoded
-    * corpus: `e` is the (vec_id, v, norm) corpus frame (queries are its
-    * vec_id < nQueries rows; exact re-rank fetches shortlist vectors
-    * from it by equi-join). Row-form `encoded` is pivoted to the
-    * array form internally — callers with a standing array-form table
-    * use [[annPqSearchArrays]] directly. */
-  def annPqSearch(e: DataFrame, cb: DataFrame, encoded: DataFrame): DataFrame =
-    annPqSearchArrays(e, cb, pqEncodedArrays(encoded))
-
-  /** Core PQ-ADC search over the array-form encoded corpus — see
-    * [[annPq]]. */
-  def annPqSearchArrays(e: DataFrame, cb: DataFrame, encArrays: DataFrame): DataFrame = {
-    // the query's normalized subvectors, map-side (10-row broadcast)
-    val probes = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"),
-        subSplit(transform(col("v"), x => x / col("norm"))).as("rq"))
-    val shortlist = encArrays
-      .join(broadcast(probes), col("query_id") =!= col("neighbor_id"))
-      .withColumn("approx_d2", org.apache.spark.sql.GraftBridge.column(
-        graft.functions.AdcDistance(
-          org.apache.spark.sql.GraftBridge.expression(col("rq")),
-          org.apache.spark.sql.GraftBridge.expression(col("codes")), gridOf(cb))))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.GraftFunctions.topkScoreId(
-        col("approx_d2"), col("neighbor_id"), pqShortlist, ascending = true).as("top"))
-      .select(col("query_id"), explode(col("top")).as("c"))
-      .select(col("query_id"), col("c.id").as("neighbor_id"))
-
-    // exact re-rank of the shortlist only
-    val wExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
+    * corpus ([[pqEncodeOf]]'s form): `e` is the (vec_id, v, norm)
+    * corpus frame (queries are its vec_id < nQueries rows; exact
+    * re-rank fetches shortlist vectors from it by equi-join). */
+  def annPqSearch(e: DataFrame, cb: DataFrame, encoded: DataFrame): DataFrame = {
     val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm").as("qn"))
-    shortlist
-      .join(broadcast(q), "query_id")
-      .join(e.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
-        col("norm").as("cn")), "neighbor_id")
-      .withColumn("cosine", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= topK)
-      .select("query_id", "rank", "neighbor_id")
-      .orderBy("query_id", "rank")
+    // the query's normalized subvectors, map-side (10-row broadcast)
+    val probes = q.select(col("vec_id").as("query_id"),
+      subSplit(transform(col("v"), x => x / col("norm"))).as("rq"))
+    val cands = encoded
+      .join(broadcast(probes), col("query_id") =!= col("neighbor_id"))
+      .withColumn("approx_d2", adcDistance(gridOf(cb)))
+    exactRerank(shortlistOf(adcTop(cands, pqShortlist)), q, e)
   }
-
-  /** The plain-PQ encoded corpus re-pivoted to ONE row per vector —
-    * (neighbor_id, codes in subspace order) — the cell-less sibling of
-    * [[ivfpqEncodedArrays]], persistable next to the row form. */
-  def pqEncodedArrays(encoded: DataFrame): DataFrame =
-    encoded.groupBy(col("vec_id").as("neighbor_id"))
-      .agg(transform(sort_array(collect_list(struct(col("subspace"), col("code")))),
-        t => t.getField("code")).as("codes"))
-
-  private val pqArraysCache = new graft.SessionCache[DataFrame]()
-
-  /** Session-cached array-form PQ-encoded corpus (standing artifact,
-    * derived once from [[pqFor]]'s row form like the IVFADC array
-    * table). */
-  def pqArraysFor(s: SparkSession, dir: String): DataFrame =
-    pqArraysCache.getOrCompute(s, dir) {
-      pqEncodedArrays(pqFor(s, dir)._2).localCheckpoint()
-    }
 
   // ------------------------------------------------ IVF-PQ (IVFADC)
 
@@ -1046,109 +1012,48 @@ object AnnOps {
       .select(col("vec_id"), col("cluster_id"),
         posexplode(subSplit(col("rv"))).as(Seq("subspace", "sv")))
 
-  /** Residual-encoded corpus: (vec_id, cluster_id, subspace, code) —
-    * four small ints per (vector, subspace); at scale this IS the
-    * search corpus (the float inverted file is only touched by the
-    * exact re-rank's shortlist equi-join), cluster-bucketed so a probe
-    * reads only its cells. The codebook is SHARED across cells (the
-    * standard IVFADC memory layout — per-cell codebooks would be
-    * K·m·k centroids). */
+  /** Residual-encoded corpus: (cluster_id, neighbor_id, codes) — m
+    * small ints per vector; at scale this IS the search corpus (the
+    * float inverted file is only touched by the exact re-rank's
+    * shortlist equi-join), cluster-bucketed so a probe reads only its
+    * cells. The codebook is SHARED across cells (the standard IVFADC
+    * memory layout — per-cell codebooks would be K·m·k centroids). */
   private[operators] def ivfpqEncodeOf(residSub: DataFrame, cb: DataFrame): DataFrame =
-    residSub.join(broadcast(codebookArr(cb)), "subspace")
-      .select(col("vec_id"), col("cluster_id"), col("subspace"),
-        array_min(codeScores(col("sv"))).getField("code").as("code"))
+    codesArrays(residSub.join(broadcast(codebookArr(cb)), "subspace")
+      .select(col("vec_id"), col("cluster_id"), col("subspace"), nearestCode),
+      col("cluster_id"))
 
-  /** IVFADC search: probe `nprobe` cells per query; per probed cell,
-    * the query's RESIDUAL against that cell's centroid builds the
-    * (subspace, code) distance LUT (nQueries·nprobe·m·k rows —
-    * kilobytes, broadcast); the encoded corpus joins on (cluster_id,
-    * subspace, code), so candidate volume is |N|·nprobe/K like plain
-    * IVF while the corpus side carries codes instead of floats; the
-    * ADC shortlist re-ranks exactly against the float corpus.
-    * Composes the two pruning regimes a 100 TB vector corpus needs
-    * AT ONCE: partition pruning (IVF) and compression (PQ). */
+  /** IVFADC search: probe `nprobe` cells per query, ADC-score the
+    * probed cells' encoded vectors against the query's RESIDUAL for
+    * each cell ([[ivfAdcTop]]), so candidate volume is |N|·nprobe/K
+    * like plain IVF while the corpus side carries codes instead of
+    * floats; the `pqShortlist` survivors re-rank exactly against the
+    * float corpus ([[exactRerank]]). Composes the two pruning regimes a
+    * 100 TB vector corpus needs AT ONCE: partition pruning (IVF) and
+    * compression (PQ). The previous shape broadcast-joined a
+    * per-(query, cell) m·k LUT against (vec_id, cluster_id, subspace,
+    * code) rows and re-summed the m partials in a (query, vector) hash
+    * aggregation (shuffle-order double sum; measured as the query's
+    * dominant stage, 669 ms of a 2.1 s warm run at sf0.1). */
   def annIvfPqSearch(q: DataFrame, cents: DataFrame, cb: DataFrame,
       encoded: DataFrame, e: DataFrame): DataFrame =
-    annIvfPqSearchArrays(q, cents, cb, ivfpqEncodedArrays(encoded), e)
-
-  /** Core IVFADC search over the array-form encoded corpus. The
-    * approximate stage is the SAME machinery as the streaming probe
-    * ([[adcProbes]] + [[adcCandidates]] + the native bounded top-k):
-    * probe residuals compute map-side against two broadcast scalars,
-    * candidates are one equi-join on cluster_id, and the ADC distance
-    * is the deterministic subspace-ordered native fold — one JVM loop
-    * per candidate. The previous shape broadcast-joined a per-(query,
-    * cell) m·k LUT against the (vec_id, cluster_id, subspace, code)
-    * rows and re-summed the m partials in a (query, vector) hash
-    * aggregation (shuffle-order double sum; measured as the query's
-    * dominant stage, 669 ms of a 2.1 s warm run at sf0.1). Same
-    * candidate set (vectors of probed cells), same distances mod
-    * fold-order ulps, same (d2, id) tie order (TopKAggSpec pins the
-    * agg ≡ the sorted slice the rank window computed); the exact
-    * re-rank of the `pqShortlist` survivors is unchanged. */
-  def annIvfPqSearchArrays(q: DataFrame, cents: DataFrame, cb: DataFrame,
-      encArrays: DataFrame, e: DataFrame): DataFrame = {
-    val probes = adcProbes(
-      q.select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("norm").as("qn")), cents)
-    val shortlist = adcCandidates(probes, encArrays, gridOf(cb))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.GraftFunctions.topkScoreId(
-        col("approx_d2"), col("neighbor_id"), pqShortlist, ascending = true).as("top"))
-      .select(col("query_id"), explode(col("top")).as("c"))
-      .select(col("query_id"), col("c.id").as("neighbor_id"))
-
-    val wExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    shortlist
-      .join(broadcast(q.select(col("vec_id").as("query_id"),
-        col("v").as("qv"), col("norm").as("qn"))), "query_id")
-      .join(e.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
-        col("norm").as("cn")), "neighbor_id")
-      .withColumn("cosine", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= topK)
-      .select("query_id", "rank", "neighbor_id")
-      .orderBy("query_id", "rank")
-  }
+    exactRerank(shortlistOf(ivfAdcTop(q, cents, cb, encoded, pqShortlist)), q, e)
 
   /** The composed IVF-PQ query row (rows-only; recall floor vs brute
     * force spec-pinned like q_ann_ivf/q_ann_pq). Reuses the session's
     * trained IVF index as the coarse quantizer, so a deployment that
     * already runs IVF upgrades to IVFADC without retraining Lloyd. */
   def annIvfPq(s: SparkSession, dir: String): DataFrame = {
-    val (cents, cb, _) = ivfpqFor(s, dir)
-    annIvfPqSearchArrays(embeddingsWithNorm(s, dir).filter(col("vec_id") < nQueries),
-      cents, cb, ivfpqArraysFor(s, dir), embeddingsWithNorm(s, dir))
+    val (cents, cb, encoded) = ivfpqFor(s, dir)
+    annIvfPqSearch(embeddingsWithNorm(s, dir).filter(col("vec_id") < nQueries),
+      cents, cb, encoded, embeddingsWithNorm(s, dir))
   }
-
-  private val ivfpqArraysCache = new graft.SessionCache[DataFrame]()
-
-  /** Session-cached array-form IVFADC encoded corpus — the standing
-    * probe table ([[ivfpqEncodedArrays]] of the row form), derived
-    * once per (session, corpus) like the row form itself. It is
-    * PRE-BUCKETED on cluster_id before materialization — the exact
-    * layout [[writeIvfPqArrays]] persists — and the checkpoint
-    * preserves that partitioning, so every probe join on cluster_id
-    * (the batch search and each micro-batch of
-    * [[graft.streaming.EventStream.ivfpqProbeStream]]) reads the
-    * index side already placed and re-exchanges only the query rows
-    * (guide §2.4 "two operations keyed the same way share one
-    * exchange"; a stream-static join re-plans the static side per
-    * batch, so an unpartitioned index paid its exchange on every
-    * micro-batch). */
-  def ivfpqArraysFor(s: SparkSession, dir: String): DataFrame =
-    ivfpqArraysCache.getOrCompute(s, dir) {
-      ivfpqEncodedArrays(ivfpqFor(s, dir)._3)
-        .repartition(col("cluster_id")).localCheckpoint()
-    }
 
   /** Persist the IVFADC artifacts: the coarse centroids are the IVF
     * index's own (shared), so only the residual codebook and the
     * cluster-keyed encoded corpus are new tables; the encoded corpus
     * is repartitioned by cluster_id on write like the inverted file,
-    * so a probe's (cluster_id, subspace, code) join reads only the
-    * probed cells' files. */
+    * so a probe's cluster_id join reads only the probed cells' files. */
   def writeIvfPq(cents: DataFrame, cb: DataFrame, encoded: DataFrame,
       path: String): Unit = {
     cents.write.mode("overwrite").parquet(s"$path/ivfpq_centroids")
@@ -1166,37 +1071,25 @@ object AnnOps {
 
   /** (coarse centroids, shared residual codebook, encoded corpus) for
     * the corpus, training on first use; the coarse quantizer is the
-    * SAME session-cached IVF index the plain-IVF rows use. */
+    * SAME session-cached IVF index the plain-IVF rows use. The encoded
+    * corpus is PRE-BUCKETED on cluster_id before materialization — the
+    * layout [[writeIvfPq]] persists — and the checkpoint preserves that
+    * partitioning, so every probe join on cluster_id (the batch search
+    * and each micro-batch of
+    * [[graft.streaming.EventStream.ivfpqProbeStream]]) reads the index
+    * side already placed and re-exchanges only the query rows (guide
+    * §2.4 "two operations keyed the same way share one exchange"; a
+    * stream-static join re-plans the static side per batch, so an
+    * unpartitioned index paid its exchange on every micro-batch). */
   def ivfpqFor(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
     ivfpqCache.getOrCompute(s, dir) {
       val (cents, _) = ivfFor(s, dir)
       val residSub = ivfpqResidualSub(embeddingsWithNorm(s, dir), cents)
         .localCheckpoint()
       val cb = pqCodebookOf(residSub)
-      (cents, cb, ivfpqEncodeOf(residSub, cb).localCheckpoint())
+      (cents, cb, ivfpqEncodeOf(residSub, cb)
+        .repartition(col("cluster_id")).localCheckpoint())
     }
-
-  // ------------------------------------- streaming-shaped ADC (arrays)
-
-  /** The encoded corpus re-pivoted to ONE row per vector —
-    * (cluster_id, neighbor_id, codes: array<int> in subspace order) —
-    * the layout a stream probes: candidate fetch stays an equi-join on
-    * cluster_id and the whole ADC distance becomes per-row array math
-    * instead of an m-way (subspace, code) join + sum. Derived once
-    * from [[ivfpqEncodeOf]]'s row form and persistable next to it. */
-  def ivfpqEncodedArrays(encoded: DataFrame): DataFrame =
-    encoded.groupBy(col("cluster_id"), col("vec_id").as("neighbor_id"))
-      .agg(transform(sort_array(collect_list(struct(col("subspace"), col("code")))),
-        t => t.getField("code")).as("codes"))
-
-  /** Persist the array-form encoded corpus next to the row form
-    * ([[writeIvfPq]]), cluster-keyed on write like the inverted file. */
-  def writeIvfPqArrays(encArrays: DataFrame, path: String): Unit =
-    encArrays.repartition(col("cluster_id"))
-      .write.mode("overwrite").parquet(s"$path/ivfpq_encoded_arrays")
-
-  def loadIvfPqArrays(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(s"$path/ivfpq_encoded_arrays")
 
   /** The shared residual codebook collected to a driver-side grid —
     * grid(subspace)(code) = codeword — m×k×(d/m) doubles, kilobytes,
@@ -1211,12 +1104,12 @@ object AnnOps {
           .map(_.getAs[scala.collection.Seq[Double]]("cv").toArray).toArray
       }.toArray
 
-  /** Probe expansion shared by the batch ADC top-k and the streaming
-    * IVFADC probe: for a frame carrying (query_id, qv, qn) plus any
-    * pass-through columns (e.g. the stream's ingest_ts), emit one row
-    * per (query, probed cell) with the query's residual subvectors
-    * against that cell's centroid. Pure map-side against two broadcast
-    * scalars (centroid array + per-cell centroid lookup). */
+  /** Probe expansion shared by the batch IVFADC search and the
+    * streaming IVFADC probe: for a frame carrying (query_id, qv, qn)
+    * plus any pass-through columns (e.g. the stream's ingest_ts), emit
+    * one row per (query, probed cell) with the query's residual
+    * subvectors against that cell's centroid. Pure map-side against two
+    * broadcast scalars (centroid array + per-cell centroid lookup). */
   private[graft] def adcProbes(frame: DataFrame, cents: DataFrame): DataFrame =
     frame
       .crossJoin(broadcast(centArr(cents)))
@@ -1229,47 +1122,33 @@ object AnnOps {
           (x, c) => x / col("qn") - c / col("ccn"))))
       .drop("ccv", "ccn")
 
-  /** Scored ADC candidates: probe rows equi-join the array-form encoded
-    * corpus on cluster_id and the approximate distance is the native
-    * [[graft.functions.AdcDistance]] — a DETERMINISTIC subspace-ordered
-    * fold per row (unlike the LUT join's shuffled 8-row sum — batch and
-    * stream computing the identical fold is what makes their outputs
-    * bit-comparable), with the codebook grid as a codegen closure
-    * constant: one allocation-free JVM loop per candidate (the
-    * higher-order formulation it replaced evaluated interpreted — the
-    * swap measured 3.3× on the streaming probe END TO END, 32.1 s →
-    * 9.8 s for 8k queries at sf0.1·4, with the candidate join now the
-    * dominant cost as it should be). */
-  private[graft] def adcCandidates(probes: DataFrame, encArrays: DataFrame,
+  /** Scored ADC candidates: probe rows equi-join the encoded corpus on
+    * cluster_id and carry their [[adcDistance]] as `approx_d2`. */
+  private[graft] def adcCandidates(probes: DataFrame, encoded: DataFrame,
       grid: Array[Array[Array[Double]]]): DataFrame =
     probes
-      .join(encArrays, Seq("cluster_id"))
+      .join(encoded, Seq("cluster_id"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("approx_d2", org.apache.spark.sql.GraftBridge.column(
-        graft.functions.AdcDistance(
-          org.apache.spark.sql.GraftBridge.expression(col("rq")),
-          org.apache.spark.sql.GraftBridge.expression(col("codes")), grid)))
+      .withColumn("approx_d2", adcDistance(grid))
 
-  /** Batch ADC top-k over the array-form index: the streaming probe's
+  /** The IVFADC approximate stage shared by the re-ranked search and
+    * the ADC-only answer: [[adcProbes]] → [[adcCandidates]] →
+    * [[adcTop]] over a (vec_id, v, norm) query frame. */
+  private def ivfAdcTop(q: DataFrame, cents: DataFrame, cb: DataFrame,
+      encoded: DataFrame, k: Int): DataFrame =
+    adcTop(adcCandidates(adcProbes(asQueries(q), cents), encoded, gridOf(cb)), k)
+
+  /** Batch ADC top-k over the encoded index: the streaming probe's
     * exact twin (same probes, same fold, same tie rules — spec-pinned
     * row parity), and the ADC-only answer shape for callers that skip
     * the exact re-rank. */
   def annIvfPqAdcTopk(q: DataFrame, cents: DataFrame, cb: DataFrame,
-      encArrays: DataFrame): DataFrame = {
-    val probes = adcProbes(
-      q.select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("norm").as("qn")), cents)
-    adcCandidates(probes, encArrays, gridOf(cb))
-      .groupBy(col("query_id"))
-      // the same native bounded top-k the streaming twin runs — the
-      // exchange carries at most k pairs per query from each partition
-      .agg(graft.functions.GraftFunctions.topkScoreId(
-        col("approx_d2"), col("neighbor_id"), topK, ascending = true).as("top"))
+      encoded: DataFrame): DataFrame =
+    ivfAdcTop(q, cents, cb, encoded, topK)
       .select(col("query_id"), posexplode(col("top")).as(Seq("r0", "c")))
       .select(col("query_id"), (col("r0") + 1).cast("int").as("rank"),
         col("c.id").as("neighbor_id"))
       .orderBy("query_id", "rank")
-  }
 
   // ------------------------------------------------ trained-index lifecycle
 
@@ -1277,17 +1156,30 @@ object AnnOps {
     * corpus instead of retraining per query: IVF centroids (k rows) and
     * the inverted file (corpus rows as (vec_id, cluster_id, v, norm) —
     * at scale this IS the stored corpus, cluster-bucketed), plus the PQ
-    * codebook (m×k rows, kilobytes) and the encoded corpus (three small
-    * ints per (vector, subspace) — the 32× compressed search frame). */
+    * codebook (m×k rows, kilobytes) and the encoded corpus (one
+    * (neighbor_id, codes) row per vector, m small ints — the 32×
+    * compressed search frame). */
   final case class AnnIndex(centroids: DataFrame, assigned: DataFrame,
       codebook: DataFrame, encoded: DataFrame)
 
-  /** Train every artifact in one pass over the corpus frame. */
+  /** IVF training: (centroids, inverted file), both materialized. */
+  private def ivfOf(e: DataFrame): (DataFrame, DataFrame) = {
+    val cents = centroidsOf(e) // localCheckpoint-materialized per round
+    (cents, assignmentsOf(e, cents).localCheckpoint())
+  }
+
+  /** PQ training: (codebook, encoded corpus), both materialized. */
+  private def pqOf(e: DataFrame): (DataFrame, DataFrame) = {
+    val sub = subvectors(e).localCheckpoint()
+    val cb = pqCodebookOf(sub)
+    (cb, pqEncodeOf(sub, cb).localCheckpoint())
+  }
+
+  /** Train every artifact over the corpus frame, uncached. */
   def buildIndex(e: DataFrame): AnnIndex = {
-    val cents = centroidsOf(e)
-    val sub   = subvectors(e).localCheckpoint()
-    val cb    = pqCodebookOf(sub)
-    AnnIndex(cents, assignmentsOf(e, cents), cb, pqEncodeOf(sub, cb))
+    val (cents, assigned) = ivfOf(e)
+    val (cb, encoded) = pqOf(e)
+    AnnIndex(cents, assigned, cb, encoded)
   }
 
   /** Persist a trained index as four parquet tables under `path`. The
@@ -1320,26 +1212,11 @@ object AnnOps {
 
   /** (centroids, inverted file) for the corpus, training on first use. */
   def ivfFor(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    ivfCache.getOrCompute(s, dir) {
-      val e = embeddingsWithNorm(s, dir)
-      val cents = centroidsOf(e) // localCheckpoint-materialized per round
-      (cents, assignmentsOf(e, cents).localCheckpoint())
-    }
+    ivfCache.getOrCompute(s, dir)(ivfOf(embeddingsWithNorm(s, dir)))
 
   /** (codebook, encoded corpus) for the corpus, training on first use. */
   def pqFor(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    pqCache.getOrCompute(s, dir) {
-      val sub = subvectors(embeddingsWithNorm(s, dir)).localCheckpoint()
-      val cb = pqCodebookOf(sub)
-      (cb, pqEncodeOf(sub, cb).localCheckpoint())
-    }
-
-  /** The full trained bundle (both families) — the persistence path. */
-  def indexFor(s: SparkSession, dir: String): AnnIndex = {
-    val (cents, assigned) = ivfFor(s, dir)
-    val (cb, encoded) = pqFor(s, dir)
-    AnnIndex(cents, assigned, cb, encoded)
-  }
+    pqCache.getOrCompute(s, dir)(pqOf(embeddingsWithNorm(s, dir)))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_ann_topk"        -> (annTopk _),

@@ -155,12 +155,11 @@ object DedupOps {
     * filtering; `Long.MaxValue` = exact; see [[ngramJaccardHashedOf]]
     * for the collapse semantics). */
   def ngramJaccardOf(shingleSets: DataFrame, threshold: Double,
-      maxShingleDf: Long = Long.MaxValue,
-      viralPrefilter: Boolean = false): DataFrame =
+      maxShingleDf: Long = Long.MaxValue): DataFrame =
     ngramJaccardHashedOf(
       shingleSets.select(col("doc_id"),
         transform(col("sh"), x => xxhash64(x)).as("hs")),
-      threshold, maxShingleDf, viralPrefilter)
+      threshold, maxShingleDf)
 
   /** Hash-domain core: Jaccard near-dup pairs over any
     * (doc_id, hs: array<bigint>) frame (e.g. from [[shingleHashesOf]]).
@@ -200,12 +199,10 @@ object DedupOps {
       .localCheckpoint()
 
   def ngramJaccardHashedOf(hashSets: DataFrame, threshold: Double,
-      maxShingleDf: Long = Long.MaxValue,
-      viralPrefilter: Boolean = false): DataFrame = {
+      maxShingleDf: Long = Long.MaxValue): DataFrame = {
     val grouped = ngramCollapseOf(hashSets)
     val repPairs = repPairsOf(
-      grouped.select(col("rep_id").as("doc_id"), col("hs")), threshold, maxShingleDf,
-      viralPrefilter)
+      grouped.select(col("rep_id").as("doc_id"), col("hs")), threshold, maxShingleDf)
     // every copy pair is a jaccard-1.0 near-dup (common = size_a = size_b)
     expandCollapsedPairs(grouped, repPairs, "doc_a", "doc_b",
       "jaccard", lit(1.0))
@@ -238,30 +235,11 @@ object DedupOps {
     within.unionByName(cross)
   }
 
-  /** Inverted-index pair detection over distinct shingle sets.
-    *
-    * `viralPrefilter` adds a two-pass stop-shingle drop: a first
-    * `groupBy(h).count` finds shingles whose df exceeds the cap —
-    * map-side partial aggregation collapses a viral shingle to one row
-    * per task, so the hot key never concentrates on one partition —
-    * and the (tiny) blocklist broadcast-anti-joins the exploded stream
-    * BEFORE the posting shuffle. With it, a shingle shared by 100M
-    * documents never rides the exchange at all (the single-pass window
-    * spills it to disk instead); the price is one extra aggregation
-    * pass over the exploded shingles. Value-identical output either
-    * way (both drop exactly the df > cap shingles) — pinned in spec —
-    * so the flag is purely a physical-plan choice: off for one-pass
-    * economy, on when the corpus has true viral boilerplate. */
+  /** Inverted-index pair detection over distinct shingle sets. */
   private def repPairsOf(hashSets: DataFrame, threshold: Double,
-      maxShingleDf: Long, viralPrefilter: Boolean = false): DataFrame = {
-    val inv0 = hashSets
+      maxShingleDf: Long): DataFrame = {
+    val inv = hashSets
       .select(col("doc_id"), size(col("hs")).as("sh_size"), explode(col("hs")).as("h"))
-    val inv = if (viralPrefilter && maxShingleDf < Long.MaxValue) {
-      val viral = inv0.groupBy(col("h")).agg(count(lit(1)).as("vdf"))
-        .filter(col("vdf") > maxShingleDf)
-        .select(col("h"))
-      inv0.join(broadcast(viral), Seq("h"), "left_anti")
-    } else inv0
     // Per-shingle document frequency via a whole-partition window on the
     // ONE shuffle this pipeline needs: the heavy shingling runs once, the
     // groupBy below reuses the same hash partitioning (no second

@@ -46,7 +46,7 @@ object SemDedupOps {
 
   /** Driver entry: semantic dedup of the embeddings table. The collapse
     * groups and trained centroids are the pass's reusable model — cached
-    * per (session, corpus) like [[AnnOps.indexFor]], so repeated queries
+    * per (session, corpus) like [[AnnOps.ivfFor]], so repeated queries
     * (and bench repetitions) pay Lloyd once; the pair search + component
     * closure still runs per query. Deterministic training ⇒ cached and
     * fresh results identical. */

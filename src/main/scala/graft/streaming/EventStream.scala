@@ -265,9 +265,7 @@ object EventStream {
     * answers (a query's rows land when its batch does) or `append`
     * for watermark-finalized rows, exactly like
     * [[contaminationStream]]. */
-  def annProbeStream(vecs: DataFrame, cents: DataFrame, assigned: DataFrame,
-      windowDur: String = "1 minute",
-      watermarkDelay: String = "10 seconds"): DataFrame = {
+  def annProbeStream(vecs: DataFrame, cents: DataFrame, assigned: DataFrame): DataFrame = {
     import graft.operators.AnnOps
     import graft.functions.GraftFunctions.dot
     val e = vecs
@@ -280,7 +278,7 @@ object EventStream {
         col("v").as("qv"), col("norm").as("qn"),
         explode(AnnOps.probeIdsCol(col("v"), col("norm"), AnnOps.nprobe))
           .as("cluster_id"))
-      .withWatermark("ingest_ts", watermarkDelay)
+      .withWatermark("ingest_ts", "10 seconds")
     probes
       .join(assigned.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
         col("norm").as("cn"), col("cluster_id")), Seq("cluster_id"))
@@ -288,7 +286,7 @@ object EventStream {
       .select(col("query_id"), col("ingest_ts"),
         (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cosine"),
         (-col("neighbor_id")).as("nid"))
-      .groupBy(window(col("ingest_ts"), windowDur), col("query_id"))
+      .groupBy(window(col("ingest_ts"), "1 minute"), col("query_id"))
       // native bounded top-k (O(k) state per in-flight query, map-side
       // partials capped at k) — see graft.functions.TopKScoreIdAgg
       .agg(graft.functions.GraftFunctions.topkScoreId(
@@ -301,7 +299,7 @@ object EventStream {
   }
 
   /** Streaming IVFADC probe against the COMPRESSED persisted index
-    * ([[graft.operators.AnnOps.ivfpqEncodedArrays]] — one
+    * ([[graft.operators.AnnOps.ivfpqFor]]'s encoded corpus — one
     * (cluster_id, neighbor_id, codes) row per corpus vector, 32× less
     * than the floats): the streaming twin of
     * [[graft.operators.AnnOps.annIvfPqAdcTopk]], answering a query
@@ -321,9 +319,7 @@ object EventStream {
     * `vecs` needs (vec_id, embedding); emits (query_id, rank,
     * neighbor_id). */
   def ivfpqProbeStream(vecs: DataFrame, cents: DataFrame, cb: DataFrame,
-      encArrays: DataFrame,
-      windowDur: String = "1 minute",
-      watermarkDelay: String = "10 seconds"): DataFrame = {
+      encoded: DataFrame): DataFrame = {
     import graft.operators.AnnOps
     import graft.functions.GraftFunctions.dot
     val q = vecs
@@ -333,11 +329,11 @@ object EventStream {
       .select(col("vec_id").as("query_id"), col("ingest_ts"),
         col("v").as("qv"), col("norm").as("qn"))
     val probes = AnnOps.adcProbes(q, cents)
-      .withWatermark("ingest_ts", watermarkDelay)
-    AnnOps.adcCandidates(probes, encArrays, AnnOps.gridOf(cb))
+      .withWatermark("ingest_ts", "10 seconds")
+    AnnOps.adcCandidates(probes, encoded, AnnOps.gridOf(cb))
       .select(col("query_id"), col("ingest_ts"), col("approx_d2"),
         col("neighbor_id"))
-      .groupBy(window(col("ingest_ts"), windowDur), col("query_id"))
+      .groupBy(window(col("ingest_ts"), "1 minute"), col("query_id"))
       // native bounded top-k: O(k) state per in-flight query instead of
       // buffering every ADC candidate (nprobe·cell structs) in the
       // state store — and the map-side partial caps what each partition
@@ -353,110 +349,55 @@ object EventStream {
 
   /** Streaming binary-sketch ANN probe against the persisted banded
     * sign-sketch index ([[graft.operators.AnnOps.sketchBandsOf]]): the
-    * cheapest standing-artifact ANN answerer — the index rows are four
-    * (id, long, int, int) tuples per corpus vector (no floats, no
-    * training), and the probe plan is entirely stateless until the
-    * final top-k rollup.
+    * cheapest standing-artifact ANN answerer — the index is eight
+    * narrow rows per 64-dim corpus vector (8·ceil(dim/64) in general;
+    * no floats, no training), and the probe plan is entirely stateless
+    * until the final top-k rollup.
     *
-    * Per query vector: the 64-bit sign sketch and its eight 8-bit
-    * bands compute map-side (one native fold), candidates are a
-    * stream-static EQUI-join on (band_id, band_key) — only the
-    * query's eight buckets are read, never the corpus — the exact
-    * Hamming distance verifies on the riding sketch (XOR+POPCNT),
-    * cosine reranks through one more stateless equi-join to the float
-    * corpus, and ONE watermark-bounded per-query aggregation emits
-    * top-k (the native bounded top-k aggregate — O(k) state, and
-    * identical (cosine, nid) multi-band hits collapse on insert, the
-    * collect_set semantics). Pigeonhole contract: any corpus
-    * vector within Hamming 7 of the query shares a band and WILL be
-    * scored. Output rows equal the batch
-    * [[graft.operators.AnnOps.annHammingBandedSearch]] on the same
-    * index (spec-pinned).
+    * Per query vector: the sign sketch and its 8-bit bands compute
+    * map-side (one native fold), candidates are a stream-static
+    * EQUI-join on (band_id, band_key) — only the query's own buckets
+    * are read, never the corpus; no Hamming distance is computed, the
+    * shared band IS the screen — cosine scores each candidate through
+    * one more stateless equi-join to the float corpus, and ONE
+    * watermark-bounded per-query aggregation emits top-k (the native
+    * bounded top-k aggregate — O(k) state, and identical (cosine, nid)
+    * multi-band hits collapse on insert, the collect_set semantics).
+    * Pigeonhole contract: any corpus vector within Hamming 7 of a
+    * 64-dim query shares a band and WILL be scored. Output rows equal
+    * the batch [[graft.operators.AnnOps.annHammingBandedSearch]] on
+    * the same index (spec-pinned).
     *
     * `vecs` needs (vec_id, embedding); emits (query_id, rank,
     * neighbor_id). `update` mode for per-batch answers, `append` for
     * watermark-finalized rows — like [[annProbeStream]]. */
-  def hammingProbeStream(vecs: DataFrame, bands: DataFrame, corpus: DataFrame,
-      windowDur: String = "1 minute",
-      watermarkDelay: String = "10 seconds"): DataFrame = {
+  def hammingProbeStream(vecs: DataFrame, bands: DataFrame,
+      corpus: DataFrame): DataFrame = {
     import graft.operators.AnnOps
     import graft.functions.GraftFunctions.dot
-    val qs = vecs
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
+    val qs = AnnOps.bandRowsOf(vecs
+      .select(col("vec_id").as("query_id"),
+        col("embedding").cast("array<double>").as("qv"),
         current_timestamp().as("ingest_ts"))
-      .withColumn("norm", sqrt(dot(col("v"), col("v"))))
-      .withColumn("bits", AnnOps.signBits(col("v")))
-      .select(col("vec_id").as("query_id"), col("ingest_ts"),
-        col("v").as("qv"), col("norm").as("qn"), col("bits").as("qbits"),
-        explode(AnnOps.bandStructsOf(col("bits"))).as("band"))
-      .select(col("query_id"), col("ingest_ts"), col("qv"), col("qn"),
-        col("qbits"), col("band.band_id").as("band_id"),
-        col("band.band_key").as("band_key"))
-      .withWatermark("ingest_ts", watermarkDelay)
+      .withColumn("qn", sqrt(dot(col("qv"), col("qv"))))
+      .withColumn("words", AnnOps.signBitsWide(col("qv"))))
+      .drop("words")
+      .withWatermark("ingest_ts", "10 seconds")
     qs
-      .join(bands.select(col("vec_id").as("neighbor_id"),
-        col("bits").as("cbits"), col("band_id"), col("band_key")),
-        Seq("band_id", "band_key"))
+      .join(bands.select(col("vec_id").as("neighbor_id"), col("band_id"),
+        col("band_key")), Seq("band_id", "band_key"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .join(corpus.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
         col("norm").as("cn")), Seq("neighbor_id"))
       .select(col("query_id"), col("ingest_ts"),
         (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cosine"),
         (-col("neighbor_id")).as("nid"))
-      .groupBy(window(col("ingest_ts"), windowDur), col("query_id"))
+      .groupBy(window(col("ingest_ts"), "1 minute"), col("query_id"))
       // native bounded top-k, descending on (cosine, nid) — nid is the
       // negated neighbor so ties break to the smaller id; exact
       // duplicates from multi-band hits collapse on insert (the
       // collect_set semantics), and state per in-flight query is O(k)
       // instead of every bucket candidate
-      .agg(graft.functions.GraftFunctions.topkScoreId(
-        col("cosine"), col("nid"), AnnOps.topK, ascending = false).as("top"))
-      .drop("window")
-      .select(col("query_id"), posexplode(col("top")).as(Seq("r0", "c")))
-      .select(col("query_id"), (col("r0") + 1).cast("int").as("rank"),
-        (-col("c.id")).as("neighbor_id"))
-  }
-
-  /** [[hammingProbeStream]] for ARBITRARY embedding width: probes a
-    * [[graft.operators.AnnOps.sketchBandsWideOf]] index — the query's
-    * ceil(dim/64)-word sketch bands under word-offset band ids, the
-    * exact verify via the multi-word popcount sum, the same stateless
-    * bucket joins and O(k) top-k rollup. Rows equal the batch
-    * [[graft.operators.AnnOps.annHammingBandedWideSearch]] (spec). */
-  def hammingProbeStreamWide(vecs: DataFrame, bands: DataFrame,
-      corpus: DataFrame,
-      windowDur: String = "1 minute",
-      watermarkDelay: String = "10 seconds"): DataFrame = {
-    import graft.operators.AnnOps
-    import graft.functions.GraftFunctions.dot
-    val qs = vecs
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
-        current_timestamp().as("ingest_ts"))
-      .withColumn("norm", sqrt(dot(col("v"), col("v"))))
-      .withColumn("words", AnnOps.signBitsWide(col("v")))
-      .select(col("vec_id").as("query_id"), col("ingest_ts"),
-        col("v").as("qv"), col("norm").as("qn"), col("words").as("qwords"),
-        posexplode(col("words")).as(Seq("word_idx", "word")))
-      .select(col("query_id"), col("ingest_ts"), col("qv"), col("qn"),
-        col("qwords"), col("word_idx"),
-        explode(AnnOps.bandStructsOf(col("word"))).as("band"))
-      .select(col("query_id"), col("ingest_ts"), col("qv"), col("qn"),
-        col("qwords"),
-        (col("word_idx") * AnnOps.hammingBands + col("band.band_id"))
-          .as("band_id"),
-        col("band.band_key").as("band_key"))
-      .withWatermark("ingest_ts", watermarkDelay)
-    qs
-      .join(bands.select(col("vec_id").as("neighbor_id"),
-        col("words").as("cwords"), col("band_id"), col("band_key")),
-        Seq("band_id", "band_key"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .join(corpus.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
-        col("norm").as("cn")), Seq("neighbor_id"))
-      .select(col("query_id"), col("ingest_ts"),
-        (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cosine"),
-        (-col("neighbor_id")).as("nid"))
-      .groupBy(window(col("ingest_ts"), windowDur), col("query_id"))
       .agg(graft.functions.GraftFunctions.topkScoreId(
         col("cosine"), col("nid"), AnnOps.topK, ascending = false).as("top"))
       .drop("window")
@@ -475,16 +416,14 @@ object EventStream {
     * only) carry over verbatim because the summary is mergeable —
     * micro-batch partials combine exactly like shuffle partials
     * (spec-pinned against exact counts). */
-  def heavyHitterStream(docs: DataFrame, capacity: Int,
-      windowDur: String = "1 minute",
-      watermarkDelay: String = "10 seconds"): DataFrame = {
+  def heavyHitterStream(docs: DataFrame, capacity: Int): DataFrame = {
     docs
       .filter(col("text").isNotNull)
       .select(current_timestamp().as("ingest_ts"),
         explode(split(trim(col("text")), "\\s+")).as("tok"))
       .select(col("ingest_ts"), xxhash64(col("tok")).as("h"))
-      .withWatermark("ingest_ts", watermarkDelay)
-      .groupBy(window(col("ingest_ts"), windowDur))
+      .withWatermark("ingest_ts", "10 seconds")
+      .groupBy(window(col("ingest_ts"), "1 minute"))
       .agg(graft.functions.GraftFunctions.heavyHitters(col("h"), capacity).as("hh"))
       .select(col("window.start").as("window_start"),
         posexplode(col("hh")).as(Seq("r0", "e")))
@@ -770,14 +709,12 @@ object EventStream {
     * the same terms — spec-pinned). Emits only documents with ≥ 1
     * bigram (the closure scorer carries short docs through with null
     * scores). */
-  def lmScoreStreamJoin(docs: DataFrame, cb: DataFrame, cw: DataFrame,
-      windowDur: String = "1 minute",
-      watermarkDelay: String = "10 seconds"): DataFrame = {
+  def lmScoreStreamJoin(docs: DataFrame, cb: DataFrame, cw: DataFrame): DataFrame = {
     val v = cw.agg(count(lit(1)).as("v"))
     docs
       .select(col("doc_id"), current_timestamp().as("ingest_ts"),
         explode(graft.operators.QualityModelOps.bigramsCol).as("bg"))
-      .withWatermark("ingest_ts", watermarkDelay)
+      .withWatermark("ingest_ts", "10 seconds")
       .join(broadcast(cb), Seq("bg"), "left")
       .join(broadcast(cw.select(col("w1"), col("cw"))),
         substring_index(col("bg"), " ", 1) === col("w1"), "left")
@@ -785,7 +722,7 @@ object EventStream {
       .select(col("doc_id"), col("ingest_ts"),
         (log(coalesce(col("cb"), lit(0L)) + lit(1)) -
           log(coalesce(col("cw"), lit(0L)) + col("v"))).as("lp"))
-      .groupBy(window(col("ingest_ts"), windowDur), col("doc_id"))
+      .groupBy(window(col("ingest_ts"), "1 minute"), col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"), sum(col("lp")).as("lp_sum"))
       .drop("window")
       .select(col("doc_id"), col("n_bigrams"),
@@ -881,9 +818,7 @@ object EventStream {
     * copy per doc map-side, never multiplied by the explode). The cut
     * itself (own-duplicate detection, coverage expansion, ordered
     * reassembly) is array math on the aggregated row. */
-  def substringCutStream(docs: DataFrame, windowFreq: DataFrame, w: Int,
-      windowDur: String = "1 minute",
-      watermarkDelay: String = "10 seconds"): DataFrame = {
+  def substringCutStream(docs: DataFrame, windowFreq: DataFrame, w: Int): DataFrame = {
     val wins = docs
       // null text is dropped, matching the batch operators' filter
       .filter(col("text").isNotNull)
@@ -893,10 +828,10 @@ object EventStream {
         // still flow through (untouched), exactly like the batch cut
         posexplode_outer(graft.functions.GraftFunctions.windowHashes(col("text"), w))
           .as(Seq("i", "h")))
-      .withWatermark("ingest_ts", watermarkDelay)
+      .withWatermark("ingest_ts", "10 seconds")
       .join(windowFreq.select(col("h"), col("c").as("c_idx")), Seq("h"), "left")
     val agg = wins
-      .groupBy(window(col("ingest_ts"), windowDur), col("doc_id"))
+      .groupBy(window(col("ingest_ts"), "1 minute"), col("doc_id"))
       .agg(first(col("text")).as("text"),
         sort_array(collect_list(struct(col("i"),
           col("h"), coalesce(col("c_idx"), lit(0L)).as("ci")))).as("ws_hits"))
@@ -1025,12 +960,10 @@ object EventStream {
     * `docs` needs (source, text, ts); emits
     * (w_start, source, n_docs, n_tokens). */
   def tokenRateStream(docs: DataFrame,
-      model: graft.functions.BpeModel = graft.operators.BpeOps.defaultModel,
-      windowDur: String = "1 hour",
-      watermarkDelay: String = "1 hour"): DataFrame =
+      model: graft.functions.BpeModel = graft.operators.BpeOps.defaultModel): DataFrame =
     docs
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), windowDur), col("source"))
+      .withWatermark("ts", "1 hour")
+      .groupBy(window(col("ts"), "1 hour"), col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(size(graft.operators.BpeOps.bpeTokens(
           filter(split(col("text"), " "), w => length(w) > 0), model))

@@ -71,10 +71,9 @@ class AnnHammingSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
     assert(inline.nonEmpty && inline == loaded)
 
-    val (cents, cb, encoded) = AnnOps.ivfpqFor(spark, sfDir)
-    val arrInline = AnnOps.ivfpqEncodedArrays(encoded)
-    AnnOps.writeIvfPqArrays(arrInline, tmp)
-    val arrLoaded = AnnOps.loadIvfPqArrays(spark, tmp)
+    val (cents, cb, arrInline) = AnnOps.ivfpqFor(spark, sfDir)
+    AnnOps.writeIvfPq(cents, cb, arrInline, tmp)
+    val (_, _, arrLoaded) = AnnOps.loadIvfPq(spark, tmp)
     val adcInline = AnnOps.annIvfPqAdcTopk(q, cents, cb, arrInline)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
     val adcLoaded = AnnOps.annIvfPqAdcTopk(q, cents, cb, arrLoaded)

@@ -28,16 +28,17 @@ class AnnIvfPqSpec extends SparkSpec {
     val used = encoded.select(col("cluster_id")).distinct().collect()
       .map(_.getLong(0)).toSet
     assert(used.subsetOf(cells))
-    // m codes per vector, codes within range
+    // one row of m codes per vector, codes within range
     val n = graft.Tables.embeddings(spark, sfDir).count()
-    val perVec = encoded.groupBy("vec_id").count().collect()
-    assert(perVec.length == n)
-    perVec.foreach(r => assert(r.getLong(1) == AnnOps.pqSubspaces))
-    val codes = encoded.agg(min("code"), max("code")).collect().head
-    assert(codes.getInt(0) >= 0 && codes.getInt(1) < AnnOps.pqCodes)
+    val rows = encoded.collect()
+    assert(rows.length == n && rows.map(_.getAs[Long]("neighbor_id")).distinct.length == n)
+    rows.map(r => r.getSeq[Int](r.fieldIndex("codes"))).foreach { codes =>
+      assert(codes.length == AnnOps.pqSubspaces)
+      assert(codes.forall(c => c >= 0 && c < AnnOps.pqCodes))
+    }
     // the search corpus frame is ints only — the compression claim
     encoded.schema.fields.foreach { f =>
-      assert(!f.dataType.typeName.contains("array"),
+      assert(Seq("bigint", "int", "array<int>").contains(f.dataType.simpleString),
         s"encoded corpus must carry no vectors, found ${f.name}: ${f.dataType}")
     }
   }
@@ -48,8 +49,7 @@ class AnnIvfPqSpec extends SparkSpec {
     val k = cents.count()
     // per query, ADC touches |probed cells| vectors ≈ N·nprobe/K; with
     // cell skew, bound by 4× the expectation
-    val cellSizes = encoded.filter(col("subspace") === 0)
-      .groupBy("cluster_id").count().collect()
+    val cellSizes = encoded.groupBy("cluster_id").count().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val worstProbe = cellSizes.values.toSeq.sorted.reverse
       .take(AnnOps.nprobe).sum
@@ -84,7 +84,7 @@ class AnnIvfPqSpec extends SparkSpec {
         cents)
       val cb = AnnOps.pqCodebookOf(rs)
       AnnOps.ivfpqEncodeOf(rs, cb).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)) -> r.getInt(3)).toMap
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getSeq[Int](2)).toMap
     }
     assert(train() == train())
   }

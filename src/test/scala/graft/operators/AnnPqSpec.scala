@@ -23,16 +23,32 @@ class AnnPqSpec extends SparkSpec {
     assert(a == b)
   }
 
-  test("every vector encodes to one code per subspace") {
-    val e = graft.Tables.embeddings(spark, sfDir)
-    val n = e.count()
-    val sub = AnnOps.pqEncodeOf(
+  test("one m-length codes array per vector, codes in [0, pqCodes)") {
+    val n = graft.Tables.embeddings(spark, sfDir).count()
+    val enc = AnnOps.pqEncodeOf(
       AnnOps.pqSubvectorsForTest(spark, sfDir),
-      AnnOps.pqCodebook(spark, sfDir))
-    val perVec = sub.groupBy("vec_id").count().collect()
-    assert(perVec.length == n)
-    perVec.foreach(r => assert(r.getLong(1) == AnnOps.pqSubspaces))
-    val codes = sub.agg(min("code"), max("code")).collect().head
-    assert(codes.getInt(0) >= 0 && codes.getInt(1) < AnnOps.pqCodes)
+      AnnOps.pqCodebook(spark, sfDir)).collect()
+    assert(enc.length == n && enc.map(_.getLong(0)).distinct.length == n)
+    enc.foreach { r =>
+      val codes = r.getSeq[Int](1)
+      assert(codes.length == AnnOps.pqSubspaces, s"vec ${r.getLong(0)}")
+      assert(codes.forall(c => c >= 0 && c < AnnOps.pqCodes), s"vec ${r.getLong(0)}")
+    }
+  }
+
+  test("PQ codes arrays equal the pivot of the row-form encoder's codes") {
+    def arraysOf(encoded: org.apache.spark.sql.DataFrame) = encoded.collect()
+      .map(r => r.getAs[Long]("neighbor_id") -> ((-1L, r.getSeq[Int](r.fieldIndex("codes")).toSeq)))
+      .toMap
+    val (cb, encoded) = AnnOps.pqFor(spark, sfDir)
+    val rows = AnnEncodeTwin.pivot(AnnEncodeTwin.pqRowsFor(spark, sfDir))
+    assert(rows.nonEmpty && arraysOf(encoded).size == encoded.count())
+    assert(arraysOf(encoded) == rows)
+    // subvector rows arriving in descending subspace order still pivot
+    // to subspace-ordered codes (materialized, so the optimizer cannot
+    // drop the sort beneath the encode join)
+    val reversed = AnnOps.pqSubvectorsForTest(spark, sfDir)
+      .orderBy(col("vec_id"), col("subspace").desc).localCheckpoint()
+    assert(arraysOf(AnnOps.pqEncodeOf(reversed, cb)) == rows)
   }
 }

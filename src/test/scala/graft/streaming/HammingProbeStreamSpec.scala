@@ -10,24 +10,29 @@ class HammingProbeStreamSpec extends SparkSpec {
 
   private def corpus() = ops.embeddingsWithNorm(spark, sfDir)
 
-  test("streaming Hamming probe matches the batch banded search on the same index") {
+  /** Drain `probe` over the sf query vectors through a memory stream
+    * into `name`; (query_id, rank, neighbor_id) rows. */
+  private def streamed(name: String)(
+      probe: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val e = corpus().localCheckpoint()
-    val bands = ops.sketchBandsOf(e).localCheckpoint()
     val queries = graft.Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") < ops.nQueries)
       .select(col("vec_id"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1)))
     val stream = MemoryStream[(Long, Seq[Float])]
     stream.addData(queries.toSeq)
-    val q = EventStream.hammingProbeStream(
-        stream.toDF().toDF("vec_id", "embedding"), bands, e)
-      .writeStream.format("memory").queryName("hamprobe").outputMode("update").start()
+    val q = probe(stream.toDF().toDF("vec_id", "embedding"))
+      .writeStream.format("memory").queryName(name).outputMode("update").start()
     try q.processAllAvailable() finally q.stop()
-
-    val got = spark.table("hamprobe").collect()
+    spark.table(name).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+  }
+
+  test("streaming Hamming probe matches the batch banded search on the same index") {
+    val e = corpus().localCheckpoint()
+    val bands = ops.sketchBandsOf(e).localCheckpoint()
+    val got = streamed("hamprobe")(EventStream.hammingProbeStream(_, bands, e))
     val batch = ops.annHammingBandedSearch(
         e.filter(col("vec_id") < ops.nQueries), bands, e).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
@@ -64,15 +69,30 @@ class HammingProbeStreamSpec extends SparkSpec {
 
   test("wide banded search: 64-dim equals the one-word form; 128-dim finds planted twins") {
     import org.apache.spark.sql.functions.{transform => atransform}
+    val twin = graft.operators.HammingBandsTwin
     val e = corpus().localCheckpoint()
-    // 64-dim: the wide form must reproduce the one-word search exactly
-    val narrow = ops.annHammingBandedSearch(
-        e.filter(col("vec_id") < ops.nQueries), ops.sketchBandsOf(e), e)
+    // 64-dim: word 0's bands are the one-word index's bands, row for row
+    val bands = ops.sketchBandsOf(e).localCheckpoint()
+    val twinBands = twin.sketchBandsOf(e).localCheckpoint()
+    val idx = bands.select(col("vec_id"), col("band_id"), col("band_key"),
+        col("words")).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getSeq[Long](3))).toSet
+    val twinIdx = twinBands.select(col("vec_id"), col("band_id"), col("band_key"),
+        array(col("bits"))).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getSeq[Long](3))).toSet
+    assert(twinIdx.nonEmpty && idx == twinIdx)
+    // ... so the search reproduces the one-word search exactly, batch
+    val q = e.filter(col("vec_id") < ops.nQueries)
+    val general = ops.annHammingBandedSearch(q, bands, e)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getInt(3))).toSeq
-    val wide = ops.annHammingBandedWideSearch(
-        e.filter(col("vec_id") < ops.nQueries), ops.sketchBandsWideOf(e), e)
+    val oneWord = twin.search(q, twinBands, e)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getInt(3))).toSeq
-    assert(narrow.nonEmpty && narrow == wide)
+    assert(oneWord.nonEmpty && general == oneWord)
+    // ... and streaming
+    val probe = streamed("ham64")(EventStream.hammingProbeStream(_, bands, e))
+    val twinProbe = streamed("ham64twin")(twin.probeStream(_, twinBands, e))
+    assert(twinProbe.nonEmpty && probe == twinProbe,
+      s"general-only ${probe.diff(twinProbe)}, one-word-only ${twinProbe.diff(probe)}")
 
     // 128-dim (pairwise-sum second half: genuinely new sign bits), with
     // sign-preserving planted twins recalled at rank 1, hamming 0
@@ -88,9 +108,9 @@ class HammingProbeStreamSpec extends SparkSpec {
       .withColumn("norm",
         sqrt(graft.functions.GraftFunctions.dot(col("v"), col("v"))))
     val planted = e128.unionByName(twins).localCheckpoint()
-    val out = ops.annHammingBandedWideSearch(
+    val out = ops.annHammingBandedSearch(
         planted.filter(col("vec_id") < ops.nQueries),
-        ops.sketchBandsWideOf(planted), planted).collect()
+        ops.sketchBandsOf(planted), planted).collect()
     val rank1 = out.filter(_.getInt(1) == 1)
       .map(r => r.getLong(0) -> (r.getLong(2), r.getInt(3))).toMap
     (0L until ops.nQueries.toLong).foreach { q =>
@@ -111,14 +131,14 @@ class HammingProbeStreamSpec extends SparkSpec {
       .withColumn("norm",
         sqrt(graft.functions.GraftFunctions.dot(col("v"), col("v"))))
       .localCheckpoint()
-    val bands = ops.sketchBandsWideOf(e128).localCheckpoint()
+    val bands = ops.sketchBandsOf(e128).localCheckpoint()
     val queries = e128.filter(col("vec_id") < ops.nQueries)
       .select(col("vec_id"),
         atransform(col("v"), x => x.cast("float")).as("embedding"))
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
     val stream = MemoryStream[(Long, Seq[Float])]
     stream.addData(queries.toSeq)
-    val q = EventStream.hammingProbeStreamWide(
+    val q = EventStream.hammingProbeStream(
         stream.toDF().toDF("vec_id", "embedding"), bands, e128)
       .writeStream.format("memory").queryName("hamwide")
       .outputMode("update").start()
@@ -133,7 +153,7 @@ class HammingProbeStreamSpec extends SparkSpec {
         sqrt(graft.functions.GraftFunctions.dot(col("v"), col("v"))))
     val got = spark.table("hamwide").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val batch = ops.annHammingBandedWideSearch(qf, bands, e128).collect()
+    val batch = ops.annHammingBandedSearch(qf, bands, e128).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     assert(batch.nonEmpty && got == batch,
       s"stream-only ${got.diff(batch).size}, batch-only ${batch.diff(got).size}")

@@ -12,7 +12,6 @@ class IvfPqProbeStreamSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val (cents, cb, encoded) = ops.ivfpqFor(spark, sfDir)
-    val encArrays = ops.ivfpqEncodedArrays(encoded).localCheckpoint()
     val queries = graft.Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") < ops.nQueries)
       .select(col("vec_id"), col("embedding")).collect()
@@ -20,7 +19,7 @@ class IvfPqProbeStreamSpec extends SparkSpec {
     val stream = MemoryStream[(Long, Seq[Float])]
     stream.addData(queries.toSeq)
     val q = EventStream.ivfpqProbeStream(
-        stream.toDF().toDF("vec_id", "embedding"), cents, cb, encArrays)
+        stream.toDF().toDF("vec_id", "embedding"), cents, cb, encoded)
       .writeStream.format("memory").queryName("ivfpqprobe")
       .outputMode("update").start()
     try q.processAllAvailable() finally q.stop()
@@ -29,7 +28,7 @@ class IvfPqProbeStreamSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     val batch = ops.annIvfPqAdcTopk(
         ops.embeddingsWithNorm(spark, sfDir).filter(col("vec_id") < ops.nQueries),
-        cents, cb, encArrays).collect()
+        cents, cb, encoded).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     assert(batch.nonEmpty && got == batch,
       s"stream-only ${got.diff(batch).size}, batch-only ${batch.diff(got).size}")
@@ -37,10 +36,9 @@ class IvfPqProbeStreamSpec extends SparkSpec {
 
   test("ADC-only ranking agrees with the reranked IVFADC row above a floor") {
     val (cents, cb, encoded) = ops.ivfpqFor(spark, sfDir)
-    val encArrays = ops.ivfpqEncodedArrays(encoded)
     val adc = ops.annIvfPqAdcTopk(
         ops.embeddingsWithNorm(spark, sfDir).filter(col("vec_id") < ops.nQueries),
-        cents, cb, encArrays).collect()
+        cents, cb, encoded).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     val reranked = ops.annIvfPq(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
@@ -54,19 +52,15 @@ class IvfPqProbeStreamSpec extends SparkSpec {
   }
 
   test("array pivot is lossless: codes equal the row-form encoding") {
+    // the cached arrays against the row-form encoder's codes at the
+    // same trained quantizer and codebook, pivoted host-side
     val (_, _, encoded) = ops.ivfpqFor(spark, sfDir)
-    val arrays = ops.ivfpqEncodedArrays(encoded).collect()
-      .map(r => (r.getLong(1), (r.getLong(0), r.getSeq[Int](2)))).toMap
-    val rows = encoded.collect()
-      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("cluster_id"),
-        r.getAs[Int]("subspace"), r.getAs[Int]("code")))
-    assert(rows.nonEmpty)
-    rows.groupBy(_._1).foreach { case (vid, rs) =>
-      val (cid, codes) = arrays(vid)
-      assert(rs.forall(_._2 == cid))
-      rs.foreach { case (_, _, sub, code) =>
-        assert(codes(sub) == code, s"vec $vid subspace $sub")
-      }
-    }
+    val arrays = encoded.collect()
+      .map(r => r.getAs[Long]("neighbor_id") ->
+        ((r.getAs[Long]("cluster_id"), r.getSeq[Int](r.fieldIndex("codes")).toSeq))).toMap
+    val rows = graft.operators.AnnEncodeTwin.pivot(
+      graft.operators.AnnEncodeTwin.ivfpqRowsFor(spark, sfDir))
+    assert(rows.nonEmpty && arrays.size == encoded.count())
+    assert(arrays == rows)
   }
 }
