@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan audit: prints executed plans for the headline queries and greps
   * them for the properties that matter at 100 TB — broadcast joins on
   * dims, parquet filter/column pushdown, whole-stage codegen, and the
@@ -11,14 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.tune(spark)
+    val spark = GraftSession.local(8, "ERROR")
 
     val audit = Seq(
       "q1_pricing_summary"   -> Seq("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"),

@@ -31,4 +31,19 @@ object GraftSession {
     functions.GraftFunctions.register(s)
     s
   }
+
+  /** The session every local main runs on: `local[cpus]` with shuffle
+    * partitions = cpus (`SPARK_GRAFT_CPUS`, else `defaultCpus`), UTC,
+    * UI off, then `logLevel` and [[Tables.tune]] before any query. */
+  def local(defaultCpus: Int, logLevel: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    val s = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel(logLevel)
+    Tables.tune(s)
+  }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round evidence dump: write `.explain("formatted")` for
   * named queries to plans/<tag>/<query>_<suffix>.txt so before/after
   * plan claims are checkable without running Spark. Not part of the
@@ -14,14 +12,7 @@ object PlanDump {
     val tag    = args(1)
     val suffix = args(2)
     val names  = args.drop(3)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.tune(spark)
+    val spark = GraftSession.local(8, "ERROR")
     val dir = java.nio.file.Paths.get("plans", tag)
     java.nio.file.Files.createDirectories(dir)
     names.foreach { name =>

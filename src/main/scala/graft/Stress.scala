@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Scale-headroom stress: materializes a corpus `MULT`× the size of the
@@ -21,15 +21,7 @@ object Stress {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val workDir = args.lift(1).getOrElse("/tmp/graft_stress")
     val mult = sys.env.getOrElse("SPARK_GRAFT_MULT", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.tune(spark)
+    val spark = GraftSession.local(32, "WARN")
 
     // ---- materialize the scaled corpus (id-shifted copies, built by
     // crossJoin with a copy spine — a 1000-child union plan chokes the
@@ -77,7 +69,7 @@ object Stress {
                 (x, i) => (x + ((pmod(col("_copy") * 31 + i * 7, lit(13)) - 6)
                   .cast("double") * 0.003).cast("float")).cast("float"))))
         else scaled0
-      scaled.drop("_copy").repartition(cpus.toInt)
+      scaled.drop("_copy").repartition(spark.sparkContext.defaultParallelism)
         .write.mode(SaveMode.Overwrite).parquet(s"$workDir/$table.parquet")
     }
     if (tables("documents")) scale("documents", "doc_id")
@@ -91,7 +83,7 @@ object Stress {
         .withColumn("event_id", col("event_id") + col("_copy") * lit(shift))
         .withColumn("user_id", col("user_id") + col("_copy") * lit(shift))
         .drop("_copy")
-        .repartition(cpus.toInt).write.mode(SaveMode.Overwrite)
+        .repartition(spark.sparkContext.defaultParallelism).write.mode(SaveMode.Overwrite)
         .parquet(s"$workDir/events.parquet")
     }
 

@@ -42,7 +42,7 @@ object TextFunctions {
     * ratio (repetitiveness), length saturation. Identical operand order on
     * both engines → bit-equal doubles without rounding. */
   def qualityScore(s: SparkSession, dir: String): DataFrame = {
-    // let-bind the word array (see DedupOps.shinglesOf): the three
+    // let-bind the word array (see SearchOps.phraseSearchOf): the three
     // word-level stats share one split() instead of re-splitting per
     // ratio; operand order inside is unchanged so oracle doubles still
     // match bit-for-bit
@@ -104,7 +104,7 @@ object TextFunctions {
 
   def langId(s: SparkSession, dir: String): DataFrame = {
     // one let-bound split feeds all 20 marker counts (see
-    // DedupOps.shinglesOf for why a bare split() here would re-split
+    // SearchOps.phraseSearchOf for why a bare split() here would re-split
     // the text once per language x marker)
     val scores = element_at(transform(array(split(trim(col("text")), "\\s+")), ws =>
       struct(
@@ -620,7 +620,7 @@ object TextFunctions {
   def topNgrams(s: SparkSession, dir: String): DataFrame =
     // distinct per-doc shingle STRINGS via the native one-pass
     // [[graft.functions.ShingleStrings]] (value-identical to the
-    // interpreted shinglesOf chain, spec-pinned; <3-word docs yield an
+    // interpreted word-3-gram chain, spec-pinned; <3-word docs yield an
     // empty array, subsuming the old size filter)
     graft.Tables.spread(s, graft.Tables.documents(s, dir))
       .select(explode(

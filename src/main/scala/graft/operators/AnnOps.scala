@@ -680,7 +680,7 @@ object AnnOps {
     * the lambda input, which keeps it materialized per row (a
     * single-use alias would be inlined into the lambda and re-computed
     * per element — the HOF pitfall documented at
-    * [[DedupOps.shinglesOf]]). All-zero vectors quantize to null
+    * [[SearchOps.phraseSearchOf]]). All-zero vectors quantize to null
     * elements. Output is exploded to one scalar row per (vector,
     * dimension): the full array is still verified element-by-element,
     * but every compared cell is a scalar the comparison harness can

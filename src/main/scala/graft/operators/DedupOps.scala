@@ -26,39 +26,14 @@ object DedupOps {
 
   // ---------------------------------------------------------- shingles
 
-  /** doc_id + distinct word-3-gram shingle set (docs with ≥ 3 words).
-    * The corpus is repartitioned first: test parquet arrives as a single
-    * split and the shingling expressions are the heavy per-row work, so
-    * without this the whole parse runs on one core (at production scale
-    * the many input files provide the parallelism naturally). */
-  def shingles(s: SparkSession, dir: String): DataFrame =
-    shinglesOf(Tables.spread(s, Tables.documents(s, dir)),
-      "doc_id", "text", 3)
-
-  /** Generic API: distinct word-n-gram shingle sets over any corpus.
-    * Output columns are normalized to (doc_id, sh).
-    *
-    * The word array is let-bound as a lambda variable (the
-    * `transform(array(...), ws => ...)` wrapper): higher-order functions
-    * evaluate interpreted with no subexpression sharing, so a bare
-    * `split()` referenced inside the shingling lambda would re-split the
-    * document once per shingle — O(len²) parsing per document (measured
-    * 8x on this query). Bound as `ws` it is computed exactly once. */
-  def shinglesOf(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    val mkShingles = (ws: Column) =>
-      array_distinct(transform(sequence(lit(0), size(ws) - n),
-        i => concat_ws(" ", (0 until n).map(k => element_at(ws, i + k + 1)): _*)))
-    docs
-      .filter(size(split(col(textCol), " ")) >= n)
-      .select(col(idCol).as("doc_id"),
-        element_at(transform(array(split(col(textCol), " ")), mkShingles), 1).as("sh"))
-  }
-
-  /** doc_id + distinct hashed shingle set via the native
+  /** doc_id + distinct hashed word-3-gram shingle set via the native
     * [[graft.functions.ShingleHashes]] expression — hash-identical to
-    * `transform(sh, xxhash64)` over [[shingles]] but one codegen'd JVM
-    * loop per document instead of an interpreted lambda per shingle.
-    * This is the production entry to every hash-domain dedup operator. */
+    * `transform(sh, xxhash64)` over the word-3-gram strings (the
+    * interpreted twin is test-scope, ShinglesTwin) but one codegen'd
+    * JVM loop per document. The corpus is repartitioned first: test
+    * parquet arrives as a single split, so without it the whole parse
+    * runs on one core. This is the entry to every hash-domain dedup
+    * operator. */
   def shingleHashes(s: SparkSession, dir: String): DataFrame =
     shingleHashesOf(Tables.spread(s, Tables.documents(s, dir)),
       "doc_id", "text", 3)
@@ -148,73 +123,68 @@ object DedupOps {
   def ngramJaccard(s: SparkSession, dir: String): DataFrame =
     ngramJaccardHashedOf(shingleHashes(s, dir), jaccardThreshold, stopShingleDfCap)
 
-  /** Generic API: Jaccard near-dup pairs over any (doc_id, sh) shingle
-    * frame (e.g. from [[shinglesOf]]) at the given threshold.
-    * `maxShingleDf` drops shingles whose frequency across DISTINCT
-    * shingle sets exceeds the cap before pairing (stop-shingle
-    * filtering; `Long.MaxValue` = exact; see [[ngramJaccardHashedOf]]
-    * for the collapse semantics). */
-  def ngramJaccardOf(shingleSets: DataFrame, threshold: Double,
-      maxShingleDf: Long = Long.MaxValue): DataFrame =
-    ngramJaccardHashedOf(
-      shingleSets.select(col("doc_id"),
-        transform(col("sh"), x => xxhash64(x)).as("hs")),
-      threshold, maxShingleDf)
-
   /** Hash-domain core: Jaccard near-dup pairs over any
     * (doc_id, hs: array<bigint>) frame (e.g. from [[shingleHashesOf]]).
-    *
-    * Duplicate-collapse prepass: documents with IDENTICAL shingle sets
-    * (md5 of the sorted hash array) are collapsed to one representative
-    * before the inverted index is built, and the representative-level
-    * pairs expand back through the copy groups afterward. On a corpus
-    * where every page is crawled c times, posting lists shrink c× and
-    * the array-side pair generation c²× — the candidate stage costs
-    * what a deduplicated corpus costs, and only the (output-sized) pair
-    * expansion pays for the duplication. Value-identical to running the
-    * index over the raw corpus: a copy pair's jaccard is exactly 1.0
-    * (common = size_a = size_b), and a cross pair's common/size counts
-    * only depend on the shingle sets, which are bitwise those of the
-    * representatives. With a `maxShingleDf` cap the df is measured on
-    * distinct sets — on a duplicated corpus that is the more meaningful
-    * reading (a phrase is not viral because one page was crawled often). */
-  /** The collapse groups: one row per distinct shingle set —
-    * (rep_id, hs, members), eagerly materialized since every consumer
-    * reads it at least twice. The group key is the sorted hash array
-    * ITSELF (UnsafeRow byte-wise array equality): the previous
-    * md5(concat_ws(cast<string>)) key allocated one decimal string per
-    * hash per document plus a concat buffer plus an md5 just to name
-    * the group — pure per-row CPU the direct array key does not pay
-    * (guide §1.2 step 2) — and grouping on the value is exact where a
-    * digest is exact-minus-collisions. Emitting the SORTED array as
-    * `hs` is value-identical for every consumer: all of them explode
-    * it, size it, or intersect it — multiset/order-insensitive — and
-    * group members have bitwise-equal sorted sets by construction. */
-  private[operators] def ngramCollapseOf(hashSets: DataFrame): DataFrame =
-    hashSets
-      .groupBy(array_sort(col("hs")).as("hs"))
-      .agg(min(col("doc_id")).as("rep_id"),
-        sort_array(collect_list(col("doc_id"))).as("members"))
-      .select(col("rep_id"), col("hs"), col("members"))
-      .localCheckpoint()
-
+    * Documents with IDENTICAL shingle sets mine once through
+    * [[collapseOf]] (keyed on the SORTED set, which every consumer
+    * explodes, sizes or intersects — order-insensitive), and the
+    * representative-level pairs expand back through the copy groups:
+    * a copy pair's jaccard is exactly 1.0
+    * (common = size_a = size_b), and a cross pair's counts depend only
+    * on the sets, which are bitwise those of the representatives.
+    * `maxShingleDf` drops shingles whose frequency across DISTINCT
+    * shingle sets exceeds the cap before pairing (stop-shingle
+    * filtering; `Long.MaxValue` = exact) — on a duplicated corpus that
+    * is the meaningful reading (a phrase is not viral because one page
+    * was crawled often). */
   def ngramJaccardHashedOf(hashSets: DataFrame, threshold: Double,
       maxShingleDf: Long = Long.MaxValue): DataFrame = {
-    val grouped = ngramCollapseOf(hashSets)
+    val grouped = collapseOf(hashSets, "doc_id", array_sort(col("hs")).as("hs"))
     val repPairs = repPairsOf(
       grouped.select(col("rep_id").as("doc_id"), col("hs")), threshold, maxShingleDf)
-    // every copy pair is a jaccard-1.0 near-dup (common = size_a = size_b)
     expandCollapsedPairs(grouped, repPairs, "doc_a", "doc_b",
       "jaccard", lit(1.0))
       .orderBy("doc_a", "doc_b")
   }
 
-  /** Expand representative-level pairs through collapse groups: every
-    * within-group (copy) pair gets `selfValue` — the exact value the
-    * uncollapsed plan computes for an identical pair — and each rep
-    * pair stands for |A|×|B| doc pairs carrying its value. Both sides
-    * are output-sized: the quadratic cost of duplication lands here,
-    * in rows emitted, never in candidate generation. */
+  // ------------------------------------------- the near-dup skeleton
+  //
+  // Every near-dup miner below has one shape: collapse exact copies
+  // ([[collapseOf]]), generate candidates among the representatives,
+  // verify them exactly ([[jaccardVerified]] / [[cosineOf]]), and
+  // expand the verified pairs back through the copy groups
+  // ([[expandCollapsedPairs]]; connected components take
+  // [[copyEdgesOf]] instead of the expanded clique).
+
+  /** THE copy-collapse: one row per distinct `key` value — the key
+    * column itself, `rep_id` = min(`id`), `members` = the sorted ids
+    * and any `carry` aggregates — eagerly materialized, since every
+    * consumer reads it at least twice (candidates, then expansion).
+    * On a corpus where every page is crawled c times, candidate
+    * generation then costs what a deduplicated corpus costs, and only
+    * the output-sized expansion pays for the duplication.
+    *
+    * The group key is the value ITSELF (UnsafeRow byte-wise equality;
+    * for double arrays with Spark's grouping-key normalization, -0.0
+    * folds into 0.0 — strictly no coarser for any cosine downstream),
+    * never a digest of its string rendering: that allocated a decimal
+    * string per element plus a concat and an md5 per row just to name
+    * the group, and a value key is exact where a digest is
+    * exact-minus-collisions. */
+  private[operators] def collapseOf(frame: DataFrame, id: String, key: Column,
+      carry: Column*): DataFrame =
+    frame.groupBy(key)
+      .agg(min(col(id)).as("rep_id"),
+        (sort_array(collect_list(col(id))).as("members") +: carry): _*)
+      .localCheckpoint()
+
+  /** Expand representative-level pairs through collapse groups — the
+    * one place copy pairs are emitted. Every within-group (copy) pair
+    * gets `selfValue`, evaluated on the group row: the exact value the
+    * uncollapsed plan computes for an identical pair. Each rep pair
+    * stands for |A|×|B| doc pairs carrying its value. Both sides are
+    * output-sized: the quadratic cost of duplication lands here, in
+    * rows emitted, never in candidate generation. */
   private def expandCollapsedPairs(grouped: DataFrame, repPairs: DataFrame,
       aCol: String, bCol: String, valCol: String, selfValue: Column): DataFrame = {
     val within = grouped
@@ -234,6 +204,43 @@ object DedupOps {
       .select(col(s"p.$aCol"), col(s"p.$bCol"), col(valCol))
     within.unionByName(cross)
   }
+
+  /** Copy-group edges for connected components: one rep→member edge
+    * per non-representative member. CC needs connectivity only, so a
+    * copy group enters as a star, linear in the corpus, instead of the
+    * n² clique [[expandCollapsedPairs]] would emit — with identical
+    * labels, since the representative is the group's minimum id. */
+  private[operators] def copyEdgesOf(grouped: DataFrame): DataFrame =
+    grouped
+      .select(col("rep_id").as("doc_a"), explode(col("members")).as("doc_b"))
+      .filter(col("doc_a") =!= col("doc_b"))
+
+  /** THE exact Jaccard verify of candidate pairs over sorted-distinct
+    * hash sets `a`, `b` with sizes `sizeA`, `sizeB`: common hashes by
+    * the two-pointer [[graft.functions.IntersectCount]] kernel (long
+    * compares, no string compares), then common / (|A| + |B| − common),
+    * kept at ≥ `threshold`. Adds `common` and `jaccard`. Serves the
+    * batch LSH miner, the incremental probe and the streaming index
+    * probe ([[graft.streaming.EventStream.indexProbe]]). */
+  private[graft] def jaccardVerified(pairs: DataFrame, a: Column, b: Column,
+      sizeA: Column, sizeB: Column, threshold: Double): DataFrame =
+    pairs
+      .withColumn("common", graft.functions.GraftFunctions.intersectCount(a, b))
+      .withColumn("jaccard",
+        col("common").cast("double") / (sizeA + sizeB - col("common")))
+      .filter(col("jaccard") >= threshold)
+
+  /** THE exact cosine of two vectors given their norms: null when
+    * either norm is 0. A zero vector has no direction, so it never
+    * pairs (null fails every threshold compare); the guard also keeps
+    * the division from throwing DIVIDE_BY_ZERO under ANSI mode. DuckDB
+    * yields NULL for the same 0/0, so the oracles agree. */
+  private[operators] def cosineOf(va: Column, vb: Column, na: Column, nb: Column): Column =
+    when(na > 0 && nb > 0, dot(va, vb) / (na * nb))
+
+  /** (vec_id, v: array<double>) rows of any embedding frame. */
+  private[operators] def vectorsOf(vecs: DataFrame, idCol: String, vecCol: String): DataFrame =
+    vecs.select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("v"))
 
   /** Inverted-index pair detection over distinct shingle sets. */
   private def repPairsOf(hashSets: DataFrame, threshold: Double,
@@ -332,7 +339,7 @@ object DedupOps {
 
   /** Generic API: containment pairs over any (doc_id, hs) shingle-hash
     * frame at the given ppm threshold. Shares the jaccard miner's
-    * duplicate-collapse prepass ([[ngramCollapseOf]]): identical
+    * duplicate-collapse prepass ([[collapseOf]]): identical
     * shingle sets mine once at the representative level and pairs
     * expand back through the copy groups (a copy pair's containment
     * and jaccard are exactly 1.0, a cross pair's counts depend only on
@@ -342,7 +349,7 @@ object DedupOps {
     * collapse path; see SURVEY §5). */
   def containmentOf(hashSets: DataFrame, thresholdPpm: Long,
       maxShingleDf: Long): DataFrame = {
-    val grouped = ngramCollapseOf(hashSets)
+    val grouped = collapseOf(hashSets, "doc_id", array_sort(col("hs")).as("hs"))
     val byShingle = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
     val repPairs = grouped
       .select(col("rep_id").as("doc_id"), size(col("hs")).as("sh_size"),
@@ -784,16 +791,14 @@ object DedupOps {
 
   def clusterMapFor(s: SparkSession, dir: String): DataFrame =
     clusterCache.getOrCompute(s, dir) {
-      val grouped = ngramCollapseOf(shingleHashes(s, dir))
+      val grouped = collapseOf(shingleHashes(s, dir), "doc_id",
+        array_sort(col("hs")).as("hs"))
       val repPairs = repPairsOf(
         grouped.select(col("rep_id").as("doc_id"), col("hs")),
         jaccardThreshold, stopShingleDfCap)
-      val groupEdges = grouped
-        .select(col("rep_id").as("doc_a"), explode(col("members")).as("doc_b"))
-        .filter(col("doc_a") =!= col("doc_b"))
       dupClustersOf(
         Tables.documents(s, dir).select(col("doc_id")),
-        repPairs.select("doc_a", "doc_b").unionByName(groupEdges))
+        repPairs.select("doc_a", "doc_b").unionByName(copyEdgesOf(grouped)))
         .localCheckpoint()
     }
 
@@ -953,14 +958,7 @@ object DedupOps {
   def minhashSignatures(s: SparkSession, dir: String): DataFrame =
     minhashSignaturesHashedOf(shingleHashes(s, dir))
 
-  /** Generic API: minhash signatures over any (doc_id, sh) string shingle
-    * frame. Output (doc_id, hs, sig). */
-  def minhashSignaturesOf(shingleSets: DataFrame): DataFrame =
-    minhashSignaturesHashedOf(
-      shingleSets.select(col("doc_id"),
-        transform(col("sh"), x => xxhash64(x)).as("hs")))
-
-  /** Hash-domain core: signatures over a (doc_id, hs) frame. The
+  /** Generic API: signatures over any (doc_id, hs) frame. The
     * emitted `hs` is normalized to sorted-distinct HERE — the one
     * chokepoint every signature path goes through — so the
     * sorted-distinct contract of the two-pointer verify kernel
@@ -986,27 +984,18 @@ object DedupOps {
     * signature frame. `hs` must be sorted-distinct — guaranteed by
     * construction for every frame from [[minhashSignaturesHashedOf]]
     * (the normalization chokepoint), which is where all signature
-    * frames come from — so verification counts common hashes with the
-    * two-pointer [[graft.functions.IntersectCount]] kernel, long
-    * compares not string compares on every candidate
-    * pair. Duplicate-collapse prepass like
-    * [[ngramJaccardHashedOf]]: identical shingle sets have identical
+    * frames come from — so [[jaccardVerified]] can count common hashes
+    * with its two-pointer kernel. Duplicate-collapse prepass
+    * ([[collapseOf]]): identical shingle sets have identical
     * signatures, so copies would multiply every band bucket; banding and
     * verification run per distinct set and the pairs expand afterward
     * (copy pairs are exact jaccard 1.0 — same value the raw verify
     * computes). */
   def minhashLshOf(signatures: DataFrame, threshold: Double): DataFrame = {
-    // group key = the hash-set array itself (sorted-distinct by the
-    // [[minhashSignaturesHashedOf]] chokepoint), not an md5 of its
-    // string rendering — see [[ngramCollapseOf]]. sig is a pure
-    // function of the set, so every member's sig is identical;
-    // min_by keeps the aggregation deterministic.
-    val grouped = signatures
-      .groupBy(col("hs"))
-      .agg(min(col("doc_id")).as("rep_id"),
-        min_by(col("sig"), col("doc_id")).as("sig"),
-        sort_array(collect_list(col("doc_id"))).as("members"))
-      .localCheckpoint()
+    // sig is a pure function of the set, so every member's sig is
+    // identical; min_by keeps the aggregation deterministic
+    val grouped = collapseOf(signatures, "doc_id", col("hs"),
+      min_by(col("sig"), col("doc_id")).as("sig"))
     val sig = grouped
       .select(col("rep_id").as("doc_id"), col("hs"), col("sig"))
       .withColumn("sh_size", size(col("hs")))
@@ -1018,12 +1007,8 @@ object DedupOps {
       .select("doc_a", "doc_b").distinct()
     val left = sig.select(col("doc_id").as("doc_a"), col("hs").as("sh_a"), col("sh_size").as("size_a"))
     val right = sig.select(col("doc_id").as("doc_b"), col("hs").as("sh_b"), col("sh_size").as("size_b"))
-    val repPairs = cands.join(left, "doc_a").join(right, "doc_b")
-      .withColumn("common",
-        graft.functions.GraftFunctions.intersectCount(col("sh_a"), col("sh_b")))
-      .withColumn("jaccard",
-        col("common").cast("double") / (col("size_a") + col("size_b") - col("common")))
-      .filter(col("jaccard") >= threshold)
+    val repPairs = jaccardVerified(cands.join(left, "doc_a").join(right, "doc_b"),
+        col("sh_a"), col("sh_b"), col("size_a"), col("size_b"), threshold)
       .select("doc_a", "doc_b", "jaccard")
     expandCollapsedPairs(grouped, repPairs, "doc_a", "doc_b",
       "jaccard", lit(1.0))
@@ -1088,16 +1073,13 @@ object DedupOps {
       .join(index.bands.select(col("doc_id").as("corpus_id"), col("band_id"), col("band_key")),
         Seq("band_id", "band_key"))
       .select("new_id", "corpus_id").distinct()
-    cands
+    val pairs = cands
       .join(sig.select(col("doc_id").as("new_id"), col("hs").as("sh_a"),
         col("sh_size").as("size_a")), "new_id")
       .join(index.shingles.select(col("doc_id").as("corpus_id"), col("hs").as("sh_b"),
         col("sh_size").as("size_b")), "corpus_id")
-      .withColumn("common",
-        graft.functions.GraftFunctions.intersectCount(col("sh_a"), col("sh_b")))
-      .withColumn("jaccard",
-        col("common").cast("double") / (col("size_a") + col("size_b") - col("common")))
-      .filter(col("jaccard") >= threshold)
+    jaccardVerified(pairs, col("sh_a"), col("sh_b"), col("size_a"), col("size_b"),
+        threshold)
       .select("new_id", "corpus_id", "jaccard")
       .orderBy("new_id", "corpus_id")
   }
@@ -1186,17 +1168,13 @@ object DedupOps {
     * once per DISTINCT text and fanned back out — the expensive part
     * (a per-word explode that multiplies the shuffled row count by the
     * document length) runs on the deduplicated corpus, and a
-    * 100×-crawled page costs one signature instead of 100. One md5
-    * groupBy of the raw texts buys that; at a real crawl's 30-60%
+    * 100×-crawled page costs one signature instead of 100. One
+    * [[collapseOf]] on the raw text buys that; at a real crawl's 30-60%
     * exact-dup rate it pays for itself immediately. */
   def simhashSignaturesOf(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val grouped = docs
-      .select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-      .groupBy(md5(col("__text")).as("__tk"))
-      .agg(min(col("doc_id")).as("rep_id"),
-        min_by(col("__text"), col("doc_id")).as("__text"),
-        collect_list(col("doc_id")).as("members"))
-      .localCheckpoint()
+    val grouped = collapseOf(
+      docs.select(col(idCol).as("doc_id"), col(textCol).as("__text")),
+      "doc_id", col("__text"))
     // one native pass per representative ([[graft.functions.SimHash64]],
     // value-identical to explode → groupBy(rep, word) → xxhash64 →
     // SimHashAgg, spec-pinned): the per-word explode and the
@@ -1223,11 +1201,7 @@ object DedupOps {
     * simhashes band identically, so banding runs per distinct signature
     * and copy pairs expand with Hamming 0 (bit_count(x^x)). */
   def simhashPairsOf(signatures: DataFrame, maxHamming: Int): DataFrame = {
-    val grouped = signatures
-      .groupBy(col("simhash"))
-      .agg(min(col("doc_id")).as("rep_id"),
-        sort_array(collect_list(col("doc_id"))).as("members"))
-      .localCheckpoint()
+    val grouped = collapseOf(signatures, "doc_id", col("simhash"))
     val sig = grouped.select(col("rep_id").as("doc_id"), col("simhash"))
     val bands = sig.select(col("doc_id"), col("simhash"),
       posexplode(array((0 until 4).map { j =>
@@ -1271,7 +1245,8 @@ object DedupOps {
     * pinned against; never the 100 TB path (that is [[embeddingLsh]]).
     * The cosine is a sequential index-order double fold on both
     * engines (graft_dot here, list_dot_product in DuckDB), so the
-    * values hash bit-identically. */
+    * values hash bit-identically; a zero vector pairs with nothing on
+    * either side ([[cosineOf]] and DuckDB's 0/0 are both NULL). */
   def embeddingPairsExact(s: SparkSession, dir: String): DataFrame =
     embeddingPairsOf(Tables.embeddings(s, dir), "vec_id", "embedding", cosineThreshold)
 
@@ -1292,13 +1267,12 @@ object DedupOps {
     * through [[embeddingLshOf]] banding or AnnOps' IVF. */
   def embeddingPairsOf(vecs: DataFrame, idCol: String, vecCol: String,
       threshold: Double): DataFrame = {
-    val e = vecs
-      .select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("v"))
+    val e = vectorsOf(vecs, idCol, vecCol)
       .withColumn("norm", sqrt(dot(col("v"), col("v"))))
     val a = e.select(col("vec_id").as("vec_a"), col("v").as("va"), col("norm").as("na"))
     val b = e.select(col("vec_id").as("vec_b"), col("v").as("vb"), col("norm").as("nb"))
     a.join(broadcast(b), col("vec_a") < col("vec_b"))
-      .withColumn("cosine", dot(col("va"), col("vb")) / (col("na") * col("nb")))
+      .withColumn("cosine", cosineOf(col("va"), col("vb"), col("na"), col("nb")))
       .filter(col("cosine") >= threshold)
       .select("vec_a", "vec_b", "cosine")
       .orderBy("vec_a", "vec_b")
@@ -1355,30 +1329,16 @@ object DedupOps {
     require(nHyperplanes / nBands <= 30, "band value must fit an int")
     val hp = hyperplanesFor(nHyperplanes, dim)
 
-    // Duplicate-collapse prepass (see ngramJaccardHashedOf): identical
-    // vectors share every sign bit, so a c-times-crawled embedding would
-    // put c copies in each band bucket and pay c² in the self-join.
-    // Collapse to one representative per distinct vector (md5 of the
-    // exact double strings — Double.toString round-trips), pair at the
-    // representative level, expand through the copy groups after.
-    // Cosine of a copy pair is dot(v,v)/(norm·norm) — the same doubles
-    // the uncollapsed plan would produce for that pair.
-    // Collapse key = the vector itself (UnsafeRow array equality with
-    // Spark's grouping-key float normalization: -0.0 folds into 0.0 and
-    // NaNs are equal — exactly as cheap and strictly no coarser for any
-    // cosine downstream, since ±0.0 contribute identical products) —
-    // not an md5 of the Double.toString rendering, which allocated
-    // dim strings + a concat + a digest per row (see ngramCollapseOf).
-    val grouped = vecs
-      .select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("v"))
-      .groupBy(col("v"))
-      .agg(min(col("vec_id")).as("rep_id"),
-        sort_array(collect_list(col("vec_id"))).as("members"))
-      .select(col("rep_id"), col("v"), col("members"))
-      .localCheckpoint()
+    // Duplicate-collapse prepass ([[collapseOf]] on the vector value):
+    // identical vectors share every sign bit, so a c-times-crawled
+    // embedding would put c copies in each band bucket and pay c² in
+    // the self-join. A copy pair's cosine is the group vector's own
+    // [[cosineOf]] — the same double the uncollapsed plan produces.
+    val grouped = collapseOf(vectorsOf(vecs, idCol, vecCol), "vec_id", col("v"))
+    val norm = sqrt(dot(col("v"), col("v")))
     val e = grouped
       .select(col("rep_id").as("vec_id"), col("v"))
-      .withColumn("norm", sqrt(dot(col("v"), col("v"))))
+      .withColumn("norm", norm)
 
     val bits = (0 until nHyperplanes).map { j =>
       when(dot(col("v"), tl(hp(j).toSeq)) > 0, lit(1)).otherwise(lit(0)).as(s"bit$j")
@@ -1402,33 +1362,14 @@ object DedupOps {
       .join(e.select(col("vec_id").as("vec_b"), col("v").as("vb"), col("norm").as("nb")),
         Seq("vec_b"))
       .select(col("vec_a"), col("vec_b"),
-        (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cosine"))
+        cosineOf(col("va"), col("vb"), col("na"), col("nb")).as("cosine"))
       .filter(col("cosine") >= threshold)
-
-    // within-group: copy pairs, cosine via the same formula on the
-    // shared vector
-    val within = grouped
-      .filter(size(col("members")) >= 2)
-      .withColumn("norm", sqrt(dot(col("v"), col("v"))))
-      .withColumn("cosine", dot(col("v"), col("v")) / (col("norm") * col("norm")))
+    // the filter runs again after the expansion for the copy pairs,
+    // whose self-cosine is null for a zero vector
+    expandCollapsedPairs(grouped, repPairs, "vec_a", "vec_b", "cosine",
+        cosineOf(col("v"), col("v"), norm, norm))
       .filter(col("cosine") >= threshold)
-      .select(col("cosine"),
-        explode(flatten(transform(col("members"), (a, i) =>
-          transform(slice(col("members"), i + 2, size(col("members"))),
-            b => struct(a.as("vec_a"), b.as("vec_b")))))).as("p"))
-      .select(col("p.vec_a"), col("p.vec_b"), col("cosine"))
-
-    // cross-group: expand each representative pair through both groups
-    val cross = repPairs
-      .join(grouped.select(col("rep_id").as("vec_a"), col("members").as("ma")), "vec_a")
-      .join(grouped.select(col("rep_id").as("vec_b"), col("members").as("mb")), "vec_b")
-      .select(col("cosine"),
-        explode(flatten(transform(col("ma"), a =>
-          transform(col("mb"), b => struct(least(a, b).as("vec_a"),
-            greatest(a, b).as("vec_b")))))).as("p"))
-      .select(col("p.vec_a"), col("p.vec_b"), col("cosine"))
-
-    within.unionByName(cross).orderBy("vec_a", "vec_b")
+      .orderBy("vec_a", "vec_b")
   }
 
   // ----------------------------------------------- registry

@@ -60,7 +60,7 @@ object GraphOps {
     * degree-annotated edges are localCheckpoint'd once: every
     * iteration joins them, and without the cut each join re-derives
     * the (expensive) edge-mining subtree — the same eager-cut
-    * discipline as DedupOps.ngramCollapseOf. In production this IS
+    * discipline as DedupOps.collapseOf. In production this IS
     * the persisted kNN-graph table. */
   def pagerankOf(edges: DataFrame, nodes: DataFrame,
       iters: Int = pagerankIters, cutEdges: Boolean = true): DataFrame = {

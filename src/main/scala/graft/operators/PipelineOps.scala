@@ -534,19 +534,12 @@ object PipelineOps {
     * the benchmark suite, which is always tiny relative to the corpus,
     * so its distinct shingle hashes broadcast and the whole check is a
     * map-side probe plus one groupBy on doc_id. Nothing scales with
-    * corpus × benchmark size. */
-  /** Generic API: per-document benchmark overlap over any (doc_id, sh)
-    * shingle frames (e.g. from [[DedupOps.shinglesOf]]). `bench` is the
-    * eval corpus's shingle frame — always tiny relative to training
-    * data, so its distinct hashes broadcast. */
-  def contaminationOf(corpus: DataFrame, bench: DataFrame, frac: Double): DataFrame =
-    contaminationHashedOf(
-      corpus.select(col("doc_id"), transform(col("sh"), x => xxhash64(x)).as("hs")),
-      bench.select(col("doc_id"), transform(col("sh"), x => xxhash64(x)).as("hs")),
-      frac)
-
-  /** Hash-domain core: contamination over (doc_id, hs) shingle-hash
-    * frames (e.g. from [[DedupOps.shingleHashesOf]]). */
+    * corpus × benchmark size.
+    *
+    * Generic API: per-document benchmark overlap over (doc_id, hs)
+    * shingle-hash frames (e.g. from [[DedupOps.shingleHashesOf]]).
+    * `bench` is the eval corpus's frame — always tiny relative to
+    * training data, so its distinct hashes broadcast. */
   def contaminationHashedOf(corpus: DataFrame, bench: DataFrame, frac: Double): DataFrame = {
     val benchH = bench
       .select(explode(col("hs")).as("h"))
@@ -897,7 +890,7 @@ object PipelineOps {
   def curatePipeline(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.spread(s, Tables.documents(s, dir))
     // one projection: tokenize once (materialized via the single-element
-    // array trick — see [[DedupOps.shinglesOf]] on HOF inlining), emit
+    // array trick — see [[SearchOps.phraseSearchOf]] on HOF inlining), emit
     // quality verdict + content key + split + shingle hashes, drop the text
     val base = docs.select(col("doc_id"), col("source"),
       element_at(transform(array(split(trim(col("text")), "\\s+")), ws =>

@@ -16,19 +16,21 @@ import graft.Tables
   * that AQE can split, unlike a window).
   *
   * Scale design, front to back:
-  *  - Duplicate-collapse prepass ([[DedupOps.ngramJaccardHashedOf]]'s
-  *    pattern): identical vectors are collapsed to one representative
-  *    before anything else, so a c-times-crawled page costs one row in
+  *  - Duplicate-collapse prepass: the dedup family's one copy-collapse
+  *    ([[DedupOps.collapseOf]] on the vector value) runs before
+  *    anything else, so a c-times-crawled page costs one row in
   *    training, assignment, and the within-cell self-join instead of
   *    multiplying every stage by c (and the cell pair-gen by c²).
-  *    Copies rejoin through copy-group edges at the component step.
+  *    Copies rejoin through [[DedupOps.copyEdgesOf]] at the component
+  *    step.
   *  - Centroids train on the DISTINCT vectors (deterministic Lloyd,
   *    [[AnnOps.centroidsOf]]) — dedup-weighted training is the version
   *    you want: a page's crawl count must not drag the means.
   *  - Assignment is map-side (broadcast centroid array, per-row argmax).
   *  - Candidate generation is the within-cell self-join on cluster_id;
-  *    exact cosine verifies every candidate, so precision is exact and
-  *    only the cell partition (vs. a global all-pairs) is approximate.
+  *    exact cosine ([[DedupOps.cosineOf]]) verifies every candidate,
+  *    so precision is exact and only the cell partition (vs. a global
+  *    all-pairs) is approximate.
   *  - Groups close transitively with [[DedupOps.dupClustersOf]]
   *    (min-label propagation over edge endpoints); `keep` = the
   *    group's minimum vec_id, so "keep rows" IS the semantically
@@ -59,28 +61,13 @@ object SemDedupOps {
 
   private def modelFor(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     modelCache.getOrCompute(s, dir) {
-      val grouped = collapseOf(
-        Tables.spread(s, Tables.embeddings(s, dir)), "vec_id", "embedding")
+      val vecs = DedupOps.vectorsOf(Tables.spread(s, Tables.embeddings(s, dir)),
+        "vec_id", "embedding")
+      val grouped = DedupOps.collapseOf(vecs, "vec_id", col("v"))
       val e = grouped.select(col("rep_id").as("vec_id"), col("v"))
         .withColumn("norm", sqrt(dot(col("v"), col("v"))))
       (grouped, AnnOps.centroidsOf(e)) // both localCheckpoint-materialized
     }
-
-  /** Collapse groups: one row per distinct vector value (grouped on
-    * the vector array itself — UnsafeRow equality with grouping-key
-    * float normalization, strictly no coarser for anything cosine
-    * downstream; see [[DedupOps.ngramCollapseOf]] for why the md5
-    * string-render key was dropped), members sorted, representative =
-    * min id. Eagerly materialized: training, assignment, edges, and
-    * the final expansion all read it. */
-  private[operators] def collapseOf(vecs: DataFrame, idCol: String, vecCol: String): DataFrame =
-    vecs
-      .select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("v"))
-      .groupBy(col("v"))
-      .agg(min(col("vec_id")).as("rep_id"),
-        sort_array(collect_list(col("vec_id"))).as("members"))
-      .select(col("rep_id"), col("v"), col("members"))
-      .localCheckpoint()
 
   /** Generic API: (vec_id, cluster_id, sem_group, keep) for any
     * embedding frame. `sem_group` is the minimum vec_id reachable
@@ -91,7 +78,8 @@ object SemDedupOps {
     * itself. */
   def semDedupOf(vecs: DataFrame, idCol: String, vecCol: String,
       threshold: Double): DataFrame = {
-    val grouped = collapseOf(vecs, idCol, vecCol)
+    val grouped = DedupOps.collapseOf(DedupOps.vectorsOf(vecs, idCol, vecCol),
+      "vec_id", col("v"))
     val e = grouped.select(col("rep_id").as("vec_id"), col("v"))
       .withColumn("norm", sqrt(dot(col("v"), col("v"))))
     semDedupWithCentroids(grouped, AnnOps.centroidsOf(e), threshold)
@@ -113,23 +101,20 @@ object SemDedupOps {
       col("v").as("va"), col("norm").as("na"))
     val b = assigned.select(col("cluster_id"), col("vec_id").as("doc_b"),
       col("v").as("vb"), col("norm").as("nb"))
-    // the norm guard matters: Spark orders NaN above every double, so a
-    // zero vector's 0/0 cosine would otherwise PASS the >= filter and
-    // weld all zero vectors into one bogus group
+    // a zero vector's cosine is null, so it never pairs (the guard
+    // also keeps its 0/0 from throwing DIVIDE_BY_ZERO under ANSI mode)
     val repPairs = a.join(b, Seq("cluster_id"))
-      .filter(col("doc_a") < col("doc_b") && col("na") > 0 && col("nb") > 0)
-      .filter(dot(col("va"), col("vb")) / (col("na") * col("nb")) >= threshold)
+      .filter(col("doc_a") < col("doc_b"))
+      .filter(DedupOps.cosineOf(col("va"), col("vb"), col("na"), col("nb")) >= threshold)
       .select("doc_a", "doc_b")
 
     // copy-group edges: a copy pair's cosine is dot(v,v)/norm² = 1,
     // which passes any threshold ≤ 1 — but only when the shared vector
     // is non-zero (a zero vector's cosine is undefined ⇒ no edge, same
     // as the uncollapsed plan's null-cosine drop)
-    val groupEdges = grouped
+    val groupEdges = DedupOps.copyEdgesOf(grouped
       .filter(size(col("members")) >= 2 && dot(col("v"), col("v")) > 0 &&
-        lit(threshold) <= 1.0)
-      .select(col("rep_id").as("doc_a"), explode(col("members")).as("doc_b"))
-      .filter(col("doc_a") =!= col("doc_b"))
+        lit(threshold) <= 1.0))
 
     val nodes = grouped.select(explode(col("members")).as("doc_id"))
     val cc = DedupOps.dupClustersOf(nodes, repPairs.unionByName(groupEdges))

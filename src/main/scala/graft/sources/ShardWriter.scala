@@ -30,7 +30,7 @@ object ShardWriter {
       .write.mode(SaveMode.Overwrite).partitionBy("shard").parquet(outDir)
 
   /** Streaming twin — the SINK that closes the ingest pipeline: gate a
-    * document stream (curateDocs, qualityEnsembleStreamFused, any filter)
+    * document stream (qualityEnsembleStreamFused, any filter)
     * and land the kept rows as training shards continuously.
     *
     * Exactly-once by idempotent batch directories: micro-batch `b`

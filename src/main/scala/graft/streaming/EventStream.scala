@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -79,43 +79,6 @@ object EventStream {
         col("click_ts") >= col("purchase_ts") &&
         col("click_ts") <= col("purchase_ts") + expr("INTERVAL 1 HOUR"))
       .drop("bucket")
-  }
-
-  /** Streaming corpus curation: the batch curation gates applied to a
-    * document stream as it is ingested — quality floor + repetition
-    * ceiling (stateless column math), decontamination against a STATIC
-    * benchmark shingle set, and the deterministic hash split. The
-    * benchmark set rides the plan as a broadcast single-row frame
-    * (stream-static cross join) and the overlap test is per-row
-    * `arrays_overlap` — no shuffle of the stream, no state store, so a
-    * document's verdict never depends on what else is in its
-    * micro-batch and stream/batch runs agree row for row.
-    *
-    * `docs` needs (doc_id, source, text); `benchShingles` is the static
-    * (sh: string) frame of benchmark shingles (eval suites are tiny). */
-  def curateDocs(docs: DataFrame, benchShingles: DataFrame,
-      minTokens: Int = 20, maxDupFrac: Double = 0.6): DataFrame = {
-    val bench = benchShingles.agg(collect_set(col("sh")).as("bench_sh"))
-    val mk = (w: Column) => struct(
-      size(w).as("n_tokens"),
-      size(array_distinct(w)).as("n_uniq"),
-      when(size(w) >= 3,
-        array_distinct(transform(sequence(lit(0), size(w) - 3), i =>
-          concat_ws(" ", element_at(w, i + 1), element_at(w, i + 2), element_at(w, i + 3)))))
-        .otherwise(array().cast("array<string>")).as("sh"))
-    docs
-      .select(col("doc_id"), col("source"),
-        element_at(transform(array(split(trim(col("text")), "\\s+")), mk), 1).as("st"))
-      .filter(col("st.n_tokens") >= minTokens &&
-        (lit(1.0) - col("st.n_uniq").cast("double") / col("st.n_tokens")) <= maxDupFrac)
-      .crossJoin(broadcast(bench))
-      .filter(!arrays_overlap(col("st.sh"), col("bench_sh")))
-      .select(col("doc_id"), col("source"), col("st.n_tokens").as("n_tokens"),
-        substring(md5(concat_ws("#", col("source"), col("doc_id").cast("string"))), 1, 1)
-          .as("bucket"))
-      .withColumn("split",
-        when(col("bucket") <= "b", "train").when(col("bucket") <= "d", "val")
-          .otherwise("test"))
   }
 
   final case class BandRow(band_id: Int, band_key: Long, doc_id: Long,
@@ -228,16 +191,13 @@ object EventStream {
     val bands = sig.select(col("doc_id").as("new_id"), col("hs"),
       posexplode(graft.operators.DedupOps.lshBandKeysCol)
         .as(Seq("band_id", "band_key")))
-    bands
+    val pairs = bands
       .join(index.bands.select(col("doc_id").as("corpus_id"),
         col("band_id"), col("band_key")), Seq("band_id", "band_key"))
       .join(index.shingles.select(col("doc_id").as("corpus_id"),
         col("hs").as("sh_b"), col("sh_size").as("size_b")), Seq("corpus_id"))
-      .withColumn("common",
-        graft.functions.GraftFunctions.intersectCount(col("hs"), col("sh_b")))
-      .withColumn("jaccard", col("common").cast("double") /
-        (size(col("hs")) + col("size_b") - col("common")))
-      .filter(col("jaccard") >= threshold)
+    graft.operators.DedupOps.jaccardVerified(pairs, col("hs"), col("sh_b"),
+        size(col("hs")), col("size_b"), threshold)
       .select(col("new_id"), col("corpus_id"), col("band_id"), col("jaccard"))
   }
 

@@ -144,15 +144,7 @@ object IngestPipeline {
   def main(args: Array[String]): Unit = {
     val Array(landingDir, shardDir, ckptDir) = args.take(3)
     val sfDir = args.lift(3).getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Tables.tune(spark)
+    val spark = graft.GraftSession.local(32, "WARN")
 
     val artifacts = graft.operators.QualityModelOps.ensembleArtifactsFor(spark, sfDir)
 

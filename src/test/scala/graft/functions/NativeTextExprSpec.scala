@@ -25,7 +25,7 @@ class NativeTextExprSpec extends SparkSpec {
 
   // ---------------------------------------------- ShingleStrings
 
-  /** The interpreted twin from DedupOps.shinglesOf. */
+  /** The interpreted twin ([[ShinglesTwin.shinglesOf]]) as a column. */
   private def declShingles(text: Column, n: Int): Column = {
     val ws = split(text, " ")
     val mk = (v: Column) =>
@@ -60,7 +60,7 @@ class NativeTextExprSpec extends SparkSpec {
   test("q_top_ngrams over the native pass equals the interpreted-chain query") {
     val docs = graft.Tables.documents(spark, sfDir)
     val nat = graft.functions.TextFunctions.topNgrams(spark, sfDir)
-    val dec = graft.operators.DedupOps.shinglesOf(docs, "doc_id", "text", 3)
+    val dec = ShinglesTwin.shinglesOf(docs, "doc_id", "text", 3)
       .select(explode(col("sh")).as("ngram"))
       .groupBy(col("ngram")).agg(count(lit(1)).as("df"))
       .orderBy(col("df").desc, col("ngram").asc)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 class ShingleExpressionsSpec extends SparkSpec {
 
   test("ShingleHashes == array_distinct(transform(shingles, xxhash64)) as a set") {
-    val str = DedupOps.shingles(spark, sfDir)
+    val str = ShinglesTwin.shingles(spark, sfDir)
       .select(col("doc_id"), transform(col("sh"), x => xxhash64(x)).as("hs"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
     val nat = DedupOps.shingleHashes(spark, sfDir)

@@ -32,7 +32,7 @@ class ShinglePropSpec extends SparkSpec {
       val native = graft.operators.DedupOps
         .shingleHashesOf(df, "doc_id", "text", 3)
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
-      val declarative = graft.operators.DedupOps
+      val declarative = ShinglesTwin
         .shinglesOf(df, "doc_id", "text", 3)
         .select(col("doc_id"), transform(col("sh"), x => xxhash64(x)).as("hs"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap

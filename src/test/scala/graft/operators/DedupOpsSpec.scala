@@ -63,12 +63,12 @@ class DedupOpsSpec extends SparkSpec {
   }
 
   test("stop-shingle DF cap: capped pairs are a subset, recall stays high") {
-    val shingleSets = DedupOps.shingles(spark, sfDir)
     val uncapped = DedupOps.ngramJaccard(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // aggressive cap (DF > 20 dropped) — far tighter than production's
     // stopShingleDfCap, to actually exercise the pruning on test data
-    val capped = DedupOps.ngramJaccardOf(shingleSets, DedupOps.jaccardThreshold, 20L)
+    val capped = DedupOps.ngramJaccardHashedOf(DedupOps.shingleHashes(spark, sfDir),
+        DedupOps.jaccardThreshold, 20L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // capping only removes common-shingle evidence → jaccard is
     // underestimated → capped pairs are a subset of the true pairs
@@ -139,6 +139,50 @@ class DedupOpsSpec extends SparkSpec {
     }
     assert(nearFound >= base.length / 2,
       s"only $nearFound/${base.length} appended-word near-dups under hamming ${DedupOps.simhashMaxHamming}")
+  }
+
+  /** Brute-force twin of [[DedupOps.simhashPairsOf]]: every a < b at
+    * Hamming ≤ `maxHamming`, no banding, no collapse. */
+  private def bruteSimhash(sigs: Seq[(Long, Long)], maxHamming: Int): Seq[(Long, Long, Long)] =
+    (for {
+      (a, sa) <- sigs; (b, sb) <- sigs if a < b
+      h = java.lang.Long.bitCount(sa ^ sb).toLong if h <= maxHamming
+    } yield (a, b, h)).sorted
+
+  private def simhashRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getAs[Number](2).longValue())).toSeq
+
+  test("simhash pairs equal a brute-force Hamming pass over the signatures at sf0.01") {
+    // 4 × 16-bit bands at maxHamming 3: any pair within Hamming 3
+    // leaves one band identical (pigeonhole), so banding recall is exact
+    val sf = sfDir.stripSuffix("sf0.001") + "sf0.01"
+    val sigs = DedupOps.simhashSignatures(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val want = bruteSimhash(sigs, DedupOps.simhashMaxHamming)
+    assert(want.exists(_._3 == 0L) && want.exists(_._3 > 0L),
+      "the corpus must hold exact copies and near pairs")
+    assert(simhashRows(DedupOps.simhashPairs(spark, sf)) == want)
+  }
+
+  test("simhash banding on crafted signatures: copies and Hamming 3 kept, Hamming 4 dropped") {
+    import spark.implicits._
+    val base = 0x0123456789abcdefL
+    def flip(bits: Int*): Long = bits.foldLeft(base)((x, b) => x ^ (1L << b))
+    val sigs = Seq(
+      1L -> base, 2L -> base, 3L -> base, // a three-copy group: Hamming 0
+      4L -> flip(0, 16, 32),              // Hamming 3 across three bands
+      5L -> flip(1, 2, 3),                // Hamming 3 inside band 0
+      6L -> flip(0, 16, 32, 48),          // Hamming 4, one bit in every band
+      7L -> flip(4, 5, 6, 7),             // Hamming 4 inside band 0
+      8L -> flip(4, 5, 6, 7),             // copy of 7
+      9L -> ~base)
+    val want = bruteSimhash(sigs, DedupOps.simhashMaxHamming)
+    assert(Seq((1L, 2L, 0L), (1L, 4L, 3L), (1L, 5L, 3L), (4L, 6L, 1L), (7L, 8L, 0L))
+      .forall(want.contains))
+    assert(!want.exists(p => p._1 == 1L && (p._2 == 6L || p._2 == 7L)))
+    val got = simhashRows(DedupOps.simhashPairsOf(sigs.toDF("doc_id", "simhash"),
+      DedupOps.simhashMaxHamming))
+    assert(got == want)
   }
 
   test("exact dedup finds planted exact copies") {

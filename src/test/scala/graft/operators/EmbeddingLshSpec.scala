@@ -26,6 +26,29 @@ class EmbeddingLshSpec extends SparkSpec {
     }
   }
 
+  test("zero vectors never pair: exact twin, LSH and SemDedup agree without throwing") {
+    import spark.implicits._
+    // a zero vector's cosine is 0/0, which throws DIVIDE_BY_ZERO under
+    // ANSI mode unless guarded; vectors 3 and 4 are also a copy group,
+    // so the LSH's within-group self-cosine takes the same path
+    val vecs = Seq(
+      (1L, Seq(1.0, 0.0, 0.0, 0.0)), (2L, Seq(2.0, 0.0, 0.0, 0.0)),
+      (3L, Seq(0.0, 0.0, 0.0, 0.0)), (4L, Seq(0.0, 0.0, 0.0, 0.0)))
+      .toDF("vec_id", "embedding")
+    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val exact = pairs(DedupOps.embeddingPairsOf(vecs, "vec_id", "embedding",
+      DedupOps.cosineThreshold))
+    val lsh = pairs(DedupOps.embeddingLshOf(vecs, "vec_id", "embedding",
+      DedupOps.cosineThreshold, dim = 4))
+    assert(exact == Set((1L, 2L)))
+    assert(lsh == exact)
+    // SemDedup's rule on the same rows: each zero vector keeps itself
+    val sem = SemDedupOps.semDedupOf(vecs, "vec_id", "embedding", SemDedupOps.semThreshold)
+      .collect().map(r => r.getLong(0) -> (r.getLong(2), r.getBoolean(3))).toMap
+    assert(sem(3L) == (3L, true) && sem(4L) == (4L, true))
+  }
+
   test("wider band geometry buys recall, still with exact precision") {
     val e = graft.Tables.embeddings(spark, sfDir)
     val brute = DedupOps.embeddingPairsOf(e, "vec_id", "embedding",

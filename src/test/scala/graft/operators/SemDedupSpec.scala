@@ -45,7 +45,8 @@ class SemDedupSpec extends SparkSpec {
   }
 
   test("sem_group labels match a brute-force union-find twin at fixed centroids") {
-    val grouped = SemDedupOps.collapseOf(vecs, "vec_id", "embedding")
+    val grouped = DedupOps.collapseOf(DedupOps.vectorsOf(vecs, "vec_id", "embedding"),
+      "vec_id", col("v"))
     val e = grouped.select(col("rep_id").as("vec_id"), col("v"))
       .withColumn("norm", sqrt(graft.functions.GraftFunctions.dot(col("v"), col("v"))))
     val cents = AnnOps.centroidsOf(e).localCheckpoint()
@@ -69,7 +70,8 @@ class SemDedupSpec extends SparkSpec {
     val base = vecs.select(col("vec_id"), col("embedding"))
     val dup = base.unionByName(base.select((col("vec_id") + n).as("vec_id"), col("embedding")))
       .unionByName(base.select((col("vec_id") + 2 * n).as("vec_id"), col("embedding")))
-    val grouped = SemDedupOps.collapseOf(dup, "vec_id", "embedding")
+    val grouped = DedupOps.collapseOf(DedupOps.vectorsOf(dup, "vec_id", "embedding"),
+      "vec_id", col("v"))
     val e = grouped.select(col("rep_id").as("vec_id"), col("v"))
       .withColumn("norm", sqrt(graft.functions.GraftFunctions.dot(col("v"), col("v"))))
     val cents = AnnOps.centroidsOf(e).localCheckpoint()

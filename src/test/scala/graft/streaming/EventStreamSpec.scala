@@ -151,35 +151,6 @@ class EventStreamSpec extends SparkSpec {
     assert(got == Set((2L, 100L), (3L, 200L), (4L, 200L)))
   }
 
-  test("streaming curation gates a document stream and agrees with batch") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val long = (1 to 30).map(i => s"w$i").mkString(" ")
-    val docs = Seq(
-      (1L, "srcA", long),                         // kept
-      (2L, "srcB", "too short"),                  // quality: token floor
-      (3L, "srcC", ("x " * 40).trim),             // quality: all-dup words
-      (4L, "srcD", s"eval leak phrase $long"),    // contaminated
-      (5L, "srcE", long + " tail"))               // kept
-    val bench = Seq("eval leak phrase", "leak phrase w1").toDF("sh")
-
-    val stream = MemoryStream[(Long, String, String)]
-    stream.addData(docs)
-    val q = EventStream.curateDocs(
-        stream.toDF().toDF("doc_id", "source", "text"), bench)
-      .writeStream.format("memory").queryName("curated").outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-
-    val got = spark.table("curated")
-      .collect().map(r => (r.getLong(0), r.getString(4))).toMap
-    assert(got.keySet == Set(1L, 5L))
-    // identical verdicts (and splits) when the same frame runs as a batch
-    val batch = EventStream.curateDocs(
-      docs.toDF("doc_id", "source", "text"), bench)
-      .collect().map(r => (r.getLong(0), r.getString(4))).toMap
-    assert(got == batch)
-  }
-
   test("streaming minhash LSH surfaces the batch near-dup pairs") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

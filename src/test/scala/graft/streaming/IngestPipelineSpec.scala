@@ -6,40 +6,33 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.operators.QualityModelOps
 import graft.sources.ShardWriter
 
-/** End-to-end streaming ingest: raw document stream → curation gates
-  * (quality floor, repetition ceiling, decontamination, deterministic
-  * split) → train-slice filter → continuous training shards on disk.
-  * The whole pipeline is the composition of already-pinned pieces
-  * ([[EventStream.curateDocs]] stateless gates + [[ShardWriter
-  * .shardSink]] idempotent batch directories); this spec pins the
-  * composition itself: what lands in the shards is EXACTLY the batch
-  * pipeline's train slice, however the stream was micro-batched. */
+/** End-to-end streaming ingest: raw document stream → the fused
+  * quality gate ([[IngestPipeline.gatedDocs]]) → continuous training
+  * shards on disk ([[ShardWriter.shardSink]] idempotent batch
+  * directories). The pipeline is the composition of already-pinned
+  * pieces; this spec pins the composition itself over a micro-batched
+  * memory stream: what lands in the shards is EXACTLY the batch gate's
+  * keep slice (the training slice), however the stream was
+  * micro-batched. */
 class IngestPipelineSpec extends SparkSpec {
 
   test("streamed shards hold exactly the batch pipeline's train slice") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val docs = graft.Tables.documents(spark, sfDir)
-    // tiny STRING shingle set for curateDocs (it gates on word trigrams)
-    val benchSh = docs.filter(col("doc_id") % 97 === 0)
-      .select(explode(element_at(transform(array(split(trim(col("text")), "\\s+")), ws =>
-        when(size(ws) >= 3, transform(sequence(lit(0), size(ws) - 3), i =>
-          concat_ws(" ", element_at(ws, i + 1), element_at(ws, i + 2),
-            element_at(ws, i + 3))))
-          .otherwise(array().cast("array<string>"))), 1)).as("sh"))
-      .distinct().localCheckpoint()
+      .select(col("doc_id"), col("lang"), col("text"))
+    val art = QualityModelOps.ensembleArtifactsFor(spark, sfDir)
 
-    val rows = docs.select(col("doc_id"), col("source"), col("text"))
-      .as[(Long, String, String)].collect().toSeq
+    val rows = docs.as[(Long, String, String)].collect().toSeq
     val (h1, h2) = rows.splitAt(rows.size / 3)
 
     val out = Files.createTempDirectory("ingest-shards").toString
     val stream = MemoryStream[(Long, String, String)]
     val q = ShardWriter.shardSink(
-        EventStream.curateDocs(stream.toDF().toDF("doc_id", "source", "text"), benchSh)
-          .filter(col("split") === "train"),
+        IngestPipeline.gatedDocs(stream.toDF().toDF("doc_id", "lang", "text"), art),
         "doc_id", out, nShards = 4)
       .option("checkpointLocation", Files.createTempDirectory("ingest-ckpt").toString)
       .start()
@@ -50,9 +43,7 @@ class IngestPipelineSpec extends SparkSpec {
 
     val streamedIds = spark.read.parquet(out)
       .select("doc_id").as[Long].collect().toSet
-    val batchIds = EventStream.curateDocs(
-        docs.select(col("doc_id"), col("source"), col("text")), benchSh)
-      .filter(col("split") === "train")
+    val batchIds = IngestPipeline.gatedDocs(docs, art)
       .select("doc_id").as[Long].collect().toSet
     assert(streamedIds == batchIds)
     assert(streamedIds.nonEmpty && streamedIds.size < rows.size)
