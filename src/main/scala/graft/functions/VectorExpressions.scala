@@ -136,6 +136,15 @@ object GraftFunctions {
   def dot(a: Column, b: Column): Column =
     GraftBridge.column(DotProduct(GraftBridge.expression(a), GraftBridge.expression(b)))
 
+  /** THE exact cosine of two vectors given their norms: null when
+    * either norm is 0. A zero vector has no direction, so it never
+    * pairs or ranks as a neighbor (null fails every threshold compare,
+    * and [[TopKScoreIdAgg]] skips null scores); the guard also keeps
+    * the division from throwing DIVIDE_BY_ZERO under ANSI mode. DuckDB
+    * yields NULL for the same 0/0, so the oracles agree. */
+  def cosineOf(a: Column, b: Column, na: Column, nb: Column): Column =
+    org.apache.spark.sql.functions.when(na > 0 && nb > 0, dot(a, b) / (na * nb))
+
   /** JPEG SOF dimensions array(width, height, progressive) — see
     * [[JpegDims]]. */
   def jpegDims(payload: Column): Column =

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables
+import graft.functions.GraftFunctions.{cosineOf, dot}
 
 /** Approximate-nearest-neighbor search over the embedding column.
   *
@@ -21,8 +22,6 @@ object AnnOps {
   val topK = 5
   val nQueries = 10
   val nprobe = 3
-
-  private def dot(a: Column, b: Column): Column = graft.functions.GraftFunctions.dot(a, b)
 
   private[graft] def embeddingsWithNorm(s: SparkSession, dir: String): DataFrame =
     Tables.spread(s, Tables.embeddings(s, dir))
@@ -47,7 +46,7 @@ object AnnOps {
     * guide §2.3 "aggregate before you shuffle"). */
   private def cosineTopkOf(q: DataFrame, cand: DataFrame): DataFrame =
     cand.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
+      .withColumn("cosine", cosineOf(col("qv"), col("cv"), col("qn"), col("cn")))
       .groupBy(col("query_id"))
       .agg(graft.functions.GraftFunctions.topkScoreId(
         col("cosine"), -col("neighbor_id"), topK, ascending = false).as("top"))
@@ -190,7 +189,7 @@ object AnnOps {
     short
       .join(e.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
         col("norm").as("cn")), Seq("neighbor_id"))
-      .withColumn("cosine", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
+      .withColumn("cosine", cosineOf(col("qv"), col("cv"), col("qn"), col("cn")))
       .withColumn("rank", row_number().over(wC))
       .filter(col("rank") <= topK)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("hamming"))
@@ -264,7 +263,7 @@ object AnnOps {
     short
       .join(broadcast(asQueries(q)), "query_id")
       .join(asCandidates(e), "neighbor_id")
-      .withColumn("cosine", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
+      .withColumn("cosine", cosineOf(col("qv"), col("cv"), col("qn"), col("cn")))
       .withColumn("rank", row_number().over(wC))
       .filter(col("rank") <= topK)
       .select((Seq("query_id", "rank", "neighbor_id") ++ extra).map(col): _*)
@@ -536,33 +535,20 @@ object AnnOps {
   private[graft] def centArr(cents: DataFrame): DataFrame =
     cents.agg(collect_list(struct(col("centroid_id"), col("cv"), col("cn"))).as("cents"))
 
-  /** Per-row scores against every centroid: array of (csim, nid) structs,
-    * nid = negated id so lexicographic max tie-breaks to the smallest id.
-    * Retained as the declarative twin the native kernel is spec-pinned
-    * against; production paths go through [[probeIdsCol]]. */
-  private[graft] def centScores(v: Column, norm: Column): Column =
-    transform(col("cents"), c => struct(
-      (dot(v, c.getField("cv")) / (norm * c.getField("cn"))).as("csim"),
-      (-c.getField("centroid_id")).as("nid")))
-
   /** Top-`n` centroid ids for the row's vector against the broadcast
-    * `cents` array — the native probe/assignment kernel
-    * ([[graft.functions.CentroidProbes]]): value-identical to
-    * `slice(reverse(array_sort(centScores(v, norm))), 1, n)` id
-    * extraction (and at n = 1 to `-array_max(centScores).nid`), but
+    * `cents` array, by cosine desc with ties to the smaller id — the
+    * native probe/assignment kernel ([[graft.functions.CentroidProbes]]):
     * one primitive loop per row instead of an interpreted K-struct
-    * transform + sort + reverse (spec-pinned, CentroidProbesSpec). */
+    * transform + sort + reverse (spec-pinned against that chain,
+    * CentroidProbesSpec). */
   private[graft] def probeIdsCol(v: Column, norm: Column, n: Int): Column =
     graft.functions.GraftFunctions.centroidProbes(v, norm, col("cents"), n)
 
   /** k-means-trained centroids: deterministic pseudo-random seeds (top-k
-    * by id hash — random init without a driver-side RNG), then
-    * `lloydIterations` Lloyd rounds of map-side nearest-centroid
-    * assignment + per-dimension mean. Each round's k×dim centroid frame
-    * is localCheckpoint'ed (k rows — trivial) so round i+1 and both
-    * consumers in [[annIvf]] read materialized rows instead of replaying
-    * the whole training lineage — the classic iterative-Spark fix. At
-    * 100 TB, train on a sample; the plan shape is identical. */
+    * by id hash — random init without a driver-side RNG), then the
+    * [[lloydOf]] rounds of map-side nearest-centroid (cosine) assignment
+    * + per-dimension mean. At 100 TB, train on a sample; the plan shape
+    * is identical. */
   def centroids(s: SparkSession, dir: String): DataFrame =
     centroidsOf(embeddingsWithNorm(s, dir))
 
@@ -572,39 +558,45 @@ object AnnOps {
     * costs runs once per training (and training itself is cached per
     * (session, corpus) via [[ivfFor]]), which is the train-once
     * lifecycle's price for cells that stay bounded as the corpus
-    * grows. */
+    * grows. Output (centroid_id, cv, cn). */
   def centroidsOf(e: DataFrame): DataFrame = {
-    var cents = e
+    def withNorm(cents: DataFrame) = cents.withColumn("cn", sqrt(dot(col("cv"), col("cv"))))
+    val seeds = e
       .orderBy(xxhash64(col("vec_id")).asc, col("vec_id").asc)
       .limit(adaptiveK(e.count()))
-      .select(col("vec_id").as("centroid_id"), col("v").as("cv"),
-        col("norm").as("cn"))
-      .localCheckpoint()
+      .select(col("vec_id").as("centroid_id"), col("v").as("cv"))
+    withNorm(lloydOf(seeds, "centroid_id") { cents =>
+      assignmentsOf(e, withNorm(cents))
+        .select(col("cluster_id").as("centroid_id"), col("v"))
+    })
+  }
+
+  /** The one Lloyd trainer: [[centroidsOf]] (key centroid_id, cosine)
+    * and [[pqCodebookOf]] (keys subspace, code; L2) bring only `seeds`
+    * (`keys`..., cv) and `assign`, which maps the current centroids to
+    * one (`keys`..., v) row per training vector. Each round takes the
+    * per-centroid mean with the native vector-sum aggregate, quantized
+    * to float (double sums vary in the last ulps with partition order;
+    * float rounding absorbs that, so training is identical run to run),
+    * keeps the previous centroid for an empty cell instead of shrinking
+    * k, and cuts the k-row frame once so the next round and every
+    * consumer read materialized rows. */
+  private[operators] def lloydOf(seeds: DataFrame, keys: String*)(
+      assign: DataFrame => DataFrame): DataFrame = {
+    val keyCols = keys.map(col)
+    var cents = seeds.localCheckpoint()
     for (_ <- 1 to lloydIterations) {
-      val assigned = e.crossJoin(broadcast(centArr(cents)))
-        .select(col("v"),
-          element_at(probeIdsCol(col("v"), col("norm"), 1), 1).as("cluster_id"))
-      // Per-dimension means via the native vector-sum aggregate (one
-      // shuffle, no 64x posexplode amplification), quantized to float
-      // precision: double accumulation varies in the last ulps with
-      // partition order, and float rounding absorbs exactly that —
-      // trained centroids (and hence IVF output rows) are identical run
-      // to run.
-      val means = assigned
-        .groupBy(col("cluster_id"))
+      val means = assign(cents)
+        .groupBy(keyCols: _*)
         .agg(graft.functions.GraftFunctions.vecsum(col("v")).as("sv"),
           count(lit(1)).as("cnt"))
-        .select(col("cluster_id").as("centroid_id"),
+        .select(keyCols :+
           transform(col("sv"), x => (x / col("cnt")).cast("float").cast("double"))
-            .as("new_cv"))
-      // A cluster that captured no vectors this round keeps its previous
-      // centroid instead of silently shrinking k.
+            .as("new_cv"): _*)
       cents = cents
-        .select(col("centroid_id"), col("cv").as("prev_cv"))
-        .join(means, Seq("centroid_id"), "left")
-        .select(col("centroid_id"),
-          coalesce(col("new_cv"), col("prev_cv")).as("cv"))
-        .withColumn("cn", sqrt(dot(col("cv"), col("cv"))))
+        .select(keyCols :+ col("cv").as("prev_cv"): _*)
+        .join(means, keys, "left")
+        .select(keyCols :+ coalesce(col("new_cv"), col("prev_cv")).as("cv"): _*)
         .localCheckpoint()
     }
     cents
@@ -660,7 +652,7 @@ object AnnOps {
     probes.join(assigned.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
         col("norm").as("cn"), col("cluster_id")), Seq("cluster_id"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
+      .withColumn("cosine", cosineOf(col("qv"), col("cv"), col("qn"), col("cn")))
       .groupBy(col("query_id"))
       .agg(graft.functions.GraftFunctions.topkScoreId(
         col("cosine"), -col("neighbor_id"), topK, ascending = false).as("top"))
@@ -804,7 +796,6 @@ object AnnOps {
 
   val pqSubspaces = 8
   val pqCodes = 16
-  val pqLloydIterations = 3
 
   /** (vec_id, subspace, sv) rows: each L2-normalized vector split into
     * `pqSubspaces` contiguous subvectors. Normalizing first makes L2
@@ -836,12 +827,12 @@ object AnnOps {
       l2sq(sv, c.getField("cv")).as("d2"), c.getField("code").as("code")))
 
   /** Product-quantization codebook: `pqCodes` L2 centroids per subspace,
-    * trained with the same deterministic Lloyd as [[centroids]] (hash-
-    * seeded init, float-quantized means, empty-cluster keep) — all
-    * subspaces train together in one exploded frame, so a round is one
-    * broadcast-assign + one (subspace, code) aggregation regardless of
-    * m. At 100 TB: train on a sample, the codebook is m×k×(d/m) floats
-    * — kilobytes — and rides every later plan as a broadcast. */
+    * hash-seeded and trained by the one Lloyd trainer ([[lloydOf]], keys
+    * (subspace, code)) — all subspaces train together in one exploded
+    * frame, so a round is one broadcast-assign + one (subspace, code)
+    * aggregation regardless of m. At 100 TB: train on a sample, the
+    * codebook is m×k×(d/m) floats — kilobytes — and rides every later
+    * plan as a broadcast. */
   def pqCodebook(s: SparkSession, dir: String): DataFrame =
     pqCodebookOf(subvectors(embeddingsWithNorm(s, dir)))
 
@@ -861,30 +852,14 @@ object AnnOps {
     val sample = sub.filter(pmod(xxhash64(col("vec_id")), lit(pqTrainSampleInv)) === 0)
     val bySub = Window.partitionBy(col("subspace"))
       .orderBy(xxhash64(col("vec_id")).asc, col("vec_id").asc)
-    var cb = sample
+    val seeds = sample
       .withColumn("rn", row_number().over(bySub))
       .filter(col("rn") <= pqCodes)
       .select(col("subspace"), (col("rn") - 1).as("code"), col("sv").as("cv"))
-      .localCheckpoint()
-    for (_ <- 1 to pqLloydIterations) {
-      val assigned = sample.join(broadcast(codebookArr(cb)), "subspace")
-        .select(col("subspace"), col("sv"),
-          array_min(codeScores(col("sv"))).getField("code").as("code"))
-      val means = assigned
-        .groupBy(col("subspace"), col("code"))
-        .agg(graft.functions.GraftFunctions.vecsum(col("sv")).as("ssum"),
-          count(lit(1)).as("cnt"))
-        .select(col("subspace"), col("code"),
-          transform(col("ssum"), x => (x / col("cnt")).cast("float").cast("double"))
-            .as("new_cv"))
-      cb = cb
-        .select(col("subspace"), col("code"), col("cv").as("prev_cv"))
-        .join(means, Seq("subspace", "code"), "left")
-        .select(col("subspace"), col("code"),
-          coalesce(col("new_cv"), col("prev_cv")).as("cv"))
-        .localCheckpoint()
+    lloydOf(seeds, "subspace", "code") { cb =>
+      sample.join(broadcast(codebookArr(cb)), "subspace")
+        .select(col("subspace"), nearestCode, col("sv").as("v"))
     }
-    cb
   }
 
   /** Nearest codeword of a subvector row's `sv` against the broadcast
@@ -970,14 +945,14 @@ object AnnOps {
     * corpus ([[pqEncodeOf]]'s form): `e` is the (vec_id, v, norm)
     * corpus frame (queries are its vec_id < nQueries rows; exact
     * re-rank fetches shortlist vectors from it by equi-join). */
-  def annPqSearch(e: DataFrame, cb: DataFrame, encoded: DataFrame): DataFrame = {
+  def annPqSearch(e: DataFrame, cb: PqCodebook, encoded: DataFrame): DataFrame = {
     val q = e.filter(col("vec_id") < nQueries)
     // the query's normalized subvectors, map-side (10-row broadcast)
     val probes = q.select(col("vec_id").as("query_id"),
       subSplit(transform(col("v"), x => x / col("norm"))).as("rq"))
     val cands = encoded
       .join(broadcast(probes), col("query_id") =!= col("neighbor_id"))
-      .withColumn("approx_d2", adcDistance(gridOf(cb)))
+      .withColumn("approx_d2", adcDistance(cb.grid))
     exactRerank(shortlistOf(adcTop(cands, pqShortlist)), q, e)
   }
 
@@ -1035,7 +1010,7 @@ object AnnOps {
     * code) rows and re-summed the m partials in a (query, vector) hash
     * aggregation (shuffle-order double sum; measured as the query's
     * dominant stage, 669 ms of a 2.1 s warm run at sf0.1). */
-  def annIvfPqSearch(q: DataFrame, cents: DataFrame, cb: DataFrame,
+  def annIvfPqSearch(q: DataFrame, cents: DataFrame, cb: PqCodebook,
       encoded: DataFrame, e: DataFrame): DataFrame =
     exactRerank(shortlistOf(ivfAdcTop(q, cents, cb, encoded, pqShortlist)), q, e)
 
@@ -1054,20 +1029,20 @@ object AnnOps {
     * cluster-keyed encoded corpus are new tables; the encoded corpus
     * is repartitioned by cluster_id on write like the inverted file,
     * so a probe's cluster_id join reads only the probed cells' files. */
-  def writeIvfPq(cents: DataFrame, cb: DataFrame, encoded: DataFrame,
+  def writeIvfPq(cents: DataFrame, cb: PqCodebook, encoded: DataFrame,
       path: String): Unit = {
     cents.write.mode("overwrite").parquet(s"$path/ivfpq_centroids")
-    cb.write.mode("overwrite").parquet(s"$path/ivfpq_codebook")
+    cb.rows.write.mode("overwrite").parquet(s"$path/ivfpq_codebook")
     encoded.repartition(col("cluster_id"))
       .write.mode("overwrite").parquet(s"$path/ivfpq_encoded")
   }
 
-  def loadIvfPq(s: SparkSession, path: String): (DataFrame, DataFrame, DataFrame) =
+  def loadIvfPq(s: SparkSession, path: String): (DataFrame, PqCodebook, DataFrame) =
     (s.read.parquet(s"$path/ivfpq_centroids"),
-      s.read.parquet(s"$path/ivfpq_codebook"),
+      PqCodebook.of(s.read.parquet(s"$path/ivfpq_codebook")),
       s.read.parquet(s"$path/ivfpq_encoded"))
 
-  private val ivfpqCache = new graft.SessionCache[(DataFrame, DataFrame, DataFrame)]()
+  private val ivfpqCache = new graft.SessionCache[(DataFrame, PqCodebook, DataFrame)]()
 
   /** (coarse centroids, shared residual codebook, encoded corpus) for
     * the corpus, training on first use; the coarse quantizer is the
@@ -1081,28 +1056,32 @@ object AnnOps {
     * §2.4 "two operations keyed the same way share one exchange"; a
     * stream-static join re-plans the static side per batch, so an
     * unpartitioned index paid its exchange on every micro-batch). */
-  def ivfpqFor(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
+  def ivfpqFor(s: SparkSession, dir: String): (DataFrame, PqCodebook, DataFrame) =
     ivfpqCache.getOrCompute(s, dir) {
       val (cents, _) = ivfFor(s, dir)
       val residSub = ivfpqResidualSub(embeddingsWithNorm(s, dir), cents)
         .localCheckpoint()
       val cb = pqCodebookOf(residSub)
-      (cents, cb, ivfpqEncodeOf(residSub, cb)
+      (cents, PqCodebook.of(cb), ivfpqEncodeOf(residSub, cb)
         .repartition(col("cluster_id")).localCheckpoint())
     }
 
-  /** The shared residual codebook collected to a driver-side grid —
-    * grid(subspace)(code) = codeword — m×k×(d/m) doubles, kilobytes,
-    * riding the plan as an [[graft.functions.AdcDistance]] closure
-    * constant (the BPE-encoder pattern: a trained artifact this small
-    * is a plan constant, not a join side). */
-  def gridOf(cb: DataFrame): Array[Array[Array[Double]]] =
-    cb.collect()
+  /** A trained PQ codebook: `rows` (subspace, code, cv) is what
+    * encoding broadcasts and the writers persist; `grid`(subspace)(code)
+    * = codeword is the same kilobytes collected once per training or
+    * load, riding every search plan as an [[graft.functions.AdcDistance]]
+    * closure constant (the BPE-encoder pattern), so a warm search
+    * launches no collect job. */
+  final case class PqCodebook(rows: DataFrame, grid: Array[Array[Array[Double]]])
+
+  object PqCodebook {
+    def of(cb: DataFrame): PqCodebook = PqCodebook(cb, cb.collect()
       .groupBy(_.getAs[Int]("subspace")).toSeq.sortBy(_._1)
       .map { case (_, rows) =>
         rows.sortBy(_.getAs[Int]("code"))
           .map(_.getAs[scala.collection.Seq[Double]]("cv").toArray).toArray
-      }.toArray
+      }.toArray)
+  }
 
   /** Probe expansion shared by the batch IVFADC search and the
     * streaming IVFADC probe: for a frame carrying (query_id, qv, qn)
@@ -1134,15 +1113,15 @@ object AnnOps {
   /** The IVFADC approximate stage shared by the re-ranked search and
     * the ADC-only answer: [[adcProbes]] → [[adcCandidates]] →
     * [[adcTop]] over a (vec_id, v, norm) query frame. */
-  private def ivfAdcTop(q: DataFrame, cents: DataFrame, cb: DataFrame,
+  private def ivfAdcTop(q: DataFrame, cents: DataFrame, cb: PqCodebook,
       encoded: DataFrame, k: Int): DataFrame =
-    adcTop(adcCandidates(adcProbes(asQueries(q), cents), encoded, gridOf(cb)), k)
+    adcTop(adcCandidates(adcProbes(asQueries(q), cents), encoded, cb.grid), k)
 
   /** Batch ADC top-k over the encoded index: the streaming probe's
     * exact twin (same probes, same fold, same tie rules — spec-pinned
     * row parity), and the ADC-only answer shape for callers that skip
     * the exact re-rank. */
-  def annIvfPqAdcTopk(q: DataFrame, cents: DataFrame, cb: DataFrame,
+  def annIvfPqAdcTopk(q: DataFrame, cents: DataFrame, cb: PqCodebook,
       encoded: DataFrame): DataFrame =
     ivfAdcTop(q, cents, cb, encoded, topK)
       .select(col("query_id"), posexplode(col("top")).as(Seq("r0", "c")))
@@ -1160,19 +1139,19 @@ object AnnOps {
     * (neighbor_id, codes) row per vector, m small ints — the 32×
     * compressed search frame). */
   final case class AnnIndex(centroids: DataFrame, assigned: DataFrame,
-      codebook: DataFrame, encoded: DataFrame)
+      codebook: PqCodebook, encoded: DataFrame)
 
   /** IVF training: (centroids, inverted file), both materialized. */
   private def ivfOf(e: DataFrame): (DataFrame, DataFrame) = {
-    val cents = centroidsOf(e) // localCheckpoint-materialized per round
+    val cents = centroidsOf(e) // lloydOf's last cut
     (cents, assignmentsOf(e, cents).localCheckpoint())
   }
 
   /** PQ training: (codebook, encoded corpus), both materialized. */
-  private def pqOf(e: DataFrame): (DataFrame, DataFrame) = {
+  private def pqOf(e: DataFrame): (PqCodebook, DataFrame) = {
     val sub = subvectors(e).localCheckpoint()
     val cb = pqCodebookOf(sub)
-    (cb, pqEncodeOf(sub, cb).localCheckpoint())
+    (PqCodebook.of(cb), pqEncodeOf(sub, cb).localCheckpoint())
   }
 
   /** Train every artifact over the corpus frame, uncached. */
@@ -1189,14 +1168,14 @@ object AnnOps {
     idx.centroids.write.mode("overwrite").parquet(s"$path/ivf_centroids")
     idx.assigned.repartition(col("cluster_id"))
       .write.mode("overwrite").parquet(s"$path/ivf_assigned")
-    idx.codebook.write.mode("overwrite").parquet(s"$path/pq_codebook")
+    idx.codebook.rows.write.mode("overwrite").parquet(s"$path/pq_codebook")
     idx.encoded.write.mode("overwrite").parquet(s"$path/pq_encoded")
   }
 
   def loadIndex(s: SparkSession, path: String): AnnIndex = AnnIndex(
     s.read.parquet(s"$path/ivf_centroids"),
     s.read.parquet(s"$path/ivf_assigned"),
-    s.read.parquet(s"$path/pq_codebook"),
+    PqCodebook.of(s.read.parquet(s"$path/pq_codebook")),
     s.read.parquet(s"$path/pq_encoded"))
 
   /** Trained artifacts cached per (session, corpus dir), materialized
@@ -1208,14 +1187,14 @@ object AnnOps {
     * versa. Training is deterministic, so cached and freshly-trained
     * results are identical (spec-pinned). */
   private val ivfCache = new graft.SessionCache[(DataFrame, DataFrame)]()
-  private val pqCache = new graft.SessionCache[(DataFrame, DataFrame)]()
+  private val pqCache = new graft.SessionCache[(PqCodebook, DataFrame)]()
 
   /** (centroids, inverted file) for the corpus, training on first use. */
   def ivfFor(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     ivfCache.getOrCompute(s, dir)(ivfOf(embeddingsWithNorm(s, dir)))
 
   /** (codebook, encoded corpus) for the corpus, training on first use. */
-  def pqFor(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+  def pqFor(s: SparkSession, dir: String): (PqCodebook, DataFrame) =
     pqCache.getOrCompute(s, dir)(pqOf(embeddingsWithNorm(s, dir)))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -10,50 +10,35 @@ import org.apache.spark.sql.functions._
   * `parent_organizations` chains until exhausted (with a visited set).
   * Set-at-a-time equivalent: the ancestor closure of the edge relation.
   *
-  * Scale design: true path doubling. Iteration k holds every path of
-  * length <= 2^k; one self-join per iteration doubles the reachable
-  * depth, so a depth-d hierarchy needs ceil(log2 d) shuffles — not d.
-  * Each iteration `localCheckpoint`s the accumulated frame: the join is
-  * fed materialized partitions instead of a lineage that re-executes all
-  * previous iterations (the classic iterative-Spark blowup), and the
-  * fixpoint test is a cheap count on the checkpointed data.
+  * Scale design: true path doubling. Round k holds every path of
+  * length <= 2^k; one self-join per round doubles the reachable depth,
+  * so a depth-d hierarchy needs ceil(log2 d) shuffles — not d. The loop
+  * is [[Fixpoint.converge]]: two rounds per `localCheckpoint` cut, and
+  * the fixpoint test is the pair count of the cut frame.
   */
 object ClosureOps {
 
   /** All distinct (node, ancestor) pairs reachable by following
     * `parentCol` edges, with the shortest path length as `depth`. The
-    * state per iteration is the pair set itself — min(depth) per pair,
+    * state per round is the pair set itself — min(depth) per pair,
     * never raw path rows — so on a cyclic edge set the frame is bounded
     * by |reachable pairs| and the fixpoint converges (a cycle stops
     * contributing once every pair on it is known; with path rows the
-    * same pairs would reappear at depth 2^k forever).
-    *
-    * @param maxDepth  safety bound on iteration count via reachable path
-    *                  length (default 2^20); the loop exits as soon as an
-    *                  iteration discovers no new pair.
-    */
+    * same pairs would reappear at depth 2^k forever). The pair set only
+    * grows, so an unchanged count across a double round means neither
+    * round found a pair, and the depths are then exact. */
   def ancestorClosure(edges: DataFrame, nodeCol: String = "node",
-      parentCol: String = "parent", maxDepth: Long = 1L << 20): DataFrame = {
-    var paths = edges
-      .select(col(nodeCol).as("node"), col(parentCol).as("ancestor"),
-        lit(1).as("depth"))
-      .groupBy(col("node"), col("ancestor")).agg(min(col("depth")).as("depth"))
-      .localCheckpoint()
-    var reach = 1L
-    var prevCount = -1L
-    var count = paths.count()
-    while (count != prevCount && reach < maxDepth) {
+      parentCol: String = "parent"): DataFrame = {
+    def minDepth(paths: DataFrame): DataFrame =
+      paths.groupBy(col("node"), col("ancestor")).agg(min(col("depth")).as("depth"))
+    val init = minDepth(edges
+      .select(col(nodeCol).as("node"), col(parentCol).as("ancestor"), lit(1).as("depth")))
+    Fixpoint.converge(init, count(lit(1))) { paths =>
       val doubled = paths.as("a")
         .join(paths.as("b"), col("a.ancestor") === col("b.node"))
         .select(col("a.node").as("node"), col("b.ancestor").as("ancestor"),
           (col("a.depth") + col("b.depth")).as("depth"))
-      paths = paths.unionByName(doubled)
-        .groupBy(col("node"), col("ancestor")).agg(min(col("depth")).as("depth"))
-        .localCheckpoint()
-      prevCount = count
-      count = paths.count()
-      reach *= 2
+      minDepth(paths.unionByName(doubled))
     }
-    paths
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.GraftFunctions.{cosineOf, dot}
 
 /** Deduplication for a training-data pipeline: exact, n-gram Jaccard,
   * MinHash+LSH, SimHash, and embedding-cosine near-dup detection.
@@ -229,14 +230,6 @@ object DedupOps {
       .withColumn("jaccard",
         col("common").cast("double") / (sizeA + sizeB - col("common")))
       .filter(col("jaccard") >= threshold)
-
-  /** THE exact cosine of two vectors given their norms: null when
-    * either norm is 0. A zero vector has no direction, so it never
-    * pairs (null fails every threshold compare); the guard also keeps
-    * the division from throwing DIVIDE_BY_ZERO under ANSI mode. DuckDB
-    * yields NULL for the same 0/0, so the oracles agree. */
-  private[operators] def cosineOf(va: Column, vb: Column, na: Column, nb: Column): Column =
-    when(na > 0 && nb > 0, dot(va, vb) / (na * nb))
 
   /** (vec_id, v: array<double>) rows of any embedding frame. */
   private[operators] def vectorsOf(vecs: DataFrame, idCol: String, vecCol: String): DataFrame =
@@ -713,10 +706,12 @@ object DedupOps {
     * set — the step that turns pair detection into deduplication. Every
     * node's label converges to the minimum doc_id reachable through dup
     * edges (min-label propagation; rounds ≈ cluster diameter, which for
-    * near-dup cliques is 1-2). Each round is one join + one min-agg with
-    * a `localCheckpoint` to cut iterative lineage; the fixpoint test is
-    * the monotone label sum, so no extra join against the previous
-    * round. Nodes with no dup edge keep themselves as cluster id.
+    * near-dup cliques is 1-2). Each round is one join + one min-agg; the
+    * loop is [[Fixpoint.converge]] (two rounds per `localCheckpoint`
+    * cut), and its probe is the label sum — labels only decrease, so
+    * an unchanged sum means no label moved, with no extra join against
+    * the previous round. Nodes with no dup edge keep themselves as
+    * cluster id.
     */
   def dupClustersOf(nodes: DataFrame, pairs: DataFrame): DataFrame = {
     // materialize the edge set once — every propagation round joins it,
@@ -730,33 +725,13 @@ object DedupOps {
     // iterating over the full node set would re-shuffle the whole corpus
     // every round for rows whose label can never change. Isolated nodes
     // are stitched back (cluster = self) with one left join at the end.
-    var lbl = und.select(col("s").as("doc_id")).distinct()
+    val init = und.select(col("s").as("doc_id")).distinct()
       .select(col("doc_id"), col("doc_id").as("cluster_id"))
-      .localCheckpoint()
-    var prevSum = java.math.BigDecimal.valueOf(-1)
-    var sum = lbl.agg(org.apache.spark.sql.functions.sum(col("cluster_id")).cast("decimal(38,0)"))
-      .collect()(0).getDecimal(0)
-    // one min-label propagation round as a plan fragment
-    def propagate(cur: DataFrame): DataFrame = {
+    val lbl = Fixpoint.converge(init, sum(col("cluster_id")).cast("decimal(38,0)")) { cur =>
       val neighbor = und.join(cur, und("s") === cur("doc_id"))
         .select(col("d").as("doc_id"), col("cluster_id"))
       cur.unionByName(neighbor)
         .groupBy(col("doc_id")).agg(min(col("cluster_id")).as("cluster_id"))
-    }
-    while (sum.compareTo(prevSum) != 0) {
-      // TWO propagation rounds per checkpoint + fixpoint probe: every
-      // probe costs a materialization job plus a collect job, and
-      // near-dup cluster diameters are 1-2, so checking after every
-      // single round spent half the query's jobs on bookkeeping
-      // (measured: the CC consumers are job-count-bound, 54 jobs for
-      // q_semdedup at sf0.1). Labels are monotone non-increasing, so
-      // an unchanged sum across a double round still implies neither
-      // round moved a label — the same fixpoint, reached with half
-      // the probes; extra rounds past convergence are identity.
-      lbl = propagate(propagate(lbl)).localCheckpoint()
-      prevSum = sum
-      sum = lbl.agg(org.apache.spark.sql.functions.sum(col("cluster_id")).cast("decimal(38,0)"))
-        .collect()(0).getDecimal(0)
     }
     nodes.select(col("doc_id"))
       .join(lbl, Seq("doc_id"), "left")
@@ -1225,8 +1200,6 @@ object DedupOps {
   // ----------------------------------------------- embedding cosine
 
   val cosineThreshold = 0.4
-
-  private def dot(a: Column, b: Column): Column = graft.functions.GraftFunctions.dot(a, b)
 
   /** Embedding near-dup pairs: cosine ≥ 0.4. The operator IS the
     * random-hyperplane banded-LSH plan ([[embeddingLshOf]]) — candidate

@@ -23,7 +23,11 @@ object GraphOps {
 
   /** Unrolled power iterations. Few, fixed: each is one join + one
     * aggregation, and curation only needs rank ORDER, which stabilizes
-    * fast on a k-regular graph. */
+    * fast on a k-regular graph. This is deliberately NOT a
+    * [[Fixpoint.converge]] loop: it has no probe and no per-round cut.
+    * The plan mirrors the oracle's unrolled CTE, and a cut per round
+    * would add jobs and erase the bucketing that gives a src-bucketed
+    * edge table its zero-exchange join (BucketedPageRankSpec). */
   val pagerankIters = 3
 
   /** Rank mass scale: rank 1.0 = 1e12 units. Total in-flight mass is

@@ -21,7 +21,8 @@ import graft.Tables
   * The org catalog is tiny by construction (thousands of orgs at most),
   * so resolution is broadcast joins against the request stream — the
   * only scan that scales is the requests themselves. Arbitrary-depth
-  * hierarchies go through [[ClosureOps.ancestorClosure]]; the synthetic
+  * hierarchies go through [[ClosureOps.ancestorClosure]] (path doubling
+  * on [[Fixpoint.converge]], the one fixpoint loop); the synthetic
   * catalog here is the reference-shaped 3 levels (org → division →
   * root).
   */

@@ -735,7 +735,7 @@ object PipelineOps {
     * the same codegen dot the hash-green embedding family uses, so the
     * brute-force oracle compares bit-identically. */
   def semanticDecontam(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.GraftFunctions.dot
+    import graft.functions.GraftFunctions.{cosineOf, dot}
     val e = Tables.spread(s, Tables.embeddings(s, dir))
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("norm", sqrt(dot(col("v"), col("v"))))
@@ -745,7 +745,7 @@ object PipelineOps {
       .orderBy(col("cosine").desc, col("eval_id"))
     e.filter(col("vec_id") >= AnnOps.nQueries)
       .crossJoin(broadcast(q))
-      .withColumn("cosine", dot(col("v"), col("qv")) / (col("norm") * col("qn")))
+      .withColumn("cosine", cosineOf(col("v"), col("qv"), col("norm"), col("qn")))
       .withColumn("rn", row_number().over(best))
       .filter(col("rn") === 1 && col("cosine") >= semanticCosine)
       .select(col("vec_id"), col("eval_id"), col("cosine"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.GraftFunctions.{cosineOf, dot}
 
 /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
   * arXiv:2303.09540): k-means-partition the embedding space, find
@@ -28,11 +29,12 @@ import graft.Tables
   *    you want: a page's crawl count must not drag the means.
   *  - Assignment is map-side (broadcast centroid array, per-row argmax).
   *  - Candidate generation is the within-cell self-join on cluster_id;
-  *    exact cosine ([[DedupOps.cosineOf]]) verifies every candidate,
-  *    so precision is exact and only the cell partition (vs. a global
-  *    all-pairs) is approximate.
+  *    exact cosine ([[graft.functions.GraftFunctions.cosineOf]])
+  *    verifies every candidate, so precision is exact and only the cell
+  *    partition (vs. a global all-pairs) is approximate.
   *  - Groups close transitively with [[DedupOps.dupClustersOf]]
-  *    (min-label propagation over edge endpoints); `keep` = the
+  *    (min-label propagation over edge endpoints, run to its fixpoint by
+  *    [[Fixpoint.converge]]); `keep` = the
   *    group's minimum vec_id, so "keep rows" IS the semantically
   *    deduplicated corpus.
   */
@@ -43,8 +45,6 @@ object SemDedupOps {
     * this operator's recall yardstick. Production SemDeDup on real
     * sentence embeddings runs far tighter (≈ 0.95). */
   val semThreshold: Double = DedupOps.cosineThreshold
-
-  private def dot(a: Column, b: Column): Column = graft.functions.GraftFunctions.dot(a, b)
 
   /** Driver entry: semantic dedup of the embeddings table. The collapse
     * groups and trained centroids are the pass's reusable model — cached
@@ -66,7 +66,8 @@ object SemDedupOps {
       val grouped = DedupOps.collapseOf(vecs, "vec_id", col("v"))
       val e = grouped.select(col("rep_id").as("vec_id"), col("v"))
         .withColumn("norm", sqrt(dot(col("v"), col("v"))))
-      (grouped, AnnOps.centroidsOf(e)) // both localCheckpoint-materialized
+      // collapseOf cuts the groups; the centroids are lloydOf's last cut
+      (grouped, AnnOps.centroidsOf(e))
     }
 
   /** Generic API: (vec_id, cluster_id, sem_group, keep) for any
@@ -105,7 +106,7 @@ object SemDedupOps {
     // also keeps its 0/0 from throwing DIVIDE_BY_ZERO under ANSI mode)
     val repPairs = a.join(b, Seq("cluster_id"))
       .filter(col("doc_a") < col("doc_b"))
-      .filter(DedupOps.cosineOf(col("va"), col("vb"), col("na"), col("nb")) >= threshold)
+      .filter(cosineOf(col("va"), col("vb"), col("na"), col("nb")) >= threshold)
       .select("doc_a", "doc_b")
 
     // copy-group edges: a copy pair's cosine is dot(v,v)/norm² = 1,

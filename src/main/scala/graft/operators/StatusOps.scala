@@ -378,7 +378,8 @@ object StatusOps {
     * scans, one pass over the input — this survives any scale the scan
     * itself survives. (General, non-arithmetic hierarchies go through
     * [[ClosureOps.ancestorClosure]]: true path-doubling, O(log depth)
-    * self-joins with a localCheckpoint per iteration.) */
+    * self-joins, run to the fixpoint by [[Fixpoint.converge]] with one
+    * localCheckpoint per two rounds.) */
   def orgClosure(s: SparkSession, dir: String): DataFrame = {
     val nodes = graft.Tables.documents(s, dir)
       .filter(col("doc_id") < 100 && col("doc_id") > 0)

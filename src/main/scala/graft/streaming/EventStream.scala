@@ -208,8 +208,8 @@ object EventStream {
     * ([[bm25ScoreStream]]): a vector stream is answered against a
     * trained, arbitrarily large corpus index without restating it.
     *
-    * Probe selection is the batch plan's broadcast centroid-score
-    * array (map-side — [[graft.operators.AnnOps.centScores]]), the
+    * Probe selection is the batch plan's broadcast centroid-probe
+    * kernel (map-side — [[graft.operators.AnnOps.probeIdsCol]]), the
     * candidate fetch is a stateless stream-static equi-join on
     * cluster_id (the bucketed inverted file reads co-located), and the
     * only stateful operator is the per-query top-k rollup — a
@@ -227,7 +227,7 @@ object EventStream {
     * [[contaminationStream]]. */
   def annProbeStream(vecs: DataFrame, cents: DataFrame, assigned: DataFrame): DataFrame = {
     import graft.operators.AnnOps
-    import graft.functions.GraftFunctions.dot
+    import graft.functions.GraftFunctions.{cosineOf, dot}
     val e = vecs
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
         current_timestamp().as("ingest_ts"))
@@ -244,7 +244,7 @@ object EventStream {
         col("norm").as("cn"), col("cluster_id")), Seq("cluster_id"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("ingest_ts"),
-        (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cosine"),
+        cosineOf(col("qv"), col("cv"), col("qn"), col("cn")).as("cosine"),
         (-col("neighbor_id")).as("nid"))
       .groupBy(window(col("ingest_ts"), "1 minute"), col("query_id"))
       // native bounded top-k (O(k) state per in-flight query, map-side
@@ -278,7 +278,8 @@ object EventStream {
     *
     * `vecs` needs (vec_id, embedding); emits (query_id, rank,
     * neighbor_id). */
-  def ivfpqProbeStream(vecs: DataFrame, cents: DataFrame, cb: DataFrame,
+  def ivfpqProbeStream(vecs: DataFrame, cents: DataFrame,
+      cb: graft.operators.AnnOps.PqCodebook,
       encoded: DataFrame): DataFrame = {
     import graft.operators.AnnOps
     import graft.functions.GraftFunctions.dot
@@ -290,7 +291,7 @@ object EventStream {
         col("v").as("qv"), col("norm").as("qn"))
     val probes = AnnOps.adcProbes(q, cents)
       .withWatermark("ingest_ts", "10 seconds")
-    AnnOps.adcCandidates(probes, encoded, AnnOps.gridOf(cb))
+    AnnOps.adcCandidates(probes, encoded, cb.grid)
       .select(col("query_id"), col("ingest_ts"), col("approx_d2"),
         col("neighbor_id"))
       .groupBy(window(col("ingest_ts"), "1 minute"), col("query_id"))
@@ -334,7 +335,7 @@ object EventStream {
   def hammingProbeStream(vecs: DataFrame, bands: DataFrame,
       corpus: DataFrame): DataFrame = {
     import graft.operators.AnnOps
-    import graft.functions.GraftFunctions.dot
+    import graft.functions.GraftFunctions.{cosineOf, dot}
     val qs = AnnOps.bandRowsOf(vecs
       .select(col("vec_id").as("query_id"),
         col("embedding").cast("array<double>").as("qv"),
@@ -350,7 +351,7 @@ object EventStream {
       .join(corpus.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
         col("norm").as("cn")), Seq("neighbor_id"))
       .select(col("query_id"), col("ingest_ts"),
-        (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cosine"),
+        cosineOf(col("qv"), col("cv"), col("qn"), col("cn")).as("cosine"),
         (-col("neighbor_id")).as("nid"))
       .groupBy(window(col("ingest_ts"), "1 minute"), col("query_id"))
       // native bounded top-k, descending on (cosine, nid) — nid is the

@@ -18,13 +18,13 @@ object AnnEncodeTwin {
 
   /** (vec_id, subspace, code) for the session's trained PQ codebook. */
   def pqRowsFor(s: SparkSession, dir: String): DataFrame =
-    rowsOf(AnnOps.pqSubvectorsForTest(s, dir), AnnOps.pqFor(s, dir)._1)
+    rowsOf(AnnOps.pqSubvectorsForTest(s, dir), AnnOps.pqFor(s, dir)._1.rows)
 
   /** (vec_id, cluster_id, subspace, code) for the session's trained
     * IVFADC coarse quantizer and residual codebook. */
   def ivfpqRowsFor(s: SparkSession, dir: String): DataFrame = {
     val (cents, cb, _) = AnnOps.ivfpqFor(s, dir)
-    rowsOf(AnnOps.ivfpqResidualSub(AnnOps.embeddingsWithNorm(s, dir), cents), cb,
+    rowsOf(AnnOps.ivfpqResidualSub(AnnOps.embeddingsWithNorm(s, dir), cents), cb.rows,
       "cluster_id")
   }
 

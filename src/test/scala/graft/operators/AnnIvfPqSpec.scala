@@ -66,7 +66,7 @@ class AnnIvfPqSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("norm", sqrt(graft.functions.GraftFunctions.dot(col("v"), col("v"))))
     val q = e.filter(col("vec_id") < AnnOps.nQueries)
-    def rows(c: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame,
+    def rows(c: org.apache.spark.sql.DataFrame, b: AnnOps.PqCodebook,
         enc: org.apache.spark.sql.DataFrame) =
       AnnOps.annIvfPqSearch(q, c, b, enc, e).collect().map(_.toString).toSeq
     assert(rows(centsL, cbL, encodedL) == rows(cents, cb, encoded))

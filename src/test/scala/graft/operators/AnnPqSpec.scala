@@ -49,6 +49,18 @@ class AnnPqSpec extends SparkSpec {
     // drop the sort beneath the encode join)
     val reversed = AnnOps.pqSubvectorsForTest(spark, sfDir)
       .orderBy(col("vec_id"), col("subspace").desc).localCheckpoint()
-    assert(arraysOf(AnnOps.pqEncodeOf(reversed, cb)) == rows)
+    assert(arraysOf(AnnOps.pqEncodeOf(reversed, cb.rows)) == rows)
+  }
+
+  test("a warm PQ or IVFADC search builds its plan without a job and returns the cold rows") {
+    // the codebook grid is collected once per trained codebook, so a
+    // search over a cached index plans without touching the cluster
+    Seq[(org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame](
+      AnnOps.annPq, AnnOps.annIvfPq).foreach { search =>
+      val cold = search(spark, sfDir).collect().toSeq
+      val (warm, planJobs) = graft.JobCounter(spark)(search(spark, sfDir))
+      assert(planJobs == 0)
+      assert(warm.collect().toSeq == cold)
+    }
   }
 }
