@@ -12,12 +12,15 @@ object Explain {
     val spark = GraftSession.local(8, "ERROR")
 
     val audit = Seq(
-      "q1_pricing_summary"   -> Seq("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"),
-      "q3_shipping_priority" -> Seq("BroadcastHashJoin", "PushedFilters"),
-      "q5_local_supplier"    -> Seq("BroadcastHashJoin"),
+      // money sums are the exact unscaled-long aggregate, never
+      // Spark's BigDecimal-per-row `sum`
+      "q1_pricing_summary"   -> Seq("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate",
+        "graft_decimal_sum"),
+      "q3_shipping_priority" -> Seq("BroadcastHashJoin", "PushedFilters", "graft_decimal_sum"),
+      "q5_local_supplier"    -> Seq("BroadcastHashJoin", "graft_decimal_sum"),
       // WindowGroupLimit = Spark 4's rank-filter pushdown: per-partition
       // top-k before the window sort, essential for top-k over a fact table
-      "q_topk_per_group"     -> Seq("BroadcastHashJoin", "WindowGroupLimit"),
+      "q_topk_per_group"     -> Seq("BroadcastHashJoin", "WindowGroupLimit", "graft_decimal_sum"),
       "q_scan_filter_project" -> Seq("PushedFilters"),
       // keyset pagination: the resume predicate reaches the scan
       "q_scan_page"          -> Seq("PushedFilters", "GreaterThan(o_orderkey"),

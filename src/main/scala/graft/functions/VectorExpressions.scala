@@ -95,6 +95,7 @@ object GraftFunctions {
     registerOnce(spark, "graft_jpeg_dims", exprs => JpegDims(exprs(0)))
     registerOnce(spark, "graft_mp4_duration", exprs => Mp4Duration(exprs(0)))
     registerOnce(spark, "graft_gopher_stats", exprs => GopherStats(exprs(0)))
+    registerOnce(spark, "graft_decimal_sum", exprs => DecimalSumAgg(exprs(0)))
   }
 
   /** Register `name` unless the session's function registry has it. */
@@ -143,7 +144,14 @@ object GraftFunctions {
     * the division from throwing DIVIDE_BY_ZERO under ANSI mode. DuckDB
     * yields NULL for the same 0/0, so the oracles agree. */
   def cosineOf(a: Column, b: Column, na: Column, nb: Column): Column =
-    org.apache.spark.sql.functions.when(na > 0 && nb > 0, dot(a, b) / (na * nb))
+    org.apache.spark.sql.functions.when(hasDirection(na, nb), dot(a, b) / (na * nb))
+
+  /** THE zero-norm test: true when every given norm is positive. Only a
+    * vector with a positive norm has a direction, so every division by
+    * a norm ([[cosineOf]], the PQ family's unit-vector normalizations
+    * and residuals) sits behind it — under ANSI mode `x / 0.0` throws
+    * DIVIDE_BY_ZERO. */
+  def hasDirection(norms: Column*): Column = norms.map(_ > 0).reduce(_ && _)
 
   /** JPEG SOF dimensions array(width, height, progressive) — see
     * [[JpegDims]]. */
@@ -220,6 +228,12 @@ object GraftFunctions {
   def heavyHitters(key: Column, capacity: Int): Column =
     GraftBridge.column(
       HeavyHittersAgg(GraftBridge.expression(key), capacity).toAggregateExpression())
+
+  /** THE way to sum money: the exact `sum` of a decimal expression on
+    * unscaled longs, value- and type-identical to Spark's `sum` — see
+    * [[DecimalSumAgg]]. */
+  def decimalSum(c: Column): Column =
+    GraftBridge.column(DecimalSumAgg(GraftBridge.expression(c)).toAggregateExpression())
 
   /** Bounded top-k (score, id) summary — see [[TopKScoreIdAgg]]. */
   def topkScoreId(score: Column, id: Column, k: Int, ascending: Boolean): Column =

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.functions.GraftFunctions.decimalSum
 
 /** Headline relational analytics over the fact tables.
   *
@@ -15,15 +16,29 @@ import graft.Tables
   * size statistics broadcast them while they fit (they do on every test
   * SF) and AQE falls back to a shuffle join at the scale where a forced
   * broadcast would OOM the executors. Money aggregations run in
-  * DECIMAL(18,2) so partial (map-side) aggregation is exact and
-  * reassociation-safe — results are bit-identical regardless of partition
-  * count, which also makes them hash-comparable against the DuckDB oracle.
+  * DECIMAL(18,2) through [[graft.functions.GraftFunctions.decimalSum]] so
+  * partial (map-side) aggregation is exact and reassociation-safe —
+  * results are bit-identical regardless of partition count, which also
+  * makes them hash-comparable against the DuckDB oracle.
   */
 object AnalyticsOps {
 
-  /** DECIMAL(18,2) money/measure cast — the FP-discipline workhorse
-    * (exact partial aggregation; shared across the operator modules). */
+  /** DECIMAL(18,2) money/measure cast — the FP-discipline workhorse,
+    * shared across the operator modules. The exactness contract: sum a
+    * tree of `dec` casts, decimal literals, `+`, `-` and `*` with
+    * [[graft.functions.GraftFunctions.decimalSum]], never `sum`. Its
+    * result is Spark's `sum` of the same tree to the bit (type, value,
+    * nulls, overflow, ANSI errors), partial aggregation is exact and
+    * reassociation-safe at any partition count, and an exact-cents
+    * double (|d| < 2^45, the nearest double to its two-decimal value)
+    * is cast, multiplied and added on unscaled longs instead of
+    * `java.math.BigDecimal`; any other row takes Spark's own path. */
   private[operators] def dec(c: Column): Column = c.cast(DecimalType(18, 2))
+
+  /** TPC-H's discounted price, l_extendedprice · (1 − l_discount), in
+    * exact decimal (q1, q3, q5 and the salted join sum it). */
+  private[operators] def discPrice: Column =
+    dec(col("l_extendedprice")) * (dec(lit(1)) - dec(col("l_discount")))
 
   // ---------------------------------------------------------------- q1
   def q1PricingSummary(s: SparkSession, dir: String): DataFrame = {
@@ -31,14 +46,12 @@ object AnalyticsOps {
       .filter(col("l_shipdate") <= lit("2000-12-31"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
-        sum(dec(col("l_quantity"))).cast("double").as("sum_qty"),
-        sum(dec(col("l_extendedprice"))).cast("double").as("sum_base_price"),
-        sum(dec(col("l_extendedprice")) * (lit(1).cast(DecimalType(18, 2)) - dec(col("l_discount"))))
-          .cast("double").as("sum_disc_price"),
-        sum(dec(col("l_extendedprice")) * (lit(1).cast(DecimalType(18, 2)) - dec(col("l_discount")))
-          * (lit(1).cast(DecimalType(18, 2)) + dec(col("l_tax")))).cast("double").as("sum_charge"),
-        (sum(dec(col("l_quantity"))).cast("double") / count(lit(1))).as("avg_qty"),
-        (sum(dec(col("l_extendedprice"))).cast("double") / count(lit(1))).as("avg_price"),
+        decimalSum(dec(col("l_quantity"))).cast("double").as("sum_qty"),
+        decimalSum(dec(col("l_extendedprice"))).cast("double").as("sum_base_price"),
+        decimalSum(discPrice).cast("double").as("sum_disc_price"),
+        decimalSum(discPrice * (dec(lit(1)) + dec(col("l_tax")))).cast("double").as("sum_charge"),
+        (decimalSum(dec(col("l_quantity"))).cast("double") / count(lit(1))).as("avg_qty"),
+        (decimalSum(dec(col("l_extendedprice"))).cast("double") / count(lit(1))).as("avg_price"),
         count(lit(1)).as("count_order"))
       .orderBy("l_returnflag", "l_linestatus")
   }
@@ -69,8 +82,7 @@ object AnalyticsOps {
     l.join(o, col("l_orderkey") === col("o_orderkey"))
       .join(c, col("o_custkey") === col("c_custkey"))
       .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-      .agg(sum(dec(col("l_extendedprice")) * (lit(1).cast(DecimalType(18, 2)) - dec(col("l_discount"))))
-        .cast("double").as("revenue"))
+      .agg(decimalSum(discPrice).cast("double").as("revenue"))
       .orderBy(col("revenue").desc, col("l_orderkey").asc)
       .limit(10)
   }
@@ -105,8 +117,7 @@ object AnalyticsOps {
       .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
       .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
       .groupBy(col("n_name"))
-      .agg(sum(dec(col("l_extendedprice")) * (lit(1).cast(DecimalType(18, 2)) - dec(col("l_discount"))))
-        .cast("double").as("revenue"))
+      .agg(decimalSum(discPrice).cast("double").as("revenue"))
       .orderBy(col("revenue").desc, col("n_name").asc)
   }
 
@@ -130,7 +141,7 @@ object AnalyticsOps {
     // part scales with the corpus: planner-decided join, no forced hint
     val rev = l.join(p, col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand"), col("p_partkey"))
-      .agg(sum(dec(col("l_extendedprice"))).cast("double").as("part_revenue"))
+      .agg(decimalSum(dec(col("l_extendedprice"))).cast("double").as("part_revenue"))
     val w = Window.partitionBy(col("p_brand"))
       .orderBy(col("part_revenue").desc, col("p_partkey").asc)
     rev.withColumn("rnk", row_number().over(w))
@@ -155,7 +166,7 @@ object AnalyticsOps {
   def rollupRevenue(s: SparkSession, dir: String): DataFrame = {
     Tables.orders(s, dir)
       .rollup(col("o_orderstatus"), col("o_orderpriority"))
-      .agg(sum(dec(col("o_totalprice"))).cast("double").as("total_price"),
+      .agg(decimalSum(dec(col("o_totalprice"))).cast("double").as("total_price"),
         count(lit(1)).as("n_orders"))
       .orderBy(col("o_orderstatus").asc_nulls_first, col("o_orderpriority").asc_nulls_first)
   }
@@ -195,7 +206,7 @@ object AnalyticsOps {
     Tables.orders(s, dir)
       .filter(col("o_custkey") < 100)
       .withColumn("running_spend",
-        sum(dec(col("o_totalprice"))).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        decimalSum(dec(col("o_totalprice"))).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
           .cast("double"))
       .withColumn("order_seq", row_number().over(w))
       .select("o_custkey", "o_orderkey", "o_orderdate", "running_spend", "order_seq")
@@ -295,7 +306,7 @@ object AnalyticsOps {
     Tables.events(s, dir)
       .groupBy(window(col("ts"), "1 hour").getField("start").as("bucket"), col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(dec(col("value"))).cast("double").as("sum_value"))
+        decimalSum(dec(col("value"))).cast("double").as("sum_value"))
       .orderBy("bucket", "event_type")
   }
 
@@ -315,7 +326,7 @@ object AnalyticsOps {
       .groupBy(window(col("ts"), "1 hour", "15 minutes").getField("start").as("w_start"),
         col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(dec(col("value"))).cast("double").as("sum_value"))
+        decimalSum(dec(col("value"))).cast("double").as("sum_value"))
       .orderBy("w_start", "event_type")
   }
 

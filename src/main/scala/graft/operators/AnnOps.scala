@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables
-import graft.functions.GraftFunctions.{cosineOf, dot}
+import graft.functions.GraftFunctions.{cosineOf, dot, hasDirection}
 
 /** Approximate-nearest-neighbor search over the embedding column.
   *
@@ -800,9 +800,11 @@ object AnnOps {
   /** (vec_id, subspace, sv) rows: each L2-normalized vector split into
     * `pqSubspaces` contiguous subvectors. Normalizing first makes L2
     * codebook distance rank like cosine, so PQ recall is comparable
-    * against the cosine brute-force baseline. */
+    * against the cosine brute-force baseline. A zero vector has no
+    * direction (`hasDirection`): it is neither trained on nor encoded,
+    * so it is never a PQ candidate. */
   private def subvectors(e: DataFrame): DataFrame =
-    e.select(col("vec_id"),
+    e.filter(hasDirection(col("norm"))).select(col("vec_id"),
       transform(col("v"), x => x / col("norm")).as("nv"))
       .select(col("vec_id"),
         posexplode(transform(sequence(lit(0), lit(pqSubspaces - 1)),
@@ -947,9 +949,11 @@ object AnnOps {
     * re-rank fetches shortlist vectors from it by equi-join). */
   def annPqSearch(e: DataFrame, cb: PqCodebook, encoded: DataFrame): DataFrame = {
     val q = e.filter(col("vec_id") < nQueries)
-    // the query's normalized subvectors, map-side (10-row broadcast)
-    val probes = q.select(col("vec_id").as("query_id"),
-      subSplit(transform(col("v"), x => x / col("norm"))).as("rq"))
+    // the query's normalized subvectors, map-side (10-row broadcast); a
+    // zero query has no direction and so no neighbors
+    val probes = q.filter(hasDirection(col("norm")))
+      .select(col("vec_id").as("query_id"),
+        subSplit(transform(col("v"), x => x / col("norm"))).as("rq"))
     val cands = encoded
       .join(broadcast(probes), col("query_id") =!= col("neighbor_id"))
       .withColumn("approx_d2", adcDistance(cb.grid))
@@ -977,10 +981,12 @@ object AnnOps {
     * = 2 − 2·cos(q, x) exactly, so ADC over residuals ranks like
     * cosine — this is IVFADC (Jégou et al. 2011, §III): quantize the
     * residual, not the vector, and the coarse quantizer's variance is
-    * removed from what PQ must encode. */
+    * removed from what PQ must encode. A zero vector (or a zero cell
+    * centroid) has no residual direction and is not encoded. */
   private[operators] def ivfpqResidualSub(e: DataFrame, cents: DataFrame): DataFrame =
     assignmentsOf(e, cents)
       .join(broadcast(centById(cents)), Seq("cluster_id"))
+      .filter(hasDirection(col("norm"), col("ccn")))
       .select(col("vec_id"), col("cluster_id"),
         zip_with(col("v"), col("ccv"),
           (x, c) => x / col("norm") - c / col("ccn")).as("rv"))
@@ -1088,14 +1094,17 @@ object AnnOps {
     * plus any pass-through columns (e.g. the stream's ingest_ts), emit
     * one row per (query, probed cell) with the query's residual
     * subvectors against that cell's centroid. Pure map-side against two
-    * broadcast scalars (centroid array + per-cell centroid lookup). */
+    * broadcast scalars (centroid array + per-cell centroid lookup). A
+    * zero query has no direction and so no probes (nor neighbors). */
   private[graft] def adcProbes(frame: DataFrame, cents: DataFrame): DataFrame =
     frame
+      .filter(hasDirection(col("qn")))
       .crossJoin(broadcast(centArr(cents)))
       .withColumn("cluster_id",
         explode(probeIdsCol(col("qv"), col("qn"), nprobe)))
       .drop("cents")
       .join(broadcast(centById(cents)), Seq("cluster_id"))
+      .filter(hasDirection(col("ccn")))
       .withColumn("rq",
         subSplit(zip_with(col("qv"), col("ccv"),
           (x, c) => x / col("qn") - c / col("ccn"))))

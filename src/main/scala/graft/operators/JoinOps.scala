@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables
+import graft.functions.GraftFunctions.decimalSum
 
 /** Temporal join operators the built-in API lacks as single verbs,
   * composed from shuffles Spark already does well.
@@ -19,6 +20,8 @@ import graft.Tables
   * one shuffle on user, then a grouped agg on (user, session).
   */
 object JoinOps {
+
+  import AnalyticsOps.dec
 
   /** Generic ASOF LEFT join: for each left row, attach the latest right
     * row of the same `key` with `right(tsCol) <= left(tsCol)`.
@@ -190,7 +193,7 @@ object JoinOps {
         col("l_shipdate") <= col("o_orderdate") + expr("INTERVAL 60 DAYS"))
       .groupBy(date_trunc("month", col("o_orderdate")).as("order_month"))
       .agg(count(lit(1)).as("n_lineitems"),
-        sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("total_qty"))
+        decimalSum(dec(col("l_quantity"))).cast("double").as("total_qty"))
       .orderBy("order_month")
   }
 
@@ -277,7 +280,7 @@ object JoinOps {
         min(col("ts")).as("session_start"),
         max(col("ts")).as("session_end"),
         count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("session_value"))
+        decimalSum(dec(col("value"))).cast("double").as("session_value"))
       .orderBy("user_id", "session_seq")
   }
 

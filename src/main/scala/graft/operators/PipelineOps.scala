@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.GraftFunctions.decimalSum
 
 /** Corpus-curation operators a large-scale training-data pipeline needs
   * beyond dedup/similarity: deterministic splits, weighted corpus mixing,
@@ -1014,7 +1015,7 @@ object PipelineOps {
         count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("total_chars"),
         sum(col("n_tokens")).as("total_tokens"),
-        (sum(col("n_tokens").cast("decimal(18,6)")) / count(lit(1)))
+        (decimalSum(col("n_tokens").cast("decimal(18,6)")) / count(lit(1)))
           .cast("double").as("avg_doc_tokens"),
         min(col("n_tokens")).as("min_tokens"),
         max(col("n_tokens")).as("max_tokens"),

@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.GraftFunctions.decimalSum
 
 /** Salted join for skewed keys.
   *
@@ -32,16 +33,16 @@ object SkewOps {
     * supplier — hash-identical to the oracle's plain join because the
     * salt column never reaches the output and every (row, match) pair
     * survives replication exactly once. events/users is where real skew
-    * lives; supplier keys keep the oracle cheap. */
+    * lives; supplier keys keep the oracle cheap. The two price columns
+    * ride through the join and the discounted product is formed inside
+    * the exact sum, so it stays on the unscaled-long path. */
   def saltedRevenue(s: SparkSession, dir: String): DataFrame = {
-    val dec = (c: Column) => c.cast(org.apache.spark.sql.types.DecimalType(18, 2))
     val big = Tables.lineitem(s, dir)
-      .select(col("l_suppkey").as("s_suppkey"),
-        (dec(col("l_extendedprice")) * (dec(lit(1)) - dec(col("l_discount")))).as("rev"))
+      .select(col("l_suppkey").as("s_suppkey"), col("l_extendedprice"), col("l_discount"))
     val small = Tables.supplier(s, dir).select(col("s_suppkey"), col("s_name"))
     saltedJoin(big, small, "s_suppkey", salt = 8)
       .groupBy(col("s_name"))
-      .agg(sum(col("rev")).cast("double").as("revenue"),
+      .agg(decimalSum(AnalyticsOps.discPrice).cast("double").as("revenue"),
         count(lit(1)).as("n_items"))
       .orderBy("s_name")
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables
+import graft.functions.GraftFunctions.decimalSum
 
 /** Time-series resampling over the event stream: hourly gap-fill,
   * last-observation-carried-forward, and a truncated (FIR) EWMA.
@@ -36,15 +37,6 @@ object TimeSeriesOps {
       .select(col(keyCol),
         explode(sequence(col("lo"), col("hi"), expr("interval 1 hour"))).as("bucket"))
 
-  /** Per-(user, hour) rollup: event count + exact decimal value sum
-    * (reassociation-safe, so the hash matches the oracle at any
-    * partition count). */
-  private def hourly(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir)
-      .groupBy(col("user_id"), window(col("ts"), "1 hour").getField("start").as("bucket"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(dec(col("value"))).cast("double").as("sum_value"))
-
   private val hourlySql: String =
     """WITH b AS (
       |  SELECT user_id, date_trunc('hour', ts) AS bucket, count(*) AS n_events,
@@ -59,12 +51,14 @@ object TimeSeriesOps {
       |  FROM spine s LEFT JOIN b ON s.user_id = b.user_id AND s.bucket = b.bucket)
       |""".stripMargin
 
-  /** Generic hourly rollup over any (user_id, ts, value) frame — the
-    * shared input tier for [[gapFillOf]]/[[locfOf]]. */
+  /** Per-(user, hour) rollup over any (user_id, ts, value) frame: event
+    * count + exact decimal value sum (reassociation-safe, so the hash
+    * matches the oracle at any partition count) — the shared input tier
+    * for [[gapFillOf]]/[[locfOf]]. */
   private def hourlyOf(ev: DataFrame): DataFrame =
     ev.groupBy(col("user_id"), window(col("ts"), "1 hour").getField("start").as("bucket"))
       .agg(count(lit(1)).as("n_events"),
-        sum(dec(col("value"))).cast("double").as("sum_value"))
+        decimalSum(dec(col("value"))).cast("double").as("sum_value"))
 
   /** Generic API: hourly spine per key (first..last active hour) with
     * zero-filled gaps over any (user_id, ts, value) frame. */

@@ -28,6 +28,10 @@ object EventStream {
       .withWatermark("ts", "1 hour")
       .groupBy(slide.fold(window(col("ts"), "1 hour"))(sl =>
         window(col("ts"), "1 hour", sl)), col("event_type"))
+      // Spark's own `sum` on purpose, the one decimal sum that is not
+      // GraftFunctions.decimalSum: the state store keeps this buffer, and
+      // a different buffer schema would fail every restart from a
+      // checkpoint an earlier build wrote
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
       .select(col("window").getField("start").as(startName), col("event_type"),

@@ -6,9 +6,11 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** A zero vector has no direction: every ANN cosine goes through
-  * [[graft.functions.GraftFunctions.cosineOf]], which is null for it, so
-  * it is never anyone's neighbor and has none itself (SemDedup's rule),
-  * and no plan throws DIVIDE_BY_ZERO under ANSI mode. */
+  * [[graft.functions.GraftFunctions.cosineOf]], which is null for it, and
+  * the PQ family (q_ann_pq, IVFADC, the streaming IVFADC probe) neither
+  * encodes nor probes it, so it is never anyone's neighbor and has none
+  * itself (SemDedup's rule), and no plan throws DIVIDE_BY_ZERO under
+  * ANSI mode. */
 class ZeroVectorAnnSpec extends SparkSpec {
 
   private val zeroId = 3L
@@ -20,17 +22,29 @@ class ZeroVectorAnnSpec extends SparkSpec {
         math.cos(i * i + 1.0)).map(_.toFloat))
   }
 
-  private lazy val dir: String = {
+  /** Twenty-four 16-dim vectors (two dims per PQ subspace), vector 3
+    * all zeros: fewer than `pqShortlist`, so the PQ re-rank sees every
+    * candidate and its top-k is the exact one. */
+  private val vecs16: Seq[(Long, Seq[Float])] = (0L until 24L).map { i =>
+    i -> (if (i == zeroId) Seq.fill(16)(0.0f)
+      else (0 until 16).map(j => math.sin(7.0 * i + 1.3 * j + 1).toFloat))
+  }
+
+  private def dirOf(v: Seq[(Long, Seq[Float])]): String = {
     import spark.implicits._
     val d = java.nio.file.Files.createTempDirectory("graft-zero-vec").toString
-    vecs.toDF("vec_id", "embedding").write.parquet(s"$d/embeddings.parquet")
+    v.toDF("vec_id", "embedding").write.parquet(s"$d/embeddings.parquet")
     d
   }
 
+  private lazy val dir: String = dirOf(vecs)
+  private lazy val dir16: String = dirOf(vecs16)
+
   /** Driver-side exact top-k: the same index-order dot and sqrt norms,
     * ranked by (cosine desc, neighbor asc), zero-norm pairs skipped. */
-  private def expected(queries: Long => Boolean): Set[(Long, Int, Long)] = {
-    val v = vecs.map { case (id, x) => id -> x.map(_.toDouble) }.toMap
+  private def expected(queries: Long => Boolean,
+      of: Seq[(Long, Seq[Float])] = vecs): Set[(Long, Int, Long)] = {
+    val v = of.map { case (id, x) => id -> x.map(_.toDouble) }.toMap
     def dot(a: Seq[Double], b: Seq[Double]) = a.zip(b).foldLeft(0.0) { case (s, (x, y)) => s + x * y }
     val norm = v.map { case (id, x) => id -> math.sqrt(dot(x, x)) }
     v.keys.filter(queries).flatMap { q =>
@@ -68,5 +82,30 @@ class ZeroVectorAnnSpec extends SparkSpec {
     val batch = triples(AnnOps.annIvfSearch(e, cents, assigned))
     assert(got.nonEmpty && got == batch)
     assert(!got.exists { case (q, _, n) => q == zeroId || n == zeroId })
+  }
+
+  private def skipsZero(rows: Set[(Long, Int, Long)]): Boolean =
+    !rows.exists { case (q, _, n) => q == zeroId || n == zeroId }
+
+  test("PQ search neither encodes nor queries a zero vector") {
+    assert(triples(AnnOps.annPq(spark, dir16)) == expected(_ < AnnOps.nQueries, vecs16))
+  }
+
+  test("IVFADC search and its streaming probe skip a zero vector without throwing") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val ivfpq = triples(AnnOps.annIvfPq(spark, dir16))
+    assert(ivfpq.nonEmpty && skipsZero(ivfpq))
+    val (cents, cb, encoded) = AnnOps.ivfpqFor(spark, dir16)
+    val stream = MemoryStream[(Long, Seq[Float])]
+    stream.addData(vecs16)
+    val q = EventStream.ivfpqProbeStream(
+        stream.toDF().toDF("vec_id", "embedding"), cents, cb, encoded)
+      .writeStream.format("memory").queryName("ivfpqprobe_zero").outputMode("update").start()
+    try q.processAllAvailable() finally q.stop()
+    val got = triples(spark.table("ivfpqprobe_zero"))
+    val batch = triples(AnnOps.annIvfPqAdcTopk(
+      AnnOps.embeddingsWithNorm(spark, dir16), cents, cb, encoded))
+    assert(got.nonEmpty && got == batch && skipsZero(got))
   }
 }
