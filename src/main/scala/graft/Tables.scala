@@ -11,9 +11,6 @@ import org.apache.spark.sql.types.StructType
   * deployment would swap in its own catalog/bucketing.
   */
 object Tables {
-  val factTables = Seq("lineitem", "orders", "events", "documents", "embeddings", "customer")
-  val dimTables  = Seq("region", "nation", "supplier", "part")
-
   private val schemas = new SessionCache[StructType]()
 
   /** Parquet read of `dir/name.parquet` with its schema inferred once

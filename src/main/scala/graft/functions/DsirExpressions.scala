@@ -21,8 +21,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The interpreted form allocates every unigram/bigram as a fresh
   * UTF8String, explodes ~2·|words| rows per document, and re-groups
-  * them; this form is one token split, one md5 per feature digested
-  * straight from reused byte buffers, and a 256-slot count array per
+  * them; this form is one token split ([[Words.split]]), one md5 per
+  * feature digested straight from the token bytes
+  * ([[Words.md5FirstByte]]), and a 256-slot count array per
   * document — no feature strings, no per-feature rows, no
   * (doc, bucket) pre-aggregation exchange. Output is the compact
   * (bucket, m) list sorted by bucket, one row per populated bucket.
@@ -58,54 +59,10 @@ case class Md5BucketCounts(child: Expression) extends UnaryExpression {
 }
 
 object Md5BucketCounts {
-  // one digest instance per thread — getInstance per row would dominate
-  // the per-feature work this expression exists to remove
-  private val md5 = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-  // compiled once, same pattern discipline as WindowHashes
-  private val Whitespace = java.util.regex.Pattern.compile("\\s+")
-  private val Space = Array(' '.toByte)
-
   def compute(s: UTF8String): ArrayData = {
-    // replicate split(trim(text), "\s+") exactly: Spark's trim strips
-    // the space character only, then Java-regex split with limit -1
-    // (split's default), which KEEPS a leading/trailing empty token a
-    // non-space separator produces and yields [""] for an empty string
-    val str = s.toString
-    var b0 = 0
-    var e0 = str.length
-    while (b0 < e0 && str.charAt(b0) == ' ') b0 += 1
-    while (e0 > b0 && str.charAt(e0 - 1) == ' ') e0 -= 1
-    val toks = Whitespace.split(str.substring(b0, e0), -1)
-    val tb = new Array[Array[Byte]](toks.length)
-    var j = 0
-    while (j < toks.length) {
-      tb(j) = toks(j).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      j += 1
-    }
-    val counts = new Array[Long](256)
-    val md = md5.get()
-    // unigram features
-    j = 0
-    while (j < tb.length) {
-      md.reset()
-      md.update(tb(j))
-      counts(md.digest()(0) & 0xff) += 1
-      j += 1
-    }
-    // adjacent-bigram features, only for documents with >= 2 tokens
-    // (the interpreted bigramsOf guard)
-    j = 0
-    while (j + 1 < tb.length) {
-      md.reset()
-      md.update(tb(j)); md.update(Space); md.update(tb(j + 1))
-      counts(md.digest()(0) & 0xff) += 1
-      j += 1
-    }
+    val counts = histogram(Words.utf8(Words.split(s)))
     var nonzero = 0
-    j = 0
+    var j = 0
     while (j < 256) { if (counts(j) > 0) nonzero += 1; j += 1 }
     val rows = new Array[Any](nonzero)
     var out = 0
@@ -118,5 +75,21 @@ object Md5BucketCounts {
       j += 1
     }
     new GenericArrayData(rows)
+  }
+
+  /** The 256-slot DSIR histogram of one document's words (as UTF-8):
+    * slot b counts the unigrams and adjacent bigrams whose md5 starts
+    * with byte b. Also the DSIR signal of [[EnsembleArtifacts.score]]. */
+  private[functions] def histogram(tb: Array[Array[Byte]]): Array[Long] = {
+    val counts = new Array[Long](256)
+    var j = 0
+    while (j < tb.length) {
+      counts(Words.md5FirstByte(tb(j))) += 1
+      // adjacent-bigram features, only for documents with >= 2 tokens
+      // (the interpreted bigramsOf guard)
+      if (j + 1 < tb.length) counts(Words.md5FirstByte(tb(j), ' '.toByte, tb(j + 1))) += 1
+      j += 1
+    }
+    counts
   }
 }

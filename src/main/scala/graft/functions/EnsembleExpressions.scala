@@ -1,8 +1,5 @@
 package graft.functions
 
-import java.nio.charset.StandardCharsets
-import java.security.MessageDigest
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -31,16 +28,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * .qualityEnsemble]]):
   *  - The Gopher shape verdict calls [[GopherStats]], the kernel
   *    behind [[TextFunctions.gopherStructCol]]; the repetition flag
-  *    mirrors `repetitionStructCol` (space-only trim, Java-regex `\s+`
-  *    split, three-valued `flagged` when a doc has no bigram).
-  *  - The LM mean-log-prob folds per-distinct-bigram terms in the
-  *    batch operator's sorted (cb0, cw0, m) order, so the rounded
-  *    score is BIT-IDENTICAL to [[graft.operators.QualityModelOps
-  *    .lmPerplexity]], not merely 1e-9-close.
-  *  - The DSIR weight folds per-bucket multiplicities against the
-  *    model's log ratios in bucket-index order (deterministic; the
-  *    sign of the 6dp-rounded sum is the verdict, as in the batch
-  *    and streaming scorers).
+  *    mirrors `repetitionStructCol` over [[Words.split]]'s words
+  *    (three-valued `flagged` when a doc has no bigram).
+  *  - The LM mean-log-prob is [[LmModel.meanLogProb]], the one LM
+  *    fold, so the rounded score is bit-identical to
+  *    [[graft.operators.QualityModelOps.lmPerplexity]].
+  *  - The DSIR weight folds [[Md5BucketCounts]]' 256-slot histogram
+  *    against the model's log ratios in bucket-index order
+  *    (deterministic; the sign of the 6dp-rounded sum is the verdict,
+  *    as in the batch and streaming scorers).
+  *
+  * Only the Gopher call, the repetition flag, the cutoff lookup and
+  * the keep conjunction live here; words, features and the LM fold are
+  * the shared kernels'.
   */
 final case class EnsembleArtifacts(
     lm: LmModel,
@@ -52,34 +52,6 @@ final case class EnsembleArtifacts(
     val m = new java.util.HashMap[String, (Double, Double)](cutTriples.length * 2)
     cutTriples.foreach { case (l, lo, hi) => m.put(l, (lo, hi)) }
     m
-  }
-
-  @transient private lazy val md5Local =
-    new ThreadLocal[MessageDigest] {
-      override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
-    }
-
-  /** Spark's `trim`: spaces (0x20) only, both ends. */
-  private def trimSpaces(s: String): String = {
-    var from = 0
-    var to = s.length
-    while (from < to && s.charAt(from) == ' ') from += 1
-    while (to > from && s.charAt(to - 1) == ' ') to -= 1
-    s.substring(from, to)
-  }
-
-  private val space = ' '.toByte
-
-  /** md5(feature)'s first two hex chars ARE its first byte — the DSIR
-    * bucket index without materializing the hex string. */
-  private def bucketOf(md: MessageDigest, a: String, b: String): Int = {
-    md.reset()
-    md.update(a.getBytes(StandardCharsets.UTF_8))
-    if (b != null) {
-      md.update(space)
-      md.update(b.getBytes(StandardCharsets.UTF_8))
-    }
-    md.digest()(0) & 0xff
   }
 
   private val unscored = UTF8String.fromString("unscored")
@@ -94,75 +66,38 @@ final case class EnsembleArtifacts(
     // ---- Gopher shape rules: the one kernel (null-free for non-null text)
     val gopherKeep = GopherStats.compute(textU).getBoolean(GopherStats.KeepOrdinal)
 
-    val ws = EnsembleArtifacts.Whitespace.split(trimSpaces(textU.toString), -1)
+    val ws = Words.split(textU)
     val nWords = ws.length
-    val nW = nWords.toDouble
     val distinct = new java.util.HashSet[String](nWords * 2)
     var i = 0
     while (i < nWords) {
       distinct.add(ws(i))
       i += 1
     }
+    val bgCounts = LmModel.bigramCounts(ws)
+    val nBigrams = nWords - 1
 
     // ---- repetition flag (TextFunctions.repetitionStructCol), with
     // the batch three-valued semantics when the doc has no bigram
-    val dupFrac = 1.0 - distinct.size / nW
-    val nBigrams = if (nWords >= 2) nWords - 1 else 0
-    val md = md5Local.get()
-
-    // one pass builds the distinct-bigram multiplicities (repetition +
-    // LM) and the DSIR bucket histogram (unigrams ++ bigrams)
-    val bgCounts = new java.util.HashMap[String, Array[Long]](nBigrams * 2)
-    val buckets = new Array[Long](256)
-    i = 0
-    while (i < nWords) {
-      buckets(bucketOf(md, ws(i), null)) += 1L
-      if (i < nWords - 1) {
-        buckets(bucketOf(md, ws(i), ws(i + 1))) += 1L
-        val bg = ws(i) + " " + ws(i + 1)
-        val slot = bgCounts.get(bg)
-        if (slot == null) bgCounts.put(bg, Array(1L)) else slot(0) += 1L
-      }
-      i += 1
-    }
-
     var repFlag: java.lang.Boolean = null
-    if (dupFrac > TextFunctions.dupWordFracMax) repFlag = java.lang.Boolean.TRUE
+    if (1.0 - distinct.size / nWords.toDouble > TextFunctions.dupWordFracMax)
+      repFlag = java.lang.Boolean.TRUE
     else if (nBigrams >= 1) {
       var maxMult = 0L
-      val it0 = bgCounts.values().iterator()
-      while (it0.hasNext) {
-        val m = it0.next()(0)
+      val it = bgCounts.values().iterator()
+      while (it.hasNext) {
+        val m = it.next()(0)
         if (m > maxMult) maxMult = m
       }
       repFlag = java.lang.Boolean.valueOf(
         maxMult.toDouble / nBigrams > TextFunctions.topBigramFracMax)
     }
 
-    // ---- LM mean log-prob: the batch operator's exact sorted fold
-    // over per-distinct-bigram (cb0, cw0, m) terms
+    // ---- LM mean log-prob: the one LM fold, cut per language
     var bucket: UTF8String = tail
     if (nBigrams == 0) bucket = unscored
     else {
-      val terms = new Array[(Long, Long, Long)](bgCounts.size())
-      val it = bgCounts.entrySet().iterator()
-      i = 0
-      while (it.hasNext) {
-        val e = it.next()
-        val bg = e.getKey
-        terms(i) = (lm.bigramCount(bg), lm.contextCount(bg.substring(0, bg.indexOf(' '))),
-          e.getValue()(0))
-        i += 1
-      }
-      java.util.Arrays.sort(terms, Ordering[(Long, Long, Long)])
-      var lp = 0.0
-      i = 0
-      while (i < terms.length) {
-        val t = terms(i)
-        lp += t._3.toDouble * (Math.log(t._1 + 1.0) - Math.log((t._2 + lm.v).toDouble))
-        i += 1
-      }
-      val mlp = LmModel.round6(lp / nBigrams)
+      val mlp = lm.meanLogProb(bgCounts, nBigrams)
       val cut = if (langU == null) null else cuts.get(langU.toString)
       if (cut != null) {
         if (mlp >= cut._2) bucket = head
@@ -171,7 +106,9 @@ final case class EnsembleArtifacts(
     }
 
     // ---- DSIR target-likeness: bucket-index-order fold of the
-    // broadcast log ratios (deterministic; sign of the 6dp sum)
+    // model's log ratios over Md5BucketCounts' histogram (sign of the
+    // 6dp sum)
+    val buckets = Md5BucketCounts.histogram(Words.utf8(ws))
     var lw = 0.0
     i = 0
     while (i < 256) {
@@ -193,9 +130,6 @@ final case class EnsembleArtifacts(
 }
 
 object EnsembleArtifacts {
-  // compiled once: String.split("\\s+") would recompile it per document
-  private val Whitespace = java.util.regex.Pattern.compile("\\s+")
-
   /** Collapse the trained standing frames into the closure value —
     * vocabulary-sized artifact loads, the [[graft.ArtifactStore]]
     * class of driver-side collect (bounded by the trained model, never

@@ -33,7 +33,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * Java's `\s` is `[ \t\n\x0B\f\r]`: six ASCII bytes that never occur
   * inside a multi-byte UTF-8 sequence, so the split, the letter test
   * and the stopword compare run on the UTF-8 bytes directly, with no
-  * string decode, no regex and no per-word allocation.
+  * string decode, no regex and no per-word allocation. That is why this
+  * kernel keeps its own scan instead of [[Words.split]], the word
+  * boundary of the other text kernels: every stat here is a count or a
+  * length of words, none needs a word as a string, so the decode and
+  * the String per word the split yields would be pure cost.
   *
   * Assumes valid UTF-8 (Parquet strings are). On malformed bytes the
   * word boundaries, `n_words`, `n_alpha` and `n_stop` are still those

@@ -10,10 +10,11 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The trained bigram-LM model as a closure value — the one driver
-  * copy of the LM tables, shared by the streaming scorer ([[LmScore]])
-  * and the fused quality gate ([[EnsembleArtifacts]]). Vocabulary-sized
-  * driver collect ([[LmModel.of]] bounds it), O(1) hash probes per
-  * bigram at score time. */
+  * copy of the LM tables and the one LM fold, shared by the streaming
+  * scorer ([[LmScore]]) and the fused quality gate
+  * ([[EnsembleArtifacts]]). Vocabulary-sized driver collect
+  * ([[LmModel.of]] bounds it), O(1) hash probes per distinct bigram at
+  * score time. */
 final case class LmModel(
     cbPairs: Array[(String, Long)],
     cwPairs: Array[(String, Long)]) extends Serializable {
@@ -32,45 +33,67 @@ final case class LmModel(
     m
   }
 
-  /** Reference count of bigram `bg`, 0 when unseen. */
-  private[functions] def bigramCount(bg: String): Long = {
-    val c = cb.get(bg)
-    if (c == null) 0L else c.longValue()
-  }
-
-  /** Reference count of context word `w1`, 0 when unseen. */
-  private[functions] def contextCount(w1: String): Long = {
-    val c = cw.get(w1)
+  private def countOf(m: java.util.HashMap[String, java.lang.Long], k: String): Long = {
+    val c = m.get(k)
     if (c == null) 0L else c.longValue()
   }
 
   /** Score one document: (n_bigrams, mean_log_prob), both null for a
-    * <2-word document — exactly the map-fold scorer's `when` guards.
-    * The fold is the POSITIONAL per-occurrence order the map-fold
-    * computed, so the doubles are bit-identical to the old stream,
-    * and 1e-9-close to the batch operator's sorted fold. */
+    * <2-word document — the batch operator's unmatched left join. */
   def score(textU: UTF8String): InternalRow = {
-    val text = textU.toString
-    var b0 = 0
-    var e0 = text.length
-    while (b0 < e0 && text.charAt(b0) == ' ') b0 += 1
-    while (e0 > b0 && text.charAt(e0 - 1) == ' ') e0 -= 1
-    val ws = LmModel.Whitespace.split(text.substring(b0, e0), -1)
+    val ws = Words.split(textU)
     if (ws.length < 2) return new GenericInternalRow(Array[Any](null, null))
     val n = ws.length - 1
-    var lp = 0.0
+    new GenericInternalRow(Array[Any](n.toLong, meanLogProb(LmModel.bigramCounts(ws), n)))
+  }
+
+  /** The LM fold: the 6dp mean over `n` bigram occurrences of
+    * m·(log(cb+1) − log(cw+V)), one term per distinct bigram (`bgCounts`
+    * from [[LmModel.bigramCounts]]), summed in ascending (cb, cw, m)
+    * order with Spark's `log` (StrictMath). Those are the batch
+    * operator's terms, order and log ([[graft.operators.QualityModelOps
+    * .lmPerplexity]] folds `sort_array(collect_list(struct(cb0, cw0, m,
+    * v)))`), so the score is bit-identical to it. */
+  private[functions] def meanLogProb(
+      bgCounts: java.util.HashMap[String, Array[Long]], n: Int): Double = {
+    val terms = new Array[(Long, Long, Long)](bgCounts.size())
+    val it = bgCounts.entrySet().iterator()
     var i = 0
-    while (i < n) {
-      lp += Math.log(bigramCount(ws(i) + " " + ws(i + 1)) + 1.0) -
-        Math.log((contextCount(ws(i)) + v).toDouble)
+    while (it.hasNext) {
+      val e = it.next()
+      val bg = e.getKey
+      terms(i) = (countOf(cb, bg), countOf(cw, bg.substring(0, bg.indexOf(' '))),
+        e.getValue()(0))
       i += 1
     }
-    new GenericInternalRow(Array[Any](n.toLong, LmModel.round6(lp / n)))
+    java.util.Arrays.sort(terms, Ordering[(Long, Long, Long)])
+    var lp = 0.0
+    i = 0
+    while (i < terms.length) {
+      val t = terms(i)
+      lp += t._3.toDouble *
+        (StrictMath.log((t._1 + 1L).toDouble) - StrictMath.log((t._2 + v).toDouble))
+      i += 1
+    }
+    LmModel.round6(lp / n)
   }
 }
 
 object LmModel {
-  private val Whitespace = java.util.regex.Pattern.compile("\\s+")
+  /** The distinct adjacent bigrams "w1 w2" of `ws`, each with its
+    * multiplicity in a one-slot array. */
+  private[functions] def bigramCounts(
+      ws: Array[String]): java.util.HashMap[String, Array[Long]] = {
+    val m = new java.util.HashMap[String, Array[Long]](math.max(ws.length - 1, 0) * 2)
+    var i = 0
+    while (i + 1 < ws.length) {
+      val bg = ws(i) + " " + ws(i + 1)
+      val slot = m.get(bg)
+      if (slot == null) m.put(bg, Array(1L)) else slot(0) += 1L
+      i += 1
+    }
+    m
+  }
 
   /** HALF_UP to 6 decimals over the double's shortest decimal string —
     * the rounding every closure scorer applies to a log score. */
@@ -113,12 +136,13 @@ object LmModel {
 }
 
 /** `graft_lm_score(text)` under a captured [[LmModel]]: per-document
-  * (n_bigrams, mean_log_prob) struct — the native form of the
-  * streaming map-fold LM scorer, which paid an interpreted md5-free
-  * but LINEAR MapType probe (O(|vocab|)) per bigram; this is one JVM
-  * loop with O(1) hash probes. Null text yields a null struct (the
-  * old plan emitted the row with null fields — callers read the
-  * fields through getField, which nulls identically). */
+  * (n_bigrams, mean_log_prob) struct from [[LmModel.score]] — the
+  * words of [[Words.split]] and the one LM fold, so the score is
+  * bit-identical to [[graft.operators.QualityModelOps.lmPerplexity]]
+  * (LmStreamSpec). One JVM loop with O(1) hash probes per distinct
+  * bigram, where a MapType broadcast would probe linearly. Null text
+  * yields a null struct; callers read the fields through getField,
+  * which nulls them as the batch left join does. */
 case class LmScore(child: Expression, model: LmModel) extends UnaryExpression {
   override def dataType: DataType = StructType(Seq(
     StructField("n_bigrams", LongType, nullable = true),
@@ -149,12 +173,16 @@ case class LmScore(child: Expression, model: LmModel) extends UnaryExpression {
   * centroid array, natively — the probe-selection / assignment kernel
   * of the IVF family ([[graft.operators.AnnOps]]). Value-identical to
   * the interpreted chain `slice(reverse(array_sort(transform(cents,
-  * c -> struct(dot(v,cv)/(norm*cn) AS csim, -id AS nid)))), 1, n)`
+  * c -> struct(cosineOf(v, cv, norm, cn) AS csim, -id AS nid)))), 1, n)`
   * (and, at n = 1, to `-array_max(...).nid`): csim is the same
-  * index-order dot fold [[DotProduct]] computes, ordering is csim
-  * descending with Spark's float semantics (NaN above everything,
-  * -0.0 < 0.0 — exactly java.lang.Double.compare) and ties break to
-  * the smaller centroid id. The interpreted form allocated a K-struct
+  * index-order dot fold [[DotProduct]] computes over `norm * cn`,
+  * ordering is csim descending with Spark's float semantics (NaN above
+  * everything, -0.0 < 0.0 — exactly java.lang.Double.compare) and ties
+  * break to the smaller centroid id. A zero norm on either side gives
+  * no similarity (cosineOf's null): such a centroid ranks after every
+  * scored one, ties again to the smaller id, so a zero-norm centroid
+  * attracts no vector and a zero query probes in id order. The
+  * interpreted form allocated a K-struct
   * array + a sort + a reverse per ROW; this is one primitive loop. */
 case class CentroidProbes(v: Expression, norm: Expression, cents: Expression,
     nprobe: Int) extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
@@ -200,6 +228,9 @@ object CentroidProbes {
     val k = cents.numElements()
     val ids = new Array[Long](k)
     val sims = new Array[Double](k)
+    // a zero norm on either side has no direction, hence no similarity
+    // (the hasDirection rule of GraftFunctions.cosineOf)
+    val scored = new Array[Boolean](k)
     val dim = v.numElements()
     var i = 0
     while (i < k) {
@@ -207,18 +238,24 @@ object CentroidProbes {
       ids(i) = c.getLong(0)
       val cv = c.getArray(1)
       val cn = c.getDouble(2)
-      // the same index-order fold and min-length rule as DotProduct
-      val n = math.min(dim, cv.numElements())
-      var acc = 0.0
-      var j = 0
-      while (j < n) { acc += v.getDouble(j) * cv.getDouble(j); j += 1 }
-      sims(i) = acc / (norm * cn)
+      scored(i) = norm > 0 && cn > 0
+      if (scored(i)) {
+        // the same index-order fold and min-length rule as DotProduct
+        val n = math.min(dim, cv.numElements())
+        var acc = 0.0
+        var j = 0
+        while (j < n) { acc += v.getDouble(j) * cv.getDouble(j); j += 1 }
+        sims(i) = acc / (norm * cn)
+      }
       i += 1
     }
     val order = Array.tabulate(k)(Integer.valueOf)
     java.util.Arrays.sort(order, (x: Integer, y: Integer) => {
-      // csim DESC with Spark float semantics, tie -> smaller id
-      val c = java.lang.Double.compare(sims(y), sims(x))
+      // scored first, then csim DESC with Spark float semantics, tie ->
+      // smaller id
+      val c =
+        if (scored(x) != scored(y)) (if (scored(x)) -1 else 1)
+        else java.lang.Double.compare(sims(y), sims(x))
       if (c != 0) c else java.lang.Long.compare(ids(x), ids(y))
     })
     val m = math.min(nprobe, k)

@@ -53,44 +53,16 @@ object ShingleHashes {
   /** Seed used by Spark's `xxhash64` function. */
   final val Seed = 42L
 
-  /** One pass over the UTF-8 bytes: find the single-space word
-    * boundaries, hash the byte span of each n-word window, sort-dedupe.
-    * Returns an empty array when the document has fewer than n words. */
+  /** Hash the byte span of each n-word window of the single-space
+    * words ([[Words.spaceSpans]]), sort-dedupe. Returns an empty array
+    * when the document has fewer than n words. */
   def compute(s: UTF8String, n: Int): ArrayData = {
-    val base = s.getBaseObject
-    val off = s.getBaseOffset
-    val len = s.numBytes()
-    // word j spans [starts(j), ends(j)) in byte offsets
-    var words = 1
-    var i = 0
-    while (i < len) {
-      if (s.getByte(i) == ' '.toByte) words += 1
-      i += 1
-    }
-    if (words < n) return ArrayData.toArrayData(Array.emptyLongArray)
-    val starts = new Array[Int](words)
-    val ends = new Array[Int](words)
-    var w = 0
-    starts(0) = 0
-    i = 0
-    while (i < len) {
-      if (s.getByte(i) == ' '.toByte) {
-        ends(w) = i
-        w += 1
-        starts(w) = i + 1
-      }
-      i += 1
-    }
-    ends(w) = len
-    val m = words - n + 1
+    val sp = Words.spaceSpans(s, n)
+    if (sp == null) return ArrayData.toArrayData(Array.emptyLongArray)
+    val m = sp.count - n + 1
     val hs = new Array[Long](m)
     var j = 0
-    while (j < m) {
-      val a = starts(j)
-      val b = ends(j + n - 1)
-      hs(j) = XXH64.hashUnsafeBytes(base, off + a, b - a, Seed)
-      j += 1
-    }
+    while (j < m) { hs(j) = sp.hash(j, j + n); j += 1 }
     java.util.Arrays.sort(hs)
     // in-place unique on the sorted array
     var out = 0
@@ -188,10 +160,8 @@ object MinHashSignature {
   * Semantics are value-identical to the declarative chain
   * `transform(sequence(0, size(ws)-w), i -> xxhash64(array_join(
   * slice(ws, i+1, w), " ")))` over `ws = split(trim(text), "\\s+")`
-  * for documents with at least w words (spec-pinned): tokens are the
-  * Java-regex `\s+` splits of the space-trimmed text (a leading
-  * non-space separator yields the same empty first token `split`
-  * produces), each window hash is the xxhash64 (seed 42) of the
+  * for documents with at least w words (spec-pinned): tokens are
+  * [[Words.split]]'s, each window hash is the xxhash64 (seed 42) of the
   * window's tokens joined by single spaces, and windows come back in
   * position order WITH duplicates — unlike [[ShingleHashes]], which
   * sort-dedupes, position is the payload here. Documents with fewer
@@ -226,53 +196,15 @@ case class WindowHashes(child: Expression, w: Int) extends UnaryExpression {
 }
 
 object WindowHashes {
-  // compiled once — String.split("\\s+") would recompile the pattern
-  // per document, a real setup cost in the corpus-scan hot loop
-  private val Whitespace = java.util.regex.Pattern.compile("\\s+")
-
   def compute(s: UTF8String, w: Int): ArrayData = {
-    // replicate split(trim(text), "\s+") exactly: Spark's trim strips
-    // the space character only, then Java-regex split (limit -1)
-    val str = s.toString
-    var b0 = 0
-    var e0 = str.length
-    while (b0 < e0 && str.charAt(b0) == ' ') b0 += 1
-    while (e0 > b0 && str.charAt(e0 - 1) == ' ') e0 -= 1
-    val toks = Whitespace.split(str.substring(b0, e0), -1)
+    val toks = Words.split(s)
     if (toks.length < w) return ArrayData.toArrayData(Array.emptyLongArray)
-    // one normalized buffer: tokens joined by single spaces, word
-    // boundaries recorded — every window hash is a span of this buffer
-    val tb = new Array[Array[Byte]](toks.length)
-    var total = toks.length - 1
-    var j = 0
-    while (j < toks.length) {
-      tb(j) = toks(j).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      total += tb(j).length
-      j += 1
-    }
-    val buf = new Array[Byte](total)
-    val starts = new Array[Int](toks.length)
-    val ends = new Array[Int](toks.length)
-    var pos = 0
-    j = 0
-    while (j < toks.length) {
-      if (j > 0) { buf(pos) = ' '.toByte; pos += 1 }
-      starts(j) = pos
-      System.arraycopy(tb(j), 0, buf, pos, tb(j).length)
-      pos += tb(j).length
-      ends(j) = pos
-      j += 1
-    }
+    // every window hash is a span of the single-space joined buffer
+    val sp = Words.joined(toks)
     val m = toks.length - w + 1
     val hs = new Array[Long](m)
-    j = 0
-    while (j < m) {
-      val a = starts(j)
-      val b = ends(j + w - 1)
-      hs(j) = XXH64.hashUnsafeBytes(buf,
-        org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + a, b - a, ShingleHashes.Seed)
-      j += 1
-    }
+    var j = 0
+    while (j < m) { hs(j) = sp.hash(j, j + w); j += 1 }
     ArrayData.toArrayData(hs)
   }
 }
@@ -281,14 +213,13 @@ object WindowHashes {
   * of [[graft.operators.DedupOps.chunkDedupOf]]. Value-identical to
   * `transform(sequence(0, ceil(len(ws)/n)-1), i ->
   * array_join(slice(ws, i*n+1, n), " "))` over
-  * `ws = split(trim(text), "\s+")` (spec-pinned): tokens are the
-  * Java-regex splits of the space-trimmed text (WindowHashes'
-  * tokenizer), chunk i covers tokens [i·n, i·n+n) joined by single
+  * `ws = split(trim(text), "\s+")` (spec-pinned): tokens are
+  * [[Words.split]]'s, chunk i covers tokens [i·n, i·n+n) joined by single
   * spaces (the tail chunk takes what remains), and `posexplode` over
   * the result reproduces the old (pos, chunk) rows exactly. The
   * interpreted form evaluated an array_join(slice(...)) expression
   * tree per chunk; this is one split, one normalized buffer, and one
-  * byte copy per chunk. */
+  * view of it per chunk. */
 case class ChunkStrings(child: Expression, n: Int) extends UnaryExpression {
   require(n >= 1, "chunk width must be >= 1")
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -312,49 +243,13 @@ case class ChunkStrings(child: Expression, n: Int) extends UnaryExpression {
 }
 
 object ChunkStrings {
-  private val Whitespace = java.util.regex.Pattern.compile("\\s+")
-
   def compute(s: UTF8String, n: Int): ArrayData = {
-    // replicate split(trim(text), "\s+"): Spark trim strips spaces
-    // only, then Java-regex split with limit -1
-    val str = s.toString
-    var b0 = 0
-    var e0 = str.length
-    while (b0 < e0 && str.charAt(b0) == ' ') b0 += 1
-    while (e0 > b0 && str.charAt(e0 - 1) == ' ') e0 -= 1
-    val toks = Whitespace.split(str.substring(b0, e0), -1)
-    // normalized buffer: tokens joined by single spaces (the same
-    // bytes array_join produces for any slice of consecutive tokens)
-    val tb = new Array[Array[Byte]](toks.length)
-    var total = toks.length - 1
-    var j = 0
-    while (j < toks.length) {
-      tb(j) = toks(j).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      total += tb(j).length
-      j += 1
-    }
-    val buf = new Array[Byte](math.max(total, 0))
-    val starts = new Array[Int](toks.length)
-    val ends = new Array[Int](toks.length)
-    var pos = 0
-    j = 0
-    while (j < toks.length) {
-      if (j > 0) { buf(pos) = ' '.toByte; pos += 1 }
-      starts(j) = pos
-      System.arraycopy(tb(j), 0, buf, pos, tb(j).length)
-      pos += tb(j).length
-      ends(j) = pos
-      j += 1
-    }
-    val m = (toks.length + n - 1) / n
+    // chunks are views of one fresh joined buffer, never reused
+    val sp = Words.joined(Words.split(s))
+    val m = (sp.count + n - 1) / n
     val out = new Array[UTF8String](m)
     var i = 0
-    while (i < m) {
-      val a = starts(i * n)
-      val b = ends(math.min(i * n + n, toks.length) - 1)
-      out(i) = UTF8String.fromBytes(java.util.Arrays.copyOfRange(buf, a, b))
-      i += 1
-    }
+    while (i < m) { out(i) = sp.view(i * n, math.min(i * n + n, sp.count)); i += 1 }
     ArrayData.toArrayData(out)
   }
 }
@@ -505,38 +400,16 @@ case class ShingleStrings(child: Expression, n: Int) extends UnaryExpression {
 
 object ShingleStrings {
   def compute(s: UTF8String, n: Int): ArrayData = {
-    val len = s.numBytes()
-    var words = 1
-    var i = 0
-    while (i < len) {
-      if (s.getByte(i) == ' '.toByte) words += 1
-      i += 1
-    }
-    if (words < n) return ArrayData.toArrayData(Array.empty[UTF8String])
-    val starts = new Array[Int](words)
-    val ends = new Array[Int](words)
-    var w = 0
-    starts(0) = 0
-    i = 0
-    while (i < len) {
-      if (s.getByte(i) == ' '.toByte) {
-        ends(w) = i
-        w += 1
-        starts(w) = i + 1
-      }
-      i += 1
-    }
-    ends(w) = len
-    val m = words - n + 1
+    val sp = Words.spaceSpans(s, n)
+    if (sp == null) return ArrayData.toArrayData(Array.empty[UTF8String])
+    val m = sp.count - n + 1
     // first-occurrence dedupe by string content; each emitted shingle
     // is a fresh byte copy (the input buffer is row-reused upstream)
     val seen = new java.util.HashSet[UTF8String](m * 2)
     val out = new java.util.ArrayList[UTF8String](m)
     var j = 0
     while (j < m) {
-      val a = starts(j)
-      val b = ends(j + n - 1)
-      val view = UTF8String.fromAddress(s.getBaseObject, s.getBaseOffset + a, b - a)
+      val view = sp.view(j, j + n)
       if (seen.add(view)) out.add(view.clone())
       j += 1
     }
@@ -553,7 +426,9 @@ object ShingleStrings {
   * ±count per distinct word, which is [[SimHashAgg]]'s fold — and bit
   * j of the result is set iff its counter is > 0, the same
   * finalization rule. Replaces a per-word explode + a (doc, word)
-  * aggregation exchange with a scan projection. */
+  * aggregation exchange with a scan projection. It hashes each word as
+  * its scan finds it rather than through [[Words.spaceSpans]], which
+  * would allocate two span arrays per document for one use of each. */
 case class SimHash64(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
 

@@ -1,5 +1,7 @@
 package graft.functions
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -13,11 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * followed by a per-document `groupBy(word).count` (spec-pinned in
   * TokenCountsSpec).
   *
-  * Tokenization replicates the interpreted chain exactly (the
-  * [[Md5BucketCounts]] discipline): Spark's `trim` strips the space
-  * character only, then Java-regex `\s+` split with limit -1, which
-  * keeps the leading empty token a non-space separator produces and
-  * yields [""] for an empty string.
+  * Tokenization is the interpreted chain's, [[Words.split]].
   *
   * Why it exists (guide §2.3 "aggregate before you shuffle"): the
   * interpreted form explodes one row PER TOKEN OCCURRENCE and then
@@ -59,16 +57,8 @@ case class TokenCounts(child: Expression) extends UnaryExpression {
 }
 
 object TokenCounts {
-  private val Whitespace = java.util.regex.Pattern.compile("\\s+")
-
   def compute(s: UTF8String): ArrayData = {
-    // replicate split(trim(text), "\s+") exactly — see Md5BucketCounts
-    val str = s.toString
-    var b0 = 0
-    var e0 = str.length
-    while (b0 < e0 && str.charAt(b0) == ' ') b0 += 1
-    while (e0 > b0 && str.charAt(e0 - 1) == ' ') e0 -= 1
-    val toks = Whitespace.split(str.substring(b0, e0), -1)
+    val toks = Words.split(s)
     // first-occurrence order: LinkedHashMap keeps output deterministic
     val counts = new java.util.LinkedHashMap[String, Array[Long]](
       math.max(16, toks.length * 2))
@@ -98,7 +88,8 @@ object TokenCounts {
   *
   * The bucket of (row, token) is the first byte of
   * md5("row" + "#" + token) — exactly the integer the two hex chars
-  * `substring(md5(concat_ws("#", row, tok)), 1, 2)` spell. The
+  * `substring(md5(concat_ws("#", row, tok)), 1, 2)` spell
+  * ([[Words.md5FirstByte]]); tokens are [[Words.split]]'s. The
   * interpreted form allocates a concat string and a full md5 hex
   * rendering per (occurrence, row) — depth× the exploded token
   * stream; this form is one token split and depth digests per
@@ -139,35 +130,17 @@ case class CmsBucketCounts(child: Expression, depth: Int) extends UnaryExpressio
 }
 
 object CmsBucketCounts {
-  private val md5 = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-  private val Whitespace = java.util.regex.Pattern.compile("\\s+")
+  // concat_ws("#", row, tok) starts with the row's decimal rendering
+  private val rowBytes = Array.tabulate(16)(r => String.valueOf(r).getBytes(UTF_8))
 
   def compute(s: UTF8String, depth: Int): ArrayData = {
-    // replicate split(trim(text), "\s+") exactly — see Md5BucketCounts
-    val str = s.toString
-    var b0 = 0
-    var e0 = str.length
-    while (b0 < e0 && str.charAt(b0) == ' ') b0 += 1
-    while (e0 > b0 && str.charAt(e0 - 1) == ' ') e0 -= 1
-    val toks = Whitespace.split(str.substring(b0, e0), -1)
-    val md = md5.get()
+    val tb = Words.utf8(Words.split(s))
     val counts = new Array[Long](depth * 256)
     var j = 0
-    while (j < toks.length) {
-      val tokBytes = toks(j).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    while (j < tb.length) {
       var r = 0
       while (r < depth) {
-        md.reset()
-        // concat_ws("#", row, tok): the row's decimal rendering, '#',
-        // then the token bytes (depth <= 16 keeps the row one digit
-        // only up to 9; render generally anyway)
-        md.update(String.valueOf(r).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        md.update('#'.toByte)
-        md.update(tokBytes)
-        counts(r * 256 + (md.digest()(0) & 0xff)) += 1
+        counts(r * 256 + Words.md5FirstByte(rowBytes(r), '#'.toByte, tb(j))) += 1
         r += 1
       }
       j += 1

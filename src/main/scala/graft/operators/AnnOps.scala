@@ -602,15 +602,10 @@ object AnnOps {
     cents
   }
 
-  /** Cluster assignment: nearest trained centroid by cosine. Pure
-    * map-side — the k centroids ride the plan as a broadcast scalar and
-    * the argmax is per-row array math, so assignment adds zero shuffles
-    * at any scale. */
-  def assignments(s: SparkSession, dir: String): DataFrame =
-    assignmentsOf(embeddingsWithNorm(s, dir), centroids(s, dir))
-
-  /** Generic API: assign any (vec_id, v, norm) frame to the given
-    * centroid frame. */
+  /** Cluster assignment of any (vec_id, v, norm) frame: nearest
+    * centroid by cosine. Pure map-side — the k centroids ride the plan
+    * as a broadcast scalar and the argmax is per-row array math, so
+    * assignment adds zero shuffles at any scale. */
   def assignmentsOf(e: DataFrame, cents: DataFrame): DataFrame =
     e.crossJoin(broadcast(centArr(cents)))
       .select(col("vec_id"), col("v"), col("norm"),

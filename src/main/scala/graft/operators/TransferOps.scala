@@ -31,14 +31,10 @@ import graft.Tables
   */
 object TransferOps {
 
-  private val gdriveEp = "gdrive-ep"
-  private val gdriveRoot = "/gdrive"
+  import VersionOps.{gdriveEp, gdriveRoot}
+
   private val missingErr = "Globus destination URI must include endpoint ID and path"
   private val mixedErr = "All datasets must come from the same globus endpoint"
-
-  /** Python urllib.parse.unquote over the query string (parse_qs
-    * decodes percent-escapes; `+` survives as itself). */
-  private def unquote(c: Column): Column = url_decode(regexp_replace(c, "\\+", "%2B"))
 
   /** Synthetic two-URL submissions exercising every branch: same-endpoint
     * app links, gdrive pairs, destination-form standardization, mixed
@@ -77,19 +73,12 @@ object TransferOps {
       concat(lit("1."), (col("doc_id") % 3).cast("string")).as("version"),
       posexplode(array(urlFor(0), urlFor(1))).as(Seq("item_idx", "url")))
 
-    val isGdrive = col("url").rlike("^(gdrive|google|googledrive)://")
-    val q = unquote(regexp_extract(col("url"), "\\?(.*)$", 1))
-    // destination_* → origin_* standardization is the fallback order
-    val ep = when(instr(q, "origin_id=") > 0, regexp_extract(q, "origin_id=([^&]*)", 1))
-      .when(instr(q, "destination_id=") > 0, regexp_extract(q, "destination_id=([^&]*)", 1))
-    val pth = when(instr(q, "origin_path=") > 0, regexp_extract(q, "origin_path=([^&]*)", 1))
-      .when(instr(q, "destination_path=") > 0, regexp_extract(q, "destination_path=([^&]*)", 1))
+    val VersionOps.GlobusUri(isGdrive, gpath, ep, pth) = VersionOps.globusUri(col("url"))
     val parsed = subs
       .withColumn("src_ep", when(isGdrive, lit(gdriveEp)).otherwise(ep))
-      .withColumn("src_path",
-        when(isGdrive, concat(lit(gdriveRoot),
-          regexp_replace(col("url"), "^(gdrive|google|googledrive)://", "")))
-          .otherwise(pth))
+      // the gateway root plus the raw scheme-stripped path (the
+      // normalizer adds a missing leading slash; this rule does not)
+      .withColumn("src_path", when(isGdrive, concat(lit(gdriveRoot), gpath)).otherwise(pth))
       .withColumn("bad_url", (!isGdrive) && (ep.isNull || pth.isNull))
 
     val w = Window.partitionBy(col("submission_id"))

@@ -275,8 +275,8 @@ object VersionOps {
 
   // ------------------------------------------- normalize_globus_uri
 
-  private val gdriveEp = "gdrive-ep"
-  private val gdriveRoot = "/gdrive"
+  private[operators] val gdriveEp = "gdrive-ep"
+  private[operators] val gdriveRoot = "/gdrive"
 
   /** The five Globus web-app link forms of utils.py:7-14, verbatim
     * (Java regex supports the same lookaheads; rlike = re.search). */
@@ -290,6 +290,29 @@ object VersionOps {
   /** Python `urllib.parse.unquote`: %XX decoded, literal `+` preserved —
     * url_decode is form decoding (`+` → space), so escape `+` first. */
   private def unquote(c: Column): Column = url_decode(regexp_replace(c, "\\+", "%2B"))
+
+  /** The parts of a Globus URI that [[normalizeUriCols]] and
+    * [[TransferOps.transferItems]] both read: the gdrive flag (a
+    * gdrive/google/googledrive scheme), the path after that scheme, and
+    * the endpoint and path of the percent-decoded query — `origin_id=`
+    * falling back to `destination_id=` (the web-app's destination_* →
+    * origin_* standardization), likewise `origin_path=` and
+    * `destination_path=`. Each caller maps the gdrive path its own way. */
+  private[operators] final case class GlobusUri(
+      isGdrive: Column, gdrivePath: Column, ep: Column, path: Column)
+
+  private[operators] def globusUri(uri: Column): GlobusUri = {
+    // urlparse().query = after the first '?' (fragment-free synthetic data)
+    val q = unquote(regexp_extract(uri, "\\?(.*)$", 1))
+    val gdriveScheme = "^(gdrive|google|googledrive)://"
+    GlobusUri(
+      uri.rlike(gdriveScheme),
+      regexp_replace(uri, gdriveScheme, ""),
+      when(instr(q, "origin_id=") > 0, regexp_extract(q, "origin_id=([^&]*)", 1))
+        .when(instr(q, "destination_id=") > 0, regexp_extract(q, "destination_id=([^&]*)", 1)),
+      when(instr(q, "origin_path=") > 0, regexp_extract(q, "origin_path=([^&]*)", 1))
+        .when(instr(q, "destination_path=") > 0, regexp_extract(q, "destination_path=([^&]*)", 1)))
+  }
 
   /** Python `urllib.parse.quote` (safe='/'): space → %20 (not `+`),
     * slashes kept. url_encode gives form encoding; undo the two deltas. */
@@ -308,14 +331,7 @@ object VersionOps {
     * through. Pure codegen'd string expressions — no UDF, no shuffle. */
   def normalizeUriCols(uri: Column): Seq[Column] = {
     val isLinkForm = globusLinkForms.map(uri.rlike).reduce(_ || _)
-    // urlparse().query = after the first '?' (fragment-free synthetic data)
-    val q = unquote(regexp_extract(uri, "\\?(.*)$", 1))
-    val ep = when(instr(q, "origin_id=") > 0, regexp_extract(q, "origin_id=([^&]*)", 1))
-      .when(instr(q, "destination_id=") > 0, regexp_extract(q, "destination_id=([^&]*)", 1))
-    val path = when(instr(q, "origin_path=") > 0, regexp_extract(q, "origin_path=([^&]*)", 1))
-      .when(instr(q, "destination_path=") > 0, regexp_extract(q, "destination_path=([^&]*)", 1))
-    val isGdrive = uri.rlike("^(gdrive|google|googledrive)://")
-    val gpath = regexp_replace(uri, "^(gdrive|google|googledrive)://", "")
+    val GlobusUri(isGdrive, gpath, ep, path) = globusUri(uri)
     val normalized =
       when(isLinkForm && ep.isNotNull && path.isNotNull, concat(lit("globus://"), ep, path))
         .when(isLinkForm, lit(null: String))
@@ -336,9 +352,6 @@ object VersionOps {
       concat(lit("https://app.globus.org/file-manager?origin_id="), netloc,
         lit("&origin_path="), quotePath(path)))
   }
-
-  /** Back-compat single-column form (valid links only). */
-  def normalizeUriCol(uri: Column): Column = normalizeUriCols(uri).head
 
   def normalizeUri(s: SparkSession, dir: String): DataFrame = {
     val id = col("doc_id").cast("string")

@@ -585,25 +585,17 @@ object EventStream {
     * [[graft.operators.QualityModelOps.lmPerplexity]]. The trained
     * bigram/context count tables (from
     * [[graft.operators.QualityModelOps.lmModelOf]], standing artifacts
-    * at production scale) collapse to two broadcast maps plus the
-    * scalar V, so a document scores with one map-side array fold —
-    * stateless, zero shuffles, ingest-speed, exactly like the DSIR
-    * scorer. The map broadcast assumes a bounded vocabulary (true for
-    * any trained-model deployment — CCNet's KenLM binary is likewise a
-    * shipped artifact); an unbounded-vocabulary stream would switch to
-    * a stream-static equi-join on the bigram at the cost of a shuffle.
-    * Scores match the batch operator to 1e-9 (different fold order
-    * over the same add-one-smoothed log terms; spec-pinned). */
+    * at production scale) ride the task closure as one
+    * [[graft.functions.LmModel]], and a document scores in one native
+    * projection ([[graft.functions.LmScore]]): stateless, zero
+    * shuffles, ingest speed, like the DSIR scorer. The model's hash maps
+    * give O(1) probes per distinct bigram (a MapType broadcast probes
+    * linearly); [[graft.functions.LmModel.of]] bounds the driver copy,
+    * and [[lmScoreStreamJoin]] is the path for bigger models. The
+    * scorer runs the one LM fold — the batch operator's terms, sort
+    * order and log — so scores are bit-identical to the batch
+    * operator's (LmStreamSpec). */
   def lmScoreStream(docs: DataFrame, cb: DataFrame, cw: DataFrame): DataFrame = {
-    // The model rides the task closure as a native scorer
-    // ([[graft.functions.LmScore]] — the EnsembleArtifacts pattern):
-    // the previous MapType broadcast paid a LINEAR O(|vocab|) probe
-    // per bigram (Spark map lookup is an array scan — measured 80-646
-    // docs/s in StreamBench), the hash-map probe is O(1). Same
-    // stateless zero-shuffle shape; the fold replays the map-fold's
-    // positional per-occurrence order, so scores are bit-identical to
-    // the old stream and 1e-9-close to the batch operator's sorted
-    // fold (LmStreamSpec).
     val model = graft.functions.LmModel.of(cb, cw)
     docs
       .select(col("doc_id"),

@@ -12,10 +12,11 @@ class CentroidProbesSpec extends SparkSpec {
 
   private def dot(a: Column, b: Column) = GraftFunctions.dot(a, b)
 
-  /** The interpreted chain from the pre-optimization AnnOps. */
+  /** The interpreted chain from the pre-optimization AnnOps, with
+    * cosineOf's zero-norm guard: a null csim sorts below every score. */
   private def declScores(v: Column, norm: Column): Column =
     transform(col("cents"), c => struct(
-      (dot(v, c.getField("cv")) / (norm * c.getField("cn"))).as("csim"),
+      GraftFunctions.cosineOf(v, c.getField("cv"), norm, c.getField("cn")).as("csim"),
       (-c.getField("centroid_id")).as("nid")))
 
   private def declProbes(v: Column, norm: Column, n: Int): Column =
@@ -54,20 +55,29 @@ class CentroidProbesSpec extends SparkSpec {
     assert(mism == 0L)
   }
 
-  test("zero-norm vector assigns deterministically (all-NaN ties to the smallest id)") {
-    // the declarative twin cannot even express this row: ANSI double
-    // division throws DIVIDE_BY_ZERO on the zero divisor, where the
-    // native kernel follows IEEE (NaN cosine) and Spark's float
-    // ordering (NaN above everything, ties to the smaller id) — a
-    // strictly-more-defined superset of the old behavior
+  /** Native probes and the guarded twin's, for each (vec_id, v, norm). */
+  private def probesBothWays(e: DataFrame, cents: DataFrame, n: Int): Seq[(Seq[Long], Seq[Long])] =
+    withCents(e, cents)
+      .select(GraftFunctions.centroidProbes(col("v"), col("norm"), col("cents"), n).as("nat"),
+        declProbes(col("v"), col("norm"), n).as("dec"))
+      .as[(Seq[Long], Seq[Long])].collect().toSeq
+
+  test("a zero-norm query scores no centroid and probes in id order, as the twin does") {
     val cents = Seq((7L, Seq(1.0, 0.0), 1.0), (3L, Seq(0.0, 1.0), 1.0))
       .toDF("centroid_id", "cv", "cn")
     val e = Seq((1L, Seq(0.0, 0.0), 0.0)).toDF("vec_id", "v", "norm")
-    val out = withCents(e, cents)
-      .select(GraftFunctions.centroidProbes(col("v"), col("norm"), col("cents"), 2)
-        .as("p"))
-      .as[Seq[Long]].head()
-    assert(out == Seq(3L, 7L))
+    assert(probesBothWays(e, cents, 2) == Seq((Seq(3L, 7L), Seq(3L, 7L))))
+  }
+
+  test("a zero-norm centroid ranks after every scored one, as the twin does") {
+    // centroid 1 is all zeros; every query, even one pointing away from
+    // both real centroids, probes it last
+    val cents = Seq((1L, Seq(0.0, 0.0), 0.0), (7L, Seq(1.0, 0.0), 1.0),
+      (3L, Seq(0.0, 1.0), 1.0)).toDF("centroid_id", "cv", "cn")
+    val e = Seq((1L, Seq(0.6, 0.8), 1.0), (2L, Seq(-1.0, -1.0), math.sqrt(2.0)))
+      .toDF("vec_id", "v", "norm")
+    assert(probesBothWays(e, cents, 3) ==
+      Seq((Seq(3L, 7L, 1L), Seq(3L, 7L, 1L)), (Seq(3L, 7L, 1L), Seq(3L, 7L, 1L))))
   }
 
   test("exact-tie vectors break to the smaller centroid id") {

@@ -45,7 +45,7 @@ class VersionOpsSpec extends SparkSpec {
       "https://app.globus.org/file-manager?origin_id=ep1&origin_path=/d/x",
       "gdrive:///shared/f.dat",
       "https://example.org/keep")
-      .toDF("uri").select(VersionOps.normalizeUriCol(col("uri"))).as[String].collect()
+      .toDF("uri").select(VersionOps.normalizeUriCols(col("uri")).head).as[String].collect()
     assert(out(0) == "globus://ep1/d/x")
     assert(out(1) == "globus://gdrive-ep/gdrive/shared/f.dat")
     assert(out(2) == "https://example.org/keep")

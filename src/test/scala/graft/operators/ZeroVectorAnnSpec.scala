@@ -84,6 +84,45 @@ class ZeroVectorAnnSpec extends SparkSpec {
     assert(!got.exists { case (q, _, n) => q == zeroId || n == zeroId })
   }
 
+  private def dotD(a: Seq[Double], b: Seq[Double]) =
+    a.zip(b).foldLeft(0.0) { case (s, (x, y)) => s + x * y }
+
+  /** Vectors 5..7 as centroids, plus `extra` ones. */
+  private def centsOf(extra: Seq[(Long, Seq[Double])]): Seq[(Long, Seq[Double])] =
+    extra ++ vecs.filter { case (i, _) => i >= 5 && i <= 7 }.map { case (i, x) => i -> x.map(_.toDouble) }
+
+  /** IVF assignment (vec_id → cluster_id) of the corpus against `cv`. */
+  private def assigned(cv: Seq[(Long, Seq[Double])]): Map[Long, Long] = {
+    import spark.implicits._
+    val cents = cv.map { case (id, c) => (id, c, math.sqrt(dotD(c, c))) }
+      .toDF("centroid_id", "cv", "cn")
+    AnnOps.assignmentsOf(AnnOps.embeddingsWithNorm(spark, dir), cents)
+      .select("vec_id", "cluster_id").as[(Long, Long)].collect().toMap
+  }
+
+  /** Best-cosine centroid among the nonzero ones, ties to the smaller id. */
+  private def best(x: Seq[Float], cv: Seq[(Long, Seq[Double])]): Long = {
+    val v = x.map(_.toDouble)
+    cv.filter { case (_, c) => dotD(c, c) > 0 }
+      .map { case (id, c) => id -> dotD(v, c) / (math.sqrt(dotD(v, v)) * math.sqrt(dotD(c, c))) }
+      .sortBy { case (id, cos) => (-cos, id) }.head._1
+  }
+
+  test("IVF assignment: a zero query scores no centroid and takes the smallest id") {
+    val cv = centsOf(Nil)
+    val got = assigned(cv)
+    assert(got == vecs.map { case (q, x) => q -> (if (q == zeroId) 5L else best(x, cv)) }.toMap)
+  }
+
+  test("IVF assignment: a zero-norm centroid attracts no vector") {
+    // centroid 0 is all zeros and the smallest id: only the zero query,
+    // which scores no centroid at all, falls back to it
+    val cv = centsOf(Seq(0L -> Seq.fill(4)(0.0)))
+    val got = assigned(cv)
+    assert(got == vecs.map { case (q, x) => q -> (if (q == zeroId) 0L else best(x, cv)) }.toMap)
+    assert(got.count(_._2 == 0L) == 1)
+  }
+
   private def skipsZero(rows: Set[(Long, Int, Long)]): Boolean =
     !rows.exists { case (q, _, n) => q == zeroId || n == zeroId }
 

@@ -8,7 +8,7 @@ import graft.operators.QualityModelOps
 
 class LmStreamSpec extends SparkSpec {
 
-  test("streaming LM scores match the batch operator (1e-9), nulls included") {
+  test("streaming LM scores equal the batch operator's bit for bit, nulls included") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val docs = graft.Tables.documents(spark, sfDir)
@@ -34,7 +34,9 @@ class LmStreamSpec extends SparkSpec {
       val (bnb, bs) = batch(id)
       assert(nb == bnb, s"doc $id n_bigrams $nb vs $bnb")
       if (bs.isNaN) assert(s.isNaN, s"doc $id expected null score")
-      else assert(math.abs(s - bs) < 1e-9, s"doc $id score $s vs $bs")
+      // one LM fold: the batch operator's terms, sort order and log
+      else assert(java.lang.Double.doubleToRawLongBits(s) ==
+        java.lang.Double.doubleToRawLongBits(bs), s"doc $id score $s vs $bs")
     }
   }
 
