@@ -93,11 +93,12 @@ final case class EnsembleArtifacts(
         maxMult.toDouble / nBigrams > TextFunctions.topBigramFracMax)
     }
 
-    // ---- LM mean log-prob: the one LM fold, cut per language
+    // ---- LM mean log-prob: the one LM fold, cut per language; no
+    // score (no bigram, or no context table) is `unscored`
     var bucket: UTF8String = tail
-    if (nBigrams == 0) bucket = unscored
+    val mlp = if (nBigrams == 0) null else lm.meanLogProb(bgCounts, nBigrams)
+    if (mlp == null) bucket = unscored
     else {
-      val mlp = lm.meanLogProb(bgCounts, nBigrams)
       val cut = if (langU == null) null else cuts.get(langU.toString)
       if (cut != null) {
         if (mlp >= cut._2) bucket = head

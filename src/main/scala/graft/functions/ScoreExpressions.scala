@@ -53,9 +53,13 @@ final case class LmModel(
     * order with Spark's `log` (StrictMath). Those are the batch
     * operator's terms, order and log ([[graft.operators.QualityModelOps
     * .lmPerplexity]] folds `sort_array(collect_list(struct(cb0, cw0, m,
-    * v)))`), so the score is bit-identical to it. */
+    * v)))`), so the score is bit-identical to it. An empty context
+    * table (V = 0) makes every term's log(cw + V) the log of 0, which
+    * Spark's `log` and so the batch fold read as null: the mean is then
+    * null too. */
   private[functions] def meanLogProb(
-      bgCounts: java.util.HashMap[String, Array[Long]], n: Int): Double = {
+      bgCounts: java.util.HashMap[String, Array[Long]], n: Int): java.lang.Double = {
+    if (v == 0L) return null
     val terms = new Array[(Long, Long, Long)](bgCounts.size())
     val it = bgCounts.entrySet().iterator()
     var i = 0

@@ -11,7 +11,7 @@ import graft.functions.GraftFunctions.decimalSum
   * composed from shuffles Spark already does well.
   *
   * As-of join: the classic union trick — tag both sides, union, one
-  * repartition by key + ordered window, carry the last left-side row
+  * repartition by key + ordered window, carry the last right-side row
   * forward. ONE shuffle on the join key, no range cross-join, no
   * broadcast requirement: at 100 TB this is the only shape that survives
   * (a naive inequality join degenerates to nested-loop).
@@ -24,12 +24,31 @@ object JoinOps {
   import AnalyticsOps.dec
 
   /** Generic ASOF LEFT join: for each left row, attach the latest right
-    * row of the same `key` with `right(tsCol) <= left(tsCol)`.
-    * Right payload columns come back prefixed `asof_` (null when no match).
-    * One shuffle on `key`; `tieCol` breaks equal-timestamp ties (right
-    * rows sort before left rows on equal ts, matching ASOF's `>=`). */
+    * row of the same `key` with `right(tsCol) <= left(tsCol)`, ties to
+    * the greatest `rightTie`. Right payload columns come back prefixed
+    * `asof_` (null when no match). */
   def asofJoinOf(left: DataFrame, right: DataFrame, key: String, tsCol: String,
-      leftTie: String, rightTie: String): DataFrame = {
+      leftTie: String, rightTie: String): DataFrame =
+    asofOf(left, right, key, tsCol, leftTie, rightTie, forward = false)
+
+  /** Generic forward ASOF LEFT join: for each left row, attach the
+    * EARLIEST right row of the same `key` with `right(tsCol) >=
+    * left(tsCol)`, ties to the smallest `rightTie` — the mirror of
+    * [[asofJoinOf]] (next reading at or after, instead of latest at or
+    * before). */
+  def asofForwardJoinOf(left: DataFrame, right: DataFrame, key: String, tsCol: String,
+      leftTie: String, rightTie: String): DataFrame =
+    asofOf(left, right, key, tsCol, leftTie, rightTie, forward = true)
+
+  /** The one as-of skeleton: tag both sides, union, one shuffle on
+    * `key`, and carry the last right payload forward over a running
+    * (unbounded preceding → current row) frame, kept for the left rows.
+    * Backward sorts (ts, tie) ascending; forward is backward over
+    * (ts, tie) descending, which makes the earliest later row, with the
+    * smallest tie, the last one seen. Either way right rows sort before
+    * left rows on equal ts, so the boundary ts matches (`<=` / `>=`). */
+  private def asofOf(left: DataFrame, right: DataFrame, key: String, tsCol: String,
+      leftTie: String, rightTie: String, forward: Boolean): DataFrame = {
     val payloadCols = right.columns.filter(c => c != key && c != tsCol && c != rightTie)
     val rightTagged = right.select(
       col(key), col(tsCol), lit(0).as("__side"), col(rightTie).cast("long").as("__tie"),
@@ -41,8 +60,10 @@ object JoinOps {
     val unioned = rightTagged.withColumn("__left",
         lit(null).cast(leftTagged.schema("__left").dataType))
       .unionByName(leftTagged)
-    val w = Window.partitionBy(col(key))
-      .orderBy(col(tsCol).asc, col("__side").asc, col("__tie").asc)
+    val order =
+      if (forward) Seq(col(tsCol).desc, col("__side").asc, col("__tie").desc)
+      else Seq(col(tsCol).asc, col("__side").asc, col("__tie").asc)
+    val w = Window.partitionBy(col(key)).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val matched = unioned
       .withColumn("__match", last(col("__payload"), ignoreNulls = true).over(w))
@@ -53,46 +74,19 @@ object JoinOps {
     matched.select(leftOut ++ rightOut: _*)
   }
 
-  /** Generic forward ASOF LEFT join: for each left row, attach the
-    * EARLIEST right row of the same `key` with `right(tsCol) >=
-    * left(tsCol)` — the mirror of [[asofJoinOf]] (next reading at or
-    * after, instead of latest at or before). Same one-shuffle
-    * union+window shape, with the frame flipped to [current, ∞) and
-    * left rows sorting before right rows on equal ts so `>=` ties
-    * match. */
-  def asofForwardJoinOf(left: DataFrame, right: DataFrame, key: String, tsCol: String,
-      leftTie: String, rightTie: String): DataFrame = {
-    val payloadCols = right.columns.filter(c => c != key && c != tsCol && c != rightTie)
-    val rightTagged = right.select(
-      col(key), col(tsCol), lit(1).as("__side"), col(rightTie).cast("long").as("__tie"),
-      struct((tsCol +: rightTie +: payloadCols.toSeq).map(col): _*).as("__payload"))
-    val leftTagged = left.select(
-      col(key), col(tsCol), lit(0).as("__side"), col(leftTie).cast("long").as("__tie"),
-      lit(null).cast(rightTagged.schema("__payload").dataType).as("__payload"),
-      struct(left.columns.map(col): _*).as("__left"))
-    val unioned = rightTagged.withColumn("__left",
-        lit(null).cast(leftTagged.schema("__left").dataType))
-      .unionByName(leftTagged)
-    val w = Window.partitionBy(col(key))
-      .orderBy(col(tsCol).asc, col("__side").asc, col("__tie").asc)
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val matched = unioned
-      .withColumn("__match", first(col("__payload"), ignoreNulls = true).over(w))
-      .filter(col("__side") === 0)
-    val leftOut = left.columns.map(c => col("__left").getField(c).as(c))
-    val rightOut = (tsCol +: rightTie +: payloadCols.toSeq)
-      .map(c => col("__match").getField(c).as(s"asof_$c"))
-    matched.select(leftOut ++ rightOut: _*)
+  /** The as-of queries' inputs: the events table's clicks and purchases. */
+  private def clicksAndPurchases(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val e = Tables.events(s, dir)
+    (e.filter(col("event_type") === "click")
+      .select(col("user_id"), col("ts"), col("event_id").as("click_id")),
+      e.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("ts"), col("event_id").as("purchase_id"), col("value")))
   }
 
   /** For each click event: the next purchase of the same user at or
     * after the click ts (forward ASOF, via the generic API). */
   def asofForward(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(s, dir)
-    val clicks = e.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts"), col("event_id").as("click_id"))
-    val purchases = e.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts"), col("event_id").as("purchase_id"), col("value"))
+    val (clicks, purchases) = clicksAndPurchases(s, dir)
     asofForwardJoinOf(clicks, purchases, "user_id", "ts", "click_id", "purchase_id")
       .orderBy("click_id")
   }
@@ -119,33 +113,10 @@ object JoinOps {
   /** For each purchase event: the most recent click of the same user at or
     * before the purchase ts (ASOF semantics, left join). */
   def asofJoin(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(s, dir)
-    val clicks = e.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts"), col("event_id").as("click_id"))
-    val purchases = e.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts"), col("event_id").as("purchase_id"), col("value"))
-
-    // side 0 = click sorts before side 1 = purchase on equal ts, so ts-ties
-    // match ASOF's `>=`. event_id breaks residual ties deterministically.
-    val tagged = clicks
-      .select(col("user_id"), col("ts"), lit(0).as("side"), col("click_id"),
-        lit(null).cast("long").as("purchase_id"), lit(null).cast("double").as("value"),
-        col("click_id").as("tie"))
-      .unionByName(purchases
-        .select(col("user_id"), col("ts"), lit(1).as("side"), lit(null).cast("long").as("click_id"),
-          col("purchase_id"), col("value"), col("purchase_id").as("tie")))
-
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").asc, col("side").asc, col("tie").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    tagged
-      .withColumn("last_click_id", last(col("click_id"), ignoreNulls = true).over(w))
-      .withColumn("last_click_ts",
-        last(when(col("side") === 0, col("ts")), ignoreNulls = true).over(w))
-      .filter(col("side") === 1)
+    val (clicks, purchases) = clicksAndPurchases(s, dir)
+    asofJoinOf(purchases, clicks, "user_id", "ts", "purchase_id", "click_id")
       .select(col("purchase_id"), col("user_id"), col("ts"), col("value"),
-        col("last_click_id"), col("last_click_ts"))
+        col("asof_click_id").as("last_click_id"), col("asof_ts").as("last_click_ts"))
       .orderBy("purchase_id")
   }
 
@@ -155,11 +126,7 @@ object JoinOps {
     * ASOF oracle as the window encoding, so the custom physical operator
     * is driver-verified, not just spec-verified. */
   def asofJoinNative(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(s, dir)
-    val clicks = e.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts"), col("event_id").as("click_id"))
-    val purchases = e.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts"), col("event_id").as("purchase_id"), col("value"))
+    val (clicks, purchases) = clicksAndPurchases(s, dir)
     graft.plans.AsOfJoinNative.asofJoin(purchases, clicks, "user_id", "ts", "click_id")
       .toDF("user_id", "ts", "purchase_id", "value", "u2", "last_click_ts", "last_click_id")
       .select(col("purchase_id"), col("user_id"), col("ts"), col("value"),
@@ -344,11 +311,7 @@ object JoinOps {
   /** For each click: the purchase of the same user NEAREST in time,
     * looking both directions, within a 6-hour tolerance. */
   def asofNearest(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(s, dir)
-    val clicks = e.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts"), col("event_id").as("click_id"))
-    val purchases = e.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts"), col("event_id").as("purchase_id"), col("value"))
+    val (clicks, purchases) = clicksAndPurchases(s, dir)
     asofNearestJoinOf(clicks, purchases, "user_id", "ts", "click_id", "purchase_id",
         6L * 3600 * 1000000)
       .orderBy("click_id")

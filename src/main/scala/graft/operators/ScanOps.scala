@@ -174,56 +174,41 @@ object ScanOps {
   // LastEvaluatedKey.
   // ----------------------------------------------------------------------
 
-  /** One page of a sorted scan: filters + projection + keyset resume.
-    * `keyCol` must be unique (a primary key) for gapless tiling.
+  /** One page of a sorted scan: filters + projection + keyset resume
+    * over the sort key `keys` (jointly unique for gapless tiling).
+    * DynamoDB's LastEvaluatedKey is (partition key, sort key), so the
+    * resume predicate is the row-value comparison (k1, …, kn) >
+    * (a1, …, an), written k1 >= a1 AND (k1 > a1 OR (k2, …) > (a2, …)):
+    * one key gives `k > a`, and the `k1 >= a1` half of a longer key
+    * still pushes to the scan as a range predicate, so a resumed page
+    * reads only row groups at or past the token's first component.
     *
     * LOOP CONTRACT: `resumeAfter = None` means "first page", while
     * [[resumeToken]] returns None for "scan exhausted" — so a
     * continuation loop must terminate on an EMPTY PAGE (or a None
     * token) and never feed that None back in, which would silently
     * restart from page 1. ScanPageSpec shows the correct loop. */
-  def scanPage(df: DataFrame, keyCol: String, pageSize: Int,
-      resumeAfter: Option[Any] = None, fields: Seq[String] = Nil,
+  def scanPage(df: DataFrame, keys: Seq[String], pageSize: Int,
+      resumeAfter: Option[Seq[Any]] = None, fields: Seq[String] = Nil,
       filters: Seq[ScanFilter] = Nil): DataFrame = {
+    def after(ks: Seq[String], vs: Seq[Any]): Column = (ks, vs) match {
+      case (Seq(k), Seq(v)) => col(k) > lit(v)
+      case (k +: kt, v +: vt) => col(k) >= lit(v) && (col(k) > lit(v) || after(kt, vt))
+      case _ => throw new IllegalArgumentException(
+        s"resume token $vs does not match the keys $ks")
+    }
     val base = scan(df, fields, filters)
-    val from = resumeAfter.map(k => base.filter(col(keyCol) > lit(k))).getOrElse(base)
-    from.orderBy(col(keyCol).asc).limit(pageSize)
+    val from = resumeAfter.map(t => base.filter(after(keys, t))).getOrElse(base)
+    from.orderBy(keys.map(col(_).asc): _*).limit(pageSize)
   }
 
-  /** The resume token of a page — its greatest key. None means the
-    * scan is EXHAUSTED: terminate the loop; do not pass it back to
-    * [[scanPage]], where None means "start over" (see loop contract
-    * there). */
-  def resumeToken(page: DataFrame, keyCol: String): Option[Any] = {
-    val r = page.agg(max(col(keyCol))).head()
-    if (r.isNullAt(0)) None else Some(r.get(0))
-  }
-
-  /** Composite-key page: DynamoDB's LastEvaluatedKey is (partition key,
-    * sort key), so the faithful resume predicate is the row-value
-    * comparison (k1, k2) > (a, b) ⇔ k1 > a OR (k1 = a AND k2 > b).
-    * The k1 half (`k1 >= a`) still pushes to the scan as a range
-    * predicate, so a resumed page reads only row groups at or past the
-    * token's first component — the tail predicate filters the one
-    * boundary group. Keys must be jointly unique for gapless tiling. */
-  def scanPageComposite(df: DataFrame, k1: String, k2: String, pageSize: Int,
-      resumeAfter: Option[(Any, Any)] = None, fields: Seq[String] = Nil,
-      filters: Seq[ScanFilter] = Nil): DataFrame = {
-    val base = scan(df, fields, filters)
-    val from = resumeAfter.map { case (a, b) =>
-      base.filter(col(k1) >= lit(a) &&
-        (col(k1) > lit(a) || col(k2) > lit(b)))
-    }.getOrElse(base)
-    from.orderBy(col(k1).asc, col(k2).asc).limit(pageSize)
-  }
-
-  /** Composite resume token: the page's greatest (k1, k2) in scan
-    * order. */
-  def resumeTokenComposite(page: DataFrame, k1: String, k2: String): Option[(Any, Any)] = {
-    val r = page.agg(max_by(struct(col(k1), col(k2)),
-      struct(col(k1), col(k2))).as("t")).head()
-    if (r.isNullAt(0)) None
-    else { val s = r.getStruct(0); Some((s.get(0), s.get(1))) }
+  /** The resume token of a page — its greatest key in scan order. None
+    * means the scan is EXHAUSTED: terminate the loop; do not pass it
+    * back to [[scanPage]], where None means "start over" (see loop
+    * contract there). */
+  def resumeToken(page: DataFrame, keys: Seq[String]): Option[Seq[Any]] = {
+    val r = page.agg(max(struct(keys.map(col): _*))).head()
+    if (r.isNullAt(0)) None else Some(r.getStruct(0).toSeq)
   }
 
   val pageSize = 200
@@ -236,9 +221,9 @@ object ScanOps {
     val orders = Tables.orders(s, dir)
     val fields = Seq("o_orderkey", "o_custkey", "o_totalprice")
     val filters = Seq(ScanFilter("o_orderpriority", "in", Seq("1-URGENT", "2-HIGH")))
-    val p1 = scanPage(orders, "o_orderkey", pageSize, None, fields, filters)
-    val token = resumeToken(p1, "o_orderkey")
-    scanPage(orders, "o_orderkey", pageSize, token, fields, filters)
+    val key = Seq("o_orderkey")
+    val p1 = scanPage(orders, key, pageSize, None, fields, filters)
+    scanPage(orders, key, pageSize, resumeToken(p1, key), fields, filters)
       .orderBy("o_orderkey")
   }
 
@@ -258,10 +243,9 @@ object ScanOps {
   def scanPagedComposite(s: SparkSession, dir: String): DataFrame = {
     val orders = Tables.orders(s, dir)
     val fields = Seq("o_custkey", "o_orderkey", "o_totalprice")
-    val p1 = scanPageComposite(orders, "o_custkey", "o_orderkey", pageSize,
-      None, fields)
-    val token = resumeTokenComposite(p1, "o_custkey", "o_orderkey")
-    scanPageComposite(orders, "o_custkey", "o_orderkey", pageSize, token, fields)
+    val keys = Seq("o_custkey", "o_orderkey")
+    val p1 = scanPage(orders, keys, pageSize, None, fields)
+    scanPage(orders, keys, pageSize, resumeToken(p1, keys), fields)
       .orderBy("o_custkey", "o_orderkey")
   }
 

@@ -38,7 +38,10 @@ object StatusOps {
     "ingest_mrr" -> "Materials Resource Registration",
     "ingest_cleanup" -> "Post-processing cleanup")
 
-  /** Flow-state letters, submissions.py:10-15. */
+  /** A one-letter status per event type — a stand-in that maps the
+    * events table's types onto the S/P/F/U alphabet. The reference's
+    * flow-state letters (submissions.py:10-15: SUCCEEDED → S, ACTIVE →
+    * P, FAILED → F, else U) are mapped in [[statusFormat]]. */
   def statusLetter(eventType: Column): Column =
     when(eventType === "purchase", "S")
       .when(eventType === "signup", "S")

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -250,13 +249,7 @@ object SubmitOps {
       when(id % 17 =!= 0,
         concat(lit("ds"), (id % 40).cast("string"),
           when(id % 5 === 0, "-test").otherwise(""))).as("lookup_name"))
-    // current-version view with its owner: the same argmax as
-    // get_current_version, keeping the winning row's user_id
-    val w = Window.partitionBy(col("source_name_raw"))
-      .orderBy(col("search_v").desc, col("sub_v").desc, col("doc_id").desc)
-    val existing = VersionOps.submissions(s, dir).filter(col("doc_id") % 11 =!= 0)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    val existing = VersionOps.currentVersions(s, dir)
       .select(col("source_name_raw").as("lookup_name"),
         concat(col("search_v").cast("string"), lit("."), col("sub_v").cast("string"))
           .as("cur_version"),
@@ -269,10 +262,7 @@ object SubmitOps {
         .when(!matched && col("update_flag"), lit(notYetErr))
     val sourceName = coalesce(col("lookup_name"),
       concat(lit("new-"), substring(md5(concat(lit("new#"), id.cast("string"))), 1, 8)))
-    val nextVersion = when(matched,
-      concat(split(col("cur_version"), "\\.").getItem(0), lit("."),
-        (split(col("cur_version"), "\\.").getItem(1).cast("int") + 1).cast("string")))
-      .otherwise(lit("1.0"))
+    val nextVersion = VersionOps.nextVersionOf(col("cur_version"))
     j.select(
       col("doc_id"), col("lookup_name"), matched.as("matched"), err.as("update_error"),
       when(err.isNull, sourceName).as("source_name"),
@@ -283,17 +273,13 @@ object SubmitOps {
       .orderBy("doc_id")
   }
 
-  val updateGateSql: String = VersionOps.submissionsSql.stripSuffix("\n") +
+  val updateGateSql: String = VersionOps.currentVersionsSql.stripSuffix("\n") +
     s""",
        |cur AS (
        |  SELECT source_name_raw AS lookup_name,
        |    CAST(search_v AS VARCHAR) || '.' || CAST(sub_v AS VARCHAR) AS cur_version,
        |    search_v, sub_v, user_id AS owner_user
-       |  FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY source_name_raw
-       |      ORDER BY search_v DESC, sub_v DESC, doc_id DESC) AS rn
-       |    FROM submissions WHERE doc_id % 11 <> 0)
-       |  WHERE rn = 1),
+       |  FROM cur_versions),
        |inc AS (
        |  SELECT doc_id, doc_id % 20 AS submitter_user,
        |    doc_id % 5 = 0 AS is_test, doc_id % 2 = 0 AS update_flag,

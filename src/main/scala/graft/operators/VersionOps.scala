@@ -28,6 +28,11 @@ object VersionOps {
 
   private val idRe = "_v([0-9]+)\\.([0-9]+)$"
 
+  /** The `{name}_v{search}.{sub}` source id (source_id_manager.py:44) —
+    * the format [[idRe]] and [[splitSourceIdCols]] parse. */
+  def sourceIdOf(name: Column, search: Column, sub: Column): Column =
+    concat(name, lit("_v"), search.cast("string"), lit("."), sub.cast("string"))
+
   /** Derived submissions: ~40 source_names, several (search, sub) versions
     * each, every 11th row malformed (no version suffix). */
   def submissions(s: SparkSession, dir: String): DataFrame = {
@@ -40,8 +45,7 @@ object VersionOps {
         (col("doc_id") % 20).cast("long").as("user_id"))
       .withColumn("source_id",
         when(col("doc_id") % 11 === 0, col("source_name_raw"))
-          .otherwise(concat(col("source_name_raw"), lit("_v"),
-            col("search_v").cast("string"), lit("."), col("sub_v").cast("string"))))
+          .otherwise(sourceIdOf(col("source_name_raw"), col("search_v"), col("sub_v"))))
   }
 
   /** Shared SQL prefix building the same view for DuckDB. */
@@ -90,45 +94,57 @@ object VersionOps {
       |       ELSE 0 END AS submission_version
       |FROM submissions ORDER BY doc_id""".stripMargin
 
-  /** get_current_version: numeric-aware latest (search, sub) per name.
-    * One shuffle on source_name; the window argmax replaces the
-    * reference's full key-scan + Python sort per lookup. */
-  def latestVersion(s: SparkSession, dir: String): DataFrame = {
-    val subs = submissions(s, dir).filter(col("doc_id") % 11 =!= 0)
+  /** get_current_version (dynamo_manager.py:60): the well-formed
+    * submissions' numeric-aware latest (search, sub) row per name, ties
+    * to the greatest doc_id. One shuffle on source_name; the window
+    * argmax replaces the reference's full key-scan + Python sort per
+    * lookup. Keeps every submissions column. */
+  def currentVersions(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("source_name_raw"))
       .orderBy(col("search_v").desc, col("sub_v").desc, col("doc_id").desc)
-    subs.withColumn("rn", row_number().over(w))
+    submissions(s, dir).filter(col("doc_id") % 11 =!= 0)
+      .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
+  }
+
+  def latestVersion(s: SparkSession, dir: String): DataFrame =
+    currentVersions(s, dir)
       .select(col("source_name_raw").as("source_name"), col("source_id"),
         col("search_v").as("search_version"), col("sub_v").as("submission_version"))
       .orderBy("source_name")
-  }
 
-  val latestVersionSql: String = submissionsSql +
+  /** [[submissionsSql]] plus a `cur_versions` CTE: [[currentVersions]]
+    * for DuckDB. */
+  val currentVersionsSql: String = submissionsSql.stripSuffix("\n") +
+    """,
+      |cur_versions AS (
+      |  SELECT * FROM (
+      |    SELECT *, row_number() OVER (PARTITION BY source_name_raw
+      |      ORDER BY search_v DESC, sub_v DESC, doc_id DESC) AS rn
+      |    FROM submissions WHERE doc_id % 11 <> 0)
+      |  WHERE rn = 1)
+      |""".stripMargin
+
+  val latestVersionSql: String = currentVersionsSql +
     """SELECT source_name_raw AS source_name, source_id,
       |  search_v AS search_version, sub_v AS submission_version
-      |FROM (
-      |  SELECT *, row_number() OVER (PARTITION BY source_name_raw
-      |    ORDER BY search_v DESC, sub_v DESC, doc_id DESC) AS rn
-      |  FROM submissions WHERE doc_id % 11 <> 0)
-      |WHERE rn = 1 ORDER BY source_name""".stripMargin
+      |FROM cur_versions ORDER BY source_name""".stripMargin
 
-  /** increment_record_version: "major.minor" -> "major.(minor+1)";
-    * missing current version -> "1.0". */
-  def incrementVersion(s: SparkSession, dir: String): DataFrame = {
-    val subs = submissions(s, dir)
+  /** increment_record_version (dynamo_manager.py:88): "major.minor" ->
+    * "major.(minor+1)"; a missing current version -> "1.0". */
+  def nextVersionOf(cur: Column): Column =
+    when(cur.isNull, lit("1.0"))
+      .otherwise(concat(split(cur, "\\.").getItem(0), lit("."),
+        (split(cur, "\\.").getItem(1).cast("int") + 1).cast("string")))
+
+  def incrementVersion(s: SparkSession, dir: String): DataFrame =
+    submissions(s, dir)
       .withColumn("record_version",
         when(col("doc_id") % 13 === 0, lit(null: String))
           .otherwise(concat(col("search_v").cast("string"), lit("."), col("sub_v").cast("string"))))
-    subs.select(
-      col("doc_id"), col("record_version"),
-      when(col("record_version").isNull, lit("1.0"))
-        .otherwise(concat(
-          split(col("record_version"), "\\.").getItem(0), lit("."),
-          (split(col("record_version"), "\\.").getItem(1).cast("int") + 1).cast("string")))
-        .as("next_version"))
+      .select(col("doc_id"), col("record_version"),
+        nextVersionOf(col("record_version")).as("next_version"))
       .orderBy("doc_id")
-  }
 
   val incrementVersionSql: String = submissionsSql +
     """SELECT doc_id,
@@ -152,11 +168,9 @@ object VersionOps {
         max(when(col("search_v") === col("max_search"), col("sub_v"))).as("old_sub_version"),
         countDistinct(col("user_id")).as("n_users"))
       .withColumn("next_same_search",
-        concat(col("source_name"), lit("_v"), col("old_search_version").cast("string"),
-          lit("."), (col("old_sub_version") + 1).cast("string")))
+        sourceIdOf(col("source_name"), col("old_search_version"), col("old_sub_version") + 1))
       .withColumn("next_new_search",
-        concat(col("source_name"), lit("_v"), (col("old_search_version") + 1).cast("string"),
-          lit(".1")))
+        sourceIdOf(col("source_name"), col("old_search_version") + 1, lit(1)))
       .orderBy("source_name")
   }
 
@@ -202,43 +216,39 @@ object VersionOps {
   def makeSourceIdName(title: Column, author: Column, isTest: Column,
       sanitizeOnly: Boolean = false): Column = {
     val stripped = when(title.rlike(idRe), regexp_replace(title, idRe, "")).otherwise(title)
-    val aw = authorWord(author)
     val toks0 = cleanTitleTokens(stripped)
-    val toks = if (sanitizeOnly) toks0 else filter(toks0, t => t =!= aw)
     val name =
-      if (sanitizeOnly) array_join(toks, "_")
-      else array_join(
-        filter(
-          array(
-            aw,
-            element_at(toks, 1),
-            when(size(toks) >= 2, element_at(toks, 2)).otherwise(lit("")),
-            when(size(toks) >= 3, element_at(toks, -1)).otherwise(lit(""))),
-          t => t =!= lit("")),
-        "_")
+      if (sanitizeOnly) array_join(toks0, "_")
+      else letOf(authorWord(author)) { aw =>
+        letOf(filter(toks0, t => t =!= aw)) { toks =>
+          array_join(
+            filter(
+              array(
+                aw,
+                element_at(toks, 1),
+                when(size(toks) >= 2, element_at(toks, 2)).otherwise(lit("")),
+                when(size(toks) >= 3, element_at(toks, -1)).otherwise(lit(""))),
+              t => t =!= lit("")),
+            "_")
+        }
+      }
     concat(when(isTest, lit("_test_")).otherwise(lit("")), name)
   }
 
+  /** `f(x)` with `x` computed once per row: an expression inside a
+    * higher-order function's lambda is re-evaluated per element, and
+    * one used twice in an interpreted HOF is evaluated twice. */
+  private def letOf(x: Column)(f: Column => Column): Column =
+    element_at(transform(array(x), f), 1)
+
+  /** make_source_id's name over each document's first six words, the
+    * source as author, every 10th a test submission. */
   def makeSourceName(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
+    Tables.documents(s, dir)
       .withColumn("title", array_join(slice(split(col("text"), " "), 1, 6), " "))
-      .withColumn("author_word", authorWord(col("source")))
-      .withColumn("toks",
-        filter(cleanTitleTokens(col("title")), t => t =!= col("author_word")))
-      .withColumn("is_test", col("doc_id") % 10 === 0)
-    docs.select(
-      col("doc_id"), col("title"),
-      concat(
-        when(col("is_test"), lit("_test_")).otherwise(lit("")),
-        array_join(
-          filter(
-            array(
-              col("author_word"),
-              element_at(col("toks"), 1),
-              when(size(col("toks")) >= 2, element_at(col("toks"), 2)).otherwise(lit("")),
-              when(size(col("toks")) >= 3, element_at(col("toks"), -1)).otherwise(lit(""))),
-            t => t =!= lit("")),
-          "_")).as("source_name"))
+      .select(col("doc_id"), col("title"),
+        makeSourceIdName(col("title"), col("source"), col("doc_id") % 10 === 0)
+          .as("source_name"))
       .orderBy("doc_id")
   }
 
@@ -452,7 +462,7 @@ object VersionOps {
             concat(col("source_name_raw"), lit("_v"), a, lit("-"), b))
           .when(col("doc_id") % 7 === 3,
             concat(col("source_name_raw"), lit("_v"), a))
-          .otherwise(concat(col("source_name_raw"), lit("_v"), a, lit("."), b)))
+          .otherwise(sourceIdOf(col("source_name_raw"), a, b)))
   }
 
   private val legacySql: String =

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 class AsofGenericSpec extends SparkSpec {
 
-  test("generic asof join matches the query-shaped implementation") {
+  test("generic asof join matches a brute-force fold") {
     val e = graft.Tables.events(spark, sfDir)
     val clicks = e.filter(col("event_type") === "click")
       .select(col("user_id"), col("ts"), col("event_id").as("click_id"))
@@ -18,12 +18,41 @@ class AsofGenericSpec extends SparkSpec {
       .collect()
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
 
-    val reference = JoinOps.asofJoin(spark, sfDir)
-      .select(col("purchase_id"), col("last_click_id"))
-      .collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
+    // per purchase, the same user's click with the greatest ts <= the
+    // purchase ts, ties to the greatest click id (the oracle's ORDER BY)
+    def rows(df: org.apache.spark.sql.DataFrame, id: String) =
+      df.select(col("user_id"), unix_micros(col("ts")), col(id)).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val cs = rows(clicks, "click_id").groupBy(_._1)
+    val expected = rows(purchases, "purchase_id").map { case (u, t, pid) =>
+      pid -> cs.getOrElse(u, Nil).filter(_._2 <= t)
+        .sortBy { case (_, ct, cid) => (ct, cid) }.lastOption.map(_._3)
+    }.toMap
 
-    assert(generic == reference)
+    assert(expected.values.exists(_.isDefined) && expected.values.exists(_.isEmpty),
+      "the events must give both matched and unmatched purchases")
+    assert(generic == expected)
+  }
+
+  test("forward and nearest asof plans run no unbounded-following window frame") {
+    import spark.implicits._
+    def ts(sec: Long) = new java.sql.Timestamp(sec * 1000)
+    val left = Seq((1L, ts(100), 50L)).toDF("user_id", "ts", "click_id")
+    val right = Seq((1L, ts(90), 1L, 1.0), (1L, ts(110), 2L, 2.0))
+      .toDF("user_id", "ts", "purchase_id", "value")
+    // UnboundedFollowingWindowFunctionFrame re-aggregates the rest of
+    // the partition for every row
+    Seq(
+      "forward" -> JoinOps.asofForwardJoinOf(left, right, "user_id", "ts",
+        "click_id", "purchase_id"),
+      "nearest" -> JoinOps.asofNearestJoinOf(left, right, "user_id", "ts",
+        "click_id", "purchase_id", 50L * 1000000)).foreach { case (name, df) =>
+      df.collect()
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("Window"), s"$name: no window in\n$plan")
+      assert(!plan.toLowerCase.contains("unboundedfollowing"),
+        s"$name runs an unbounded-following frame:\n$plan")
+    }
   }
 
   test("backward/forward asof: same-ts ties are deterministic and mirror the oracle's ORDER BY") {
