@@ -32,7 +32,7 @@ object StreamBench {
     }
 
     // ---- standing artifacts, trained once up front
-    val dsirModel = QualityModelOps.dsirModelOf(docs).localCheckpoint()
+    val dsirModel = QualityModelOps.dsirModelFor(spark, srcDir)
     val (cb, cw) = QualityModelOps.lmModelOf(docs)
     val (cbM, cwM) = (cb.localCheckpoint(), cw.localCheckpoint())
     val (bm25Df, bm25Stats) = SearchOps.bm25ModelOf(docs, "doc_id", "text",
@@ -65,7 +65,7 @@ object StreamBench {
     def docLeg(name: String, mode: String)(f: DataFrame => DataFrame): Unit =
       run(name, mode, rows)(ds => f(ds.toDF("doc_id", "text")))
 
-    docLeg("dsir_score", "append")(df => EventStream.dsirScoreStream(df, dsirModel))
+    docLeg("dsir_score", "append")(df => QualityModelOps.dsirWeightsOf(df, dsirModel))
     docLeg("lm_score", "append")(df => EventStream.lmScoreStream(df, cbM, cwM))
     docLeg("lm_score_join", "update")(df => EventStream.lmScoreStreamJoin(df, cbM, cwM))
     docLeg("bm25_score", "append")(df =>

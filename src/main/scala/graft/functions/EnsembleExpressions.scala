@@ -13,8 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * per-row scorer — the ingest-speed shape of
   * [[graft.operators.QualityModelOps.qualityEnsemble]].
   *
-  * Every trained artifact (the bigram-LM count tables, the DSIR bucket
-  * model, the per-language perplexity cutoffs) is collapsed into a
+  * Every trained artifact (the bigram-LM count tables, the
+  * [[DsirModel]], the per-language perplexity cutoffs) is collapsed into a
   * value that ships inside the expression tree — the
   * [[graft.functions.BpeModel]] pattern: at production scale the
   * models are a few MB of standing artifact riding the task closure
@@ -33,20 +33,22 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - The LM mean-log-prob is [[LmModel.meanLogProb]], the one LM
   *    fold, so the rounded score is bit-identical to
   *    [[graft.operators.QualityModelOps.lmPerplexity]].
-  *  - The DSIR weight folds [[Md5BucketCounts]]' 256-slot histogram
-  *    against the model's log ratios in bucket-index order
-  *    (deterministic; the sign of the 6dp-rounded sum is the verdict,
-  *    as in the batch and streaming scorers).
+  *  - The DSIR weight is [[DsirModel.logWeight]] over
+  *    [[Md5BucketCounts]]' 256-slot histogram: the batch fold's terms
+  *    in its ascending (ct, cr, m) order, so the 6dp weight is
+  *    bit-identical to [[graft.operators.QualityModelOps.dsirWeightsOf]]'s
+  *    and `target_like` is its sign. A null weight (no reference
+  *    feature in training) is not target-like, as the batch gate's
+  *    coalesce reads it.
   *
   * Only the Gopher call, the repetition flag, the cutoff lookup and
-  * the keep conjunction live here; words, features and the LM fold are
-  * the shared kernels'.
+  * the keep conjunction live here; words, features and the LM and
+  * DSIR folds are the shared kernels'.
   */
 final case class EnsembleArtifacts(
     lm: LmModel,
-    dsirLogRatio: Array[Double],
+    dsir: DsirModel,
     cutTriples: Array[(String, Double, Double)]) extends Serializable {
-  require(dsirLogRatio.length == 256, "DSIR model must cover all 256 buckets")
 
   @transient private lazy val cuts: java.util.HashMap[String, (Double, Double)] = {
     val m = new java.util.HashMap[String, (Double, Double)](cutTriples.length * 2)
@@ -106,17 +108,9 @@ final case class EnsembleArtifacts(
       }
     }
 
-    // ---- DSIR target-likeness: bucket-index-order fold of the
-    // model's log ratios over Md5BucketCounts' histogram (sign of the
-    // 6dp sum)
-    val buckets = Md5BucketCounts.histogram(Words.utf8(ws))
-    var lw = 0.0
-    i = 0
-    while (i < 256) {
-      if (buckets(i) > 0L) lw += buckets(i).toDouble * dsirLogRatio(i)
-      i += 1
-    }
-    val targetLike = LmModel.round6(lw) > 0.0
+    // ---- DSIR target-likeness: the sign of the one DSIR fold
+    val lw = dsir.logWeight(Md5BucketCounts.histogram(Words.utf8(ws)))
+    val targetLike = lw != null && lw.doubleValue > 0.0
 
     // ---- keep: three-valued conjunction, exactly Spark's && chain
     val notTail = !bucket.equals(tail)
@@ -136,18 +130,19 @@ object EnsembleArtifacts {
     * class of driver-side collect (bounded by the trained model, never
     * by the corpus). `cb`/`cw` are [[graft.operators.QualityModelOps
     * .lmModelOf]]'s tables, loaded through [[LmModel.of]] and its row
-    * bound; `pplCuts` is `pplCutsOf`, `dsirModel` is `dsirModelOf`
-    * (its 256-bucket spine is required). */
+    * bound; `pplCuts` is `pplCutsOf`; the DSIR model is `dsirModelOf`'s
+    * frame, loaded through [[DsirModel.of]], or a model already
+    * collected. */
   def of(cb: org.apache.spark.sql.DataFrame, cw: org.apache.spark.sql.DataFrame,
       pplCuts: org.apache.spark.sql.DataFrame,
-      dsirModel: org.apache.spark.sql.DataFrame): EnsembleArtifacts = {
-    val lr = new Array[Double](256)
-    dsirModel.select("bucket", "log_ratio").collect().foreach { r =>
-      lr(Integer.parseInt(r.getString(0), 16)) = r.getDouble(1)
-    }
+      dsirModel: org.apache.spark.sql.DataFrame): EnsembleArtifacts =
+    of(cb, cw, pplCuts, DsirModel.of(dsirModel))
+
+  def of(cb: org.apache.spark.sql.DataFrame, cw: org.apache.spark.sql.DataFrame,
+      pplCuts: org.apache.spark.sql.DataFrame, dsir: DsirModel): EnsembleArtifacts = {
     val cutsP = pplCuts.select("lang", "c_low", "c_high").collect()
       .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
-    EnsembleArtifacts(LmModel.of(cb, cw), lr, cutsP)
+    EnsembleArtifacts(LmModel.of(cb, cw), dsir, cutsP)
   }
 }
 

@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.DsirModel
 
 /** Model-based corpus quality scoring — the two standard "train a cheap
   * model on a clean reference slice, score the whole crawl" filters of
@@ -395,11 +396,6 @@ object QualityModelOps {
 
   // ------------------------------------------------- DSIR weights
 
-  /** Number of hashed feature buckets. Buckets are the first two hex
-    * chars of md5(feature) — the one hash both engines compute
-    * identically — so B is fixed at 256. */
-  val dsirBuckets = 256
-
   /** DSIR log importance weight per document: features are hashed word
     * unigrams + bigrams; the target model is bucket frequencies in
     * [[refSources]], the raw model is bucket frequencies in the whole
@@ -409,65 +405,63 @@ object QualityModelOps {
     * signal DSIR resamples on. `target_like` thresholds the rounded
     * weight at 0 so both engines compare the identical value.
     *
-    * Scale shape: the model is trained once per (session, corpus)
-    * ([[dsirCountsFor]]) and rides into the query as two 256-slot
-    * literal arrays — the bound is structural (B = 256 md5 buckets),
-    * not data-dependent, so no join or broadcast carries it. Scoring is
-    * ONE projection over the native per-doc bucket counts
-    * ([[graft.functions.Md5BucketCounts]]): each document looks its
-    * buckets up by index, sorts its (ct0, cr0, m, nt, nr) terms with
-    * the compiled `sort_array` and folds them in that order — the
-    * oracle's exact term and fold order, so the weight is
-    * bit-identical. No corpus-sized frame is materialized, no
-    * (doc, bucket) row exists, and the only exchanges are
-    * [[Tables.spread]]'s (on a narrow layout) and the final `orderBy`.
-    * Documents with no features emit no row, as in the oracle's
-    * per-(doc, bucket) rollup. */
+    * The model is trained once per (session, corpus)
+    * ([[dsirModelFor]]) and scored by [[dsirWeightsOf]]; the only
+    * exchanges are [[Tables.spread]]'s (on a narrow layout) and the
+    * final `orderBy`. */
   def dsirWeights(s: SparkSession, dir: String): DataFrame = {
-    val model = dsirCountsFor(s, dir)
-    val ct = typedLit(model.ct)
-    val cr = typedLit(model.cr)
-    val nt = model.nt.fold(lit(null).cast("bigint"))(lit(_))
-    val nr = lit(model.nr)
-    Tables.spread(s, Tables.documents(s, dir))
+    val model = dsirModelFor(s, dir)
+    dsirWeightsOf(Tables.spread(s, Tables.documents(s, dir)), model).orderBy("doc_id")
+  }
+
+  /** The one DSIR scorer, batch or stream: (doc_id, n_features,
+    * log_weight, target_like) per document of `docs` (doc_id, text)
+    * under a trained [[DsirModel]]. ONE stateless projection over the
+    * native per-doc bucket counts ([[graft.functions.Md5BucketCounts]]),
+    * the model riding in as two 256-slot literal arrays — no join, no
+    * broadcast, no (doc, bucket) row. Documents with no features, null
+    * text among them, emit no row, as in the oracle's rollup. */
+  def dsirWeightsOf(docs: DataFrame, model: DsirModel): DataFrame =
+    docs
       .select(col("doc_id"),
         graft.functions.GraftFunctions.md5BucketCounts(col("text")).as("bm"))
       .filter(size(col("bm")) > 0)
       .select(col("doc_id"),
         aggregate(col("bm"), lit(0L), (acc, x) => acc + x.getField("m")).as("n_features"),
-        round(aggregate(
-          sort_array(transform(col("bm"), x => struct(
-            element_at(ct, x.getField("bucket") + 1).as("ct0"),
-            element_at(cr, x.getField("bucket") + 1).as("cr0"),
-            x.getField("m").as("m"), nt.as("nt"), nr.as("nr")))),
-          lit(0.0),
-          (acc, x) => acc + x.getField("m") *
-            ((log(x.getField("ct0") + lit(1)) - log(x.getField("nt") + lit(dsirBuckets))) -
-              (log(x.getField("cr0") + lit(1)) - log(x.getField("nr") + lit(dsirBuckets))))),
-          6).as("log_weight"))
+        dsirLogWeightOf(col("bm"), model).as("log_weight"))
       .select(col("doc_id"), col("n_features"), col("log_weight"),
         (col("log_weight") > 0.0).as("target_like"))
-      .orderBy("doc_id")
+
+  /** The DSIR fold over a per-doc (bucket, m) array `bm`: buckets are
+    * looked up by index in the model's literal arrays, the (ct0, cr0,
+    * m, nt, nr) terms sorted with the compiled `sort_array` and folded
+    * in that order — the oracle's terms and order, so the 6dp weight is
+    * bit-identical to it and to [[DsirModel.logWeight]]. */
+  private[graft] def dsirLogWeightOf(bm: Column, model: DsirModel): Column = {
+    val ct = typedLit(model.ct)
+    val cr = typedLit(model.cr)
+    val nt = model.nt.fold(lit(null).cast("bigint"))(lit(_))
+    val nr = lit(model.nr)
+    round(aggregate(
+      sort_array(transform(bm, x => struct(
+        element_at(ct, x.getField("bucket") + 1).as("ct0"),
+        element_at(cr, x.getField("bucket") + 1).as("cr0"),
+        x.getField("m").as("m"), nt.as("nt"), nr.as("nr")))),
+      lit(0.0),
+      (acc, x) => acc + x.getField("m") *
+        ((log(x.getField("ct0") + lit(1)) - log(x.getField("nt") + lit(DsirModel.buckets))) -
+          (log(x.getField("cr0") + lit(1)) - log(x.getField("nr") + lit(DsirModel.buckets))))),
+      6)
   }
-
-  /** The trained DSIR bucket counts of one corpus, indexed by bucket
-    * (the first md5 byte, 0..255): `ct` over [[refSources]], `cr` over
-    * the whole corpus, and their totals. `nt` is None when the corpus
-    * has no reference features — the oracle's empty `sum`, which makes
-    * every weight null. */
-  private[graft] final case class DsirCounts(
-      ct: Array[Long], cr: Array[Long], nt: Option[Long], nr: Long)
-
-  private val dsirCountsCache = new graft.SessionCache[DsirCounts]()
 
   /** The one DSIR training pass: per populated bucket (the first md5
     * byte, 0..255), its feature multiplicity over all of `docs` (`cr`)
     * and over the [[refSources]] slice (`ct`, null when no reference
     * feature hashed there), from the native per-doc
     * [[graft.functions.Md5BucketCounts]]. `docs` needs (source, text).
-    * At most [[dsirBuckets]] rows; the batch counts ([[dsirCountsFor]])
-    * and the bucket model ([[dsirModelOf]]) both derive from it. */
-  private def dsirBucketCounts(docs: DataFrame): DataFrame =
+    * At most 256 `(bucket, cr, ct)` rows, which [[DsirModel.of]]
+    * collects; also the persisted `dsir_model` table. */
+  def dsirModelOf(docs: DataFrame): DataFrame =
     docs
       .select(col("source"),
         explode(graft.functions.GraftFunctions.md5BucketCounts(col("text"))).as("bm"))
@@ -475,21 +469,14 @@ object QualityModelOps {
       .agg(sum(col("bm.m")).as("cr"),
         sum(when(col("source").isin(refSources: _*), col("bm.m"))).as("ct"))
 
-  /** [[DsirCounts]] trained once per (session, corpus) like
-    * [[ensembleArtifactsFor]]: one bounded collect of at most
-    * [[dsirBuckets]] rows (training is deterministic, so cached and
-    * fresh models are identical). */
-  private[graft] def dsirCountsFor(s: SparkSession, dir: String): DsirCounts =
-    dsirCountsCache.getOrCompute(s, dir) {
-      val rows = dsirBucketCounts(Tables.spread(s, Tables.documents(s, dir))).collect()
-      val ct = new Array[Long](dsirBuckets)
-      val cr = new Array[Long](dsirBuckets)
-      rows.foreach { r =>
-        cr(r.getInt(0)) = r.getLong(1)
-        if (!r.isNullAt(2)) ct(r.getInt(0)) = r.getLong(2)
-      }
-      val nt = if (rows.exists(!_.isNullAt(2))) Some(ct.sum) else None
-      DsirCounts(ct, cr, nt, cr.sum)
+  private val dsirModelCache = new graft.SessionCache[DsirModel]()
+
+  /** The [[DsirModel]] of one corpus, trained once per (session,
+    * corpus): q_dsir_weights, [[ensembleArtifactsFor]] and StreamBench
+    * all read this one copy. */
+  private[graft] def dsirModelFor(s: SparkSession, dir: String): DsirModel =
+    dsirModelCache.getOrCompute(s, dir) {
+      DsirModel.of(dsirModelOf(Tables.spread(s, Tables.documents(s, dir))))
     }
 
   val dsirWeightsSql: String =
@@ -516,8 +503,8 @@ object QualityModelOps {
        |      list(struct_pack(ct0 := ct0, cr0 := cr0, m := m, nt := nt, nr := nr)
        |        ORDER BY ct0, cr0, m, nt, nr),
        |      t -> CAST(t.m AS DOUBLE) *
-       |        ((ln(CAST(t.ct0 AS DOUBLE) + 1) - ln(CAST(t.nt AS DOUBLE) + $dsirBuckets))
-       |         - (ln(CAST(t.cr0 AS DOUBLE) + 1) - ln(CAST(t.nr AS DOUBLE) + $dsirBuckets))))),
+       |        ((ln(CAST(t.ct0 AS DOUBLE) + 1) - ln(CAST(t.nt AS DOUBLE) + ${DsirModel.buckets}))
+       |         - (ln(CAST(t.cr0 AS DOUBLE) + 1) - ln(CAST(t.nr AS DOUBLE) + ${DsirModel.buckets}))))),
        |      (acc, x) -> acc + x), 6) AS log_weight
        |  FROM (
        |    SELECT fb.doc_id, fb.m, coalesce(ct.ct, 0) AS ct0, cr.cr AS cr0, nt, nr
@@ -525,33 +512,6 @@ object QualityModelOps {
        |  GROUP BY 1)
        |SELECT doc_id, n_features, log_weight, log_weight > 0 AS target_like
        |FROM per ORDER BY doc_id""".stripMargin
-
-  /** The trained DSIR bucket model as a reusable frame: per bucket, the
-    * add-one-smoothed log ratio ln p_target − ln p_raw, keyed by the
-    * bucket's two-hex-char md5 prefix. ≤256 rows by construction — the
-    * streaming scorer collapses it to one broadcast map
-    * ([[graft.streaming.EventStream.dsirScoreStream]]). A lazy frame
-    * over [[dsirBucketCounts]], the same training pass as the batch
-    * scorer's. `docs` needs (source, text); the target slice is
-    * [[refSources]]; a corpus with no reference feature gives null
-    * ratios (the oracle's empty `sum`). */
-  def dsirModelOf(docs: DataFrame): DataFrame = {
-    val counts = dsirBucketCounts(docs)
-    val totals = counts.agg(sum(col("cr")).as("nr"), sum(col("ct")).as("nt"))
-    // ALL 256 buckets, not just those the training corpus populated: a
-    // scored document may hash into a bucket the training never saw,
-    // and add-one smoothing gives that bucket the log ratio
-    // ln(nr+256) − ln(nt+256), not 0 — without the spine the streaming
-    // scorer's map lookup would miss and silently contribute 0.
-    docs.sparkSession.range(dsirBuckets)
-      .select(col("id").cast("int").as("bucket"))
-      .join(counts, Seq("bucket"), "left")
-      .crossJoin(broadcast(totals))
-      .select(format_string("%02x", col("bucket")).as("bucket"),
-        ((log(coalesce(col("ct"), lit(0L)) + lit(1)) - log(col("nt") + lit(dsirBuckets))) -
-          (log(coalesce(col("cr"), lit(0L)) + lit(1)) - log(col("nr") + lit(dsirBuckets))))
-          .as("log_ratio"))
-  }
 
   // ------------------------------------- persisted model artifacts
 
@@ -647,8 +607,10 @@ object QualityModelOps {
     * corpus) like every other standing artifact ([[graft.operators
     * .AnnOps.ivfFor]] pattern) — repeated driver queries and bench
     * repetitions reuse the trained artifacts instead of re-running
-    * the LM/DSIR/ppl-cut training per call (training is
-    * deterministic, so cached and fresh scorers are identical). */
+    * the LM/ppl-cut training per call (training is deterministic, so
+    * cached and fresh scorers are identical). The DSIR model is the
+    * session's one copy ([[dsirModelFor]]), so a session that already
+    * ran q_dsir_weights trains no DSIR here. */
   def ensembleArtifactsFor(s: SparkSession,
       dir: String): graft.functions.EnsembleArtifacts =
     ensembleArtCache.getOrCompute(s, dir) {
@@ -656,7 +618,7 @@ object QualityModelOps {
       val (cb, cw) = lmModelOf(docs)
       val cuts = pplCutsOf(lmPerplexity(s, dir)
         .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id")))
-      graft.functions.EnsembleArtifacts.of(cb, cw, cuts, dsirModelOf(docs))
+      graft.functions.EnsembleArtifacts.of(cb, cw, cuts, dsirModelFor(s, dir))
     }
 
   def qualityEnsembleFused(s: SparkSession, dir: String): DataFrame = {

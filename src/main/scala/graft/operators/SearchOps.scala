@@ -48,31 +48,17 @@ object SearchOps {
     * lifecycle as the ANN index. */
   def bm25TopK(s: SparkSession, dir: String): DataFrame = {
     val (dfT, stats) = bm25ModelFor(s, dir)
-    val ws = split(trim(col("text")), "\\s+")
-    val base = Tables.spread(s, Tables.documents(s, dir))
-      .filter(size(ws) >= 1)
-      .select(col("doc_id"), ws.as("ws"))
-    bm25TopKFrom(base, queryTerms, bm25TopN, dfT, stats)
+    bm25TopKFrom(bm25Tokens(Tables.spread(s, Tables.documents(s, dir)), "doc_id", "text"),
+      queryTerms, bm25TopN, dfT, stats)
   }
 
   /** Generic API: BM25 top-`topN` documents for a bag of query terms
-    * over any (id, text) corpus, model computed inline. Output
-    * (rank, doc_id, score). */
+    * over any (id, text) corpus, model ([[bm25ModelOf]]) computed
+    * inline. Output (rank, doc_id, score). */
   def bm25TopKOf(docs: DataFrame, idCol: String, textCol: String,
       terms: Seq[String], topN: Int): DataFrame = {
-    val ws = split(trim(col(textCol)), "\\s+")
-    val base = docs.filter(size(ws) >= 1)
-      .select(col(idCol).as("doc_id"), ws.as("ws"))
-    // corpus stats: one 1-row aggregate, broadcast; avgdl is derived
-    // inside the expression (sum/count — both exact integers) so the
-    // division happens identically on both engines
-    val stats = base.agg(count(lit(1)).as("n_docs"),
-      sum(size(col("ws")).cast("long")).as("sum_dl"))
-    val df = base
-      .select(col("doc_id"), explode(array_distinct(col("ws"))).as("tok"))
-      .filter(col("tok").isin(terms: _*))
-      .groupBy(col("tok")).agg(count(lit(1)).cast("double").as("df"))
-    bm25TopKFrom(base, terms, topN, df, stats)
+    val (dfT, stats) = bm25ModelOf(docs, idCol, textCol, terms)
+    bm25TopKFrom(bm25Tokens(docs, idCol, textCol), terms, topN, dfT, stats)
   }
 
   /** Shared ranking stage over a tokenized (doc_id, ws) frame and a
@@ -271,9 +257,10 @@ object SearchOps {
     * streaming scorer ([[graft.streaming.EventStream.bm25ScoreStream]]). */
   def bm25ModelOf(docs: DataFrame, idCol: String, textCol: String,
       terms: Seq[String]): (DataFrame, DataFrame) = {
-    val ws = split(trim(col(textCol)), "\\s+")
-    val base = docs.filter(size(ws) >= 1)
-      .select(col(idCol).as("doc_id"), ws.as("ws"))
+    val base = bm25Tokens(docs, idCol, textCol)
+    // corpus stats: one 1-row aggregate, broadcast; avgdl is derived
+    // inside the expression (sum/count — both exact integers) so the
+    // division happens identically on both engines
     val stats = base.agg(count(lit(1)).as("n_docs"),
       sum(size(col("ws")).cast("long")).as("sum_dl"))
     val df = base
@@ -281,6 +268,12 @@ object SearchOps {
       .filter(col("tok").isin(terms: _*))
       .groupBy(col("tok")).agg(count(lit(1)).cast("double").as("df"))
     (df, stats)
+  }
+
+  /** (doc_id, ws): the `\s+` tokens of every document with a token. */
+  private def bm25Tokens(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val ws = split(trim(col(textCol)), "\\s+")
+    docs.filter(size(ws) >= 1).select(col(idCol).as("doc_id"), ws.as("ws"))
   }
 
   // --------------------------------------------- exact phrase search

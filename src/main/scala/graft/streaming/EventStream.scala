@@ -538,49 +538,6 @@ object EventStream {
       }
   }
 
-  /** Stateless streaming DSIR quality scoring: score an incoming
-    * document stream against a trained bucket model
-    * ([[graft.operators.QualityModelOps.dsirModelOf]], ≤256 rows by
-    * construction). The model collapses to ONE row holding a
-    * bucket→log-ratio map and rides a broadcast into the stream, so
-    * scoring is purely map-side — no streaming state, no watermark, no
-    * shuffle; at production width every executor scores its partition
-    * of the crawl at ingest speed. Feature hashing (md5-prefix buckets)
-    * is identical to the batch operator's, so stream scores match the
-    * batch [[graft.operators.QualityModelOps.dsirWeights]] up to
-    * double-fold order (spec-pinned to 1e-9, flags identical).
-    *
-    * `docs` needs (doc_id, text); emits (doc_id, n_features,
-    * log_weight, target_like) in append mode. */
-  def dsirScoreStream(docs: DataFrame, bucketModel: DataFrame): DataFrame = {
-    // model keyed by the bucket's INTEGER value (the first md5 digest
-    // byte — `substring(md5(f),1,2)` is its hex spelling), matching
-    // the native per-doc bucket counts below
-    val m = bucketModel.agg(
-      map_from_entries(collect_list(struct(
-        conv(col("bucket"), 16, 10).cast("int").as("b"), col("log_ratio"))))
-        .as("lr"))
-    // ONE native pass per document ([[graft.functions.Md5BucketCounts]],
-    // the batch q_dsir_weights hot path): no per-feature string
-    // allocation and a ≤256-element model fold instead of a
-    // per-feature interpreted md5 + linear map scan (measured 277 →
-    // see StreamBench). Σ m(b)·ratio(b) equals the old per-occurrence
-    // fold up to double fold order — inside the spec's 1e-9 pin.
-    docs
-      .crossJoin(broadcast(m))
-      .select(col("doc_id"),
-        graft.functions.GraftFunctions.md5BucketCounts(col("text")).as("bm"),
-        col("lr"))
-      .select(col("doc_id"),
-        aggregate(col("bm"), lit(0L), (acc, x) =>
-          acc + x.getField("m")).as("n_features"),
-        round(aggregate(col("bm"), lit(0.0), (acc, x) =>
-          acc + x.getField("m").cast("double") *
-            coalesce(element_at(col("lr"), x.getField("bucket")), lit(0.0))),
-          6).as("log_weight"))
-      .withColumn("target_like", col("log_weight") > 0.0)
-  }
-
   /** Streaming CCNet-style LM quality scoring — the streaming twin of
     * [[graft.operators.QualityModelOps.lmPerplexity]]. The trained
     * bigram/context count tables (from

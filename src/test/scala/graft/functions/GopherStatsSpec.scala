@@ -136,7 +136,7 @@ class GopherStatsSpec extends SparkSpec {
   test("the ensemble's gopher_keep equals the kernel's keep") {
     // gopher_keep reads no trained artifact, so a one-word model will do
     val art = EnsembleArtifacts(LmModel(Array.empty, Array(("\u0000", 1L))),
-      new Array[Double](256), Array.empty)
+      DsirModel(new Array[Long](256), new Array[Long](256), None, 0L), Array.empty)
     val docs = graft.Tables.documents(spark, sf01).select("doc_id", "text")
       .unionByName(edgeFrame.filter(col("text").isNotNull))
     val rows = docs.select(

@@ -39,7 +39,8 @@ class LmModelSpec extends SparkSpec {
     assert(r.getLong(0) == 2L && r.isNullAt(1))
 
     // the fused gate puts the unscorable document in `unscored`
-    val art = EnsembleArtifacts(m, new Array[Double](256), Array(("en", -5.0, -1.0)))
+    val art = EnsembleArtifacts(m, DsirModel.of(QualityModelOps.dsirModelOf(docs)),
+      Array(("en", -5.0, -1.0)))
     val verdict = art.score(text, org.apache.spark.unsafe.types.UTF8String.fromString("en"))
     assert(verdict.getUTF8String(2).toString == "unscored")
   }

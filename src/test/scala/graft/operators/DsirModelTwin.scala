@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * features from one `\s+` split per row, each feature's bucket the
   * two-hex-char prefix of its string md5. */
 object DsirModelTwin {
-  import QualityModelOps.{dsirBuckets, refSources}
+  import QualityModelOps.refSources
 
   /** Unigrams ++ adjacent bigrams of `split(trim(text), "\s+")`, the
     * split let-bound so it runs once per row. */
@@ -18,9 +18,10 @@ object DsirModelTwin {
     transform(array(split(trim(col("text")), "\\s+")),
       ws => concat(ws, QualityModelOps.bigramsOf(ws))), 1)
 
-  /** The bucket model as string-md5 rollups: per-(source, bucket)
-    * multiplicities, their whole-corpus and reference-slice sums, the
-    * totals broadcast back over a spine of all 256 buckets. */
+  /** The bucket counts as string-md5 rollups: per-(source, bucket)
+    * multiplicities and their whole-corpus and reference-slice sums;
+    * only the last projection turns the hex bucket into the model's
+    * `(bucket, cr, ct)` row. */
   def of(docs: DataFrame): DataFrame = {
     val fb = docs
       .select(col("source"), explode(featuresCol).as("f"))
@@ -30,16 +31,7 @@ object DsirModelTwin {
     val cr = fb.groupBy(col("bucket")).agg(sum(col("m")).as("cr"))
     val ct = fb.filter(col("source").isin(refSources: _*))
       .groupBy(col("bucket")).agg(sum(col("m")).as("ct"))
-    val totals = cr.agg(sum(col("cr")).as("nr"))
-      .crossJoin(broadcast(ct.agg(sum(col("ct")).as("nt"))))
-    docs.sparkSession.range(dsirBuckets)
-      .select(format_string("%02x", col("id")).as("bucket"))
-      .join(cr, Seq("bucket"), "left")
-      .join(ct, Seq("bucket"), "left")
-      .crossJoin(broadcast(totals))
-      .select(col("bucket"),
-        ((log(coalesce(col("ct"), lit(0L)) + lit(1)) - log(col("nt") + lit(dsirBuckets))) -
-          (log(coalesce(col("cr"), lit(0L)) + lit(1)) - log(col("nr") + lit(dsirBuckets))))
-          .as("log_ratio"))
+    cr.join(ct, Seq("bucket"), "left")
+      .select(conv(col("bucket"), 16, 10).cast("int").as("bucket"), col("cr"), col("ct"))
   }
 }

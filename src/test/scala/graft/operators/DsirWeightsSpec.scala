@@ -11,7 +11,8 @@ import graft.functions.GraftFunctions
   * rollups of the per-(doc, bucket) frame, broadcast back onto it, and
   * each document's terms are regrouped and folded in sorted order. */
 object DsirWeightsTwin {
-  import QualityModelOps.{dsirBuckets, refSources}
+  import QualityModelOps.refSources
+  private val dsirBuckets = graft.functions.DsirModel.buckets
 
   def of(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.spread(s, Tables.documents(s, dir))
@@ -77,6 +78,30 @@ class DsirWeightsSpec extends SparkSpec {
     assert(jobs <= 3, s"warm q_dsir_weights launched $jobs jobs")
     val (_, twinJobs) = JobCounter(spark)(digest(DsirWeightsTwin.of(spark, sf)))
     assert(twinJobs > jobs, s"the per-call twin launched $twinJobs jobs")
+  }
+
+  test("after a warm q_dsir_weights a cold ensembleArtifactsFor runs no DSIR training") {
+    // a corpus path of its own, so no other spec has warmed its caches
+    val dir = java.nio.file.Files.createTempDirectory("graft-dsir-once").toString
+    Tables.documents(spark, sfDir).write.parquet(s"$dir/documents.parquet")
+    QualityModelOps.dsirWeights(spark, dir).collect()
+    // a DSIR training pass is an action whose plan runs the bucket counts
+    val trainings = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        if (qe.optimizedPlan.toString.contains("graft_md5_bucket_counts"))
+          trainings.incrementAndGet()
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    val (art, jobs) =
+      try JobCounter(spark)(QualityModelOps.ensembleArtifactsFor(spark, dir))
+      finally spark.listenerManager.unregister(l)
+    info(s"cold ensembleArtifactsFor after a warm q_dsir_weights: $jobs jobs")
+    assert(jobs > 0 && trainings.get == 0)
+    assert(art.dsir eq QualityModelOps.dsirModelFor(spark, dir))
   }
 
   test("a corpus with no reference documents yields null weights, as the oracle does") {

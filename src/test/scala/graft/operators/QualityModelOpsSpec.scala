@@ -109,11 +109,49 @@ class QualityModelOpsSpec extends SparkSpec {
     assert(feats(1L) == Seq("solo"), "one word → one unigram, no bigrams")
     assert(feats(2L) == Seq(""), "empty text → the single empty token")
     assert(feats(3L) == Seq("two", "words", "two words"))
-    // and the full scoring path survives them (model + stream scorer)
-    val model = QualityModelOps.dsirModelOf(docs.withColumn("source", lit("src0")))
-    assert(model.count() == QualityModelOps.dsirBuckets.toLong,
-      "model must carry all 256 buckets, seen or not")
-    val scored = graft.streaming.EventStream.dsirScoreStream(docs, model).collect()
+    // and the full scoring path survives them (model + scorer)
+    val model = graft.functions.DsirModel.of(
+      QualityModelOps.dsirModelOf(docs.withColumn("source", lit("src0"))))
+    val scored = QualityModelOps.dsirWeightsOf(docs, model).collect()
     assert(scored.length == 3 && scored.forall(!_.isNullAt(2)))
+  }
+
+  test("dsir: a document in buckets unseen in training scores the add-one term everywhere") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val train = Seq(("src0", "alpha"), ("src9", "beta gamma delta")).toDF("source", "text")
+    val model = graft.functions.DsirModel.of(QualityModelOps.dsirModelOf(train))
+    def bucket(f: String): Int =
+      java.security.MessageDigest.getInstance("MD5").digest(f.getBytes("UTF-8"))(0) & 0xff
+    // "w w w": unigram w three times, bigram "w w" twice, both unseen
+    val w = Iterator.from(0).map(i => s"u$i").find(w =>
+      model.cr(bucket(w)) == 0L && model.cr(bucket(s"$w $w")) == 0L).get
+    val text = s"$w $w $w"
+    val docs = Seq((1L, text)).toDF("doc_id", "text")
+
+    val batch = QualityModelOps.dsirWeightsOf(docs, model).collect().toSeq
+    val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
+    stream.addData((1L, text))
+    val q = QualityModelOps.dsirWeightsOf(stream.toDF().toDF("doc_id", "text"), model)
+      .writeStream.format("memory").queryName("dsir_unseen").outputMode("append").start()
+    try q.processAllAvailable() finally q.stop()
+    assert(spark.table("dsir_unseen").collect().toSeq == batch)
+
+    // each unseen bucket adds m·(ln(nr+256) − ln(nt+256)), not 0
+    val addOne = math.log(model.nr + 256.0) - math.log(model.nt.get + 256.0)
+    assert(addOne > 0.0)
+    assert(batch.length == 1 && batch.head.getLong(1) == 5L)
+    assert(math.abs(batch.head.getDouble(2) - 5 * addOne) < 1e-6)
+    assert(batch.head.getBoolean(3))
+
+    // the fused gate: its JVM fold gives the same weight, and its flag
+    val hist = new Array[Long](256)
+    hist(bucket(w)) += 3L
+    hist(bucket(s"$w $w")) += 2L
+    assert(model.logWeight(hist) == batch.head.getDouble(2))
+    val art = graft.functions.EnsembleArtifacts(
+      graft.functions.LmModel(Array.empty, Array(("\u0000", 1L))), model, Array.empty)
+    val fused = art.score(org.apache.spark.unsafe.types.UTF8String.fromString(text), null)
+    assert(fused.getBoolean(3) == batch.head.getBoolean(3))
   }
 }

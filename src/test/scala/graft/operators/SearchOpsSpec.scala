@@ -44,6 +44,15 @@ class SearchOpsSpec extends SparkSpec {
       SearchOps.queryTerms.exists(t.split("\\s+").contains)))
   }
 
+  test("bm25TopKOf over the corpus returns q_bm25_topk's rows") {
+    val docs = graft.Tables.documents(spark, sfDir)
+      .select(col("doc_id").as("id"), col("text").as("body"))
+    val got = SearchOps.bm25TopKOf(docs, "id", "body", SearchOps.queryTerms,
+      SearchOps.bm25TopN).collect().toSeq
+    val want = SearchOps.bm25TopK(spark, sfDir).collect().toSeq
+    assert(got.nonEmpty && got == want)
+  }
+
   test("phrase search finds exactly the brute-force occurrences") {
     val phrase = SearchOps.queryPhrase.split("\\s+").toSeq
     val docs = graft.Tables.documents(spark, sfDir)

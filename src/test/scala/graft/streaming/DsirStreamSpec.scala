@@ -1,44 +1,50 @@
 package graft.streaming
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.operators.QualityModelOps
 
+/** Streaming DSIR is the batch scorer ([[QualityModelOps.dsirWeightsOf]])
+  * over a MemoryStream: same rows, same doubles. */
 class DsirStreamSpec extends SparkSpec {
 
-  test("streaming DSIR scores match the batch operator (1e-9) with identical flags") {
+  /** `rows` through a MemoryStream into the scorer, collected sorted. */
+  private def streamed(rows: Seq[(Long, String)], name: String): Seq[Row] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val docs = graft.Tables.documents(spark, sfDir)
-    val model = QualityModelOps.dsirModelOf(docs)
-
+    val model = QualityModelOps.dsirModelFor(spark, sfDir)
     val stream = MemoryStream[(Long, String)]
-    stream.addData(docs.select(col("doc_id"), col("text"))
-      .as[(Long, String)].collect().toSeq)
-    val q = EventStream.dsirScoreStream(
-        stream.toDF().toDF("doc_id", "text"), model)
-      .writeStream.format("memory").queryName("dsir_stream")
+    stream.addData(rows)
+    val q = QualityModelOps.dsirWeightsOf(stream.toDF().toDF("doc_id", "text"), model)
+      .writeStream.format("memory").queryName(name)
       .outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
+    spark.table(name).orderBy("doc_id").collect().toSeq
+  }
 
-    val streamed = spark.table("dsir_stream").collect()
-      .map(r => r.getAs[Long]("doc_id") ->
-        ((r.getAs[Long]("n_features"), r.getAs[Double]("log_weight"),
-          r.getAs[Boolean]("target_like")))).toMap
-    val batch = QualityModelOps.dsirWeights(spark, sfDir).collect()
-      .map(r => r.getAs[Long]("doc_id") ->
-        ((r.getAs[Long]("n_features"), r.getAs[Double]("log_weight"),
-          r.getAs[Boolean]("target_like")))).toMap
+  private def docRows: Seq[(Long, String)] = {
+    import spark.implicits._
+    graft.Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
+      .as[(Long, String)].collect().toSeq
+  }
 
-    assert(streamed.keySet == batch.keySet)
-    streamed.foreach { case (id, (nf, w, flag)) =>
-      val (bnf, bw, bflag) = batch(id)
-      assert(nf == bnf, s"doc $id n_features")
-      // same per-bucket log ratios summed in a different fold order
-      assert(math.abs(w - bw) < 1e-9, s"doc $id weight $w vs $bw")
-      assert(flag == bflag, s"doc $id flag")
-    }
+  test("streaming DSIR rows equal the batch operator's, doubles exactly") {
+    val got = streamed(docRows, "dsir_stream")
+    val want = QualityModelOps.dsirWeights(spark, sfDir).collect().toSeq
+    assert(got.nonEmpty && got == want)
+  }
+
+  test("a null-text document is dropped in the stream as in batch") {
+    import spark.implicits._
+    val rows = docRows :+ ((-1L, null.asInstanceOf[String]))
+    val got = streamed(rows, "dsir_stream_null")
+    val batch: DataFrame = rows.toDF("doc_id", "text")
+    val want = QualityModelOps.dsirWeightsOf(batch,
+      QualityModelOps.dsirModelFor(spark, sfDir)).orderBy("doc_id").collect().toSeq
+    assert(got == want)
+    assert(got.length == docRows.length && !got.exists(_.getLong(0) == -1L))
   }
 }

@@ -97,17 +97,20 @@ class QualityEnsembleFusedSpec extends SparkSpec {
       .withColumn("r", TextFunctions.repetitionStructCol)
       .select(col("doc_id"), col("g.keep").as("gopher_keep"),
         col("r.flagged").as("rep_flag"))
-    // LM + buckets + DSIR via the streaming map-fold scorers (already
-    // spec-pinned equal to batch) over the same artifacts
+    // LM via the streaming scorer (spec-pinned equal to batch) and DSIR
+    // via the one batch/stream scorer, over the same artifacts; a
+    // document without a DSIR row or weight is not target-like, as in
+    // the batch gate
     val (cb, cw) = QualityModelOps.lmModelOf(docs)
-    val dsirModel = QualityModelOps.dsirModelOf(docs)
     val pplCuts = QualityModelOps.pplCutsOf(
       QualityModelOps.lmPerplexity(spark, sfDir)
         .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id")))
     val lm = EventStream.lmScoreStream(df, cb, cw)
-    val ds = EventStream.dsirScoreStream(df, dsirModel)
+    val ds = QualityModelOps.dsirWeightsOf(df,
+        graft.functions.DsirModel.of(QualityModelOps.dsirModelOf(docs)))
+      .select(col("doc_id"), col("target_like"))
     val expected = g
-      .join(lm, Seq("doc_id")).join(ds, Seq("doc_id"))
+      .join(lm, Seq("doc_id")).join(ds, Seq("doc_id"), "left")
       .join(df.select(col("doc_id"), col("lang")), Seq("doc_id"))
       .join(broadcast(pplCuts), Seq("lang"), "left")
       .select(col("doc_id"), col("gopher_keep"), col("rep_flag"),
@@ -115,7 +118,7 @@ class QualityEnsembleFusedSpec extends SparkSpec {
           .when(col("mean_log_prob") >= col("c_high"), lit("head"))
           .when(col("mean_log_prob") >= col("c_low"), lit("middle"))
           .otherwise(lit("tail")).as("ppl_bucket"),
-        col("target_like"),
+        coalesce(col("target_like"), lit(false)).as("target_like"),
         (col("gopher_keep") && !col("rep_flag") &&
           when(col("mean_log_prob").isNull, lit("unscored"))
             .when(col("mean_log_prob") >= col("c_high"), lit("head"))
