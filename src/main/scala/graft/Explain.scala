@@ -179,11 +179,9 @@ object Explain {
       // leaves the scan beyond fingerprinting
       "q_source_overlap"     -> Seq("HashAggregate",
         "ReadSchema: struct<text:string,source:string>"),
-      // BM25: query terms filter BEFORE the tf aggregation (the token
-      // stream shrinks to |q| terms per doc), df broadcasts back, and
-      // top-k is a per-partition heap — never a global sort
-      "q_bm25_topk"          -> Seq("TakeOrderedAndProject",
-        "BroadcastHashJoin", " IN (vector,hash,join)"),
+      // BM25: one scoring projection against the session-trained model,
+      // top-k a per-partition heap — never a global sort
+      "q_bm25_topk"          -> Seq("TakeOrderedAndProject"),
       // chunking is one map-side Generate
       "q_rag_chunks"         -> Seq("Generate"),
       // phrase match is a pruned-scan column chain
@@ -303,6 +301,8 @@ object Explain {
       // projection: a Generate or a regroup means the per-(doc, bucket)
       // rows are back
       "q_dsir_weights"      -> Seq("Generate", "ObjectHashAggregate", "Join"),
+      // the same for BM25 against its session-trained model
+      "q_bm25_topk"         -> Seq("Generate", "ObjectHashAggregate", "Join"),
       // the Gopher rules are one native pass: a lambda, a regex match
       // or a regex rewrite means the interpreted chain is back
       "q_gopher_filter"     -> Seq("lambdafunction", "RLIKE", "regexp_replace"),

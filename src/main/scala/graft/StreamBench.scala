@@ -31,13 +31,13 @@ object StreamBench {
         .as[(Long, String)].collect()
     }
 
-    // ---- standing artifacts, trained once up front
+    // ---- standing artifacts, trained once up front (the LM tables
+    // for the join-shape leg)
     val dsirModel = QualityModelOps.dsirModelFor(spark, srcDir)
+    val lmModel = QualityModelOps.lmModelFor(spark, srcDir)
+    val bm25Model = SearchOps.bm25ModelFor(spark, srcDir)
     val (cb, cw) = QualityModelOps.lmModelOf(docs)
     val (cbM, cwM) = (cb.localCheckpoint(), cw.localCheckpoint())
-    val (bm25Df, bm25Stats) = SearchOps.bm25ModelOf(docs, "doc_id", "text",
-      SearchOps.queryTerms)
-    val (bm25DfM, bm25StatsM) = (bm25Df.localCheckpoint(), bm25Stats.localCheckpoint())
     val hs = DedupOps.shingleHashes(spark, srcDir)
     val bench = hs.filter(col("doc_id") % 97 === 0).localCheckpoint()
     val bloom = PipelineOps.evalBloomOf(bench)
@@ -53,23 +53,32 @@ object StreamBench {
     }
 
     // one leg: `items` through a memory stream into `f`, to a noop sink
-    def run[T: Encoder](name: String, mode: String, items: Seq[T], unit: String = "docs")(
-        f: Dataset[T] => Dataset[_]): Unit = {
+    def start[T: Encoder](mode: String, items: Seq[T])(
+        f: Dataset[T] => Dataset[_]): StreamingQuery = {
       val stream = MemoryStream[T]
       stream.addData(items)
-      report(name, items.size, unit)(
-        f(stream.toDS()).writeStream.format("noop").outputMode(mode).start())
+      f(stream.toDS()).writeStream.format("noop").outputMode(mode).start()
     }
+    def run[T: Encoder](name: String, mode: String, items: Seq[T], unit: String = "docs")(
+        f: Dataset[T] => Dataset[_]): Unit =
+      report(name, items.size, unit)(start(mode, items)(f))
 
     // a leg over the (doc_id, text) corpus copies
     def docLeg(name: String, mode: String)(f: DataFrame => DataFrame): Unit =
       run(name, mode, rows)(ds => f(ds.toDF("doc_id", "text")))
 
+    // untimed warm-up: the JVM's first streaming query pays start-up
+    // costs no leg should carry
+    val warm = start("append", rows)(ds =>
+      QualityModelOps.dsirWeightsOf(ds.toDF("doc_id", "text"), dsirModel))
+    try warm.processAllAvailable() finally warm.stop()
+
     docLeg("dsir_score", "append")(df => QualityModelOps.dsirWeightsOf(df, dsirModel))
-    docLeg("lm_score", "append")(df => EventStream.lmScoreStream(df, cbM, cwM))
+    docLeg("lm_score", "append")(df => QualityModelOps.lmScoresOf(df, lmModel))
     docLeg("lm_score_join", "update")(df => EventStream.lmScoreStreamJoin(df, cbM, cwM))
     docLeg("bm25_score", "append")(df =>
-      EventStream.bm25ScoreStream(df, bm25DfM, bm25StatsM))
+      SearchOps.bm25ScoresOf(df, "doc_id", "text", bm25Model)
+        .withColumn("score", round(col("score"), 6)))
     docLeg("contamination", "update")(df =>
       EventStream.contaminationStream(df, bench, bloom, PipelineOps.contaminationFrac))
     docLeg("substring_cut", "update")(df =>

@@ -131,18 +131,18 @@ object EnsembleArtifacts {
     * by the corpus). `cb`/`cw` are [[graft.operators.QualityModelOps
     * .lmModelOf]]'s tables, loaded through [[LmModel.of]] and its row
     * bound; `pplCuts` is `pplCutsOf`; the DSIR model is `dsirModelOf`'s
-    * frame, loaded through [[DsirModel.of]], or a model already
-    * collected. */
+    * frame, loaded through [[DsirModel.of]]. */
   def of(cb: org.apache.spark.sql.DataFrame, cw: org.apache.spark.sql.DataFrame,
       pplCuts: org.apache.spark.sql.DataFrame,
       dsirModel: org.apache.spark.sql.DataFrame): EnsembleArtifacts =
-    of(cb, cw, pplCuts, DsirModel.of(dsirModel))
+    of(LmModel.of(cb, cw), pplCuts, DsirModel.of(dsirModel))
 
-  def of(cb: org.apache.spark.sql.DataFrame, cw: org.apache.spark.sql.DataFrame,
-      pplCuts: org.apache.spark.sql.DataFrame, dsir: DsirModel): EnsembleArtifacts = {
+  /** The same from models already collected. */
+  def of(lm: LmModel, pplCuts: org.apache.spark.sql.DataFrame,
+      dsir: DsirModel): EnsembleArtifacts = {
     val cutsP = pplCuts.select("lang", "c_low", "c_high").collect()
       .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
-    EnsembleArtifacts(LmModel.of(cb, cw), dsir, cutsP)
+    EnsembleArtifacts(lm, dsir, cutsP)
   }
 }
 

@@ -10,8 +10,9 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The trained bigram-LM model as a closure value — the one driver
-  * copy of the LM tables and the one LM fold, shared by the streaming
-  * scorer ([[LmScore]]) and the fused quality gate
+  * copy of the LM tables and the one LM fold, shared by the closure
+  * scorer ([[LmScore]], through `QualityModelOps.lmScoresOf`) and the
+  * fused quality gate
   * ([[EnsembleArtifacts]]). Vocabulary-sized driver collect
   * ([[LmModel.of]] bounds it), O(1) hash probes per distinct bigram at
   * score time. */

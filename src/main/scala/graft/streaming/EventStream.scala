@@ -209,7 +209,7 @@ object EventStream {
     * standing-artifact probe next to the dedup index
     * ([[indexProbe]]), the window-frequency index
     * ([[substringCutStream]]) and the BM25 term index
-    * ([[bm25ScoreStream]]): a vector stream is answered against a
+    * ([[graft.operators.SearchOps.bm25ScoresOf]]): a vector stream is answered against a
     * trained, arbitrarily large corpus index without restating it.
     *
     * Probe selection is the batch plan's broadcast centroid-probe
@@ -538,77 +538,9 @@ object EventStream {
       }
   }
 
-  /** Streaming CCNet-style LM quality scoring — the streaming twin of
-    * [[graft.operators.QualityModelOps.lmPerplexity]]. The trained
-    * bigram/context count tables (from
-    * [[graft.operators.QualityModelOps.lmModelOf]], standing artifacts
-    * at production scale) ride the task closure as one
-    * [[graft.functions.LmModel]], and a document scores in one native
-    * projection ([[graft.functions.LmScore]]): stateless, zero
-    * shuffles, ingest speed, like the DSIR scorer. The model's hash maps
-    * give O(1) probes per distinct bigram (a MapType broadcast probes
-    * linearly); [[graft.functions.LmModel.of]] bounds the driver copy,
-    * and [[lmScoreStreamJoin]] is the path for bigger models. The
-    * scorer runs the one LM fold — the batch operator's terms, sort
-    * order and log — so scores are bit-identical to the batch
-    * operator's (LmStreamSpec). */
-  def lmScoreStream(docs: DataFrame, cb: DataFrame, cw: DataFrame): DataFrame = {
-    val model = graft.functions.LmModel.of(cb, cw)
-    docs
-      .select(col("doc_id"),
-        graft.functions.GraftFunctions.lmScore(col("text"), model).as("s"))
-      .select(col("doc_id"), col("s.n_bigrams").as("n_bigrams"),
-        col("s.mean_log_prob").as("mean_log_prob"))
-  }
-
-  /** Streaming BM25 relevance scoring — the streaming twin of
-    * [[graft.operators.SearchOps.bm25TopK]]'s scoring stage, serving
-    * the standing-query/alerting shape ("surface every arriving doc
-    * relevant to this query"). The trained index
-    * ([[graft.operators.SearchOps.bm25ModelOf]]: per-term df + the
-    * corpus stats scalar — |q|+1 rows) collapses to one broadcast map
-    * plus two scalars, so a document scores with one map-side fold
-    * over the query terms — stateless, zero shuffles, ingest speed,
-    * exactly like the DSIR/LM scorers. tf per term comes from the
-    * doc's own let-bound token array (O(|q|·len) per doc); an unseen
-    * term degrades to df = 0, the formula's natural novel-term IDF.
-    * Emits every matching doc (score > 0) with the same rounded score
-    * the batch ranker computes (spec-pinned).
-    *
-    * `docs` needs (doc_id, text); emits (doc_id, dl, score). */
-  def bm25ScoreStream(docs: DataFrame, dfTable: DataFrame, stats: DataFrame,
-      terms: Seq[String] = graft.operators.SearchOps.queryTerms): DataFrame = {
-    import graft.operators.SearchOps.{bm25B, bm25K1}
-    val dfM = dfTable.agg(
-      map_from_entries(collect_list(struct(col("tok"), col("df")))).as("dfm"))
-    val ws = split(trim(col("text")), "\\s+")
-    val avgdl = col("sum_dl").cast("double") / col("n_docs")
-    // sorted terms: the same fold order as the batch ranker's
-    // term-sorted aggregate, so the rounded doubles agree exactly
-    val termArr = typedlit(terms.sorted)
-    val score = element_at(transform(array(ws), wsv =>
-      aggregate(termArr, lit(0.0), (acc, t) => {
-        val tf = size(filter(wsv, w => w === t)).cast("double")
-        val df = coalesce(element_at(col("dfm"), t), lit(0.0))
-        val idf = log(lit(1.0) + (col("n_docs") - df + lit(0.5)) / (df + lit(0.5)))
-        acc + when(tf > 0,
-          idf * tf * lit(bm25K1 + 1.0) /
-            (tf + lit(bm25K1) * (lit(1.0 - bm25B) +
-              lit(bm25B) * size(wsv).cast("double") / avgdl)))
-          .otherwise(lit(0.0))
-      })), 1)
-    docs
-      .filter(col("text").isNotNull && size(ws) >= 1)
-      .crossJoin(broadcast(dfM)).crossJoin(broadcast(stats))
-      // gate on the UNROUNDED score: a matching doc whose score lands
-      // below 5e-7 (df → n_docs at corpus scale) must still emit
-      .select(col("doc_id"), size(ws).cast("long").as("dl"), score.as("score"))
-      .filter(col("score") > 0.0)
-      .withColumn("score", round(col("score"), 6))
-  }
-
-  /** Join-shape variant of [[lmScoreStream]], kept as the path for a
-    * model past [[graft.functions.LmModel.maxModelRows]]: the bigram
+  /** Join-shape variant of the closure LM scorer
+    * ([[graft.operators.QualityModelOps.lmScoresOf]]), kept as the path
+    * for a model past [[graft.functions.LmModel.maxModelRows]]: the bigram
     * stream explodes and hash-joins the broadcast model tables, then
     * one watermark-bounded per-doc rollup reassembles the mean (the
     * [[contaminationStream]] convention). It is not free of a driver
@@ -618,8 +550,8 @@ object EventStream {
     * (`spark.sql.maxBroadcastTableSize`, 8 GB by default, plus a row
     * cap in the hundreds of millions) and the driver heap, far above
     * the closure scorer's 5M boxed pairs, but a bound all the same. On
-    * closure-sized models [[lmScoreStream]] is the faster shape.
-    * Scores match [[lmScoreStream]] to 1e-9 (different fold order over
+    * closure-sized models `lmScoresOf` is the faster shape.
+    * Scores match `lmScoresOf` to 1e-9 (different fold order over
     * the same terms — spec-pinned). Emits only documents with ≥ 1
     * bigram (the closure scorer carries short docs through with null
     * scores). */

@@ -67,8 +67,8 @@ class ArtifactParitySpec extends SparkSpec {
       val stream = MemoryStream[(Long, String)]
       stream.addData(docs.select(col("doc_id"), col("text"))
         .as[(Long, String)].collect().toSeq.take(50))
-      val q = graft.streaming.EventStream.lmScoreStream(
-          stream.toDF().toDF("doc_id", "text"), cbX, cwX)
+      val q = QualityModelOps.lmScoresOf(
+          stream.toDF().toDF("doc_id", "text"), graft.functions.LmModel.of(cbX, cwX))
         .writeStream.format("memory").queryName(name).outputMode("append").start()
       try q.processAllAvailable() finally q.stop()
       spark.table(name).collect()

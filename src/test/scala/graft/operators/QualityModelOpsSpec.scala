@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{JobCounter, SparkSpec, Tables}
 
 class QualityModelOpsSpec extends SparkSpec {
 
@@ -153,5 +153,34 @@ class QualityModelOpsSpec extends SparkSpec {
       graft.functions.LmModel(Array.empty, Array(("\u0000", 1L))), model, Array.empty)
     val fused = art.score(org.apache.spark.unsafe.types.UTF8String.fromString(text), null)
     assert(fused.getBoolean(3) == batch.head.getBoolean(3))
+  }
+
+  test("a cold ensembleArtifactsFor trains the LM once, and lmModelFor then starts no job") {
+    // a corpus path of its own, so no other spec has warmed its caches
+    val dir = java.nio.file.Files.createTempDirectory("graft-lm-once").toString
+    Tables.documents(spark, sfDir).write.parquet(s"$dir/documents.parquet")
+    // an LM training collects lmModelOf's count tables (aggregates named
+    // cb and cw); lmPerplexity's plan folds its cb0 terms
+    val tableCollects = new java.util.concurrent.atomic.AtomicInteger()
+    val perplexityPlans = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
+        val p = qe.optimizedPlan.toString
+        if (p.contains(" AS cb#") || p.contains(" AS cw#")) tableCollects.incrementAndGet()
+        if (p.contains("cb0")) perplexityPlans.incrementAndGet()
+      }
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    val (art, jobs) =
+      try JobCounter(spark)(QualityModelOps.ensembleArtifactsFor(spark, dir))
+      finally spark.listenerManager.unregister(l)
+    info(s"cold ensembleArtifactsFor: $jobs jobs")
+    // one LmModel.of: its bigram and its context table, once each
+    assert(tableCollects.get == 2 && perplexityPlans.get == 0)
+    val (lm, warmJobs) = JobCounter(spark)(QualityModelOps.lmModelFor(spark, dir))
+    assert(warmJobs == 0 && (lm eq art.lm))
   }
 }

@@ -53,6 +53,36 @@ class SearchOpsSpec extends SparkSpec {
     assert(got.nonEmpty && got == want)
   }
 
+  test("bm25TopKOf ignores a duplicated term and a term the corpus lacks") {
+    val docs = graft.Tables.documents(spark, sfDir)
+      .select(col("doc_id").as("id"), col("text").as("body"))
+    val terms = SearchOps.queryTerms
+    val got = SearchOps.bm25TopKOf(docs, "id", "body",
+      terms ++ Seq(terms.head, "no-such-term"), SearchOps.bm25TopN).collect().toSeq
+    val want = SearchOps.bm25TopKOf(docs, "id", "body", terms,
+      SearchOps.bm25TopN).collect().toSeq
+    assert(got.nonEmpty && got == want)
+    val (dfT, stats) = SearchOps.bm25ModelOf(docs, "id", "body", Seq("join", "no-such-term"))
+    assert(SearchOps.Bm25Model.of(dfT, stats).terms.toMap.get("no-such-term").contains(0.0))
+    // an empty corpus trains a model of no document, which scores nothing
+    assert(SearchOps.bm25TopKOf(docs.limit(0), "id", "body", terms, 5).isEmpty)
+  }
+
+  test("Bm25Model.of orders terms by UTF-8 bytes and rejects a frame of the wrong shape") {
+    import spark.implicits._
+    val stats = Seq((2L, 10L)).toDF("n_docs", "sum_dl")
+    // U+1F600 sorts before U+FF5E in UTF-16 units, after it in UTF-8 bytes
+    val dfT = Seq(("\uD83D\uDE00", 1.0), ("\uFF5E", 2.0)).toDF("tok", "df")
+    assert(SearchOps.Bm25Model.of(dfT, stats).terms.map(_._1) ==
+      Seq("\uFF5E", "\uD83D\uDE00"))
+    val wrongDf = Seq(("join", 1L)).toDF("tok", "df")
+    val e = intercept[IllegalArgumentException](SearchOps.Bm25Model.of(wrongDf, stats))
+    assert(e.getMessage.contains("df double"), e.getMessage)
+    intercept[IllegalArgumentException](SearchOps.Bm25Model.of(dfT, dfT))
+    intercept[IllegalArgumentException](
+      SearchOps.Bm25Model.of(dfT, Seq((2L, 10L), (3L, 4L)).toDF("n_docs", "sum_dl")))
+  }
+
   test("phrase search finds exactly the brute-force occurrences") {
     val phrase = SearchOps.queryPhrase.split("\\s+").toSeq
     val docs = graft.Tables.documents(spark, sfDir)

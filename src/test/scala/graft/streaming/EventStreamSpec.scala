@@ -283,32 +283,31 @@ class EventStreamSpec extends SparkSpec {
   test("streaming BM25 scores match the batch ranker on the same index") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val docs = graft.Tables.documents(spark, sfDir)
-    val (dfT, stats) = graft.operators.SearchOps.bm25ModelOf(
-      docs, "doc_id", "text", graft.operators.SearchOps.queryTerms)
-    val rows = docs.select(col("doc_id"), col("text")).collect()
-      .map(r => (r.getLong(0), r.getString(1)))
+    import graft.operators.SearchOps
+    val model = SearchOps.bm25ModelFor(spark, sfDir)
+    // the corpus plus one null text, which scores on neither side
+    val rows = graft.Tables.documents(spark, sfDir)
+      .select(col("doc_id"), col("text")).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq :+ ((-1L, null: String))
     val stream = MemoryStream[(Long, String)]
-    stream.addData(rows.toSeq)
-    val q = EventStream.bm25ScoreStream(
-        stream.toDF().toDF("doc_id", "text"), dfT, stats)
+    stream.addData(rows)
+    val q = SearchOps.bm25ScoresOf(
+        stream.toDF().toDF("doc_id", "text"), "doc_id", "text", model)
       .writeStream.format("memory").queryName("bm25s").outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
 
-    val streamScores = spark.table("bm25s").collect()
-      .map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    // every batch top-k row's (doc, score) appears identically
-    val batch = graft.operators.SearchOps.bm25TopK(spark, sfDir).collect()
-      .map(r => (r.getLong(1), r.getDouble(2)))
-    assert(batch.nonEmpty)
-    batch.foreach { case (id, s) =>
-      assert(streamScores.get(id).contains(s), s"doc $id: ${streamScores.get(id)} vs $s")
-    }
-    // stream emits exactly the docs containing >= 1 query term
+    // every row equal, the unrounded doubles to the bit
+    def key(r: org.apache.spark.sql.Row) =
+      (r.getLong(0), r.getLong(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2)))
+    val streamed = spark.table("bm25s").collect().map(key).toSet
+    val batch = SearchOps.bm25ScoresOf(rows.toDF("doc_id", "text"), "doc_id", "text", model)
+      .collect().map(key).toSet
+    assert(streamed.nonEmpty && streamed == batch)
+    // exactly the docs containing >= 1 query term
     val matching = rows.filter { case (_, t) =>
-      graft.operators.SearchOps.queryTerms.exists(t.trim.split("\\s+").contains)
+      t != null && SearchOps.queryTerms.exists(t.trim.split("\\s+").contains)
     }.map(_._1).toSet
-    assert(streamScores.keySet == matching)
+    assert(streamed.map(_._1) == matching)
   }
 
   test("streaming index probe matches the batch incremental probe") {

@@ -17,8 +17,8 @@ class LmStreamSpec extends SparkSpec {
     val stream = MemoryStream[(Long, String)]
     stream.addData(docs.select(col("doc_id"), col("text"))
       .as[(Long, String)].collect().toSeq)
-    val q = EventStream.lmScoreStream(
-        stream.toDF().toDF("doc_id", "text"), cb, cw)
+    val q = QualityModelOps.lmScoresOf(
+        stream.toDF().toDF("doc_id", "text"), graft.functions.LmModel.of(cb, cw))
       .writeStream.format("memory").queryName("lm_stream")
       .outputMode("append").start()
     try q.processAllAvailable() finally q.stop()

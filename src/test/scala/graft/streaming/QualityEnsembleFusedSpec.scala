@@ -105,7 +105,7 @@ class QualityEnsembleFusedSpec extends SparkSpec {
     val pplCuts = QualityModelOps.pplCutsOf(
       QualityModelOps.lmPerplexity(spark, sfDir)
         .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id")))
-    val lm = EventStream.lmScoreStream(df, cb, cw)
+    val lm = QualityModelOps.lmScoresOf(df, graft.functions.LmModel.of(cb, cw))
     val ds = QualityModelOps.dsirWeightsOf(df,
         graft.functions.DsirModel.of(QualityModelOps.dsirModelOf(docs)))
       .select(col("doc_id"), col("target_like"))
